@@ -1,4 +1,6 @@
 package graft
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 object Bench {
 
@@ -55,31 +57,17 @@ object Bench {
           SparkEntry.qvec(spark, sfDir), 10, "l2",
           tieBreak = Some(col("vec_id"))))
       }
-    } catch { case _: Throwable => }
+    } catch { case NonFatal(e) =>
+      // keep going (the timed loop records per-query errors), but say so:
+      // a failed warmup moves JIT and cache cost into the timed queries
+      System.err.println(s"[bench] warmup failed: $e")
+    }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // the stated environment is local[32]; only honor an explicit override
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE coalesce FLOOR (round 21, guide §2): the default 1 MB
-      // minPartitionSize is calibrated for scan-like stages; this
-      // engine's verify/rerank stages (array_intersect over shingle
-      // sets, ADC) carry ~1000x more CPU per byte, and the byte-based
-      // floor coalesced them to 1-2 tasks (measured: q_dedup_jaccard's
-      // candidate+verify job 2.5 s on 2 tasks; 64k floor -> 1.2 s).
-      // A floor, not a target: at scale stages far exceed it and the
-      // 64 MB advisory size governs, so the production impact is nil.
-      // Env-overridable to keep the scale knob explicit.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE", "64k"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session(cpus)
     warmup(spark, sfDir)
     // a query that throws must surface as an ERROR, not a wall-clock
     // entry: round 8's fixture refresh broke nine queries at analysis

@@ -121,8 +121,10 @@ object Graft {
         org.apache.spark.sql.functions.lit(k), org.apache.spark.sql.functions.lit(asc))
   }
 
-  /** Standard session for tools/tests (local mode, shuffle partitions sized
-    * to cores — NOT the 200 default, which is wrong for local[N]).
+  /** The one session factory: tests, tools, Bench and Verify all build
+    * their session here, so the configuration the oracle checks is the
+    * one that ships (local mode, shuffle partitions sized to cores — NOT
+    * the 200 default, which is wrong for local[N]).
     */
   def session(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")): SparkSession = {
     val spark = SparkSession.builder()
@@ -137,8 +139,7 @@ object Graft {
       // (shingle-set intersection counts, ADC) carry ~1000× more CPU per
       // byte and were coalesced to 1-2 tasks. A floor, not a target — at
       // scale stages far exceed it and the 64 MB advisory size governs.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE", "64k"))
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       .config("spark.sql.session.timeZone", "UTC")
       // events.parquet has shipped both TIMESTAMP(NANOS) (ns fixtures; Spark
       // has no ns timestamp — this flag reads them as epoch-ns longs) and µs

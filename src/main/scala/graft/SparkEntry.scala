@@ -30,24 +30,8 @@ object SparkEntry {
 
   private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame =
     if (!cacheTables) s.read.parquet(s"$dir/$name.parquet")
-    else tableCache.getOrElseUpdate((s, s"$dir/$name"), {
-      // optional resident-copy sharding (SPARK_GRAFT_CACHE_PARTS=N
-      // round-robin repartitions sub-N-split tables at cache time,
-      // untimed). Measured OFF as the better default at BOTH sf0.1 and
-      // the 10× fixture once the kernel warmup landed (OPTIMIZATION_r21
-      // §resident-table sharding): with warm JIT the 1-split map chains
-      // beat 32 shards' per-stage task overhead on this query mix. At
-      // production scale tables arrive with many natural splits, so the
-      // local 1-split shape is a fixture artifact either way; the knob
-      // records the trade-off instead of hard-coding a local[32] answer.
-      // Correctness runs (Verify) keep cacheTables off — cold path and
-      // oracle comparison unchanged.
-      val raw = s.read.parquet(s"$dir/$name.parquet")
-      val p = sys.env.get("SPARK_GRAFT_CACHE_PARTS").map(_.toInt).getOrElse(0)
-      val widened =
-        if (p > 0 && raw.rdd.getNumPartitions < p) raw.repartition(p) else raw
-      widened.cache()
-    })
+    else tableCache.getOrElseUpdate((s, s"$dir/$name"),
+      s.read.parquet(s"$dir/$name.parquet").cache())
 
   /** Bench warmup hook: pre-materialize a fixture table's cache entry. */
   def table(s: SparkSession, dir: String, name: String): DataFrame = t(s, dir, name)

@@ -2,6 +2,8 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -76,7 +78,7 @@ object IndexStore {
         fs.listStatus(p).map(st =>
           s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
           .sorted.mkString(",")
-      } catch { case _: Throwable => return spark.read.parquet(path) }
+      } catch { case NonFatal(_) => return spark.read.parquet(path) }
     openCache.get((spark, path)) match {
       case Some((s, df)) if s == sig => df
       case _ =>
