@@ -1,10 +1,14 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.BinaryType
 
-import graft.operators.IvfIndex
-import graft.sources.SidecarIO
+import graft.operators.{BinaryIndex, HnswIndex, IvfIndex, PqIndex, VamanaIndex}
+import graft.sources.{IndexStore, SidecarIO}
+
+import IndexLifecycle.Kind
+import IndexLifecycle.Kind._
 
 /** Index lifecycle verbs (SURVEY §2.8): rebuild / force-merge / add /
   * remove with the BUILDING→READY/FAILED state machine the reference keeps
@@ -13,6 +17,12 @@ import graft.sources.SidecarIO
   * build writes to a fresh directory and the state file flips last
   * (crash before the flip leaves the previous READY index in place, the
   * same recovery contract as their BUILDING marker).
+  *
+  * Every layout kind (see [[IndexLifecycle.Kind]]) runs the same
+  * protocol over its own state file, so a space can carry a scan (IVF)
+  * and a graph (HNSW) layout concurrently; generations are per-index-kind
+  * in the reference too (engine.cc:1013-1083). Every build goes through
+  * [[withGeneration]], every read through [[state]] / [[ready]].
   *
   * Every sidecar (state files, ledgers, model/baseline files) reads and
   * writes through [[graft.sources.SidecarIO]] — the Hadoop FileSystem
@@ -42,103 +52,169 @@ final class IndexLifecycle(spark: SparkSession, spacePath: String,
     */
   private[graft] def path: String = spacePath
 
-  private def statePath = s"$spacePath$sfx.index_state.json"
-  private def indexPath(gen: Long) = s"$spacePath$sfx.index.g$gen"
+  private def statePath(kind: Kind) = s"$spacePath$sfx.${kind.infix}_state.json"
+  private def layoutPath(kind: Kind, gen: Long) = s"$spacePath$sfx.${kind.infix}.g$gen"
 
   sealed trait State
   case object Missing extends State
   final case class Building(gen: Long) extends State
-  /** `trainedDocs` = corpus size the model was trained on (-1 for
-    * sidecars written before the drift metric existed).
+  /** `ncentroids` is the kind's layout parameter (the graph kinds store
+    * `numShards` in it); `trainedDocs` = corpus size the model was
+    * trained on (-1 for sidecars written before the drift metric
+    * existed).
     */
   final case class Ready(gen: Long, ncentroids: Int, trainedDocs: Long = -1L)
     extends State
   final case class Failed(gen: Long, reason: String) extends State
 
-  def state: State = readStateAt(statePath)
-
-  private def readStateAt(path: String): State = {
+  def state(kind: Kind): State = {
+    val path = statePath(kind)
     if (!SidecarIO.exists(path)) Missing
     else {
-      val s = SidecarIO.readString(path)
-      val parts = s.trim.split(":", 4)
-      parts(0) match {
+      val s = SidecarIO.readString(path).trim
+      // writes are tmp + rename (SidecarIO.writeString), so content that
+      // is none of the three states is corruption — serving FLAT or
+      // rebuilding over it would hide that
+      def corrupt = new IllegalStateException(
+        s"unrecognised index state in $path: '$s'")
+      val parts = s.split(":", 4)
+      try parts(0) match {
         case "BUILDING" => Building(parts(1).toLong)
         case "READY"    => Ready(parts(1).toLong, parts(2).toInt,
           if (parts.length > 3 && parts(3).nonEmpty) parts(3).toLong else -1L)
         // exception messages routinely contain colons — rejoin the tail
         case "FAILED"   => Failed(parts(1).toLong, parts.drop(2).mkString(":"))
-        case _          => Missing
+        case _          => throw corrupt
+      } catch {
+        case _: NumberFormatException | _: ArrayIndexOutOfBoundsException =>
+          throw corrupt
       }
     }
   }
 
-  private def writeState(s: String): Unit = writeStateAt(statePath, s)
-
-  private def writeStateAt(path: String, s: String): Unit =
-    SidecarIO.writeString(path, s)
-
-  /** Build (or rebuild) the IVF index: train on the current space
-    * contents, write an assigned+partitioned copy under a new generation,
-    * flip READY last. `dropBeforeRebuild=false` keeps serving the old
-    * generation until the flip (the rebuild semantics of
-    * POST /index/rebuild, engine.cc:1013-1083).
+  /** One READY generation, taken from ONE state-file read: its layout,
+    * models and delete gate all derive from `path`, so a READY flip
+    * between a request's reads can never pair one generation's layout
+    * with another's delete baseline. `param` is the kind's layout
+    * parameter (ncentroids, or numShards for the graph kinds).
+    * `baseline` is the delete-ledger baseline: an appended graph still
+    * carries every node of the generation it grew from, so its gate
+    * reaches back to the ORIGINAL build's stamp (the `.ledger_base`
+    * sidecar [[appendHnsw]] writes); otherwise it is `gen` itself.
     */
-  def rebuild(vecCol: String, ncentroids: Int): Ready = {
+  final case class Generation(gen: Long, path: String, param: Int,
+      trainedDocs: Long, baseline: Long) {
+    /** Ids that may still be present in this layout but are deleted. */
+    def deny: Set[Long] = deletedSince(baseline)
+    def table: DataFrame = openLayout(path)
+    def ivfModel(metric: String): IvfIndex.Model =
+      IndexStore.readIvfModel(s"$path.ivf.txt").copy(metric = metric)
+    /** The routing quantizer of a CLUSTERED graph generation — None for
+      * hash-sharded generations (full fan-out).
+      */
+    def routedModel(metric: String): Option[IvfIndex.Model] =
+      if (SidecarIO.exists(s"$path.ivf.txt")) Some(ivfModel(metric)) else None
+    def pqModel(metric: String): PqIndex.Model =
+      IndexStore.readPqModel(s"$path.pq.txt").copy(metric = metric)
+    def binaryCentroids: Array[Array[Byte]] =
+      IndexStore.readBinaryCentroids(s"$path.cents.txt")
+    /** The IVFFLAT kind's coarse quantizer (a parquet sidecar). */
+    def centroidModel(metric: String): IvfIndex.Model = {
+      val rows = spark.read.parquet(s"$path.centroids").orderBy("list_id").collect()
+      IvfIndex.Model(rows.map(_.getSeq[Float](1).toArray), metric)
+    }
+  }
+
+  /** The READY generation of `kind`, or None while missing/building/failed. */
+  def ready(kind: Kind): Option[Generation] = state(kind) match {
+    case r: Ready => Some(generation(kind, r)); case _ => None
+  }
+
+  private def generation(kind: Kind, r: Ready): Generation = {
+    val path = layoutPath(kind, r.gen)
+    val base = s"$path.ledger_base"
+    Generation(r.gen, path, r.ncentroids, r.trainedDocs,
+      if (SidecarIO.exists(base)) SidecarIO.readString(base).trim.toLong else r.gen)
+  }
+
+  private def readyForAppend(kind: Kind): Generation = state(kind) match {
+    case r: Ready => generation(kind, r)
+    case other => throw new IllegalStateException(
+      s"no READY ${kind.infix} generation to append to (state: $other)")
+  }
+
+  /** The generation protocol every build runs: stamp BUILDING, write the
+    * layout under a fresh generation dir (`build` gets its path and
+    * returns the layout parameter and trained-doc count), flip READY
+    * last, prune the ledgers. Any failure flips FAILED and rethrows; the
+    * previous READY generation is served until the flip either way
+    * (POST /index/rebuild, engine.cc:1013-1083).
+    */
+  private def withGeneration(kind: Kind)(build: String => (Int, Long)): Ready = {
     val gen = System.currentTimeMillis()
-    writeState(s"BUILDING:$gen:")
+    val sp = statePath(kind)
+    SidecarIO.writeString(sp, s"BUILDING:$gen:")
     try {
-      val corpus = spark.read.parquet(spacePath)
-      val trainedDocs = corpus.count() // recorded for the drift metric
-      val model = IvfIndex.train(corpus, vecCol, ncentroids)
-      IvfIndex.buildTable(corpus, vecCol, model, indexPath(gen))
-      // persist centroids alongside for query-time probe selection
-      val centroids = model.centroids.zipWithIndex
-        .map { case (c, i) => (i, c.toSeq) }.toSeq
-      import spark.implicits._
-      centroids.toDF("list_id", "centroid").write
-        .mode("overwrite").parquet(s"${indexPath(gen)}.centroids")
-      writeState(s"READY:$gen:$ncentroids:$trainedDocs")
+      val (param, trainedDocs) = build(layoutPath(kind, gen))
+      SidecarIO.writeString(sp, s"READY:$gen:$param:$trainedDocs")
       pruneLedgers()
-      Ready(gen, ncentroids, trainedDocs)
+      Ready(gen, param, trainedDocs)
     } catch {
       case e: Exception =>
-        writeState(s"FAILED:$gen:${e.getMessage}")
+        SidecarIO.writeString(sp, s"FAILED:$gen:${e.getMessage}")
         throw e
     }
   }
 
-  /** [[rebuild]] for an INT8 vector field (value_type=INT8,
-    * index_model.h:19 — the reference builds every index family over
-    * INT8 too): the coarse quantizer trains and assigns in the
-    * DE-QUANTIZED float domain (b/127 — order-identical to the int8
-    * kernels up to a fixed scale), the stored layout keeps the compact
-    * int8 codes; serving probes with the float query and scores with the
-    * integer-accumulate kernels ([[graft.operators.IvfIndex.searchInt8]]).
+  private val I8View = "_i8f"
+
+  /** The corpus a build trains on and the column it trains on. An INT8
+    * vector field (value_type=INT8, index_model.h:19 — the reference
+    * builds every index family over INT8 too) stores BinaryType codes:
+    * its builds train on the float view `_i8f` = `view(codes)` and drop
+    * it before write (it would duplicate the codes at 4×), so layouts
+    * keep the compact codes and serving reranks with the integer
+    * kernels. The default view is the RAW code values as floats
+    * ([[graft.functions.I8ToFloat]], NOT the b/127 grid): small integers
+    * are exact in float, so graph walks' Double-accumulated distances
+    * equal the integer kernels bit-for-bit, and the quantizer losses
+    * are scale-covariant.
     */
-  def rebuildInt8(vecCol: String, ncentroids: Int): Ready = {
-    val gen = System.currentTimeMillis()
-    writeState(s"BUILDING:$gen:")
-    try {
-      val corpus = spark.read.parquet(spacePath)
-      val trainedDocs = corpus.count()
-      val deq = corpus.withColumn("_i8f", graft.Graft.F.dequantI8(col(vecCol)))
-      val model = IvfIndex.train(deq, "_i8f", ncentroids)
-      IvfIndex.assign(deq, "_i8f", model).drop("_i8f")
-        .write.mode("overwrite").partitionBy("list_id").parquet(indexPath(gen))
-      val centroids = model.centroids.zipWithIndex
-        .map { case (c, i) => (i, c.toSeq) }.toSeq
-      import spark.implicits._
-      centroids.toDF("list_id", "centroid").write
-        .mode("overwrite").parquet(s"${indexPath(gen)}.centroids")
-      writeState(s"READY:$gen:$ncentroids:$trainedDocs")
-      pruneLedgers()
-      Ready(gen, ncentroids, trainedDocs)
-    } catch {
-      case e: Exception =>
-        writeState(s"FAILED:$gen:${e.getMessage}")
-        throw e
-    }
+  private def trainingView(vecCol: String,
+      view: Column => Column = graft.Graft.F.i8ToFloat): (DataFrame, String) = {
+    val corpus = spark.read.parquet(spacePath)
+    if (corpus.schema(vecCol).dataType != BinaryType) (corpus, vecCol)
+    else (corpus.withColumn(I8View, view(col(vecCol))), I8View)
+  }
+
+  // Graph layouts (HNSW/Vamana segment tables) write ONE ROW PER FILE
+  // (`maxRecordsPerFile` 1): a segment row carries a whole serialized
+  // shard (tens of MB at ~64k nodes), and a parquet row group holding
+  // several of them makes the vectorized reader's per-batch column
+  // vectors row-group-sized — at 2M vectors that OOMs the executors
+  // (measured). One row per file caps a read task's transient memory at
+  // one segment, the same bound the walk itself needs.
+  private def segmentWriter[T](ds: Dataset[T]): DataFrameWriter[T] =
+    ds.write.option("maxRecordsPerFile", 1)
+
+  /** Build (or rebuild) the IVF index: train on the current space
+    * contents, write an assigned+partitioned copy under a new generation,
+    * flip READY last. An INT8 field trains and assigns in the
+    * DE-QUANTIZED float domain (b/127 — order-identical to the int8
+    * kernels up to a fixed scale); serving probes with the float query
+    * and scores with [[graft.operators.IvfIndex.searchInt8]].
+    */
+  def rebuild(vecCol: String, ncentroids: Int): Ready = withGeneration(Ivf) { out =>
+    val (corpus, c) = trainingView(vecCol, graft.Graft.F.dequantI8)
+    val trainedDocs = corpus.count() // recorded for the drift metric
+    val model = IvfIndex.train(corpus, c, ncentroids)
+    IvfIndex.assign(corpus, c, model).drop(I8View)
+      .write.mode("overwrite").partitionBy("list_id").parquet(out)
+    // persist centroids alongside for query-time probe selection
+    import spark.implicits._
+    model.centroids.zipWithIndex.map { case (cen, i) => (i, cen.toSeq) }.toSeq
+      .toDF("list_id", "centroid").write.mode("overwrite").parquet(s"$out.centroids")
+    (ncentroids, trainedDocs)
   }
 
   /** Auto-build trigger (engine.cc:759-769,972-1012: the index is built
@@ -146,7 +222,7 @@ final class IndexLifecycle(spark: SparkSession, spacePath: String,
     * brute-force over the raw table). Returns true iff a build ran.
     */
   def maybeAutoBuild(vecCol: String, ncentroids: Int,
-      trainingThreshold: Long): Boolean = state match {
+      trainingThreshold: Long): Boolean = state(Ivf) match {
     case _: Ready | _: Building => false
     case _ =>
       val n = spark.read.parquet(spacePath).count()
@@ -154,16 +230,16 @@ final class IndexLifecycle(spark: SparkSession, spacePath: String,
       else false
   }
 
-  /** Build the generation the SPACE DECLARATION asks for — the builder
-    * resolves from the field's index type AND value_type, so callers
-    * never pick between the float and INT8 variants by hand (the
+  /** Build the generation the SPACE DECLARATION asks for — the kind
+    * comes from the field's index type ([[IndexLifecycle.kindOf]]) and
+    * each builder picks its INT8 training view from the column type, so
+    * callers never pick between float and INT8 variants (the
     * reference's Indexing loop builds whatever the space declares,
-    * engine.cc:759-769; INT8 across families, index_model.h:19).
-    * Parameter defaults follow the reference's space defaults
-    * (ncentroids 2048, nsubvector 64, nlinks 32, efConstruction 40,
-    * Vamana R 64 / L 100); `numShards` is an engine-level layout choice
-    * with no reference analog. Returns None for declarations that serve
-    * without a built generation (FLAT / SCALAR). Multi-field spaces
+    * engine.cc:759-769). Parameter defaults follow the reference's space
+    * defaults (ncentroids 2048, nsubvector 64, nlinks 32, efConstruction
+    * 40, Vamana R 64 / L 100); `numShards` is an engine-level layout
+    * choice with no reference analog. Returns None for declarations that
+    * serve without a built generation (FLAT / SCALAR). Multi-field spaces
     * build each field under its own [[scoped]] lifecycle.
     */
   def rebuildDeclared(space: graft.schema.Space, field: String,
@@ -174,39 +250,24 @@ final class IndexLifecycle(spark: SparkSession, spacePath: String,
     val p = vo.indexParams
     def param(n: String, dflt: Int) = p.get(n).filter(_ > 0).getOrElse(dflt)
     val nc = param("ncentroids", 2048)
-    val i8 = vo.valueType == "int8"
-    vo.indexType match {
-      case "FLAT" | "SCALAR" => None
-      case "IVFFLAT" | "GPU_IVFFLAT" =>
-        Some(if (i8) rebuildInt8(field, nc) else rebuild(field, nc))
-      case "HNSW" =>
-        val params = graft.operators.HnswIndex.Params(
+    IndexLifecycle.kindOf(vo.indexType).map { kind =>
+      // binary codes are BinaryType like INT8 codes: only BINARYIVF
+      // builds over them, any other family would train on garbage floats
+      require(kind == BinaryIvf || vo.valueType != "binary",
+        s"no ${vo.indexType} build over binary field '$field'")
+      kind match {
+        case Ivf => rebuild(field, nc)
+        case Hnsw => rebuildHnsw(idCol, field, HnswIndex.Params(
           m = param("nlinks", 32), efConstruction = param("efConstruction", 40),
-          metric = vo.metric, numShards = numShards)
-        Some(if (i8) rebuildHnswInt8(idCol, field, params)
-        else rebuildHnsw(idCol, field, params))
-      case "DISKANN_STATIC" | "SSG" =>
-        val params = graft.operators.VamanaIndex.Params(
+          metric = vo.metric, numShards = numShards))
+        case Vamana => rebuildVamana(idCol, field, VamanaIndex.Params(
           r = param("R", 64), l = param("L", 100), metric = vo.metric,
-          numShards = numShards)
-        Some(if (i8) rebuildVamanaInt8(idCol, field, params)
-        else rebuildVamana(idCol, field, params))
-      case "IVFPQ" | "GPU_IVFPQ" | "IVFPQ_RELAYOUT" =>
-        val m = param("nsubvector", 64)
-        Some(if (i8) rebuildIvfPqInt8(field, nc, m)
-        else rebuildIvfPq(field, nc, m))
-      case "SCANN" =>
-        val m = param("nsubvector", 64)
-        Some(if (i8) rebuildScannInt8(field, nc, m)
-        else rebuildScann(field, nc, m))
-      case "IVFRABITQ" =>
-        Some(if (i8) rebuildIvfRabitqInt8(field, nc)
-        else rebuildIvfRabitq(field, nc))
-      case "BINARYIVF" =>
-        Some(rebuildBinaryIvf(field, nc))
-      case other =>
-        throw new IllegalArgumentException(
-          s"no declared-build path for index type '$other'")
+          numShards = numShards))
+        case Pq => rebuildIvfPq(field, nc, param("nsubvector", 64))
+        case Scann => rebuildScann(field, nc, param("nsubvector", 64))
+        case Rabitq => rebuildIvfRabitq(field, nc)
+        case BinaryIvf => rebuildBinaryIvf(field, nc)
+      }
     }
   }
 
@@ -218,29 +279,22 @@ final class IndexLifecycle(spark: SparkSession, spacePath: String,
       trainingThreshold: Long, idCol: String = "_id",
       numShards: Int = 8): Boolean = {
     val vo = space.vectorFields.find(_.name == field).flatMap(_.vector)
-    vo.map(_.indexType).getOrElse("FLAT") match {
-      // no generation to build — return before the corpus count so a
-      // periodic auto-build loop over a FLAT space never pays a scan
-      case "FLAT" | "SCALAR" => false
-      case t =>
-        val st = t match {
-          case "HNSW"                                   => hnswState
-          case "DISKANN_STATIC" | "SSG"                 => vamanaState
-          case "IVFPQ" | "GPU_IVFPQ" | "IVFPQ_RELAYOUT" => pqState
-          case "SCANN"                                  => scannState
-          case "IVFRABITQ"                              => rbState
-          case "BINARYIVF"                              => bivfState
-          case _                                        => state
-        }
-        st match {
-          case _: Ready | _: Building => false
-          case _ =>
-            val n = spark.read.parquet(spacePath).count()
-            if (n >= trainingThreshold)
-              rebuildDeclared(space, field, idCol, numShards).isDefined
-            else false
-        }
+    // no generation to build — return before the corpus count so a
+    // periodic auto-build loop over a FLAT space never pays a scan
+    IndexLifecycle.kindOf(vo.map(_.indexType).getOrElse("FLAT")).exists { kind =>
+      state(kind) match {
+        case _: Ready | _: Building => false
+        case _ =>
+          spark.read.parquet(spacePath).count() >= trainingThreshold &&
+            rebuildDeclared(space, field, idCol, numShards).isDefined
+      }
     }
+  }
+
+  /** Append rows to a READY generation's `list_id` partitions. */
+  private def appendLists(g: Generation, rows: DataFrame): Unit = {
+    rows.write.mode("append").partitionBy("list_id").parquet(g.path)
+    IndexStore.invalidateOpen(g.path) // cached plan pre-dates the new files
   }
 
   /** Incremental maintenance: assign list_ids for a delta batch with the
@@ -249,15 +303,9 @@ final class IndexLifecycle(spark: SparkSession, spacePath: String,
     * the live index without retraining). Centroids drift is handled by the
     * next rebuild; until then new rows are immediately probe-searchable.
     */
-  def appendDelta(delta: DataFrame, vecCol: String): Unit = state match {
-    case Ready(gen, _, _) =>
-      val model = loadModel().getOrElse(
-        throw new IllegalStateException("READY state without centroids"))
-      IvfIndex.assign(delta, vecCol, model)
-        .write.mode("append").partitionBy("list_id").parquet(indexPath(gen))
-      graft.sources.IndexStore.invalidateOpen(indexPath(gen)) // cached plan pre-dates the new files
-    case other =>
-      throw new IllegalStateException(s"no READY index to append to (state: $other)")
+  def appendDelta(delta: DataFrame, vecCol: String): Unit = {
+    val g = readyForAppend(Ivf)
+    appendLists(g, IvfIndex.assign(delta, vecCol, g.centroidModel("l2")))
   }
 
   /** Staleness of the READY generation: fraction of indexed docs the
@@ -266,11 +314,8 @@ final class IndexLifecycle(spark: SparkSession, spacePath: String,
     * in under drifting centroids. None when no READY index exists or the
     * sidecar predates the metric.
     */
-  def staleness(): Option[Double] = state match {
-    case Ready(gen, _, trained) if trained > 0 =>
-      val indexed = spark.read.parquet(indexPath(gen)).count()
-      Some((indexed - trained).toDouble / trained)
-    case _ => None
+  def staleness(): Option[Double] = ready(Ivf).filter(_.trainedDocs > 0).map { g =>
+    (spark.read.parquet(g.path).count() - g.trainedDocs).toDouble / g.trainedDocs
   }
 
   /** Drift-triggered retrain — the maintenance twin of the reference's
@@ -284,7 +329,7 @@ final class IndexLifecycle(spark: SparkSession, spacePath: String,
     * ingest contract.
     */
   def maybeRetrain(vecCol: String, driftThreshold: Double): Boolean =
-    state match {
+    state(Ivf) match {
       case Ready(_, ncentroids, _) if staleness().exists(_ >= driftThreshold) =>
         rebuild(vecCol, ncentroids); true
       case _ => false
@@ -348,22 +393,6 @@ final class IndexLifecycle(spark: SparkSession, spacePath: String,
     */
   def allDeletes(): Set[Long] = deletedSince(0L)
 
-  /** Drop delete- AND mutation-ledger entries older than every live
-    * generation — called after a rebuild flips READY (the new layout no
-    * longer contains them; the churn they recorded no longer exerts
-    * rebuild pressure). Entries newer than the OTHER kinds' generations
-    * survive: the ledgers are shared across all six layout kinds, so
-    * pruning keeps everything at-or-after the OLDEST live generation.
-    *
-    * If ANY kind is mid-BUILDING the prune defers entirely: an in-flight
-    * generation's gate baseline is not derivable from its BUILDING stamp
-    * (an appended graph's reaches back to the generation it grew from,
-    * whose stamp the BUILDING marker has already replaced), so pruning
-    * under it could drop entries that generation needs once it flips
-    * READY — ghost results until the next delete. Every build ends in a
-    * READY/FAILED flip whose own prune call runs then, so deferral is
-    * bounded by one build.
-    */
   /** BUILDING markers older than this age out as FAILED during
     * [[pruneLedgers]]: a crashed build never flips its marker, and a
     * forever-deferred prune lets both ledgers grow unbounded (re-read
@@ -376,30 +405,42 @@ final class IndexLifecycle(spark: SparkSession, spacePath: String,
     */
   @volatile var buildingStaleMs: Long = 3600000L
 
+  /** Drop delete- AND mutation-ledger entries older than every live
+    * generation — called after a rebuild flips READY (the new layout no
+    * longer contains them; the churn they recorded no longer exerts
+    * rebuild pressure). Entries newer than the OTHER kinds' generations
+    * survive: the ledgers are shared across all layout kinds, so pruning
+    * keeps everything at-or-after the OLDEST live generation's delete
+    * baseline (an appended graph's reaches back to its original build).
+    *
+    * If ANY kind is mid-BUILDING the prune defers entirely: an in-flight
+    * generation's gate baseline is not derivable from its BUILDING stamp
+    * (an appended graph's reaches back to the generation it grew from,
+    * whose stamp the BUILDING marker has already replaced), so pruning
+    * under it could drop entries that generation needs once it flips
+    * READY — ghost results until the next delete. Every build ends in a
+    * READY/FAILED flip whose own prune call runs then, so deferral is
+    * bounded by one build.
+    */
   private def pruneLedgers(): Unit = synchronized {
     // age out stale BUILDING markers first (crash leftovers), so one
     // dead build can't defer pruning forever
     val now = System.currentTimeMillis()
-    Seq(statePath, vamanaStatePath, pqStatePath, rbStatePath,
-      bivfStatePath, scannStatePath, hnswStatePath).foreach { sp =>
-      readStateAt(sp) match {
+    IndexLifecycle.kinds.foreach { k =>
+      state(k) match {
         case Building(g) if now - g >= buildingStaleMs =>
-          writeStateAt(sp, s"FAILED:$g:stale BUILDING marker aged out " +
-            s"after ${now - g} ms (crashed build?)")
+          SidecarIO.writeString(statePath(k), s"FAILED:$g:stale BUILDING " +
+            s"marker aged out after ${now - g} ms (crashed build?)")
         case _ => ()
       }
     }
-    val scanStates =
-      Seq(state, vamanaState, pqState, rbState, bivfState, scannState)
-    if ((scanStates :+ hnswState).exists(_.isInstanceOf[Building])) return
-    // an appended HNSW generation's gate reaches back to its BASELINE
-    val hnswFloor = hnswState match {
-      case Ready(g, _, _) => Seq(hnswLedgerBase(g)); case _ => Nil
+    val states = IndexLifecycle.kinds.map(k => (k, state(k)))
+    if (!states.exists(_._2.isInstanceOf[Building])) {
+      val oldest = states.collect { case (k, r: Ready) => generation(k, r).baseline }
+        .minOption.getOrElse(Long.MaxValue)
+      pruneLedgerFile(deleteLedgerPath, oldest)
+      pruneLedgerFile(mutationLedgerPath, oldest)
     }
-    val oldest = (scanStates.collect { case Ready(g, _, _) => g } ++ hnswFloor)
-      .minOption.getOrElse(Long.MaxValue)
-    pruneLedgerFile(deleteLedgerPath, oldest)
-    pruneLedgerFile(mutationLedgerPath, oldest)
   }
 
   /** Rewrite one `(ts, value)` ledger keeping entries at-or-after
@@ -429,34 +470,25 @@ final class IndexLifecycle(spark: SparkSession, spacePath: String,
     * missing table. Called by both mutators before reading; safe to call
     * any time.
     */
-  def recoverSwap(): Unit = {
-    val p = new org.apache.hadoop.fs.Path(spacePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val old = new org.apache.hadoop.fs.Path(s"$spacePath.old")
-    if (!fs.exists(p) && fs.exists(old)) { fs.rename(old, p); () }
-  }
+  def recoverSwap(): Unit =
+    if (!SidecarIO.exists(spacePath) && SidecarIO.exists(s"$spacePath.old"))
+      SidecarIO.rename(s"$spacePath.old", spacePath)
 
   /** Delete-by-ids at the SPACE level: rewrite the live table without the
     * ids AND record them in the delete ledger so READY generations stop
     * serving them immediately — the reference's bitmap-delete contract
-    * (engine.cc:869-899). The move-aside swap has ONE crash window
-    * (between the two renames the space path is briefly absent);
-    * [[recoverSwap]] closes it on the next open — data is under
+    * (engine.cc:869-899). The move-aside swap ([[SidecarIO.swapIn]]) has
+    * ONE crash window (between the two renames the space path is briefly
+    * absent); [[recoverSwap]] closes it on the next open — data is under
     * `spacePath` or `spacePath.old` at every instant, never lost.
     */
   def deleteByIds(idCol: String, ids: Seq[Long]): Unit = {
     recoverSwap()
     val df = spark.read.parquet(spacePath)
-    val remaining = graft.operators.Documents.deleteByIds(df, idCol, ids)
     val tmp = s"$spacePath.delete.tmp"
-    remaining.write.mode("overwrite").parquet(tmp)
-    val p = new org.apache.hadoop.fs.Path(spacePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val old = new org.apache.hadoop.fs.Path(s"$spacePath.old")
-    fs.delete(old, true)
-    fs.rename(p, old)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp), p)
-    fs.delete(old, true)
+    graft.operators.Documents.deleteByIds(df, idCol, ids)
+      .write.mode("overwrite").parquet(tmp)
+    SidecarIO.swapIn(spacePath, tmp)
     recordDeletes(ids)
   }
 
@@ -474,16 +506,9 @@ final class IndexLifecycle(spark: SparkSession, spacePath: String,
     import spark.implicits._
     val docids = df.filter(col(pkCol).isin(pks: _*))
       .select(col(docidCol).cast("long")).as[Long].collect().toSeq
-    val remaining = df.filter(!col(pkCol).isin(pks: _*))
     val tmp = s"$spacePath.delete.tmp"
-    remaining.write.mode("overwrite").parquet(tmp)
-    val p = new org.apache.hadoop.fs.Path(spacePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val old = new org.apache.hadoop.fs.Path(s"$spacePath.old")
-    fs.delete(old, true)
-    fs.rename(p, old)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp), p)
-    fs.delete(old, true)
+    df.filter(!col(pkCol).isin(pks: _*)).write.mode("overwrite").parquet(tmp)
+    SidecarIO.swapIn(spacePath, tmp)
     recordDeletes(docids)
   }
 
@@ -519,120 +544,56 @@ final class IndexLifecycle(spark: SparkSession, spacePath: String,
     }
   }
 
-  /** The current READY index table, or None while missing/building. */
-  def readyIndex(): Option[DataFrame] = state match {
-    case Ready(gen, _, _) => Some(openLayout(indexPath(gen)))
-    case _             => None
-  }
+  // `spark.read.parquet` lists files and reads footers on EVERY call (one
+  // scheduler job per open). Layouts open through the signature-keyed
+  // cache shared across instances ([[graft.sources.IndexStore.openTable]]):
+  // serving handlers construct a fresh IndexLifecycle per request, so an
+  // instance-held cache would never survive to the next query. Generations
+  // are immutable once READY (a rebuild writes a NEW gen path; appends
+  // invalidate), so the opened plan stays valid per layout path.
+  private def openLayout(path: String): DataFrame = IndexStore.openTable(spark, path)
 
-  /** The READY generation stamp of the scan (IVF) layout, if any. */
-  def readyGen(): Option[Long] = state match {
-    case Ready(gen, _, _) => Some(gen); case _ => None
-  }
+  /** The graph kinds' full builds (float or INT8 view, see
+    * [[trainingView]]): `segments` builds the shard table from the
+    * corpus and the column to train on.
+    */
+  private def buildGraph(kind: Kind, vecCol: String, numShards: Int)(
+      segments: (DataFrame, String) => Dataset[_]): Ready =
+    withGeneration(kind) { out =>
+      val (corpus, c) = trainingView(vecCol)
+      val trainedDocs = corpus.count()
+      segmentWriter(segments(corpus, c)).mode("overwrite").parquet(out)
+      (numShards, trainedDocs)
+    }
 
-  /** The READY generation stamp of the graph (HNSW) layout, if any. */
-  def readyHnswGen(): Option[Long] = hnswState match {
-    case Ready(gen, _, _) => Some(gen); case _ => None
-  }
-
-  def loadModel(metric: String = "l2"): Option[IvfIndex.Model] = state match {
-    case Ready(gen, _, _) =>
-      val rows = spark.read.parquet(s"${indexPath(gen)}.centroids")
-        .orderBy("list_id").collect()
-      val cents = rows.map(_.getSeq[Float](1).toArray)
-      Some(IvfIndex.Model(cents, metric))
-    case _ => None
-  }
-
-  // ── HNSW generation (graph-ANN class): the same BUILDING→READY/FAILED
-  //    contract over a SEPARATE sidecar, so a space can carry a scan (IVF)
-  //    and a graph (HNSW) layout concurrently; generations are
-  //    per-index-kind in the reference too (engine.cc:1013-1083).
-
-  private def hnswStatePath = s"$spacePath$sfx.hnsw_state.json"
-  // Graph layouts (HNSW/Vamana segment tables) write ONE ROW PER FILE
-  // (`maxRecordsPerFile` 1): a segment row carries a whole serialized
-  // shard (tens of MB at ~64k nodes), and a parquet row group holding
-  // several of them makes the vectorized reader's per-batch column
-  // vectors row-group-sized — at 2M vectors that OOMs the executors
-  // (measured). One row per file caps a read task's transient memory at
-  // one segment, the same bound the walk itself needs.
-  private def hnswPath(gen: Long) = s"$spacePath$sfx.hnsw.g$gen"
-
-  def hnswState: State = readStateAt(hnswStatePath)
+  /** The graph kinds' CLUSTERED (SPANN-routed) builds: shards =
+    * coarse-quantizer lists, table written `partitionBy(shard_id)` so
+    * query-time routing is parquet PARTITION PRUNING. The trained
+    * quantizer persists as a sidecar next to the layout; its presence
+    * ([[Generation.routedModel]]) is what routes [[SearchApi.searchAuto]]
+    * through nprobe shard pruning instead of the full fan-out.
+    */
+  private def buildClustered(kind: Kind, vecCol: String, ncentroids: Int)(
+      segments: (DataFrame, IvfIndex.Model) => Dataset[_]): Ready =
+    withGeneration(kind) { out =>
+      val corpus = spark.read.parquet(spacePath)
+      val trainedDocs = corpus.count()
+      val ivf = IvfIndex.train(corpus, vecCol, ncentroids)
+      segmentWriter(segments(corpus, ivf)).mode("overwrite")
+        .partitionBy("shard_id").parquet(out)
+      IndexStore.writeIvfModel(s"$out.ivf.txt", ivf)
+      (ncentroids, trainedDocs)
+    }
 
   /** Build (or rebuild) the HNSW generation. In the returned `Ready`, the
-    * `ncentroids` slot carries `numShards` — the graph kind's analogous
-    * layout parameter.
+    * `ncentroids` slot carries `numShards`. An INT8 field's graph stores
+    * the raw code values as floats; serving quantizes the float query to
+    * the same int8 domain, so routed scores are the i8 kernels' scores
+    * exactly and the route is oracle-exact at `ef ≥ |shard|` like the
+    * float arm.
     */
-  def rebuildHnsw(idCol: String, vecCol: String,
-      params: graft.operators.HnswIndex.Params): Ready = {
-    val gen = System.currentTimeMillis()
-    writeStateAt(hnswStatePath, s"BUILDING:$gen:")
-    try {
-      val corpus = spark.read.parquet(spacePath)
-      val trainedDocs = corpus.count()
-      graft.operators.HnswIndex.build(corpus, idCol, vecCol, params)
-        .write.option("maxRecordsPerFile", 1).mode("overwrite").parquet(hnswPath(gen))
-      writeStateAt(hnswStatePath, s"READY:$gen:${params.numShards}:$trainedDocs")
-      pruneLedgers()
-      Ready(gen, params.numShards, trainedDocs)
-    } catch {
-      case e: Exception =>
-        writeStateAt(hnswStatePath, s"FAILED:$gen:${e.getMessage}")
-        throw e
-    }
-  }
-
-  /** [[rebuildHnsw]] for an INT8 vector field (the reference builds the
-    * graph families over INT8 too, index_model.h:19): the graph stores
-    * the RAW code values widened to float ([[graft.functions.I8ToFloat]]
-    * — NOT the b/127 grid), because small integers are exact in float
-    * and the walk's Double-accumulated distances then equal the integer
-    * kernels bit-for-bit. Serving quantizes the float query to the same
-    * int8 domain and walks with the code values — routed scores are the
-    * i8 kernels' scores exactly, so the route is oracle-exact at
-    * `ef ≥ |shard|` like the float arm.
-    */
-  def rebuildHnswInt8(idCol: String, vecCol: String,
-      params: graft.operators.HnswIndex.Params): Ready = {
-    val gen = System.currentTimeMillis()
-    writeStateAt(hnswStatePath, s"BUILDING:$gen:")
-    try {
-      val corpus = spark.read.parquet(spacePath)
-        .withColumn("_i8f", graft.Graft.F.i8ToFloat(col(vecCol)))
-      val trainedDocs = corpus.count()
-      graft.operators.HnswIndex.build(corpus, idCol, "_i8f", params)
-        .write.option("maxRecordsPerFile", 1).mode("overwrite").parquet(hnswPath(gen))
-      writeStateAt(hnswStatePath, s"READY:$gen:${params.numShards}:$trainedDocs")
-      pruneLedgers()
-      Ready(gen, params.numShards, trainedDocs)
-    } catch {
-      case e: Exception =>
-        writeStateAt(hnswStatePath, s"FAILED:$gen:${e.getMessage}")
-        throw e
-    }
-  }
-
-  /** Delete-ledger BASELINE sidecar for an appended generation: an
-    * appended graph still carries every node of the generation it grew
-    * from, so its delete gate must reach back to the ORIGINAL build's
-    * stamp — not the append's. Absent sidecar = the generation was a
-    * full rebuild; its own stamp is the baseline.
-    */
-  private def hnswBasePath(gen: Long) = s"${hnswPath(gen)}.ledger_base"
-
-  def hnswLedgerBase(gen: Long): Long = {
-    val p = hnswBasePath(gen)
-    if (SidecarIO.exists(p)) SidecarIO.readString(p).trim.toLong else gen
-  }
-
-  /** The delete-gate baseline of the READY HNSW generation (what
-    * [[deletedSince]] should be called with when serving it). */
-  def hnswDeleteBaseline(): Option[Long] = hnswState match {
-    case Ready(gen, _, _) => Some(hnswLedgerBase(gen))
-    case _ => None
-  }
+  def rebuildHnsw(idCol: String, vecCol: String, params: HnswIndex.Params): Ready =
+    buildGraph(Hnsw, vecCol, params.numShards)(HnswIndex.build(_, idCol, _, params))
 
   /** Incremental HNSW add — the reference's background Indexing loop
     * folds ONLY new vectors into the live graph (engine.cc:1084-1137,
@@ -645,90 +606,32 @@ final class IndexLifecycle(spark: SparkSession, spacePath: String,
     * the original build, so the gate keeps covering them.
     */
   def appendHnsw(delta: DataFrame, idCol: String, vecCol: String,
-      params: graft.operators.HnswIndex.Params): Ready = hnswState match {
-    case Ready(oldGen, shards, trained) =>
-      require(shards == params.numShards,
-        s"appendHnsw numShards ${params.numShards} != READY generation's $shards")
-      val base = hnswLedgerBase(oldGen)
-      val gen = System.currentTimeMillis()
-      writeStateAt(hnswStatePath, s"BUILDING:$gen:")
-      try {
-        import spark.implicits._
-        val old = spark.read.parquet(hnswPath(oldGen))
-          .as[graft.operators.HnswIndex.Segment]
-        val deltaN = delta.count()
-        graft.operators.HnswIndex.append(old, delta, idCol, vecCol, params)
-          .write.option("maxRecordsPerFile", 1).mode("overwrite").parquet(hnswPath(gen))
-        SidecarIO.writeString(hnswBasePath(gen), base.toString)
-        writeStateAt(hnswStatePath,
-          s"READY:$gen:${params.numShards}:${trained + deltaN}")
-        pruneLedgers()
-        Ready(gen, params.numShards, trained + deltaN)
-      } catch {
-        case e: Exception =>
-          writeStateAt(hnswStatePath, s"FAILED:$gen:${e.getMessage}")
-          throw e
-      }
-    case other =>
-      throw new IllegalStateException(s"no READY HNSW generation to append to (state: $other)")
+      params: HnswIndex.Params): Ready = {
+    val old = readyForAppend(Hnsw)
+    require(old.param == params.numShards,
+      s"appendHnsw numShards ${params.numShards} != READY generation's ${old.param}")
+    withGeneration(Hnsw) { out =>
+      import spark.implicits._
+      val segs = spark.read.parquet(old.path).as[HnswIndex.Segment]
+      val deltaN = delta.count()
+      segmentWriter(HnswIndex.append(segs, delta, idCol, vecCol, params))
+        .mode("overwrite").parquet(out)
+      SidecarIO.writeString(s"$out.ledger_base", old.baseline.toString)
+      (params.numShards, old.trainedDocs + deltaN)
+    }
   }
 
-  /** Layout DataFrames opened per (path) — `spark.read.parquet` lists
-    * files and reads footers on EVERY call (one scheduler job per open),
-    * which puts a fixed metadata job on every routed query. Generations
-    * are immutable once READY (a rebuild writes a NEW gen path), so the
-    * opened plan is cached per layout path for the lifecycle's lifetime.
-    */
-  // Round 21: the cache moved to [[graft.sources.IndexStore.openTable]]
-  // (signature-keyed, shared across instances) — serving handlers
-  // construct a fresh IndexLifecycle per request, so an instance-held
-  // cache never survived to the next query and every routed search
-  // re-paid the footer job.
-  private def openLayout(path: String): org.apache.spark.sql.DataFrame =
-    graft.sources.IndexStore.openTable(spark, path)
-
-  /** The current READY HNSW segment table, or None while missing/building. */
-  def readyHnswSegments(): Option[org.apache.spark.sql.Dataset[graft.operators.HnswIndex.Segment]] =
-    hnswState match {
-      case Ready(gen, _, _) =>
-        import spark.implicits._
-        Some(openLayout(hnswPath(gen))
-          .as[graft.operators.HnswIndex.Segment])
-      case _ => None
-    }
-
-  /** Build (or rebuild) a CLUSTERED (SPANN-routed) HNSW generation:
-    * shards = coarse-quantizer lists, table written
-    * `partitionBy(shard_id)` so query-time routing is parquet PARTITION
-    * PRUNING ([[graft.operators.HnswIndex.buildClustered]]). The trained
-    * quantizer persists as a sidecar next to the layout; its presence is
-    * what routes [[SearchApi.searchAuto]] through
-    * [[graft.operators.HnswIndex.searchRouted]] instead of the full
-    * fan-out. Same sidecar/state machine as the hash-sharded generation
-    * — the two are alternative layouts of the same graph kind.
+  /** Build (or rebuild) a CLUSTERED HNSW generation
+    * ([[graft.operators.HnswIndex.buildClustered]]) under the same state
+    * file as the hash-sharded one — the two are alternative layouts of
+    * the same graph kind.
     */
   def rebuildHnswClustered(idCol: String, vecCol: String,
-      params: graft.operators.HnswIndex.Params, ncentroids: Int,
-      maxShardRows: Int = 1 << 20): Ready = {
-    val gen = System.currentTimeMillis()
-    writeStateAt(hnswStatePath, s"BUILDING:$gen:")
-    try {
-      val corpus = spark.read.parquet(spacePath)
-      val trainedDocs = corpus.count()
-      val ivf = IvfIndex.train(corpus, vecCol, ncentroids)
-      graft.operators.HnswIndex.buildClustered(corpus, idCol, vecCol,
-          params.copy(numShards = ncentroids), ivf, maxShardRows)
-        .write.option("maxRecordsPerFile", 1).mode("overwrite").partitionBy("shard_id").parquet(hnswPath(gen))
-      graft.sources.IndexStore.writeIvfModel(s"${hnswPath(gen)}.ivf.txt", ivf)
-      writeStateAt(hnswStatePath, s"READY:$gen:$ncentroids:$trainedDocs")
-      pruneLedgers()
-      Ready(gen, ncentroids, trainedDocs)
-    } catch {
-      case e: Exception =>
-        writeStateAt(hnswStatePath, s"FAILED:$gen:${e.getMessage}")
-        throw e
-    }
-  }
+      params: HnswIndex.Params, ncentroids: Int,
+      maxShardRows: Int = 1 << 20): Ready =
+    buildClustered(Hnsw, vecCol, ncentroids)((corpus, ivf) =>
+      HnswIndex.buildClustered(corpus, idCol, vecCol,
+        params.copy(numShards = ncentroids), ivf, maxShardRows))
 
   /** Incremental add into the CLUSTERED HNSW generation: the delta's
     * vectors become fresh sub-segment rows appended into the SAME
@@ -741,32 +644,18 @@ final class IndexLifecycle(spark: SparkSession, spacePath: String,
     * reference's optimize pass).
     */
   def appendHnswClustered(delta: DataFrame, idCol: String, vecCol: String,
-      params: graft.operators.HnswIndex.Params): Unit = hnswState match {
-    case Ready(gen, shards, trained) =>
-      val ivf = hnswRoutedModel().getOrElse(throw new IllegalStateException(
-        "appendHnswClustered needs a CLUSTERED generation (quantizer sidecar missing)"))
-      val deltaN = delta.count()
-      graft.operators.HnswIndex.appendClustered(delta, idCol, vecCol,
-          params.copy(numShards = ivf.ncentroids), ivf)
-        .write.option("maxRecordsPerFile", 1).mode("append").partitionBy("shard_id").parquet(hnswPath(gen))
-      graft.sources.IndexStore.invalidateOpen(hnswPath(gen)) // cached plan pre-dates the new files
-      writeStateAt(hnswStatePath, s"READY:$gen:$shards:${trained + deltaN}")
-    case other =>
-      throw new IllegalStateException(s"no READY HNSW generation to append to (state: $other)")
+      params: HnswIndex.Params): Unit = {
+    val g = readyForAppend(Hnsw)
+    val ivf = g.routedModel("l2").getOrElse(throw new IllegalStateException(
+      "appendHnswClustered needs a CLUSTERED generation (quantizer sidecar missing)"))
+    val deltaN = delta.count()
+    segmentWriter(HnswIndex.appendClustered(delta, idCol, vecCol,
+        params.copy(numShards = ivf.ncentroids), ivf))
+      .mode("append").partitionBy("shard_id").parquet(g.path)
+    IndexStore.invalidateOpen(g.path) // cached plan pre-dates the new files
+    SidecarIO.writeString(statePath(Hnsw),
+      s"READY:${g.gen}:${g.param}:${g.trainedDocs + deltaN}")
   }
-
-  /** The READY HNSW generation's routing quantizer, if it was built
-    * clustered — None for hash-sharded generations (full fan-out).
-    */
-  def hnswRoutedModel(metric: String = "l2"): Option[IvfIndex.Model] =
-    hnswState match {
-      case Ready(gen, _, _) =>
-        val p = s"${hnswPath(gen)}.ivf.txt"
-        if (SidecarIO.exists(p))
-          Some(graft.sources.IndexStore.readIvfModel(p).copy(metric = metric))
-        else None
-      case _ => None
-    }
 
   /** Staleness of the HNSW generation: the larger of (a) space GROWTH
     * since the build — `max(0, now − trained) / trained` — and (b) the
@@ -778,16 +667,13 @@ final class IndexLifecycle(spark: SparkSession, spacePath: String,
     * [[graft.streaming.RealtimeTail.searchHnsw]]'s brute tail leg and the
     * delete-ledger gate.
     */
-  def hnswStaleness(): Option[Double] = hnswState match {
-    case Ready(gen, _, trained) if trained > 0 =>
-      val now = spark.read.parquet(spacePath).count()
-      val grown = math.max(0L, now - trained)
-      // churn counts from the LEDGER BASELINE: an appended generation
-      // still carries the original build's nodes, so churn (deletes,
-      // in-place folds) recorded before the append keeps exerting
-      // rebuild pressure until a FULL rebuild clears it
-      Some(math.max(grown, mutationsSince(hnswLedgerBase(gen))).toDouble / trained)
-    case _ => None
+  def hnswStaleness(): Option[Double] = ready(Hnsw).filter(_.trainedDocs > 0).map { g =>
+    val grown = math.max(0L, spark.read.parquet(spacePath).count() - g.trainedDocs)
+    // churn counts from the LEDGER BASELINE: an appended generation
+    // still carries the original build's nodes, so churn (deletes,
+    // in-place folds) recorded before the append keeps exerting
+    // rebuild pressure until a FULL rebuild clears it
+    math.max(grown, mutationsSince(g.baseline)).toDouble / g.trainedDocs
   }
 
   /** Drift-triggered HNSW rebuild — [[maybeRetrain]]'s twin for the graph
@@ -795,92 +681,48 @@ final class IndexLifecycle(spark: SparkSession, spacePath: String,
     * verb, engine.cc:1013-1083). Returns true iff a rebuild ran.
     */
   def maybeRebuildHnsw(idCol: String, vecCol: String,
-      params: graft.operators.HnswIndex.Params,
-      driftThreshold: Double): Boolean =
+      params: HnswIndex.Params, driftThreshold: Double): Boolean =
     if (hnswStaleness().exists(_ >= driftThreshold)) {
       rebuildHnsw(idCol, vecCol, params); true
     } else false
 
-  // ── IVFPQ generation: residual PQ codes inside coarse lists (the
-  //    reference's default compressed index, gamma_index_ivfpq.cc) over
-  //    its own sidecar — a space declares ONE index type, but keeping
-  //    each kind's generation separate lets tests/tools hold several.
-
-  private def pqStatePath = s"$spacePath$sfx.pq_state.json"
-  private def pqPath(gen: Long) = s"$spacePath$sfx.pq.g$gen"
-
-  def pqState: State = readStateAt(pqStatePath)
-
-  /** Build (or rebuild) the IVFPQ generation: coarse quantizer + residual
-    * codebooks trained on the space, codes written
-    * `partitionBy(list_id)` (probe = partition pruning), models persisted
-    * as sidecars. The residual flavor is the adopted default (matches
-    * faiss IVFPQ and won the RecallGateSpec codebook head-to-head).
+  /** The residual-PQ builds: coarse quantizer + residual codebooks
+    * trained on the space, codes written `partitionBy(list_id)` (probe =
+    * partition pruning), models persisted as sidecars. `eta` None =
+    * IVFPQ's plain residual loss (the reference's default compressed
+    * index, gamma_index_ivfpq.cc; matches faiss IVFPQ and won the
+    * RecallGateSpec codebook head-to-head); Some = SCANN's ANISOTROPIC
+    * (score-aware) loss for both training and the encode-time
+    * assignment (the algorithm class behind the reference's wrapped
+    * ScaNN index, impl/scann/; Guo et al., ICML 2020).
     */
+  private def buildResidualPq(kind: Kind, vecCol: String, ncentroids: Int,
+      m: Int, ksub: Int, eta: Option[Double]): Ready = withGeneration(kind) { out =>
+    val (corpus, c) = trainingView(vecCol)
+    val trainedDocs = corpus.count()
+    val dim = corpus.select(size(col(c))).head().getInt(0)
+    val ivf = IvfIndex.train(corpus, c, ncentroids)
+    val assigned = IvfIndex.assign(corpus, c, ivf)
+    val (pq, codes) = eta match {
+      case None =>
+        val pq = PqIndex.trainResidual(assigned, c, dim, m, ivf, ksub = ksub,
+          maxTrainRows = 200000L, maxIter = 8)
+        (pq, PqIndex.encodeResidual(assigned, c, ivf, pq))
+      case Some(e) =>
+        val pq = PqIndex.trainResidualAnisotropic(assigned, c, dim, m, ivf,
+          ksub = ksub, eta = e, maxTrainRows = 200000L, maxIter = 8)
+        (pq, PqIndex.encodeResidualAnisotropic(assigned, c, ivf, pq, eta = e))
+    }
+    codes.drop(I8View).write.mode("overwrite").partitionBy("list_id").parquet(out)
+    IndexStore.writeIvfModel(s"$out.ivf.txt", ivf)
+    IndexStore.writePqModel(s"$out.pq.txt", pq)
+    (ncentroids, trainedDocs)
+  }
+
+  /** Build (or rebuild) the IVFPQ generation (see [[buildResidualPq]]). */
   def rebuildIvfPq(vecCol: String, ncentroids: Int, m: Int,
-      ksub: Int = 256): Ready = {
-    val gen = System.currentTimeMillis()
-    writeStateAt(pqStatePath, s"BUILDING:$gen:")
-    try {
-      val corpus = spark.read.parquet(spacePath)
-      val trainedDocs = corpus.count()
-      val dim = corpus.select(org.apache.spark.sql.functions.size(
-        org.apache.spark.sql.functions.col(vecCol))).head().getInt(0)
-      val ivf = IvfIndex.train(corpus, vecCol, ncentroids)
-      val assigned = IvfIndex.assign(corpus, vecCol, ivf)
-      val pq = graft.operators.PqIndex.trainResidual(assigned, vecCol, dim, m,
-        ivf, ksub = ksub, maxTrainRows = 200000L, maxIter = 8)
-      graft.operators.PqIndex.encodeResidual(assigned, vecCol, ivf, pq)
-        .write.mode("overwrite").partitionBy("list_id").parquet(pqPath(gen))
-      graft.sources.IndexStore.writeIvfModel(s"${pqPath(gen)}.ivf.txt", ivf)
-      graft.sources.IndexStore.writePqModel(s"${pqPath(gen)}.pq.txt", pq)
-      writeStateAt(pqStatePath, s"READY:$gen:$ncentroids:$trainedDocs")
-      pruneLedgers()
-      Ready(gen, ncentroids, trainedDocs)
-    } catch {
-      case e: Exception =>
-        writeStateAt(pqStatePath, s"FAILED:$gen:${e.getMessage}")
-        throw e
-    }
-  }
-
-  /** [[rebuildIvfPq]] for an INT8 vector field: the coarse quantizer and
-    * residual codebooks train in the raw-code float domain
-    * ([[graft.functions.I8ToFloat]] — same domain as the int8 graph
-    * builds), the layout keeps the compact int8 codes (the float view is
-    * dropped before write: it would duplicate `vecCol` at 4×), and
-    * serving reranks the recallNum shortlist with the integer kernels —
-    * full probe + deep recall stays exact (reference: INT8 across every
-    * family, index_model.h:19).
-    */
-  def rebuildIvfPqInt8(vecCol: String, ncentroids: Int, m: Int,
-      ksub: Int = 256): Ready = {
-    val gen = System.currentTimeMillis()
-    writeStateAt(pqStatePath, s"BUILDING:$gen:")
-    try {
-      val corpus = spark.read.parquet(spacePath)
-        .withColumn("_i8f", graft.Graft.F.i8ToFloat(col(vecCol)))
-      val trainedDocs = corpus.count()
-      val dim = corpus.select(org.apache.spark.sql.functions.size(
-        org.apache.spark.sql.functions.col("_i8f"))).head().getInt(0)
-      val ivf = IvfIndex.train(corpus, "_i8f", ncentroids)
-      val assigned = IvfIndex.assign(corpus, "_i8f", ivf)
-      val pq = graft.operators.PqIndex.trainResidual(assigned, "_i8f", dim, m,
-        ivf, ksub = ksub, maxTrainRows = 200000L, maxIter = 8)
-      graft.operators.PqIndex.encodeResidual(assigned, "_i8f", ivf, pq)
-        .drop("_i8f")
-        .write.mode("overwrite").partitionBy("list_id").parquet(pqPath(gen))
-      graft.sources.IndexStore.writeIvfModel(s"${pqPath(gen)}.ivf.txt", ivf)
-      graft.sources.IndexStore.writePqModel(s"${pqPath(gen)}.pq.txt", pq)
-      writeStateAt(pqStatePath, s"READY:$gen:$ncentroids:$trainedDocs")
-      pruneLedgers()
-      Ready(gen, ncentroids, trainedDocs)
-    } catch {
-      case e: Exception =>
-        writeStateAt(pqStatePath, s"FAILED:$gen:${e.getMessage}")
-        throw e
-    }
-  }
+      ksub: Int = 256): Ready =
+    buildResidualPq(Pq, vecCol, ncentroids, m, ksub, None)
 
   /** Incremental add into the READY IVFPQ generation — the reference's
     * background loop folds new vectors into every index without
@@ -894,425 +736,104 @@ final class IndexLifecycle(spark: SparkSession, spacePath: String,
     * `trainedDocs` stays at the trained count while the layout grows, so
     * [[staleness]]-style drift triggers keep firing.
     */
-  def appendIvfPq(delta: DataFrame, vecCol: String): Unit = pqState match {
-    case Ready(gen, _, _) =>
-      val (_, ivf, pq) = readyIvfPq().getOrElse(
-        throw new IllegalStateException("READY IVFPQ state without models"))
-      graft.operators.PqIndex.encodeResidual(
-          IvfIndex.assign(delta, vecCol, ivf), vecCol, ivf, pq)
-        .write.mode("append").partitionBy("list_id").parquet(pqPath(gen))
-      graft.sources.IndexStore.invalidateOpen(pqPath(gen)) // cached plan pre-dates the new files
-    case other =>
-      throw new IllegalStateException(
-        s"no READY IVFPQ generation to append to (state: $other)")
+  def appendIvfPq(delta: DataFrame, vecCol: String): Unit = {
+    val g = readyForAppend(Pq)
+    val ivf = g.ivfModel("l2")
+    appendLists(g, PqIndex.encodeResidual(
+      IvfIndex.assign(delta, vecCol, ivf), vecCol, ivf, g.pqModel("l2")))
   }
 
-  /** The READY IVFPQ layout + its models, or None. */
-  def readyIvfPq(metric: String = "l2")
-      : Option[(DataFrame, IvfIndex.Model, graft.operators.PqIndex.Model)] =
-    pqState match {
-      case Ready(gen, _, _) =>
-        Some((openLayout(pqPath(gen)),
-          graft.sources.IndexStore.readIvfModel(s"${pqPath(gen)}.ivf.txt")
-            .copy(metric = metric),
-          graft.sources.IndexStore.readPqModel(s"${pqPath(gen)}.pq.txt")
-            .copy(metric = metric)))
-      case _ => None
-    }
-
-  def readyPqGen(): Option[Long] = pqState match {
-    case Ready(gen, _, _) => Some(gen); case _ => None
-  }
-
-  // ── SCANN generation: IVF + ANISOTROPIC (score-aware) residual PQ —
-  //    the algorithm class behind the reference's wrapped ScaNN index
-  //    (impl/scann/; published as Guo et al., ICML 2020). Same layout
-  //    shape and serving route as IVFPQ (coarse probe ∘ ADC ∘ rerank);
-  //    what differs is the TRAINING objective (parallel quantization
-  //    error weighted η) and the encode-time assignment (same loss).
-
-  private def scannStatePath = s"$spacePath$sfx.scann_state.json"
-  private def scannPath(gen: Long) = s"$spacePath$sfx.scann.g$gen"
-
-  def scannState: State = readStateAt(scannStatePath)
-
-  /** Build (or rebuild) the SCANN generation: coarse quantizer +
-    * anisotropic residual codebooks, codes written `partitionBy(list_id)`
-    * (probe = partition pruning), models persisted as sidecars.
+  /** Build (or rebuild) the SCANN generation (see [[buildResidualPq]]).
     * `eta ≤ 0` selects the paper's threshold rule at T = 0.2.
     */
   def rebuildScann(vecCol: String, ncentroids: Int, m: Int,
-      ksub: Int = 256, eta: Double = 0.0): Ready = {
-    val gen = System.currentTimeMillis()
-    writeStateAt(scannStatePath, s"BUILDING:$gen:")
-    try {
-      val corpus = spark.read.parquet(spacePath)
-      val trainedDocs = corpus.count()
-      val dim = corpus.select(org.apache.spark.sql.functions.size(
-        org.apache.spark.sql.functions.col(vecCol))).head().getInt(0)
-      val ivf = IvfIndex.train(corpus, vecCol, ncentroids)
-      val assigned = IvfIndex.assign(corpus, vecCol, ivf)
-      val pq = graft.operators.PqIndex.trainResidualAnisotropic(assigned,
-        vecCol, dim, m, ivf, ksub = ksub, eta = eta,
-        maxTrainRows = 200000L, maxIter = 8)
-      graft.operators.PqIndex.encodeResidualAnisotropic(assigned, vecCol,
-          ivf, pq, eta = eta)
-        .write.mode("overwrite").partitionBy("list_id").parquet(scannPath(gen))
-      graft.sources.IndexStore.writeIvfModel(s"${scannPath(gen)}.ivf.txt", ivf)
-      graft.sources.IndexStore.writePqModel(s"${scannPath(gen)}.pq.txt", pq)
-      writeStateAt(scannStatePath, s"READY:$gen:$ncentroids:$trainedDocs")
-      pruneLedgers()
-      Ready(gen, ncentroids, trainedDocs)
-    } catch {
-      case e: Exception =>
-        writeStateAt(scannStatePath, s"FAILED:$gen:${e.getMessage}")
-        throw e
-    }
-  }
+      ksub: Int = 256, eta: Double = 0.0): Ready =
+    buildResidualPq(Scann, vecCol, ncentroids, m, ksub, Some(eta))
 
-  /** [[rebuildScann]] for an INT8 vector field — anisotropic codebooks
-    * in the raw-code float domain (the score-aware loss is
-    * scale-covariant, so the ×127 domain trains identically up to
-    * scale), compact int8 codes kept, integer-kernel rerank at serve
-    * time (see [[rebuildIvfPqInt8]]).
+  /** Build (or rebuild) the IVFRABITQ generation: per-list residual sign
+    * codes (RaBitQ class); search = coarse probe ∘ qb-estimator
+    * shortlist ∘ exact rerank (gamma_index_ivfrabitq.cc).
     */
-  def rebuildScannInt8(vecCol: String, ncentroids: Int, m: Int,
-      ksub: Int = 256, eta: Double = 0.0): Ready = {
-    val gen = System.currentTimeMillis()
-    writeStateAt(scannStatePath, s"BUILDING:$gen:")
-    try {
-      val corpus = spark.read.parquet(spacePath)
-        .withColumn("_i8f", graft.Graft.F.i8ToFloat(col(vecCol)))
+  def rebuildIvfRabitq(vecCol: String, ncentroids: Int): Ready =
+    withGeneration(Rabitq) { out =>
+      val (corpus, c) = trainingView(vecCol)
       val trainedDocs = corpus.count()
-      val dim = corpus.select(org.apache.spark.sql.functions.size(
-        org.apache.spark.sql.functions.col("_i8f"))).head().getInt(0)
-      val ivf = IvfIndex.train(corpus, "_i8f", ncentroids)
-      val assigned = IvfIndex.assign(corpus, "_i8f", ivf)
-      val pq = graft.operators.PqIndex.trainResidualAnisotropic(assigned,
-        "_i8f", dim, m, ivf, ksub = ksub, eta = eta,
-        maxTrainRows = 200000L, maxIter = 8)
-      graft.operators.PqIndex.encodeResidualAnisotropic(assigned, "_i8f",
-          ivf, pq, eta = eta)
-        .drop("_i8f")
-        .write.mode("overwrite").partitionBy("list_id").parquet(scannPath(gen))
-      graft.sources.IndexStore.writeIvfModel(s"${scannPath(gen)}.ivf.txt", ivf)
-      graft.sources.IndexStore.writePqModel(s"${scannPath(gen)}.pq.txt", pq)
-      writeStateAt(scannStatePath, s"READY:$gen:$ncentroids:$trainedDocs")
-      pruneLedgers()
-      Ready(gen, ncentroids, trainedDocs)
-    } catch {
-      case e: Exception =>
-        writeStateAt(scannStatePath, s"FAILED:$gen:${e.getMessage}")
-        throw e
+      val ivf = IvfIndex.train(corpus, c, ncentroids)
+      BinaryIndex.encodeResidual(IvfIndex.assign(corpus, c, ivf), c, ivf)
+        .drop(I8View).write.mode("overwrite").partitionBy("list_id").parquet(out)
+      IndexStore.writeIvfModel(s"$out.ivf.txt", ivf)
+      (ncentroids, trainedDocs)
     }
-  }
-
-  /** The READY SCANN layout + its models, or None. */
-  def readyScann(metric: String = "ip")
-      : Option[(DataFrame, IvfIndex.Model, graft.operators.PqIndex.Model)] =
-    scannState match {
-      case Ready(gen, _, _) =>
-        Some((openLayout(scannPath(gen)),
-          graft.sources.IndexStore.readIvfModel(s"${scannPath(gen)}.ivf.txt")
-            .copy(metric = metric),
-          graft.sources.IndexStore.readPqModel(s"${scannPath(gen)}.pq.txt")
-            .copy(metric = metric)))
-      case _ => None
-    }
-
-  def readyScannGen(): Option[Long] = scannState match {
-    case Ready(gen, _, _) => Some(gen); case _ => None
-  }
-
-  // ── IVFRABITQ generation: per-list residual sign codes (RaBitQ class)
-  //    over its own sidecar; search = coarse probe ∘ qb-estimator
-  //    shortlist ∘ exact rerank (gamma_index_ivfrabitq.cc).
-
-  private def rbStatePath = s"$spacePath$sfx.rb_state.json"
-  private def rbPath(gen: Long) = s"$spacePath$sfx.rb.g$gen"
-
-  def rbState: State = readStateAt(rbStatePath)
-
-  def rebuildIvfRabitq(vecCol: String, ncentroids: Int): Ready = {
-    val gen = System.currentTimeMillis()
-    writeStateAt(rbStatePath, s"BUILDING:$gen:")
-    try {
-      val corpus = spark.read.parquet(spacePath)
-      val trainedDocs = corpus.count()
-      val ivf = IvfIndex.train(corpus, vecCol, ncentroids)
-      graft.operators.BinaryIndex.encodeResidual(
-          IvfIndex.assign(corpus, vecCol, ivf), vecCol, ivf)
-        .write.mode("overwrite").partitionBy("list_id").parquet(rbPath(gen))
-      graft.sources.IndexStore.writeIvfModel(s"${rbPath(gen)}.ivf.txt", ivf)
-      writeStateAt(rbStatePath, s"READY:$gen:$ncentroids:$trainedDocs")
-      pruneLedgers()
-      Ready(gen, ncentroids, trainedDocs)
-    } catch {
-      case e: Exception =>
-        writeStateAt(rbStatePath, s"FAILED:$gen:${e.getMessage}")
-        throw e
-    }
-  }
-
-  /** [[rebuildIvfRabitq]] for an INT8 vector field — quantizer and
-    * residual sign codes in the raw-code float domain, compact int8
-    * codes kept, integer-kernel rerank at serve time (see
-    * [[rebuildIvfPqInt8]]).
-    */
-  def rebuildIvfRabitqInt8(vecCol: String, ncentroids: Int): Ready = {
-    val gen = System.currentTimeMillis()
-    writeStateAt(rbStatePath, s"BUILDING:$gen:")
-    try {
-      val corpus = spark.read.parquet(spacePath)
-        .withColumn("_i8f", graft.Graft.F.i8ToFloat(col(vecCol)))
-      val trainedDocs = corpus.count()
-      val ivf = IvfIndex.train(corpus, "_i8f", ncentroids)
-      graft.operators.BinaryIndex.encodeResidual(
-          IvfIndex.assign(corpus, "_i8f", ivf), "_i8f", ivf)
-        .drop("_i8f")
-        .write.mode("overwrite").partitionBy("list_id").parquet(rbPath(gen))
-      graft.sources.IndexStore.writeIvfModel(s"${rbPath(gen)}.ivf.txt", ivf)
-      writeStateAt(rbStatePath, s"READY:$gen:$ncentroids:$trainedDocs")
-      pruneLedgers()
-      Ready(gen, ncentroids, trainedDocs)
-    } catch {
-      case e: Exception =>
-        writeStateAt(rbStatePath, s"FAILED:$gen:${e.getMessage}")
-        throw e
-    }
-  }
 
   /** Incremental add into the READY IVFRABITQ generation — the delta's
     * residual sign codes derive from the STORED quantizer and append
     * into the `list_id` partitions ([[appendIvfPq]]'s contract for the
     * 1-bit family).
     */
-  def appendIvfRabitq(delta: DataFrame, vecCol: String): Unit = rbState match {
-    case Ready(gen, _, _) =>
-      val (_, ivf) = readyIvfRabitq().getOrElse(
-        throw new IllegalStateException("READY IVFRABITQ state without quantizer"))
-      graft.operators.BinaryIndex.encodeResidual(
-          IvfIndex.assign(delta, vecCol, ivf), vecCol, ivf)
-        .write.mode("append").partitionBy("list_id").parquet(rbPath(gen))
-      graft.sources.IndexStore.invalidateOpen(rbPath(gen)) // cached plan pre-dates the new files
-    case other =>
-      throw new IllegalStateException(
-        s"no READY IVFRABITQ generation to append to (state: $other)")
+  def appendIvfRabitq(delta: DataFrame, vecCol: String): Unit = {
+    val g = readyForAppend(Rabitq)
+    val ivf = g.ivfModel("l2")
+    appendLists(g, BinaryIndex.encodeResidual(
+      IvfIndex.assign(delta, vecCol, ivf), vecCol, ivf))
   }
 
-  /** The READY IVFRABITQ layout + quantizer, or None. */
-  def readyIvfRabitq(metric: String = "l2")
-      : Option[(DataFrame, IvfIndex.Model)] = rbState match {
-    case Ready(gen, _, _) =>
-      Some((openLayout(rbPath(gen)),
-        graft.sources.IndexStore.readIvfModel(s"${rbPath(gen)}.ivf.txt")
-          .copy(metric = metric)))
-    case _ => None
-  }
-
-  def readyRbGen(): Option[Long] = rbState match {
-    case Ready(gen, _, _) => Some(gen); case _ => None
-  }
-
-  // ── BINARYIVF generation: Hamming coarse quantizer over the packed
-  //    codes (gamma_index_binary_ivf.cc / faiss IndexBinaryIVF) — for
-  //    value_type=binary vector fields whose column IS the code.
-
-  private def bivfStatePath = s"$spacePath$sfx.bivf_state.json"
-  private def bivfPath(gen: Long) = s"$spacePath$sfx.bivf.g$gen"
-
-  def bivfState: State = readStateAt(bivfStatePath)
-
-  def rebuildBinaryIvf(codeCol: String, ncentroids: Int): Ready = {
-    val gen = System.currentTimeMillis()
-    writeStateAt(bivfStatePath, s"BUILDING:$gen:")
-    try {
+  /** Build (or rebuild) the BINARYIVF generation: Hamming coarse
+    * quantizer over the packed codes (gamma_index_binary_ivf.cc / faiss
+    * IndexBinaryIVF) — for value_type=binary vector fields whose column
+    * IS the code.
+    */
+  def rebuildBinaryIvf(codeCol: String, ncentroids: Int): Ready =
+    withGeneration(BinaryIvf) { out =>
       val corpus = spark.read.parquet(spacePath)
       val trainedDocs = corpus.count()
-      val cents = graft.operators.BinaryIndex.trainBinary(
-        corpus, "_id", codeCol, ncentroids)
-      graft.operators.BinaryIndex.buildTableBinary(corpus, codeCol, cents,
-        bivfPath(gen))
-      graft.sources.IndexStore.writeBinaryCentroids(
-        s"${bivfPath(gen)}.cents.txt", cents)
-      writeStateAt(bivfStatePath, s"READY:$gen:${cents.length}:$trainedDocs")
-      pruneLedgers()
-      Ready(gen, cents.length, trainedDocs)
-    } catch {
-      case e: Exception =>
-        writeStateAt(bivfStatePath, s"FAILED:$gen:${e.getMessage}")
-        throw e
+      val cents = BinaryIndex.trainBinary(corpus, "_id", codeCol, ncentroids)
+      BinaryIndex.buildTableBinary(corpus, codeCol, cents, out)
+      IndexStore.writeBinaryCentroids(s"$out.cents.txt", cents)
+      (cents.length, trainedDocs)
     }
-  }
 
   /** Incremental add into the READY BINARYIVF generation — the delta's
     * packed codes assign to their Hamming-nearest STORED centroid and
     * append into the `list_id` partitions ([[appendIvfPq]]'s contract
     * for the binary-valued family).
     */
-  def appendBinaryIvf(delta: DataFrame, codeCol: String): Unit = bivfState match {
-    case Ready(gen, _, _) =>
-      val (_, cents) = readyBinaryIvf().getOrElse(
-        throw new IllegalStateException("READY BINARYIVF state without centroids"))
-      graft.operators.BinaryIndex.assignBinary(delta, codeCol, cents)
-        .write.mode("append").partitionBy("list_id").parquet(bivfPath(gen))
-      graft.sources.IndexStore.invalidateOpen(bivfPath(gen)) // cached plan pre-dates the new files
-    case other =>
-      throw new IllegalStateException(
-        s"no READY BINARYIVF generation to append to (state: $other)")
+  def appendBinaryIvf(delta: DataFrame, codeCol: String): Unit = {
+    val g = readyForAppend(BinaryIvf)
+    appendLists(g, BinaryIndex.assignBinary(delta, codeCol, g.binaryCentroids))
   }
 
-  /** The READY BINARYIVF layout + centroid codes, or None. */
-  def readyBinaryIvf(): Option[(DataFrame, Array[Array[Byte]])] =
-    bivfState match {
-      case Ready(gen, _, _) =>
-        Some((openLayout(bivfPath(gen)),
-          graft.sources.IndexStore.readBinaryCentroids(s"${bivfPath(gen)}.cents.txt")))
-      case _ => None
-    }
-
-  def readyBivfGen(): Option[Long] = bivfState match {
-    case Ready(gen, _, _) => Some(gen); case _ => None
-  }
-
-  // ── DiskANN-static (Vamana) generation: same BUILDING→READY/FAILED
-  //    contract over its own sidecar. STATIC by definition (the
-  //    reference's DiskANN class rebuilds rather than appends), so there
-  //    is no appendVamana and the ledger baseline is always the
-  //    generation's own stamp.
-
-  private def vamanaStatePath = s"$spacePath$sfx.vamana_state.json"
-  private def vamanaPath(gen: Long) = s"$spacePath$sfx.vamana.g$gen"
-
-  def vamanaState: State = readStateAt(vamanaStatePath)
-
-  /** Build (or rebuild) the Vamana generation; `ncentroids` in the
-    * returned Ready carries `numShards`.
+  /** Build (or rebuild) the DiskANN-static (Vamana) generation;
+    * `ncentroids` in the returned Ready carries `numShards`. STATIC by
+    * definition (the reference's DiskANN class rebuilds rather than
+    * appends), so there is no appendVamana and the ledger baseline is
+    * always the generation's own stamp. INT8 fields use the same
+    * raw-code float view as [[rebuildHnsw]].
     */
-  def rebuildVamana(idCol: String, vecCol: String,
-      params: graft.operators.VamanaIndex.Params): Ready = {
-    val gen = System.currentTimeMillis()
-    writeStateAt(vamanaStatePath, s"BUILDING:$gen:")
-    try {
-      val corpus = spark.read.parquet(spacePath)
-      val trainedDocs = corpus.count()
-      graft.operators.VamanaIndex.build(corpus, idCol, vecCol, params)
-        .write.option("maxRecordsPerFile", 1).mode("overwrite").parquet(vamanaPath(gen))
-      writeStateAt(vamanaStatePath, s"READY:$gen:${params.numShards}:$trainedDocs")
-      pruneLedgers()
-      Ready(gen, params.numShards, trainedDocs)
-    } catch {
-      case e: Exception =>
-        writeStateAt(vamanaStatePath, s"FAILED:$gen:${e.getMessage}")
-        throw e
-    }
-  }
+  def rebuildVamana(idCol: String, vecCol: String, params: VamanaIndex.Params): Ready =
+    buildGraph(Vamana, vecCol, params.numShards)(VamanaIndex.build(_, idCol, _, params))
 
-  /** [[rebuildVamana]] for an INT8 vector field — the same raw-code
-    * float domain as [[rebuildHnswInt8]] (small integers are exact in
-    * float; the walk's Double-accumulated distances equal the integer
-    * kernels bit-for-bit), over the DiskANN-static graph family
-    * (reference: INT8 across every index family, index_model.h:19).
-    */
-  def rebuildVamanaInt8(idCol: String, vecCol: String,
-      params: graft.operators.VamanaIndex.Params): Ready = {
-    val gen = System.currentTimeMillis()
-    writeStateAt(vamanaStatePath, s"BUILDING:$gen:")
-    try {
-      val corpus = spark.read.parquet(spacePath)
-        .withColumn("_i8f", graft.Graft.F.i8ToFloat(col(vecCol)))
-      val trainedDocs = corpus.count()
-      graft.operators.VamanaIndex.build(corpus, idCol, "_i8f", params)
-        .write.option("maxRecordsPerFile", 1).mode("overwrite").parquet(vamanaPath(gen))
-      writeStateAt(vamanaStatePath, s"READY:$gen:${params.numShards}:$trainedDocs")
-      pruneLedgers()
-      Ready(gen, params.numShards, trainedDocs)
-    } catch {
-      case e: Exception =>
-        writeStateAt(vamanaStatePath, s"FAILED:$gen:${e.getMessage}")
-        throw e
-    }
-  }
-
-  /** Build (or rebuild) a CLUSTERED (SPANN-routed) Vamana generation:
-    * shards = coarse-quantizer lists, table written
-    * `partitionBy(shard_id)` so query-time routing is parquet PARTITION
-    * PRUNING ([[graft.operators.VamanaIndex.buildClustered]]) — the
-    * routed layout [[rebuildHnswClustered]] gives the graph kind,
-    * applied to the storage-resident family. The trained quantizer
-    * persists as a sidecar; its presence routes
-    * [[SearchApi.searchAuto]]'s DISKANN arm through nprobe shard
-    * pruning instead of the full fan-out.
+  /** Build (or rebuild) a CLUSTERED Vamana generation
+    * ([[graft.operators.VamanaIndex.buildClustered]]) — the routed
+    * layout [[rebuildHnswClustered]] gives the graph kind, applied to the
+    * storage-resident family.
     */
   def rebuildVamanaClustered(idCol: String, vecCol: String,
-      params: graft.operators.VamanaIndex.Params, ncentroids: Int,
-      maxShardRows: Int = 1 << 20): Ready = {
-    val gen = System.currentTimeMillis()
-    writeStateAt(vamanaStatePath, s"BUILDING:$gen:")
-    try {
-      val corpus = spark.read.parquet(spacePath)
-      val trainedDocs = corpus.count()
-      val ivf = IvfIndex.train(corpus, vecCol, ncentroids)
-      graft.operators.VamanaIndex.buildClustered(corpus, idCol, vecCol,
-          params.copy(numShards = ncentroids), ivf, maxShardRows)
-        .write.option("maxRecordsPerFile", 1).mode("overwrite").partitionBy("shard_id").parquet(vamanaPath(gen))
-      graft.sources.IndexStore.writeIvfModel(s"${vamanaPath(gen)}.ivf.txt", ivf)
-      writeStateAt(vamanaStatePath, s"READY:$gen:$ncentroids:$trainedDocs")
-      pruneLedgers()
-      Ready(gen, ncentroids, trainedDocs)
-    } catch {
-      case e: Exception =>
-        writeStateAt(vamanaStatePath, s"FAILED:$gen:${e.getMessage}")
-        throw e
-    }
-  }
-
-  /** The READY Vamana generation's routing quantizer, if it was built
-    * clustered — None for hash-sharded generations (full fan-out).
-    */
-  def vamanaRoutedModel(metric: String = "l2"): Option[IvfIndex.Model] =
-    vamanaState match {
-      case Ready(gen, _, _) =>
-        val p = s"${vamanaPath(gen)}.ivf.txt"
-        if (SidecarIO.exists(p))
-          Some(graft.sources.IndexStore.readIvfModel(p).copy(metric = metric))
-        else None
-      case _ => None
-    }
-
-  /** The current READY Vamana segment table, or None. */
-  def readyVamanaSegments(): Option[org.apache.spark.sql.Dataset[graft.operators.VamanaIndex.Segment]] =
-    vamanaState match {
-      case Ready(gen, _, _) =>
-        import spark.implicits._
-        Some(openLayout(vamanaPath(gen))
-          .as[graft.operators.VamanaIndex.Segment])
-      case _ => None
-    }
-
-  def readyVamanaGen(): Option[Long] = vamanaState match {
-    case Ready(gen, _, _) => Some(gen); case _ => None
-  }
+      params: VamanaIndex.Params, ncentroids: Int,
+      maxShardRows: Int = 1 << 20): Ready =
+    buildClustered(Vamana, vecCol, ncentroids)((corpus, ivf) =>
+      VamanaIndex.buildClustered(corpus, idCol, vecCol,
+        params.copy(numShards = ncentroids), ivf, maxShardRows))
 
   /** Force-merge ≡ compaction: rewrite the space with a target file count
-    * (POST /index/forcemerge → Optimize(), handler_document.go:468-476).
+    * (POST /index/forcemerge → Optimize(), handler_document.go:468-476),
+    * through the same move-aside swap as [[deleteByIds]].
     */
   def forceMerge(targetFiles: Int = 1): Unit = {
     recoverSwap()
-    val df = spark.read.parquet(spacePath).coalesce(targetFiles)
     val tmp = s"$spacePath.merge.tmp"
-    df.write.mode("overwrite").parquet(tmp)
-    // move-aside swap: a crash mid-merge never loses the table (data is
-    // at spacePath or spacePath.old at every instant; the brief
-    // absent-path window between the renames is closed by recoverSwap)
-    val p = new org.apache.hadoop.fs.Path(spacePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val old = new org.apache.hadoop.fs.Path(s"$spacePath.old")
-    fs.delete(old, true)
-    fs.rename(p, old)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp), p)
-    fs.delete(old, true)
-    ()
+    spark.read.parquet(spacePath).coalesce(targetFiles)
+      .write.mode("overwrite").parquet(tmp)
+    SidecarIO.swapIn(spacePath, tmp)
   }
 
   /** Drop EVERY generation of EVERY layout kind and field scope of this
@@ -1327,25 +848,64 @@ final class IndexLifecycle(spark: SparkSession, spacePath: String,
     val hp = new org.apache.hadoop.fs.Path(spacePath)
     val parent = hp.getParent
     if (parent != null) {
-      val re = (java.util.regex.Pattern.quote(hp.getName) +
-        """(\.[^.]+)?\.(index|hnsw|pq|scann|rb|bivf|vamana)(_state\.json$|\.g\d+)""").r
+      val re = (java.util.regex.Pattern.quote(hp.getName) + """(\.[^.]+)?\.(""" +
+        IndexLifecycle.kinds.map(_.infix).mkString("|") + """)(_state\.json$|\.g\d+)""").r
       SidecarIO.listNames(parent.toString)
         .filter(n => re.findPrefixMatchOf(n).isDefined)
         .foreach(n => SidecarIO.delete(s"$parent/$n"))
     }
   }
 
-  /** Remove the index (state + generations). */
+  /** Remove the IVF index (state + generation). */
   def drop(): Unit = {
-    val p = new org.apache.hadoop.fs.Path(spacePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    state match {
-      case Ready(gen, _, _) =>
-        fs.delete(new org.apache.hadoop.fs.Path(indexPath(gen)), true)
-        fs.delete(new org.apache.hadoop.fs.Path(s"${indexPath(gen)}.centroids"), true)
-      case _ =>
+    ready(Ivf).foreach { g =>
+      SidecarIO.delete(g.path)
+      SidecarIO.delete(s"${g.path}.centroids")
     }
-    SidecarIO.delete(statePath)
-    ()
+    SidecarIO.delete(statePath(Ivf))
+  }
+}
+
+object IndexLifecycle {
+
+  /** A layout kind: one generation namespace, named on disk by its infix
+    * — state file `<space>[.<field>].<infix>_state.json`, layouts
+    * `<space>[.<field>].<infix>.g<gen>`.
+    */
+  sealed abstract class Kind(val infix: String)
+  object Kind {
+    case object Ivf extends Kind("index")
+    case object Hnsw extends Kind("hnsw")
+    case object Pq extends Kind("pq")
+    case object Scann extends Kind("scann")
+    case object Rabitq extends Kind("rb")
+    case object BinaryIvf extends Kind("bivf")
+    case object Vamana extends Kind("vamana")
+  }
+
+  /** The kind table: every layout kind a space can carry. */
+  private val kinds: Seq[Kind] = {
+    import Kind._
+    Seq(Ivf, Hnsw, Pq, Scann, Rabitq, BinaryIvf, Vamana)
+  }
+
+  /** The layout kind a declared index type builds and serves from — the
+    * one mapping the declared build, the auto-build and the router share.
+    * GPU_* serve from the equivalent CPU layout and SSG (the other
+    * flat-graph RNG-family index) from the Vamana generation. None for
+    * the types that serve without a generation (FLAT, SCALAR).
+    */
+  def kindOf(indexType: String): Option[Kind] = {
+    import Kind._
+    indexType match {
+      case "IVFFLAT" | "GPU_IVFFLAT"                => Some(Ivf)
+      case "HNSW"                                   => Some(Hnsw)
+      case "DISKANN_STATIC" | "SSG"                 => Some(Vamana)
+      case "IVFPQ" | "GPU_IVFPQ" | "IVFPQ_RELAYOUT" => Some(Pq)
+      case "SCANN"                                  => Some(Scann)
+      case "IVFRABITQ"                              => Some(Rabitq)
+      case "BINARYIVF"                              => Some(BinaryIvf)
+      case _                                        => None
+    }
   }
 }

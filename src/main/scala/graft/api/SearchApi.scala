@@ -1,12 +1,13 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
 import graft.operators.{Documents, IvfIndex, Knn, VearchFilters}
 import graft.schema.{FieldKind, Space}
+import IndexLifecycle.Kind
 
 /** Request-level API parity: the vearch REST verbs
   * `POST /document/search` and `POST /document/query` compiled from their
@@ -669,6 +670,21 @@ object SearchApi {
     ((h % nb) + nb) % nb
   }
 
+  /** Point fetch of `ids` (non-empty, in `_id`'s own type `idT`) from a
+    * corpus carrying the catalog's `_bucket` column: `_bucket IN` the
+    * ids' buckets (partition pruning) plus `_id IN ids` (row-group
+    * skipping) — the reference's O(k) docid point reads
+    * (engine.cc:869-911), never a full corpus read. Zero false
+    * negatives: every row of an id lives in its hash bucket (layout
+    * invariant `_bucket = pmod(hash(_id), nb)`).
+    */
+  private def bucketFetch(bucketed: DataFrame, nb: Int, ids: Seq[Any],
+      idT: org.apache.spark.sql.types.DataType): DataFrame = {
+    val bks = ids.map(bucketOfAny(_, nb, idT)).distinct
+    bucketed.filter(col("_bucket").isin(bks: _*) && col("_id").isin(ids: _*))
+      .drop("_bucket")
+  }
+
   /** Score-gated GRAPH serving (min_score/max_score per vector
     * condition, doc_query.go:67-78), the driver-bounded depth loop: each
     * probe runs ONE action aggregating (candidate count, gated top-k)
@@ -803,13 +819,8 @@ object SearchApi {
     val bucketedCorpus: Option[DataFrame] =
       if (corpus0.columns.contains("_bucket")) Some(corpus0) else None
     val corpus = bucketedCorpus.map(_.drop("_bucket")).getOrElse(corpus0)
-    lazy val bucketNb: Option[Int] = bucketedCorpus.flatMap { _ =>
-      val p = s"${lifecycle.path}/_graft_buckets"
-      if (graft.sources.SidecarIO.exists(p))
-        scala.util.Try(graft.sources.SidecarIO.readString(p).trim.toInt)
-          .toOption.filter(_ > 0)
-      else None
-    }
+    lazy val bucketNb: Option[Int] =
+      bucketedCorpus.flatMap(_ => graft.schema.SpaceCatalog.bucketsOf(lifecycle.path))
     val idIntegral = corpus.schema.fields.find(_.name == "_id").exists(f =>
       f.dataType == LongType || f.dataType == IntegerType)
     // ROUTING id — the long column index hits, delete-ledger entries and
@@ -945,9 +956,7 @@ object SearchApi {
       // its buffered update filter identically
       val pruned = (bucketedCorpus, bucketNb) match {
         case (Some(b), Some(nb)) if ridName == "_id" && idVals.nonEmpty =>
-          val bks = idVals.map(bucketOfAny(_, nb, idT)).distinct
-          val baseP =
-            b.filter(col("_bucket").isin(bks: _*) && idFilter).drop("_bucket")
+          val baseP = bucketFetch(b, nb, idVals, idT)
           if (tailOn)
             graft.operators.Documents.upsert(baseP,
               tail.get.buffered(corpus.schema, lifecycle.allDeletes())
@@ -1188,214 +1197,206 @@ object SearchApi {
         // the request's per-condition index_type wins over the declared
         // one (doc_query.go:277-283); parseSearch validated it, so the
         // only divergent value here is the "FLAT" brute override — no
-        // route, the caller serves this condition exactly
-        vc.indexType.getOrElse(fOpts.indexType) match {
-          case "HNSW" if !isBin && (!isI8 || i8Metric) =>
-            if (rid.isEmpty) noDocidRoute("HNSW")
-            lc.readyHnswSegments().flatMap { segments0 =>
-              val deny = lc.hnswDeleteBaseline()
-                .map(lc.deletedSince).getOrElse(Set.empty[Long])
-              val segments = pruneShards(segments0, lc.hnswRoutedModel(metric))
-              val ef = math.max(param("efSearch", fOpts).getOrElse(64), k)
-              graphLeg(deny)(
-                (q, kb) => graft.operators.HnswIndex.search(segments, q, kb,
-                  math.max(ef, kb), metric, deny = deny, band = band))(
-                (q, kb, bc) => graft.operators.HnswIndex.searchFilteredBc(
-                  segments, q, kb, math.max(ef, kb), metric, bc, band = band))(
-                (qs, kb, allow) => graft.operators.HnswIndex.searchBatch(
-                  segments, qs, kb, math.max(ef, kb), metric, deny = deny,
-                  allowIds = allow, band = band))
-            }
-          // the reference's DiskANN-static class
-          // (gamma_index_diskann_static.cc): `l_search`/`beam_width`
-          // resolve over the space's `L`/`beam_width`
-          // (diskann_static_params.h:27-38). SSG - the other flat-graph
-          // RNG-family index (wrapped third-party, impl/ssg/) - aliases
-          // to the Vamana generation the way GPU_* alias to CPU layouts.
-          case t @ ("DISKANN_STATIC" | "SSG")
-              if !isBin && (!isI8 || i8Metric) =>
-            if (rid.isEmpty) noDocidRoute(t)
-            lc.readyVamanaSegments().flatMap { segments0 =>
-              val deny = lc.readyVamanaGen()
-                .map(lc.deletedSince).getOrElse(Set.empty[Long])
-              val segments = pruneShards(segments0, lc.vamanaRoutedModel(metric))
-              val l = math.max(
-                req.indexParams.get("l_search").filter(_ > 0)
-                  .orElse(fOpts.indexParams.get("L").filter(_ > 0))
-                  .getOrElse(100), k)
-              val bw = param("beam_width", fOpts).getOrElse(4)
-              graphLeg(deny)(
-                (q, kb) => graft.operators.VamanaIndex.search(segments, q, kb,
-                  math.max(l, kb), bw, metric, deny = deny, band = band))(
-                (q, kb, bc) => graft.operators.VamanaIndex.searchFilteredBc(
-                  segments, q, kb, math.max(l, kb), bw, metric, bc,
-                  band = band))(
-                (qs, kb, allow) => graft.operators.VamanaIndex.searchBatch(
-                  segments, qs, kb, math.max(l, kb), bw, metric, deny = deny,
-                  allowIds = allow, band = band))
-            }
-          // GPU_* spaces execute on CUDA in the reference; here they
-          // serve from the equivalent CPU layout - same semantics.
-          // `nprobe` resolves request index_params -> space params ->
-          // the model default 80 (gamma_index_ivfflat.cc:52-54), capped
-          // at ncentroids. INT8 probes with the FLOAT query (centroids
-          // live in the de-quantized domain, rebuildInt8) and scores
-          // in-scan with the integer kernels.
-          case "IVFFLAT" | "GPU_IVFFLAT" if !isBin && (!isI8 || i8Metric) =>
-            for (table <- lc.readyIndex(); model <- lc.loadModel(metric)) yield {
-              val deny = lc.readyGen()
-                .map(lc.deletedSince).getOrElse(Set.empty[Long])
-              val served = applyDeny(table, deny, ridName)
-              val nprobe = math.min(
-                param("nprobe", fOpts).getOrElse(80), model.ncentroids)
-              if (!batched)
-                // predicate + gate IN-SCAN inside the probed lists -
-                // zero over-fetch, no gate loop
-                withTail(deny, k)(kb =>
-                  (if (isI8)
-                    IvfIndex.searchInt8(served, col(vc.field), model,
-                      qsN.head._2, qI8.head._2, kb, nprobe, filter = pred,
-                      minScore = vc.minScore, maxScore = vc.maxScore,
-                      tieBreak = Some(col("_id")))
-                  else
-                    IvfIndex.search(served, col(vc.field), model,
-                      qsN.head._2, kb, nprobe, filter = pred,
-                      minScore = vc.minScore, maxScore = vc.maxScore,
-                      tieBreak = Some(col("_id"))))
-                    .select(asVecId(col(ridName)), col("_score")))
-              else {
-                // one probe-union pass serves the whole batch
-                val servedF = pred.map(served.filter).getOrElse(served)
-                withTailB(deny, k)(kb =>
-                  (if (isI8)
-                    IvfIndex.searchBatchInt8(servedF, col(vc.field),
-                      struct(col(ridName)),
-                      qsN.zip(qI8).map { case ((qid, q), (_, code)) =>
-                        (qid, q, code) },
-                      model, kb, nprobe,
-                      minScore = vc.minScore, maxScore = vc.maxScore)
-                  else
-                    IvfIndex.searchBatch(servedF, col(vc.field),
-                      struct(col(ridName)), qsN, model, kb, nprobe,
-                      minScore = vc.minScore, maxScore = vc.maxScore))
-                    .select(col("_qid"), asVecId(col(s"_item.$ridName")),
-                      col("_score")))
-              }
-            }
-          // the compressed families: ADC over residual codes inside
-          // nprobe lists, then a `recall_num`-deep exact rerank
-          // (gamma_index_ivfpq.cc:765-768 - recall_num caps at
-          // max(recall_num, k), absent = k). Predicate + delete gate
-          // pre-compose into the scan both stages run over; score gates
-          // apply at the exact-rerank heap - the stage the final score
-          // exists at. SCANN (anisotropic quantization, Guo et al. ICML
-          // 2020) shares the serving composition - only its codebook
-          // training loss and recall default (10k) differ. INT8 legs
-          // shortlist in the raw-code domain, rerank with the integer
-          // kernels.
-          case "IVFPQ" | "GPU_IVFPQ" | "IVFPQ_RELAYOUT" | "SCANN"
-              if !isBin && (!isI8 || i8Metric) =>
-            val isScann = fOpts.indexType == "SCANN"
-            (if (isScann) lc.readyScann(metric) else lc.readyIvfPq(metric))
-              .map { case (table, ivf, pq) =>
-                val deny =
-                  (if (isScann) lc.readyScannGen() else lc.readyPqGen())
-                    .map(lc.deletedSince).getOrElse(Set.empty[Long])
-                val served0 = applyDeny(table, deny, ridName)
+        // kind, the caller serves this condition exactly. A family routes
+        // only in its value domain: BINARYIVF over binary codes, every
+        // other family over float, or int8 under the integer kernels'
+        // metrics; any other pairing has no route -> FLAT.
+        val indexType = vc.indexType.getOrElse(fOpts.indexType)
+        IndexLifecycle.kindOf(indexType).filter(kind =>
+          if (kind == Kind.BinaryIvf) isBin else !isBin && (!isI8 || i8Metric)
+        ).flatMap { kind =>
+          if ((kind == Kind.Hnsw || kind == Kind.Vamana) && rid.isEmpty)
+            noDocidRoute(indexType)
+          // ONE state read per leg: the layout, models and delete gate
+          // below all come from this one READY generation
+          lc.ready(kind).flatMap { g =>
+            val deny = g.deny
+            kind match {
+              case Kind.Hnsw =>
+                val segments = pruneShards(
+                  g.table.as(Encoders.product[graft.operators.HnswIndex.Segment]),
+                  g.routedModel(metric))
+                val ef = math.max(param("efSearch", fOpts).getOrElse(64), k)
+                graphLeg(deny)(
+                  (q, kb) => graft.operators.HnswIndex.search(segments, q, kb,
+                    math.max(ef, kb), metric, deny = deny, band = band))(
+                  (q, kb, bc) => graft.operators.HnswIndex.searchFilteredBc(
+                    segments, q, kb, math.max(ef, kb), metric, bc, band = band))(
+                  (qs, kb, allow) => graft.operators.HnswIndex.searchBatch(
+                    segments, qs, kb, math.max(ef, kb), metric, deny = deny,
+                    allowIds = allow, band = band))
+              // the reference's DiskANN-static class
+              // (gamma_index_diskann_static.cc): `l_search`/`beam_width`
+              // resolve over the space's `L`/`beam_width`
+              // (diskann_static_params.h:27-38). SSG - the other
+              // flat-graph RNG-family index (wrapped third-party,
+              // impl/ssg/) - aliases to the Vamana generation the way
+              // GPU_* alias to CPU layouts.
+              case Kind.Vamana =>
+                val segments = pruneShards(
+                  g.table.as(Encoders.product[graft.operators.VamanaIndex.Segment]),
+                  g.routedModel(metric))
+                val l = math.max(
+                  req.indexParams.get("l_search").filter(_ > 0)
+                    .orElse(fOpts.indexParams.get("L").filter(_ > 0))
+                    .getOrElse(100), k)
+                val bw = param("beam_width", fOpts).getOrElse(4)
+                graphLeg(deny)(
+                  (q, kb) => graft.operators.VamanaIndex.search(segments, q, kb,
+                    math.max(l, kb), bw, metric, deny = deny, band = band))(
+                  (q, kb, bc) => graft.operators.VamanaIndex.searchFilteredBc(
+                    segments, q, kb, math.max(l, kb), bw, metric, bc,
+                    band = band))(
+                  (qs, kb, allow) => graft.operators.VamanaIndex.searchBatch(
+                    segments, qs, kb, math.max(l, kb), bw, metric, deny = deny,
+                    allowIds = allow, band = band))
+              // GPU_* spaces execute on CUDA in the reference; here they
+              // serve from the equivalent CPU layout - same semantics.
+              // `nprobe` resolves request index_params -> space params ->
+              // the model default 80 (gamma_index_ivfflat.cc:52-54),
+              // capped at ncentroids. INT8 probes with the FLOAT query
+              // (centroids live in the de-quantized domain, see
+              // IndexLifecycle.rebuild) and scores in-scan with the
+              // integer kernels.
+              case Kind.Ivf =>
+                val model = g.centroidModel(metric)
+                val served = applyDeny(g.table, deny, ridName)
+                val nprobe = math.min(
+                  param("nprobe", fOpts).getOrElse(80), model.ncentroids)
+                if (!batched)
+                  // predicate + gate IN-SCAN inside the probed lists -
+                  // zero over-fetch, no gate loop
+                  Some(withTail(deny, k)(kb =>
+                    (if (isI8)
+                      IvfIndex.searchInt8(served, col(vc.field), model,
+                        qsN.head._2, qI8.head._2, kb, nprobe, filter = pred,
+                        minScore = vc.minScore, maxScore = vc.maxScore,
+                        tieBreak = Some(col("_id")))
+                    else
+                      IvfIndex.search(served, col(vc.field), model,
+                        qsN.head._2, kb, nprobe, filter = pred,
+                        minScore = vc.minScore, maxScore = vc.maxScore,
+                        tieBreak = Some(col("_id"))))
+                      .select(asVecId(col(ridName)), col("_score"))))
+                else {
+                  // one probe-union pass serves the whole batch
+                  val servedF = pred.map(served.filter).getOrElse(served)
+                  Some(withTailB(deny, k)(kb =>
+                    (if (isI8)
+                      IvfIndex.searchBatchInt8(servedF, col(vc.field),
+                        struct(col(ridName)),
+                        qsN.zip(qI8).map { case ((qid, q), (_, code)) =>
+                          (qid, q, code) },
+                        model, kb, nprobe,
+                        minScore = vc.minScore, maxScore = vc.maxScore)
+                    else
+                      IvfIndex.searchBatch(servedF, col(vc.field),
+                        struct(col(ridName)), qsN, model, kb, nprobe,
+                        minScore = vc.minScore, maxScore = vc.maxScore))
+                      .select(col("_qid"), asVecId(col(s"_item.$ridName")),
+                        col("_score"))))
+                }
+              // the compressed families: ADC over residual codes inside
+              // nprobe lists, then a `recall_num`-deep exact rerank
+              // (gamma_index_ivfpq.cc:765-768 - recall_num caps at
+              // max(recall_num, k), absent = k). Predicate + delete gate
+              // pre-compose into the scan both stages run over; score
+              // gates apply at the exact-rerank heap - the stage the
+              // final score exists at. SCANN (anisotropic quantization,
+              // Guo et al. ICML 2020) shares the serving composition -
+              // only its codebook training loss and recall default (10k)
+              // differ. INT8 legs shortlist in the raw-code domain,
+              // rerank with the integer kernels.
+              case Kind.Pq | Kind.Scann =>
+                val (ivf, pq) = (g.ivfModel(metric), g.pqModel(metric))
+                val served0 = applyDeny(g.table, deny, ridName)
                 val served = pred.map(served0.filter).getOrElse(served0)
                 val nprobe = math.min(
                   param("nprobe", fOpts).getOrElse(80), ivf.ncentroids)
                 val recallNum = math.max(
-                  param("recall_num", fOpts)
-                    .getOrElse(if (isScann) math.max(10 * k, 100) else k), k)
+                  param("recall_num", fOpts).getOrElse(
+                    if (kind == Kind.Scann) math.max(10 * k, 100) else k), k)
                 if (!batched)
-                  withTail(deny, k)(kb =>
+                  Some(withTail(deny, k)(kb =>
                     graft.operators.PqIndex.searchIvfResidual(served,
                       col(vc.field), ivf, pq, walkQs.head._2, kb, nprobe,
                       math.max(recallNum, kb), idCol = col("_id"),
                       minScore = vc.minScore, maxScore = vc.maxScore,
                       rerankInt8 = if (isI8) Some(qI8.head._2) else None)
-                      .select(asVecId(col(ridName)), col("_score")))
+                      .select(asVecId(col(ridName)), col("_score"))))
                 else
-                  withTailB(deny, k)(kb =>
+                  Some(withTailB(deny, k)(kb =>
                     graft.operators.PqIndex.searchBatchIvfResidual(served,
                       col(vc.field), ivf, pq, walkQs, kb, nprobe,
                       math.max(recallNum, kb), idCol = col(ridName),
                       minScore = vc.minScore, maxScore = vc.maxScore,
                       rerankInt8 = if (isI8) Some(qI8) else None)
                       .select(col("_qid"), asVecId(col("_id")),
-                        col("_score")))
-              }
-          // RaBitQ class: coarse probe, residual sign-code estimator
-          // (qb in [0,8]), `recall_num`-deep exact rerank
-          // (gamma_index_ivfrabitq.cc:105,214-223)
-          case "IVFRABITQ" if !isBin && (!isI8 || i8Metric) =>
-            lc.readyIvfRabitq(metric).map { case (table, ivf) =>
-              val deny = lc.readyRbGen()
-                .map(lc.deletedSince).getOrElse(Set.empty[Long])
-              val served0 = applyDeny(table, deny, ridName)
-              val served = pred.map(served0.filter).getOrElse(served0)
-              val nprobe = math.min(
-                param("nprobe", fOpts).getOrElse(80), ivf.ncentroids)
-              val shortlist = math.max(
-                param("recall_num", fOpts)
-                  .getOrElse(math.max(10 * k, 100)), k)
-              val qbBits = req.indexParams.get("qb")
-                .orElse(fOpts.indexParams.get("qb"))
-                .filter(v => v >= 0 && v <= 8).getOrElse(4)
-              if (!batched)
-                withTail(deny, k)(kb =>
-                  graft.operators.BinaryIndex.searchIvfResidual(served,
-                    col(vc.field), ivf, walkQs.head._2, kb, nprobe,
-                    math.max(shortlist, kb), idCol = col("_id"),
-                    metric = metric, qb = qbBits, minScore = vc.minScore,
-                    maxScore = vc.maxScore,
-                    rerankInt8 = if (isI8) Some(qI8.head._2) else None)
-                    .select(asVecId(col(ridName)), col("_score")))
-              else
-                withTailB(deny, k)(kb =>
-                  graft.operators.BinaryIndex.searchBatchIvfResidual(served,
-                    col(vc.field), ivf, walkQs, kb, nprobe,
-                    math.max(shortlist, kb), idCol = col(ridName),
-                    metric = metric, qb = qbBits, minScore = vc.minScore,
-                    maxScore = vc.maxScore,
-                    rerankInt8 = if (isI8) Some(qI8) else None)
-                    .select(col("_qid"), asVecId(col("_id")),
-                      col("_score")))
-            }
-          // binary value_type: the stored column IS the packed code; the
-          // request's float features sign-binarize like the FLAT binary
-          // path, then route = probe nprobe Hamming-nearest lists
-          // (partition pruning), rank by code Hamming - the reference's
-          // IndexBinaryIVF semantics (gamma_index_binary_ivf.cc).
-          // Hamming IS the final score, so gates apply in-scan.
-          case "BINARYIVF" if isBin =>
-            lc.readyBinaryIvf().map { case (table, cents) =>
-              val deny = lc.readyBivfGen()
-                .map(lc.deletedSince).getOrElse(Set.empty[Long])
-              val nprobe = math.min(
-                param("nprobe", fOpts).getOrElse(80), cents.length)
-              if (!batched) {
-                val served = applyDeny(table, deny, ridName)
-                withTail(deny, k)(kb =>
-                  graft.operators.BinaryIndex.searchBinaryIvf(served,
-                    vc.field, cents, qCodes.head._2, kb, nprobe,
-                    filter = pred, minScore = vc.minScore,
-                    maxScore = vc.maxScore, tieBreak = Some(col("_id")))
-                    .select(asVecId(col(ridName)), col("_score")))
-              } else {
-                val served0 = applyDeny(table, deny, ridName)
+                        col("_score"))))
+              // RaBitQ class: coarse probe, residual sign-code estimator
+              // (qb in [0,8]), `recall_num`-deep exact rerank
+              // (gamma_index_ivfrabitq.cc:105,214-223)
+              case Kind.Rabitq =>
+                val ivf = g.ivfModel(metric)
+                val served0 = applyDeny(g.table, deny, ridName)
                 val served = pred.map(served0.filter).getOrElse(served0)
-                withTailB(deny, k)(kb =>
-                  graft.operators.BinaryIndex.searchBatchBinaryIvf(served,
-                    vc.field, cents, qCodes, kb, nprobe,
-                    idCol = col(ridName), minScore = vc.minScore,
-                    maxScore = vc.maxScore)
-                    .select(col("_qid"), asVecId(col("_id")),
-                      col("_score")))
-              }
+                val nprobe = math.min(
+                  param("nprobe", fOpts).getOrElse(80), ivf.ncentroids)
+                val shortlist = math.max(
+                  param("recall_num", fOpts)
+                    .getOrElse(math.max(10 * k, 100)), k)
+                val qbBits = req.indexParams.get("qb")
+                  .orElse(fOpts.indexParams.get("qb"))
+                  .filter(v => v >= 0 && v <= 8).getOrElse(4)
+                if (!batched)
+                  Some(withTail(deny, k)(kb =>
+                    graft.operators.BinaryIndex.searchIvfResidual(served,
+                      col(vc.field), ivf, walkQs.head._2, kb, nprobe,
+                      math.max(shortlist, kb), idCol = col("_id"),
+                      metric = metric, qb = qbBits, minScore = vc.minScore,
+                      maxScore = vc.maxScore,
+                      rerankInt8 = if (isI8) Some(qI8.head._2) else None)
+                      .select(asVecId(col(ridName)), col("_score"))))
+                else
+                  Some(withTailB(deny, k)(kb =>
+                    graft.operators.BinaryIndex.searchBatchIvfResidual(served,
+                      col(vc.field), ivf, walkQs, kb, nprobe,
+                      math.max(shortlist, kb), idCol = col(ridName),
+                      metric = metric, qb = qbBits, minScore = vc.minScore,
+                      maxScore = vc.maxScore,
+                      rerankInt8 = if (isI8) Some(qI8) else None)
+                      .select(col("_qid"), asVecId(col("_id")),
+                        col("_score"))))
+              // binary value_type: the stored column IS the packed code;
+              // the request's float features sign-binarize like the FLAT
+              // binary path, then route = probe nprobe Hamming-nearest
+              // lists (partition pruning), rank by code Hamming - the
+              // reference's IndexBinaryIVF semantics
+              // (gamma_index_binary_ivf.cc). Hamming IS the final score,
+              // so gates apply in-scan.
+              case Kind.BinaryIvf =>
+                val cents = g.binaryCentroids
+                val nprobe = math.min(
+                  param("nprobe", fOpts).getOrElse(80), cents.length)
+                val served = applyDeny(g.table, deny, ridName)
+                if (!batched)
+                  Some(withTail(deny, k)(kb =>
+                    graft.operators.BinaryIndex.searchBinaryIvf(served,
+                      vc.field, cents, qCodes.head._2, kb, nprobe,
+                      filter = pred, minScore = vc.minScore,
+                      maxScore = vc.maxScore, tieBreak = Some(col("_id")))
+                      .select(asVecId(col(ridName)), col("_score"))))
+                else
+                  Some(withTailB(deny, k)(kb =>
+                    graft.operators.BinaryIndex.searchBatchBinaryIvf(
+                      pred.map(served.filter).getOrElse(served),
+                      vc.field, cents, qCodes, kb, nprobe,
+                      idCol = col(ridName), minScore = vc.minScore,
+                      maxScore = vc.maxScore)
+                      .select(col("_qid"), asVecId(col("_id")),
+                        col("_score"))))
             }
-          case _ => None // no route for this family x value type -> FLAT
+          }
         }
       }
     }
@@ -1546,11 +1547,7 @@ object SearchApi {
     lazy val bucketNb: Option[Int] = for {
       _ <- bucketedCorpus
       lc <- lifecycle
-      p = s"${lc.path}/_graft_buckets"
-      if graft.sources.SidecarIO.exists(p)
-      nb <- scala.util.Try(
-        graft.sources.SidecarIO.readString(p).trim.toInt).toOption
-      if nb > 0
+      nb <- graft.schema.SpaceCatalog.bucketsOf(lc.path)
     } yield nb
     val j = JsonMethods.parse(requestJson)
     val req = parseSearch(
@@ -1600,9 +1597,7 @@ object SearchApi {
         val idFilter =
           if (tids.nonEmpty) col("_id").isin(tids: _*) else lit(false)
         val base = (bucketedCorpus, bucketNb) match {
-          case (Some(b), Some(nb)) if tids.nonEmpty =>
-            val bks = tids.map(bucketOfAny(_, nb, idT)).distinct
-            b.filter(col("_bucket").isin(bks: _*) && idFilter).drop("_bucket")
+          case (Some(b), Some(nb)) if tids.nonEmpty => bucketFetch(b, nb, tids, idT)
           case _ => corpus.filter(idFilter)
         }
         base.join(broadcast(reqDf), Seq("_id")).orderBy(col("_ord"))

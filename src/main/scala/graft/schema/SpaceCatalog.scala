@@ -20,9 +20,26 @@ object SpaceCatalog {
     * corpus-scale deny set on later searches. ~1M longs ≈ 8 MB.
     */
   @volatile var maxDeleteLedgerIds: Int = 1 << 20
+
+  /** Bucket count of a bucketed table, from its `_graft_buckets` mark
+    * (absent = legacy flat layout). The mark is written whole by the
+    * catalog's rewrite, so anything but a positive integer is corruption:
+    * the writers and the serving path's `_bucket IN` pruning would
+    * otherwise disagree on the layout.
+    */
+  private[graft] def bucketsOf(path: String): Option[Int] = {
+    val p = s"$path/_graft_buckets"
+    if (!SidecarIO.exists(p)) None
+    else {
+      val s = SidecarIO.readString(p).trim
+      Some(s.toIntOption.filter(_ > 0).getOrElse(throw new IllegalStateException(
+        s"corrupt bucket count in $p: '$s'")))
+    }
+  }
 }
 
 final class SpaceCatalog(spark: SparkSession, root: String) {
+  import SpaceCatalog.bucketsOf
 
   private def dir(db: String, space: String) = s"$root/$db/$space"
   private def viewName(db: String, space: String) = s"${db}__$space"
@@ -107,12 +124,6 @@ final class SpaceCatalog(spark: SparkSession, root: String) {
   private def writeDocidHwm(path: String, hwm: Option[Long]): Unit =
     hwm.foreach(h =>
       SidecarIO.writeString(s"$path/_graft_docid_hwm", h.toString))
-
-  /** Bucket count of a bucketed table (absent = legacy flat layout). */
-  private def bucketsOf(path: String): Option[Int] = {
-    val p = s"$path/_graft_buckets"
-    if (SidecarIO.exists(p)) Some(SidecarIO.readString(p).trim.toInt) else None
-  }
 
   private def withBucket(df: DataFrame, nb: Int): DataFrame =
     df.withColumn("_bucket", pmod(hash(col("_id")), lit(nb)))
@@ -199,7 +210,7 @@ final class SpaceCatalog(spark: SparkSession, root: String) {
           .sortWithinPartitions(col("_bucket"), col("_id"))
           .write.mode(SaveMode.Overwrite).partitionBy("_bucket").parquet(tmp)
         SidecarIO.writeString(s"$tmp/_graft_buckets", partitionNum.toString)
-        replace(path, tmp)
+        SidecarIO.swapIn(path, tmp)
     }
   }
 
@@ -296,14 +307,14 @@ final class SpaceCatalog(spark: SparkSession, root: String) {
           if (!anyBucketLeft) {
             base.drop("_bucket").limit(0)
               .write.mode(SaveMode.Overwrite).parquet(tmp)
-            replace(path, tmp)
+            SidecarIO.swapIn(path, tmp)
           }
         }
       case None =>
         val remaining =
           graft.operators.Documents.deleteByQuery(spark.read.parquet(path), pred)
         remaining.write.mode(SaveMode.Overwrite).parquet(tmp)
-        replace(path, tmp)
+        SidecarIO.swapIn(path, tmp)
     }
     refreshView(db, spaceName)
   }
@@ -455,12 +466,12 @@ final class SpaceCatalog(spark: SparkSession, root: String) {
     spark.read.parquet(path)
   }
 
-  /** A live replaceBucket/replace completes its swap in well under this;
+  /** A live replaceBucket/swapIn completes its swap in well under this;
     * an aside older than it can only be a crash leftover.
     */
   private val ReadRecoveryGraceMs = 60000L
 
-  /** Crash recovery on open: a crash inside [[replace]] can leave the whole
+  /** Crash recovery on open: a crash inside [[SidecarIO.swapIn]] can leave the whole
     * table under `path.old` with `path` gone; a crash inside
     * [[replaceBucket]] (between move-aside and move-in) leaves a bucket's
     * rows under `path.oldbucket.N` with no `_bucket=N` dir — data that
@@ -598,7 +609,7 @@ final class SpaceCatalog(spark: SparkSession, root: String) {
       .foreach(a => df.createOrReplaceTempView(a))
   }
 
-  /** Per-bucket move-aside swap (same crash-safety argument as [[replace]],
+  /** Per-bucket move-aside swap (same crash-safety argument as [[SidecarIO.swapIn]],
     * scoped to one bucket dir). The aside dir lives OUTSIDE the table path
     * so a crash never leaves a non-partition dir inside it (which would
     * break parquet partition discovery).
@@ -613,16 +624,4 @@ final class SpaceCatalog(spark: SparkSession, root: String) {
     SidecarIO.delete(old)
   }
 
-  /** Swap with no lost-table crash window: the old table moves aside
-    * first, the new one moves into place, then the old is deleted. A
-    * crash mid-swap leaves the data under `path` or `path.old` — never
-    * gone (delete-then-rename would lose everything between the two).
-    */
-  private def replace(path: String, tmp: String): Unit = {
-    val old = s"$path.old"
-    SidecarIO.delete(old)
-    SidecarIO.rename(path, old)
-    SidecarIO.rename(tmp, path)
-    SidecarIO.delete(old)
-  }
 }

@@ -857,7 +857,7 @@ object IndexStore {
   /** INT8 SPACE fixture: the embeddings symmetric-quantized to int8
     * codes (`iv`, the ingest-side quantizer) with a READY IVFFLAT
     * generation trained in the de-quantized domain
-    * ([[graft.api.IndexLifecycle.rebuildInt8]]) — the INT8 routed
+    * ([[graft.api.IndexLifecycle.rebuild]]) — the INT8 routed
     * serving layout (index_model.h:19).
     */
   def int8IvfSpace(spark: SparkSession, sfDir: String): String = {
@@ -868,14 +868,14 @@ object IndexStore {
         .select(col("vec_id").cast("long").as("_id"), col("label"),
           graft.Graft.F.quantizeI8(col("embedding")).as("iv"))
         .write.mode("overwrite").parquet(spacePath)
-      new graft.api.IndexLifecycle(spark, spacePath).rebuildInt8("iv", 8)
+      new graft.api.IndexLifecycle(spark, spacePath).rebuild("iv", 8)
       markReady(dir)
     }
     spacePath
   }
 
   /** INT8 space under a READY HNSW generation: the graph stores the raw
-    * code values as floats ([[graft.api.IndexLifecycle.rebuildHnswInt8]])
+    * code values as floats ([[graft.api.IndexLifecycle.rebuildHnsw]])
     * so walk scores equal the integer kernels exactly — the routed int8
     * graph serving fixture (reference: INT8 across every index family,
     * index_model.h:19).
@@ -888,7 +888,7 @@ object IndexStore {
         .select(col("vec_id").cast("long").as("_id"), col("label"),
           graft.Graft.F.quantizeI8(col("embedding")).as("iv"))
         .write.mode("overwrite").parquet(spacePath)
-      new graft.api.IndexLifecycle(spark, spacePath).rebuildHnswInt8("_id", "iv",
+      new graft.api.IndexLifecycle(spark, spacePath).rebuildHnsw("_id", "iv",
         HnswIndex.Params(m = 16, efConstruction = 100, metric = "ip",
           numShards = 4))
       markReady(dir)
@@ -898,7 +898,7 @@ object IndexStore {
 
   /** INT8 space under a READY IVFPQ generation — codebooks in the
     * raw-code float domain, integer-kernel rerank
-    * ([[graft.api.IndexLifecycle.rebuildIvfPqInt8]]).
+    * ([[graft.api.IndexLifecycle.rebuildIvfPq]]).
     */
   def int8IvfPqSpace(spark: SparkSession, sfDir: String): String = {
     val dir = dirFor(sfDir, "apii8ivfpq")
@@ -909,7 +909,7 @@ object IndexStore {
           graft.Graft.F.quantizeI8(col("embedding")).as("iv"))
         .write.mode("overwrite").parquet(spacePath)
       new graft.api.IndexLifecycle(spark, spacePath)
-        .rebuildIvfPqInt8("iv", ncentroids = 8, m = 8)
+        .rebuildIvfPq("iv", ncentroids = 8, m = 8)
       markReady(dir)
     }
     spacePath
@@ -926,7 +926,7 @@ object IndexStore {
         .select(col("vec_id").cast("long").as("_id"), col("label"),
           graft.Graft.F.quantizeI8(col("embedding")).as("iv"))
         .write.mode("overwrite").parquet(spacePath)
-      new graft.api.IndexLifecycle(spark, spacePath).rebuildVamanaInt8("_id", "iv",
+      new graft.api.IndexLifecycle(spark, spacePath).rebuildVamana("_id", "iv",
         graft.operators.VamanaIndex.Params(r = 32, l = 100, metric = "ip",
           numShards = 4))
       markReady(dir)
@@ -975,10 +975,10 @@ object IndexStore {
           graft.Graft.F.quantizeI8(slice(col("embedding"), 33, 32)).as("iv2"))
         .write.mode("overwrite").parquet(spacePath)
       val lc = new graft.api.IndexLifecycle(spark, spacePath)
-      lc.scoped("iv1").rebuildHnswInt8("_id", "iv1",
+      lc.scoped("iv1").rebuildHnsw("_id", "iv1",
         HnswIndex.Params(m = 16, efConstruction = 100, metric = "ip",
           numShards = 4))
-      lc.scoped("iv2").rebuildInt8("iv2", ncentroids = 8)
+      lc.scoped("iv2").rebuild("iv2", ncentroids = 8)
       markReady(dir)
     }
     spacePath
@@ -1120,7 +1120,7 @@ object IndexStore {
           graft.Graft.F.quantizeI8(col("embedding")).as("iv"))
         .write.mode("overwrite").parquet(spacePath)
       new graft.api.IndexLifecycle(spark, spacePath)
-        .rebuildScannInt8("iv", ncentroids = 8, m = 8, ksub = 16)
+        .rebuildScann("iv", ncentroids = 8, m = 8, ksub = 16)
       markReady(dir)
     }
     spacePath
@@ -1138,7 +1138,7 @@ object IndexStore {
           graft.Graft.F.quantizeI8(col("embedding")).as("iv"))
         .write.mode("overwrite").parquet(spacePath)
       new graft.api.IndexLifecycle(spark, spacePath)
-        .rebuildIvfRabitqInt8("iv", ncentroids = 8)
+        .rebuildIvfRabitq("iv", ncentroids = 8)
       markReady(dir)
     }
     spacePath

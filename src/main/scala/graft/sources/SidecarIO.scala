@@ -146,4 +146,21 @@ private[graft] object SidecarIO {
     fc.rename(s, new Path(dst), Options.Rename.NONE)
     ()
   }
+
+  /** Move-aside swap of a table directory: `path` moves to `path.old`,
+    * `tmp` moves into `path`, then `path.old` is deleted. The rows are
+    * under `path` or `path.old` at every instant (delete-then-rename
+    * would lose everything between the two); a crash between the moves
+    * leaves them under `path.old` for the owner's recovery to restore.
+    * Every move throws on failure — a `FileSystem.rename` that returns
+    * `false` would let the final delete remove the only copy. An absent
+    * `path` (a first write) simply has nothing to move aside.
+    */
+  def swapIn(path: String, tmp: String): Unit = {
+    val old = s"$path.old"
+    delete(old)
+    if (exists(path)) rename(path, old)
+    rename(tmp, path)
+    delete(old)
+  }
 }

@@ -446,18 +446,10 @@ final class RealtimeTail(
     val merged = assign(snapshot(schema, deny))
     val tmp = s"$basePath.compact.tmp"
     merged.write.mode("overwrite").parquet(tmp)
-    val baseP = new org.apache.hadoop.fs.Path(basePath)
-    // the FS for basePath's SCHEME — FileSystem.get(conf) resolves the
-    // default FS and throws "Wrong FS" for s3a://-style table paths
-    val fs = baseP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val oldP = new org.apache.hadoop.fs.Path(s"$basePath.old")
-    val tailP = new org.apache.hadoop.fs.Path(tailPath)
-    // move-aside swap (no crash window that loses the base), tail cleared
-    // only after the new base is in place
-    fs.delete(oldP, true)
-    fs.rename(baseP, oldP)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp), baseP)
-    fs.delete(oldP, true)
-    fs.delete(tailP, true)
+    // move-aside swap (no crash window that loses the base; IO through
+    // the FS of basePath's SCHEME), tail cleared only after the new base
+    // is in place
+    graft.sources.SidecarIO.swapIn(basePath, tmp)
+    graft.sources.SidecarIO.delete(tailPath)
   }
 }

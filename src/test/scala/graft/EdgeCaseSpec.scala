@@ -1,5 +1,6 @@
 package graft
 
+import graft.api.IndexLifecycle.Kind
 import org.apache.spark.sql.functions._
 import graft.operators.{Documents, IvfIndex, Knn}
 
@@ -302,7 +303,7 @@ class EdgeCaseSpec extends SparkSpec {
     val lc = new graft.api.IndexLifecycle(spark, path)
     lc.rebuildHnsw("_docid", "vec",
       graft.operators.HnswIndex.Params(8, 32, "l2", numShards = 2))
-    assert(lc.readyHnswGen().isDefined)
+    assert(lc.ready(Kind.Hnsw).map(_.gen).isDefined)
     // a buffered tail row matching the predicate — the mass path must
     // fold it before the rewrite or it survives as a ghost
     val rt = cat.realtimeTail("d", "m")
@@ -320,7 +321,7 @@ class EdgeCaseSpec extends SparkSpec {
     // bounded ledger: the mass path recorded NOTHING new
     assert(lc.allDeletes().size == prevLedger)
     // generations dropped: serving falls back to FLAT over the rewritten base
-    assert(lc.readyHnswGen().isEmpty)
+    assert(lc.ready(Kind.Hnsw).map(_.gen).isEmpty)
     assert(cat.docCount("d", "m") == 40)
     val qv = vf(0) // u-0 (stars=0) held this vector and is gone
     val req = s"""{"vectors":[{"field":"vec","feature":${qv.mkString("[", ",", "]")}}],"limit":10}"""

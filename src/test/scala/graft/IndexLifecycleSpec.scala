@@ -1,5 +1,6 @@
 package graft
 
+import graft.api.IndexLifecycle.Kind
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
@@ -30,28 +31,28 @@ class IndexLifecycleSpec extends SparkSpec {
     assert(lc.rebuildDeclared(spFor("embedding", "",
       """{"type":"HNSW","params":{"nlinks":16,"efConstruction":60}}"""),
       "embedding", numShards = 3).isDefined)
-    assert(lc.hnswState.isInstanceOf[lc.Ready])
+    assert(lc.state(Kind.Hnsw).isInstanceOf[lc.Ready])
     // int8 IVFFLAT → the int8 builder (de-quantized centroid domain),
     // scan sidecar READY and the routed int8 arm serves it
     assert(lc.rebuildDeclared(spFor("iv", ""","value_type":"int8"""",
       """{"type":"IVFFLAT","params":{"ncentroids":8,"nprobe":8,
          "metric_type":"InnerProduct"}}"""), "iv").isDefined)
-    assert(lc.state.isInstanceOf[lc.Ready] && lc.loadModel().isDefined)
+    assert(lc.state(Kind.Ivf).isInstanceOf[lc.Ready] && lc.ready(Kind.Ivf).map(_.centroidModel("l2")).isDefined)
     // int8 IVFRABITQ → the int8 residual-sign builder, rb sidecar READY
     assert(lc.rebuildDeclared(spFor("iv", ""","value_type":"int8"""",
       """{"type":"IVFRABITQ","params":{"ncentroids":8,
          "metric_type":"InnerProduct"}}"""), "iv").isDefined)
-    assert(lc.rbState.isInstanceOf[lc.Ready])
+    assert(lc.state(Kind.Rabitq).isInstanceOf[lc.Ready])
     // auto-build: below threshold no-op, at threshold builds the
     // DECLARED family (Vamana sidecar here), READY short-circuits
     val vamSp = spFor("iv", ""","value_type":"int8"""",
       """{"type":"DISKANN_STATIC","params":{"R":16,"L":32,
          "metric_type":"InnerProduct"}}""")
     assert(!lc.maybeAutoBuildDeclared(vamSp, "iv", trainingThreshold = Long.MaxValue))
-    assert(lc.vamanaState == lc.Missing)
+    assert(lc.state(Kind.Vamana) == lc.Missing)
     assert(lc.maybeAutoBuildDeclared(vamSp, "iv", trainingThreshold = 1,
       numShards = 3))
-    assert(lc.vamanaState.isInstanceOf[lc.Ready])
+    assert(lc.state(Kind.Vamana).isInstanceOf[lc.Ready])
     assert(!lc.maybeAutoBuildDeclared(vamSp, "iv", trainingThreshold = 1))
   }
 
@@ -62,19 +63,19 @@ class IndexLifecycleSpec extends SparkSpec {
       .repartition(4).write.parquet(spacePath)
 
     val lc = new IndexLifecycle(spark, spacePath)
-    assert(lc.state == lc.Missing)
-    assert(lc.readyIndex().isEmpty)
+    assert(lc.state(Kind.Ivf) == lc.Missing)
+    assert(lc.ready(Kind.Ivf).map(_.table).isEmpty)
 
     val ready = lc.rebuild("embedding", ncentroids = 8)
-    assert(lc.state == lc.Ready(ready.gen, 8, ready.trainedDocs))
+    assert(lc.state(Kind.Ivf) == lc.Ready(ready.gen, 8, ready.trainedDocs))
     assert(ready.trainedDocs ==
       spark.read.parquet(s"$sf/embeddings.parquet").count())
     assert(lc.staleness() == Some(0.0))
 
     // the READY generation serves IVF searches that match in-memory results
-    val model = lc.loadModel().get
+    val model = lc.ready(Kind.Ivf).map(_.centroidModel("l2")).get
     assert(model.ncentroids == 8)
-    val idx = lc.readyIndex().get
+    val idx = lc.ready(Kind.Ivf).map(_.table).get
     val q = spark.read.parquet(s"$sf/embeddings.parquet")
       .filter($"vec_id" === 5).select("embedding").head().getSeq[Float](0)
     val viaIndex = IvfIndex.search(idx, $"embedding", model, q, 5, nprobe = 8,
@@ -87,7 +88,7 @@ class IndexLifecycleSpec extends SparkSpec {
     // rebuild again: new generation becomes READY
     val ready2 = lc.rebuild("embedding", ncentroids = 4)
     assert(ready2.gen >= ready.gen)
-    assert(lc.loadModel().get.ncentroids == 4)
+    assert(lc.ready(Kind.Ivf).map(_.centroidModel("l2")).get.ncentroids == 4)
 
     // force-merge compacts the space to one file
     lc.forceMerge(targetFiles = 1)
@@ -97,7 +98,7 @@ class IndexLifecycleSpec extends SparkSpec {
     assert(spark.read.parquet(spacePath).count() > 0)
 
     lc.drop()
-    assert(lc.state == lc.Missing)
+    assert(lc.state(Kind.Ivf) == lc.Missing)
   }
 
   test("appendDelta: new vectors searchable without a rebuild") {
@@ -115,13 +116,13 @@ class IndexLifecycleSpec extends SparkSpec {
       .select($"vec_id", $"embedding".cast("array<float>").as("embedding"), $"label")
     lc.appendDelta(delta, "embedding")
 
-    val model = lc.loadModel().get
-    val idx = lc.readyIndex().get
+    val model = lc.ready(Kind.Ivf).map(_.centroidModel("l2")).get
+    val idx = lc.ready(Kind.Ivf).map(_.table).get
     val top2 = IvfIndex.search(idx, $"embedding", model, q, 2, nprobe = 1,
       tieBreak = Some($"vec_id")).select("vec_id").as[Long].collect().toSeq
     assert(top2.contains(999999L), s"appended vector not found: $top2")
     // state unchanged — still the same READY generation
-    assert(lc.state.isInstanceOf[lc.Ready])
+    assert(lc.state(Kind.Ivf).isInstanceOf[lc.Ready])
     lc.drop()
   }
 
@@ -135,10 +136,10 @@ class IndexLifecycleSpec extends SparkSpec {
     val lc = new IndexLifecycle(spark, spacePath)
     // below threshold: stays brute-force (no state)
     assert(!lc.maybeAutoBuild("embedding", 4, trainingThreshold = 100))
-    assert(lc.readyIndex().isEmpty)
+    assert(lc.ready(Kind.Ivf).map(_.table).isEmpty)
     // at/above threshold: builds to READY
     assert(lc.maybeAutoBuild("embedding", 4, trainingThreshold = 50))
-    assert(lc.readyIndex().isDefined)
+    assert(lc.ready(Kind.Ivf).map(_.table).isDefined)
     // idempotent once READY
     assert(!lc.maybeAutoBuild("embedding", 4, trainingThreshold = 1))
   }
@@ -163,9 +164,9 @@ class IndexLifecycleSpec extends SparkSpec {
 
     // below the drift threshold nothing happens; at it, a retrain runs
     assert(!lc.maybeRetrain("embedding", driftThreshold = 0.6))
-    assert(lc.state.asInstanceOf[lc.Ready].gen == ready0.gen)
+    assert(lc.state(Kind.Ivf).asInstanceOf[lc.Ready].gen == ready0.gen)
     assert(lc.maybeRetrain("embedding", driftThreshold = 0.4))
-    val ready1 = lc.state.asInstanceOf[lc.Ready]
+    val ready1 = lc.state(Kind.Ivf).asInstanceOf[lc.Ready]
     assert(ready1.gen >= ready0.gen && ready1.trainedDocs == n + n / 2)
     assert(lc.staleness() == Some(0.0)) // fresh train covers the merged layout
     // idempotent after the retrain
@@ -173,8 +174,8 @@ class IndexLifecycleSpec extends SparkSpec {
 
     // the retrained generation still serves exact IVF searches over the
     // merged layout (exhaustive probe ≡ brute force)
-    val model = lc.loadModel().get
-    val idx = lc.readyIndex().get
+    val model = lc.ready(Kind.Ivf).map(_.centroidModel("l2")).get
+    val idx = lc.ready(Kind.Ivf).map(_.table).get
     val q = emb.filter($"vec_id" === 5).select("embedding").head().getSeq[Float](0)
     val viaIndex = IvfIndex.search(idx, $"embedding", model, q, 5, nprobe = 8,
       tieBreak = Some($"vec_id")).select("vec_id").as[Long].collect().toSeq
@@ -191,13 +192,13 @@ class IndexLifecycleSpec extends SparkSpec {
     Seq((1L, "no-vector")).toDF("id", "s").write.parquet(spacePath)
     val lc = new IndexLifecycle(spark, spacePath)
     assertThrows[Exception](lc.rebuild("embedding", 4))
-    assert(lc.state.isInstanceOf[lc.Failed])
+    assert(lc.state(Kind.Ivf).isInstanceOf[lc.Failed])
     // exception messages routinely contain colons ("java.lang.X: msg") —
     // the persisted reason must survive the sidecar's colon-delimited
     // format intact, not truncate at the first colon
-    val reason = lc.state.asInstanceOf[lc.Failed].reason
+    val reason = lc.state(Kind.Ivf).asInstanceOf[lc.Failed].reason
     assert(reason.contains(":"), s"expected a colon-bearing reason, got '$reason'")
-    assert(lc.readyIndex().isEmpty)
+    assert(lc.ready(Kind.Ivf).map(_.table).isEmpty)
   }
 
   test("graph layouts write one segment row per parquet file") {
@@ -211,7 +212,7 @@ class IndexLifecycleSpec extends SparkSpec {
     val lc = new IndexLifecycle(spark, spacePath)
     lc.rebuildHnsw("vec_id", "embedding",
       graft.operators.HnswIndex.Params(8, 40, "l2", numShards = 3))
-    val gen = lc.hnswState.asInstanceOf[lc.Ready].gen
+    val gen = lc.state(Kind.Hnsw).asInstanceOf[lc.Ready].gen
     val layout = new java.io.File(s"$spacePath.hnsw.g$gen")
     val parts = layout.listFiles().count(_.getName.endsWith(".parquet"))
     val segRows = spark.read.parquet(layout.toString).count()
@@ -243,13 +244,13 @@ class IndexLifecycleSpec extends SparkSpec {
       .write.mode("append").parquet(spacePath)
     assert(lc.hnswStaleness().exists(_ >= 0.49))
     assert(lc.maybeRebuildHnsw("vec_id", "embedding", p, driftThreshold = 0.3))
-    assert(lc.hnswState.asInstanceOf[lc.Ready].trainedDocs == 750L)
+    assert(lc.state(Kind.Hnsw).asInstanceOf[lc.Ready].trainedDocs == 750L)
 
     // the fresh generation serves the appended vectors: the clone of doc 5
     // ties it at distance zero
     val q = emb.filter($"vec_id" === 5).select("embedding").head().getSeq[Float](0)
     val ids = graft.operators.HnswIndex
-      .search(lc.readyHnswSegments().get, q, k = 3, ef = 1 << 30, metric = "l2")
+      .search(lc.ready(Kind.Hnsw).map(_.table.as[graft.operators.HnswIndex.Segment]).get, q, k = 3, ef = 1 << 30, metric = "l2")
       .select($"vec_id").collect().map(_.getLong(0)).toSet
     assert(ids.contains(5L) && ids.contains(1000005L))
   }
@@ -297,7 +298,7 @@ class IndexLifecycleSpec extends SparkSpec {
     val lcPq = new IndexLifecycle(spark, pqSpace)
     lcPq.rebuildIvfPq("embedding", ncentroids = 4, m = 8, ksub = 16)
     lcPq.appendIvfPq(delta, "embedding")
-    val (pqTable, ivf, pq) = lcPq.readyIvfPq().get
+    val (pqTable, ivf, pq) = lcPq.ready(Kind.Pq).map(g => (g.table, g.ivfModel("l2"), g.pqModel("l2"))).get
     def pqRows(df: org.apache.spark.sql.DataFrame) =
       df.select($"vec_id", $"list_id".cast("int"), $"pq_code")
         .collect()
@@ -323,7 +324,7 @@ class IndexLifecycleSpec extends SparkSpec {
     val lcRb = new IndexLifecycle(spark, rbSpace)
     lcRb.rebuildIvfRabitq("embedding", ncentroids = 4)
     lcRb.appendIvfRabitq(delta, "embedding")
-    val (rbTable, rbIvf) = lcRb.readyIvfRabitq().get
+    val (rbTable, rbIvf) = lcRb.ready(Kind.Rabitq).map(g => (g.table, g.ivfModel("l2"))).get
     def rbRows(df: org.apache.spark.sql.DataFrame) =
       df.select($"vec_id", $"list_id".cast("int"), $"rbcode")
         .collect()
@@ -346,7 +347,7 @@ class IndexLifecycleSpec extends SparkSpec {
     val lcB = new IndexLifecycle(spark, bSpace)
     lcB.rebuildBinaryIvf("embedding", ncentroids = 4)
     lcB.appendBinaryIvf(coded.filter($"_id" >= n / 2), "embedding")
-    val (bTable, cents) = lcB.readyBinaryIvf().get
+    val (bTable, cents) = lcB.ready(Kind.BinaryIvf).map(g => (g.table, g.binaryCentroids)).get
     assert(bTable.count() == n)
     val qCode = coded.filter($"_id" === 5).select("embedding")
       .head().getAs[Array[Byte]](0)
@@ -370,10 +371,10 @@ class IndexLifecycleSpec extends SparkSpec {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     emb.write.parquet(spacePath)
     val lc = new IndexLifecycle(spark, spacePath)
-    assert(lc.state == lc.Missing)
+    assert(lc.state(Kind.Ivf) == lc.Missing)
     val ready = lc.rebuild("embedding", ncentroids = 4)
-    assert(lc.state == lc.Ready(ready.gen, 4, ready.trainedDocs))
-    assert(lc.readyIndex().get.count() == emb.count())
+    assert(lc.state(Kind.Ivf) == lc.Ready(ready.gen, 4, ready.trainedDocs))
+    assert(lc.ready(Kind.Ivf).map(_.table).get.count() == emb.count())
     // ledgers read/write through the same handle
     lc.recordDeletes(Seq(1L, 2L))
     assert(lc.deletedSince(ready.gen) == Set(1L, 2L))
@@ -389,7 +390,7 @@ class IndexLifecycleSpec extends SparkSpec {
     assert(lc.deletedSince(g2).isEmpty)
     assert(lc.mutationsSince(0L) == 0L) // mutation ledger pruned too
     lc.drop()
-    assert(lc.state == lc.Missing)
+    assert(lc.state(Kind.Ivf) == lc.Missing)
   }
 
   test("recoverSwap: a crashed move-aside swap restores on the next mutator") {
@@ -438,8 +439,8 @@ class IndexLifecycleSpec extends SparkSpec {
     assert(live.filter($"vec_id" === 0L).count() == 1)
     assert(lc.allDeletes().isEmpty,
       "a crashed delete must not leave ledger entries (its rows still serve)")
-    assert(lc.readyGen().isDefined)
-    val (table, model) = (lc.readyIndex().get, lc.loadModel("l2").get)
+    assert(lc.ready(Kind.Ivf).map(_.gen).isDefined)
+    val (table, model) = (lc.ready(Kind.Ivf).map(_.table).get, lc.ready(Kind.Ivf).map(_.centroidModel("l2")).get)
     assert(IvfIndex.search(table, col("embedding"),
       model, emb.head.getSeq[Float](emb.columns.indexOf("embedding")),
       5, model.ncentroids).count() == 5)
@@ -542,14 +543,14 @@ class IndexLifecycleSpec extends SparkSpec {
     val tail = emb.filter($"vec_id" >= 300 && $"vec_id" < 400)
     tail.write.mode("append").parquet(spacePath)
     lc.appendHnswClustered(tail, "vec_id", "embedding", p)
-    assert(lc.readyHnswGen().contains(g1)) // same generation
-    assert(lc.hnswState.asInstanceOf[lc.Ready].trainedDocs == 400L)
-    assert(lc.deletedSince(lc.hnswDeleteBaseline().get) == Set(5L))
+    assert(lc.ready(Kind.Hnsw).map(_.gen).contains(g1)) // same generation
+    assert(lc.state(Kind.Hnsw).asInstanceOf[lc.Ready].trainedDocs == 400L)
+    assert(lc.deletedSince(lc.ready(Kind.Hnsw).map(_.baseline).get) == Set(5L))
 
     // routed search at the full route ≡ brute over old ∪ delta: appended
     // vectors are found, every sub-segment row is a complete graph
-    val ivf = lc.hnswRoutedModel().get
-    val segs = lc.readyHnswSegments().get
+    val ivf = lc.ready(Kind.Hnsw).flatMap(_.routedModel("l2")).get
+    val segs = lc.ready(Kind.Hnsw).map(_.table.as[graft.operators.HnswIndex.Segment]).get
     val q = emb.filter($"vec_id" === 350).select("embedding").head().getSeq[Float](0)
     val got = graft.operators.HnswIndex.searchRouted(segs, ivf, q, k = 5,
       ef = 1 << 30, metric = "l2", nprobe = ivf.ncentroids)
@@ -581,15 +582,15 @@ class IndexLifecycleSpec extends SparkSpec {
     Thread.sleep(2)
     val g2 = lc.appendHnsw(tail, "vec_id", "embedding", p).gen
     assert(g2 > g1)
-    assert(lc.hnswState.asInstanceOf[lc.Ready].trainedDocs == 400L)
+    assert(lc.state(Kind.Hnsw).asInstanceOf[lc.Ready].trainedDocs == 400L)
 
     // baseline = ORIGINAL build stamp, so the pre-append delete is gated
-    assert(lc.hnswLedgerBase(g2) == g1)
-    assert(lc.hnswDeleteBaseline().contains(g1))
-    assert(lc.deletedSince(lc.hnswDeleteBaseline().get) == Set(7L))
+    assert(lc.ready(Kind.Hnsw).get.baseline == g1)
+    assert(lc.ready(Kind.Hnsw).map(_.baseline).contains(g1))
+    assert(lc.deletedSince(lc.ready(Kind.Hnsw).map(_.baseline).get) == Set(7L))
 
     // the appended generation ≡ a full rebuild over the whole space
-    val appended = lc.readyHnswSegments().get.collect()
+    val appended = lc.ready(Kind.Hnsw).map(_.table.as[graft.operators.HnswIndex.Segment]).get.collect()
       .sortBy(_.shard_id)
       .map(s => (s.shard_id, s.entry,
         s.nodes.map(nd => (nd.id, nd.level, nd.nbrs.map(_.toSeq).toSeq)).toSeq))
@@ -603,7 +604,7 @@ class IndexLifecycleSpec extends SparkSpec {
     // a FULL rebuild resets the baseline to its own stamp
     Thread.sleep(2)
     val g3 = lc.rebuildHnsw("vec_id", "embedding", p).gen
-    assert(lc.hnswLedgerBase(g3) == g3)
+    assert(lc.ready(Kind.Hnsw).get.baseline == g3)
     assert(lc.deletedSince(g3).isEmpty)
   }
 
@@ -623,7 +624,7 @@ class IndexLifecycleSpec extends SparkSpec {
     // the READY flip's prune must age the marker out instead of
     // deferring forever (both ledgers would otherwise grow unbounded)
     lc.rebuild("embedding", 2)
-    lc.hnswState match {
+    lc.state(Kind.Hnsw) match {
       case f: lc.Failed =>
         assert(f.gen == 1000L && f.reason.contains("aged out"))
       case other => fail(s"expected FAILED, got $other")

@@ -306,9 +306,9 @@ class PlanEvidenceSpec extends SparkSpec {
       """{"type":"IVFPQ","params":{"ncentroids":8,"nprobe":8,
          "recall_num":100,"metric_type":"InnerProduct"}}""")
     val lc = new graft.api.IndexLifecycle(spark, spacePath)
-    lc.rebuildHnswInt8("_id", "iv",
+    lc.rebuildHnsw("_id", "iv",
       graft.operators.HnswIndex.Params(16, 60, "ip", numShards = 3))
-    lc.rebuildIvfPqInt8("iv", ncentroids = 8, m = 8)
+    lc.rebuildIvfPq("iv", ncentroids = 8, m = 8)
     val qv = q0
     def req = s"""{"vectors":[{"field":"iv","feature":${qv.mkString("[", ",", "]")}}],"limit":9}"""
     // warm one-time costs (layout open, ledger reads)

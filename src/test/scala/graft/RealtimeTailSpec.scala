@@ -222,13 +222,13 @@ class RealtimeTailSpec extends SparkSpec {
     val qCode = graft.functions.VecKernels.quantizeI8(
       new org.apache.spark.sql.catalyst.util.GenericArrayData(qf.toArray))
     val lc = new graft.api.IndexLifecycle(spark, basePath)
-    lc.rebuildInt8("iv", 8)
-    lc.rebuildHnswInt8("_id", "iv",
+    lc.rebuild("iv", 8)
+    lc.rebuildHnsw("_id", "iv",
       graft.operators.HnswIndex.Params(16, 60, "ip", numShards = 3))
-    lc.rebuildVamanaInt8("_id", "iv",
+    lc.rebuildVamana("_id", "iv",
       graft.operators.VamanaIndex.Params(r = 32, l = 100, metric = "ip",
         numShards = 3))
-    lc.rebuildIvfPqInt8("iv", ncentroids = 8, m = 8)
+    lc.rebuildIvfPq("iv", ncentroids = 8, m = 8)
     // buffer a doc carrying the QUERY's own int8 code (id 900000): every
     // routed family's tail leg must surface it (it ties id 0's score and
     // tie-breaks second)

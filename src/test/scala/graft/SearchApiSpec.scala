@@ -1,5 +1,6 @@
 package graft
 
+import graft.api.IndexLifecycle.Kind
 import org.apache.spark.sql.functions._
 import graft.api.SearchApi
 import graft.schema.Space
@@ -836,16 +837,16 @@ class SearchApiSpec extends SparkSpec {
       opts.indexParams == Map("nlinks" -> 16, "efConstruction" -> 60, "efSearch" -> 600))
 
     val lc = new graft.api.IndexLifecycle(spark, spacePath)
-    assert(lc.hnswState == lc.Missing)
+    assert(lc.state(Kind.Hnsw) == lc.Missing)
     assert(SearchApi.searchAuto(stored, hspace,
       s"""{"vectors":[{"field":"embedding","feature":${fjson(q0)}}],"limit":3}""",
       lc).count() == 3) // no generation yet → FLAT fallback serves
 
     val ready = lc.rebuildHnsw("_id", "embedding",
       graft.operators.HnswIndex.Params(16, 60, "l2", numShards = 3))
-    assert(lc.hnswState == lc.Ready(ready.gen, 3, ready.trainedDocs))
-    assert(lc.state == lc.Missing) // IVF sidecar untouched
-    assert(lc.readyHnswSegments().isDefined)
+    assert(lc.state(Kind.Hnsw) == lc.Ready(ready.gen, 3, ready.trainedDocs))
+    assert(lc.state(Kind.Ivf) == lc.Missing) // IVF sidecar untouched
+    assert(lc.ready(Kind.Hnsw).map(_.table.as[graft.operators.HnswIndex.Segment]).isDefined)
 
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select($"_id", $"label", $"_score").collect()
@@ -1015,7 +1016,7 @@ class SearchApiSpec extends SparkSpec {
     // no generation yet → FLAT int8 fallback
     assert(SearchApi.searchAuto(stored, isp, req, lc).count() == 9)
 
-    lc.rebuildInt8("iv", 8)
+    lc.rebuild("iv", 8)
     // exhaustive probe ⇒ routed ≡ the brute int8 scan (self ranks first)
     val got = rows(SearchApi.searchAuto(stored, isp, req, lc))
     assert(got == rows(SearchApi.search(stored, isp, req)))
@@ -1073,7 +1074,7 @@ class SearchApiSpec extends SparkSpec {
     // no generation yet → FLAT int8 fallback
     assert(SearchApi.searchAuto(stored, isp, req, lc).count() == 9)
 
-    lc.rebuildHnswInt8("_id", "iv",
+    lc.rebuildHnsw("_id", "iv",
       graft.operators.HnswIndex.Params(16, 60, "ip", numShards = 3))
     // routed ≡ the brute int8 scan (self ranks first under int8 IP)
     val got = rows(SearchApi.searchAuto(stored, isp, req, lc))
@@ -1154,7 +1155,7 @@ class SearchApiSpec extends SparkSpec {
     // no generation yet → FLAT int8 fallback
     assert(SearchApi.searchAuto(stored, isp, req, lc).count() == 9)
 
-    lc.rebuildVamanaInt8("_id", "iv",
+    lc.rebuildVamana("_id", "iv",
       graft.operators.VamanaIndex.Params(r = 32, l = 100, metric = "ip",
         numShards = 3))
     // L ≥ |shard| ⇒ routed ≡ the brute int8 scan, scores bit-identical
@@ -1217,7 +1218,7 @@ class SearchApiSpec extends SparkSpec {
     // no generation yet → FLAT int8 fallback
     assert(SearchApi.searchAuto(stored, isp, req, lc).count() == 9)
 
-    lc.rebuildIvfPqInt8("iv", ncentroids = 8, m = 8)
+    lc.rebuildIvfPq("iv", ncentroids = 8, m = 8)
     val got = rows(SearchApi.searchAuto(stored, isp, req, lc))
     assert(got == rows(SearchApi.search(stored, isp, req)))
     assert(got.head._1 == 0L)
@@ -1288,8 +1289,8 @@ class SearchApiSpec extends SparkSpec {
     assert(SearchApi.searchAuto(stored, scannSp, req, lc).count() == 9)
     assert(SearchApi.searchAuto(stored, rbSp, req, lc).count() == 9)
 
-    lc.rebuildScannInt8("iv", ncentroids = 8, m = 8, ksub = 16)
-    lc.rebuildIvfRabitqInt8("iv", ncentroids = 8)
+    lc.rebuildScann("iv", ncentroids = 8, m = 8, ksub = 16)
+    lc.rebuildIvfRabitq("iv", ncentroids = 8)
     val want = rows(SearchApi.search(stored, scannSp, req))
     for (sp <- Seq(scannSp, rbSp)) {
       val got = rows(SearchApi.searchAuto(stored, sp, req, lc))
@@ -1401,13 +1402,13 @@ class SearchApiSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     // only iv1's generation READY → whole request degrades to the FLAT
     // conjunction (which scores int8 legs natively since late r16)
-    lc.scoped("iv1").rebuildHnswInt8("_id", "iv1",
+    lc.scoped("iv1").rebuildHnsw("_id", "iv1",
       graft.operators.HnswIndex.Params(16, 60, "ip", numShards = 3))
     val flat = rows(SearchApi.search(stored, sp, reqOf()))
     assert(rows(SearchApi.searchAuto(stored, sp, reqOf(), lc)) == flat)
 
     // both generations READY → routed intersection ≡ FLAT conjunction
-    lc.scoped("iv2").rebuildInt8("iv2", ncentroids = 8)
+    lc.scoped("iv2").rebuild("iv2", ncentroids = 8)
     assert(rows(SearchApi.searchAuto(stored, sp, reqOf(), lc)) == flat)
 
     // per-condition gate applies per int8 leg before the intersection
@@ -1514,8 +1515,8 @@ class SearchApiSpec extends SparkSpec {
                               "recall_num":1000000,
                               "metric_type":"InnerProduct"}}}]}""")
     val lc = new graft.api.IndexLifecycle(spark, spacePath)
-    lc.scoped("iv1").rebuildIvfPqInt8("iv1", ncentroids = 8, m = 8)
-    lc.scoped("iv2").rebuildIvfRabitqInt8("iv2", ncentroids = 8)
+    lc.scoped("iv1").rebuildIvfPq("iv1", ncentroids = 8, m = 8)
+    lc.scoped("iv2").rebuildIvfRabitq("iv2", ncentroids = 8)
     val qa = q0.take(32); val qb = q0.drop(32)
     val req = s"""{"vectors":[{"field":"iv1","feature":${fjson(qa)}},
          {"field":"iv2","feature":${fjson(qb)}}],"limit":8}"""
@@ -1549,9 +1550,9 @@ class SearchApiSpec extends SparkSpec {
       .write.parquet(basePath)
     val base = spark.read.parquet(basePath)
     val lc = new graft.api.IndexLifecycle(spark, basePath)
-    lc.scoped("iv1").rebuildHnswInt8("_id", "iv1",
+    lc.scoped("iv1").rebuildHnsw("_id", "iv1",
       graft.operators.HnswIndex.Params(16, 60, "ip", numShards = 3))
-    lc.scoped("iv2").rebuildInt8("iv2", ncentroids = 8)
+    lc.scoped("iv2").rebuild("iv2", ncentroids = 8)
     val qc1 = graft.functions.VecKernels.quantizeI8(
       new org.apache.spark.sql.catalyst.util.GenericArrayData(q0.take(32).toArray))
     val qc2 = graft.functions.VecKernels.quantizeI8(
@@ -1713,7 +1714,7 @@ class SearchApiSpec extends SparkSpec {
     val lc = new graft.api.IndexLifecycle(spark, spacePath)
     lc.rebuildHnswClustered("_id", "embedding",
       graft.operators.HnswIndex.Params(16, 60, "l2"), ncentroids = 8)
-    assert(lc.hnswRoutedModel().exists(_.ncentroids == 8))
+    assert(lc.ready(Kind.Hnsw).flatMap(_.routedModel("l2")).exists(_.ncentroids == 8))
     val hspace = Space.fromJson(
       """{"name":"hnswr_space","fields":[
           {"name":"label","type":"integer","index":{"type":"SCALAR"}},
@@ -1915,7 +1916,7 @@ class SearchApiSpec extends SparkSpec {
     // shard_id partitions instead of full fan-out
     lc.rebuildVamanaClustered("_id", "embedding",
       graft.operators.VamanaIndex.Params(24, 48, 1.2, "l2"), ncentroids = 4)
-    assert(lc.vamanaRoutedModel().exists(_.ncentroids == 4))
+    assert(lc.ready(Kind.Vamana).flatMap(_.routedModel("l2")).exists(_.ncentroids == 4))
     val ssgSpace = Space.fromJson(
       """{"name":"ssg_space","fields":[
           {"name":"label","type":"integer","index":{"type":"SCALAR"}},

@@ -1,5 +1,6 @@
 package graft
 
+import graft.api.IndexLifecycle.Kind
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
@@ -67,8 +68,8 @@ class UserJourneySpec extends SparkSpec {
     // 6. POST /index/rebuild — BUILDING→READY, then probed search
     val lc = new IndexLifecycle(spark, s"$root/demo/docs")
     lc.rebuild("vec", ncentroids = 4)
-    val model = lc.loadModel("ip").get
-    val idx = lc.readyIndex().get
+    val model = lc.ready(Kind.Ivf).map(_.centroidModel("ip")).get
+    val idx = lc.ready(Kind.Ivf).map(_.table).get
     val probed = IvfIndex.search(idx, $"vec", model, qv, k = 3,
       nprobe = 4, tieBreak = Some($"_id"))
     assert(probed.count() == 3)
@@ -203,7 +204,7 @@ class UserJourneySpec extends SparkSpec {
     val lc = new IndexLifecycle(spark, s"$root/demo/gdocs")
     val hp = graft.operators.HnswIndex.Params(8, 32, "l2", numShards = 2)
     lc.rebuildHnsw("_id", "vec", hp)
-    assert(lc.readyHnswSegments().isDefined)
+    assert(lc.ready(Kind.Hnsw).map(_.table.as[graft.operators.HnswIndex.Segment]).isDefined)
 
     // POST /document/search routes through the planner switch; exact-ef
     // walk ≡ the brute FLAT path, filter riding the allow-set
