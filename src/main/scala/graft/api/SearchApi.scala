@@ -386,7 +386,7 @@ object SearchApi {
   /** Projection per the reference rules: requested fields (plus `_id`), or
     * all scalar fields; vector columns only when vector_value.
     */
-  private def projection(space: Space, req: SearchRequest, extra: Seq[String]): Seq[Column] = {
+  private def projection(space: Space, req: SearchRequest, extra: Seq[String]): Seq[String] = {
     val vectorNames = space.vectorFields.map(_.name).toSet
     val base = req.fields match {
       case Some(fs) =>
@@ -397,7 +397,7 @@ object SearchApi {
         val all = "_id" +: scalars
         if (req.vectorValue) all ++ space.vectorFields.map(_.name) else all
     }
-    (base ++ extra).map(col)
+    base ++ extra
   }
 
   // ---- FLAT-path value-type dispatch (index_model.h:19), shared by
@@ -407,9 +407,20 @@ object SearchApi {
   // rank by code Hamming (ascending ⇒ direction entry l2); float keeps
   // the metric kernels over the (possibly normalized) request floats.
 
-  /** Ranking direction entry for a condition's field. */
-  private def flatDir(space: Space, field: String): String =
+  /** Ranking direction entry for a condition's field: a binary field
+    * ranks by code Hamming, ascending, so it ranks as l2.
+    */
+  private def rankMetric(space: Space, field: String): String =
     if (valueTypeOf(space, field) == "binary") "l2" else metricOf(space, field)
+
+  /** The request's scalar filter tree as a predicate. */
+  private def filterOf(space: Space, req: SearchRequest): Option[Column] =
+    req.filter.map(VearchFilters.parse(_, arrayFields(space), dateFields(space)))
+
+  /** Per-field top-k of a multi-field conjunction: it scales with limit
+    * like the engine's per-index topn.
+    */
+  private def perFieldK(req: SearchRequest): Int = math.max(req.limit * 10, 200)
 
   /** Batch queries table (_qid, _qv) in the condition's value domain,
     * plus the matching (vector, query) score column — None = the shared
@@ -470,8 +481,7 @@ object SearchApi {
   def search(corpus: DataFrame, space: Space, requestJson: String): DataFrame = {
     val req = parseSearch(requestJson, space)
     require(req.vectors.nonEmpty, "search request needs at least one vector condition")
-    val pred = req.filter.map(
-      VearchFilters.parse(_, arrayFields(space), dateFields(space)))
+    val pred = filterOf(space, req)
 
     if (req.vectors.size == 1 && req.vectors.head.queries.size == 1) {
       val vc = req.vectors.head
@@ -502,7 +512,7 @@ object SearchApi {
             tieBreak = Some(col("_id")))
       }
       val sliced = if (req.offset > 0) result.offset(req.offset) else result
-      val projected = sliced.select(projection(space, req, Seq("_score")): _*)
+      val projected = sliced.select(projection(space, req, Seq("_score")).map(col): _*)
       // sort spec re-orders the RESPONSE (selection stays score-driven,
       // the reference's sortorder applies to the result set)
       if (req.sort.nonEmpty) applySort(projected, req.sort)
@@ -520,16 +530,15 @@ object SearchApi {
       // for non-float fields (normalization validates float-only).
       val fields = req.vectors.map { vc =>
         (col(vc.field), maybeNormalize(space, vc.field, vc.queries.head),
-          flatDir(space, vc.field))
+          rankMetric(space, vc.field))
       }
       val scoreFns: Seq[Option[Column => Column]] =
         req.vectors.map(flatScoreFn(space, _))
-      // perFieldK scales with limit like the engine's per-index topn;
       // per-condition min/max gates apply in-scan before each field's
       // bounded top-k (gamma_common_data.h:94-96), matching the batched
       // multi-field path's pre-selection gates
       val ranked = Knn.multiVectorSearchMetrics(filtered, "_id", fields,
-        perFieldK = math.max(req.limit * 10, 200), k = req.limit + req.offset,
+        perFieldK = perFieldK(req), k = req.limit + req.offset,
         weights = req.weights,
         gates = req.vectors.map(vc => (vc.minScore, vc.maxScore)),
         scoreFns = scoreFns)
@@ -550,32 +559,24 @@ object SearchApi {
       val nf = req.vectors.size
       val w = req.weights.getOrElse(Seq.fill(nf)(1.0 / nf))
       require(w.size == nf, "weights arity must match vector conditions")
-      val perFieldK = math.max(req.limit * 10, 200)
       // per-condition value-type dispatch shared with the single-query
       // conjunction ([[flatBatchQueries]])
       val perField = req.vectors.zipWithIndex.map { case (vc, i) =>
         val (queries, scoreFn) = flatBatchQueries(space, vc, spark)
         Knn.searchBatch(filtered, col(vc.field), struct(col("_id")), queries,
-          "_qid", "_qv", perFieldK, flatDir(space, vc.field),
+          "_qid", "_qv", perFieldK(req), rankMetric(space, vc.field),
           minScore = vc.minScore, maxScore = vc.maxScore, scoreFn = scoreFn)
           .select(col("_qid"), col("_item._id").as("_id"), col("_score").as(s"_s$i"))
       }
       val joined = perField.reduceLeft((a, b) => a.join(b, Seq("_qid", "_id")))
       val combined = (0 until nf).map(i => col(s"_s$i") * lit(w(i))).reduceLeft(_ + _)
-      val headAsc = Knn.ascending(flatDir(space, req.vectors.head.field))
-      val agged = joined.withColumn("_score", combined)
-        .groupBy(col("_qid"))
-        .agg(graft.Graft.F.topK(col("_score"), struct(col("_id")),
-          req.limit + req.offset, headAsc).as("_tk"))
-      val sliced =
-        if (req.offset > 0) agged.withColumn("_tk", slice(col("_tk"), req.offset + 1, req.limit))
-        else agged
+      val headAsc = Knn.ascending(rankMetric(space, req.vectors.head.field))
       // blocks in REQUEST order (the reference's response shape), rows
       // by score within each block — the same contract as the routed
-      // finishBatch (the r20 parity sweep caught the unordered gap)
+      // finisher (the r20 parity sweep caught the unordered gap)
       val primaryB = if (headAsc) col("_score").asc else col("_score").desc
-      val out = sliced.select(col("_qid"), explode(col("_tk")).as("_e"))
-        .select(col("_qid"), col("_e.item._id").as("_id"), col("_e.score").as("_score"))
+      val out = Knn.topKPerQuery(joined.withColumn("_score", combined), reqNum,
+          req.limit, headAsc, "_id", offset = req.offset)
         .orderBy(col("_qid").asc, primaryB, col("_id").asc)
       // sort spec re-orders rows WITHIN each query's block
       if (req.sort.nonEmpty) applySort(out, req.sort, qid = Some(col("_qid")))
@@ -586,7 +587,7 @@ object SearchApi {
       val vc = req.vectors.head
       val spark = corpus.sparkSession
       val (queries, scoreFn) = flatBatchQueries(space, vc, spark)
-      val m = flatDir(space, vc.field)
+      val m = rankMetric(space, vc.field)
       val filtered = pred.map(corpus.filter).getOrElse(corpus)
       val payload = struct(corpus.columns.map(col).toIndexedSeq: _*)
       // gates + pagination inside the batch operator (pre-selection gate,
@@ -597,11 +598,11 @@ object SearchApi {
         scoreFn = scoreFn)
       val flat = res.select(col("_qid"), col("_score"), col("_item.*"))
       // blocks in REQUEST order, rows by score within each block — the
-      // routed finishBatch contract (r20 parity sweep caught the gap)
+      // routed finisher's contract (r20 parity sweep caught the gap)
       val primaryB =
         if (Knn.ascending(m)) col("_score").asc else col("_score").desc
       val projected = flat
-        .select(projection(space, req, Seq("_qid", "_score")): _*)
+        .select(projection(space, req, Seq("_qid", "_score")).map(col): _*)
         .orderBy(col("_qid").asc, primaryB, col("_id").asc)
       // sort spec re-orders rows WITHIN each query's block
       if (req.sort.nonEmpty) applySort(projected, req.sort, qid = Some(col("_qid")))
@@ -637,23 +638,6 @@ object SearchApi {
     */
   @volatile var maxFilterAllowIds: Int = 1 << 20
 
-  /** Anti-filter a served layout by the delete ledger: tiny ledgers ride
-    * a NOT-IN scan predicate (parquet-pushable); bigger ones a broadcast
-    * anti-join. The ledger is bounded by one rebuild interval's deletes,
-    * never the corpus (IndexLifecycle prunes it at each READY flip).
-    */
-  private def applyDeny(table: DataFrame, deny: Set[Long],
-      ridName: String = "_id"): DataFrame =
-    if (deny.isEmpty) table
-    else if (deny.size <= 1000) table.filter(!col(ridName).isin(deny.toSeq: _*))
-    else {
-      val spark = table.sparkSession
-      import spark.implicits._
-      val denyDf = deny.toSeq.toDF("_deny_id")
-        .select(col("_deny_id").cast(table.schema(ridName).dataType))
-      table.join(broadcast(denyDf), col(ridName) === col("_deny_id"), "left_anti")
-    }
-
   /** Driver-side twin of the catalog layout's `_bucket = pmod(hash(_id),
     * nb)` (SpaceCatalog.withBucket) for ANY PK type (the canonical
     * `_id` is a string): Spark's `hash()` is Murmur3 with seed 42 over
@@ -686,18 +670,25 @@ object SearchApi {
   }
 
   /** Score-gated GRAPH serving (min_score/max_score per vector
-    * condition, doc_query.go:67-78), the driver-bounded depth loop: each
-    * probe runs ONE action aggregating (candidate count, gated top-k)
-    * through the bounded TopKAgg heap, so the driver receives one count
-    * plus <= k (vec_id, _score) pairs per probe - never a depth-or-
-    * corpus-sized collect, whatever the gate's selectivity. Exactness: k
-    * gated survivors inside the returned top-depth dominate every
-    * candidate beyond it; a candidate count SHORTER than depth proves
-    * every admissible candidate was already seen - either way the gated
-    * top-k equals the FLAT path's gate-before-select. Ungated requests
-    * bypass the loop entirely (hitsAt(k), zero extra actions).
+    * condition, doc_query.go:67-78), the driver-bounded depth loop:
+    * hitsAt(d) returns per-qid top-d (_qid, vec_id, _score) - req_num
+    * queries share the condition's gate (doc_query.go:296-318 flattens
+    * them into one request) and a single query is qid 0. Each probe runs
+    * ONE action aggregating per-qid (candidate count, gated top-k)
+    * through the bounded TopKAgg heap, so the driver receives <= req_num
+    * rows of one count plus <= k (vec_id, _score) pairs per probe - never
+    * a depth-or-corpus-sized collect, whatever the gate's selectivity.
+    * Exactness: k gated survivors inside the returned top-depth dominate
+    * every candidate beyond it; a candidate count SHORTER than depth
+    * proves every admissible candidate was already seen - either way the
+    * gated top-k equals the FLAT path's gate-before-select. The loop
+    * continues until EVERY query has k gated survivors or is exhausted;
+    * queries already satisfied at a lower depth stay exact at higher
+    * depths (more candidates never change the gated top-k once it
+    * dominates). Ungated requests bypass the loop entirely (hitsAt(k),
+    * zero extra actions).
     *
-    * The graph walks now thread the band into their RESULT heaps
+    * The graph walks thread the band into their RESULT heaps
     * ([[graft.operators.HnswIndex.searchSegment]]'s band contract), so
     * hitsAt(d) returns the GATED ranking's own prefix and the first
     * probe converges (gated.size >= k, or n < depth at exhaustion) - one
@@ -717,47 +708,10 @@ object SearchApi {
     val hi = maxScore.getOrElse(Double.PositiveInfinity)
     val asc = Knn.ascending(metric)
     var depth = math.max(4 * k, 64)
-    var result: Option[Seq[(Long, Double)]] = None
-    while (result.isEmpty) {
-      // ONE bounded action: TopKAgg skips null scores, so the `when`
-      // drops out-of-gate candidates before the k-bounded heap
-      val row = hitsAt(depth)
-        .select(col("vec_id").cast("long").as("vec_id"), col("_score"))
-        .agg(count(lit(1)).as("_n"),
-          graft.Graft.F.topK(
-            when(col("_score").between(lo, hi), col("_score")),
-            col("vec_id"), k, asc).as("_tk"))
-        .head()
-      val n = row.getLong(0)
-      val gated = row.getSeq[org.apache.spark.sql.Row](1)
-        .map(e => (e.getLong(1), e.getDouble(0)))
-      if (gated.size >= k || n < depth || depth >= Int.MaxValue / 2)
-        result = Some(gated)
-      else depth *= 2
-    }
-    result.get.toDF("vec_id", "_score")
-  }
-
-  /** Batched [[gateLoop]] (req_num queries share the condition's gate -
-    * doc_query.go:296-318 flattens them into one request): hitsAt(d)
-    * returns per-qid top-d (_qid, vec_id, _score); each probe's single
-    * action aggregates per-qid (count, gated top-k) - <= req_num rows of
-    * <= k entries on the driver. The loop continues until EVERY query
-    * has k gated survivors or is exhausted; queries already satisfied
-    * at a lower depth stay exact at higher depths (more candidates
-    * never change the gated top-k once it dominates).
-    */
-  private[graft] def gateBatchLoop(spark: org.apache.spark.sql.SparkSession,
-      k: Int, metric: String, minScore: Option[Double],
-      maxScore: Option[Double])(hitsAt: Int => DataFrame): DataFrame = {
-    if (minScore.isEmpty && maxScore.isEmpty) return hitsAt(k)
-    import spark.implicits._
-    val lo = minScore.getOrElse(Double.NegativeInfinity)
-    val hi = maxScore.getOrElse(Double.PositiveInfinity)
-    val asc = Knn.ascending(metric)
-    var depth = math.max(4 * k, 64)
     var result: Option[Seq[(Long, Long, Double)]] = None
     while (result.isEmpty) {
+      // TopKAgg skips null scores, so the `when` drops out-of-gate
+      // candidates before the k-bounded heap
       val rows = hitsAt(depth)
         .select(col("_qid").cast("long").as("_qid"),
           col("vec_id").cast("long").as("vec_id"), col("_score"))
@@ -784,14 +738,11 @@ object SearchApi {
   /** `tail` is the space's realtime buffer (`enable_realtime` — the
     * reference merges the memory buffer into EVERY index type's search,
     * vector_manager.cc:941-1012,1096-1176): when present and non-empty,
-    * every routed arm serves base-index ∪ brute-tail — single queries
-    * through [[graft.streaming.RealtimeTail.mergeTail]], batched
-    * (req_num) requests through the per-qid
-    * [[graft.streaming.RealtimeTail.mergeTailBatch]] — payload joins hit
-    * the LIVE view (base ∪ tail), and any shape without a tail-aware
-    * route (multi-field conjunctions, non-integral ids) falls back to
-    * the exact FLAT path over the live view — fresh writes are never
-    * invisible, whatever the route.
+    * every routed leg serves base-index ∪ brute-tail through the per-qid
+    * [[graft.streaming.RealtimeTail.mergeTail]] — payload joins hit the
+    * LIVE view (base ∪ tail), and any shape without a tail-aware route
+    * (no routing id) falls back to the exact FLAT path over the live
+    * view — fresh writes are never invisible, whatever the route.
     *
     * EXECUTION CONTRACT (r18): a routed request runs its index legs as
     * ONE bounded action at construction — the ≤ req_num·(k+offset) hits
@@ -886,40 +837,41 @@ object SearchApi {
     // doc_query.go:296-318) and multi-field conjunctions route through
     // [[legFor]]; is_brute_search=1 forces the exact FLAT scan
     // (engine.cc:280-308).
-    def pred = req.filter.map(
-      VearchFilters.parse(_, arrayFields(space), dateFields(space)))
-    def finish(hits: DataFrame, metric: String): DataFrame = {
-      val primary =
-        if (Knn.ascending(metric)) col("_score").asc else col("_score").desc
-      val ordered = hits.orderBy(primary, col("_id"))
-      val sliced = if (req.offset > 0) ordered.offset(req.offset) else ordered
-      val projected = sliced.select(projection(space, req, Seq("_score")): _*)
-      if (req.sort.nonEmpty) applySort(projected, req.sort) else projected
-    }
-    // per-qid finish for the batched routes: offset slices WITHIN each
-    // query's block (row_number over <= req_num*(k+offset) hit rows - tiny)
-    def finishBatch(hits: DataFrame, metric: String): DataFrame = {
-      val primary =
-        if (Knn.ascending(metric)) col("_score").asc else col("_score").desc
-      val sliced =
-        if (req.offset > 0) {
+    val pred = filterOf(space, req)
+    // one finisher for every routed shape: payload rows ordered by score
+    // then `_id`; `offset` slices WITHIN each query's block (row_number
+    // over <= req_num*(k+offset) hit rows - tiny) and the blocks come in
+    // REQUEST order. `cols` is the response projection; a single-query
+    // request drops its `_qid` (qid 0) and keeps the global sort + offset.
+    def finish(hits: DataFrame, metric: String, nq: Int,
+        cols: Seq[String]): DataFrame = {
+      val order = Seq(
+        if (Knn.ascending(metric)) col("_score").asc else col("_score").desc,
+        col("_id").asc)
+      val qid = if (nq > 1) Some(col("_qid")) else None
+      val ordered = qid match {
+        case None =>
+          val o = hits.orderBy(order: _*)
+          if (req.offset > 0) o.offset(req.offset) else o
+        case Some(q) =>
           val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("_qid")).orderBy(primary, col("_id").asc)
-          hits.withColumn("_rn", row_number().over(w))
-            .filter(col("_rn") > req.offset).drop("_rn")
-        } else hits
-      val projected = sliced
-        .orderBy(col("_qid").asc, primary, col("_id").asc)
-        .select(projection(space, req, Seq("_qid", "_score")): _*)
-      if (req.sort.nonEmpty) applySort(projected, req.sort, qid = Some(col("_qid")))
-      else projected
+            .partitionBy(q).orderBy(order: _*)
+          val sliced =
+            if (req.offset > 0) hits.withColumn("_rn", row_number().over(w))
+              .filter(col("_rn") > req.offset).drop("_rn")
+            else hits
+          sliced.orderBy(q.asc +: order: _*)
+      }
+      val projected = ordered.select(
+        cols.filter(c => c != "_qid" || qid.isDefined).map(col): _*)
+      if (req.sort.nonEmpty) applySort(projected, req.sort, qid) else projected
     }
-    // score-gated GRAPH serving: see [[gateLoop]]/[[gateBatchLoop]] on
-    // the object — the walks thread the band into their RESULT heaps, so
-    // the loop's first probe already returns the gated ranking's prefix
-    // and convergence is immediate; the loop stays as the exactness
-    // backstop for any hitsAt that does NOT gate in-walk.
-    // the walk returns (id, score); scalar payloads come from ONE
+    // score-gated GRAPH serving: see [[gateLoop]] on the object — the
+    // walks thread the band into their RESULT heaps, so the loop's first
+    // probe already returns the gated ranking's prefix and convergence is
+    // immediate; the loop stays as the exactness backstop for any hitsAt
+    // that does NOT gate in-walk.
+    // the legs return (_qid, id, score); scalar payloads come from ONE
     // broadcast join of the <= req_num*(k+offset) hits back onto a
     // PRUNED slice of the LIVE view (a tail hit's payload lives in the
     // buffer, not the base table). The hits are bounded, so ONE tiny
@@ -933,16 +885,15 @@ object SearchApi {
     // `_docid` sidecar (bucket derivation needs the PK hash, so those
     // spaces prune by id-IN only), and the joined row carries the string
     // `_id` the projection serves (the reference's docid->PK bridge).
-    def joinBack(hits: DataFrame, extra: Seq[Column] = Seq.empty): DataFrame = {
+    def joinBack(hits: DataFrame): DataFrame = {
       val idT = corpus.schema(ridName).dataType
       // hits carry the routing id as `vec_id`: a LONG for every routed
       // family, the PK itself (native type) on the rid-free scan serve —
       // casting to the routing column's type at collect time keeps the
       // local frame, the id-IN filter and the bucket hash all in the
       // column's own domain (long→int narrows, string stays string)
-      val sel = hits.select(
-        Seq(col("vec_id").cast(idT).as("vec_id"),
-          col("_score").cast("double").as("_score")) ++ extra: _*)
+      val sel = hits.select(col("vec_id").cast(idT).as("vec_id"),
+        col("_score").cast("double").as("_score"), col("_qid"))
       val rows = sel.collect()
       val spark = corpus.sparkSession
       val local = spark.createDataFrame(
@@ -965,8 +916,7 @@ object SearchApi {
         case _ => live.filter(idFilter)
       }
       pruned.join(broadcast(local.select(
-        Seq(col("vec_id").as(ridName), col("_score")) ++ extra: _*)),
-        ridName)
+        col("vec_id").as(ridName), col("_score"), col("_qid"))), ridName)
     }
     // shared scalar-filter functor for the GRAPH families: ONE bounded
     // take() both probes the selectivity and collects the allow-set (the
@@ -995,16 +945,15 @@ object SearchApi {
 
     // ------ ONE SERVING RECIPE PER FAMILY ------------------------------
     // legFor builds the index-served hits for ONE vector condition - the
-    // same builder backs the single-condition arms, the multi-field
-    // conjunction legs and their batched (req_num > 1) twins, so each
-    // family's filter/gate/tail plumbing exists exactly once.
+    // same builder backs the single-condition route and every
+    // multi-field conjunction leg, for one query or a req_num batch, so
+    // each family's filter/gate/tail plumbing exists exactly once.
     //
-    // Shape: (vec_id, _score) hits for a single-query condition,
-    // (_qid, vec_id, _score) for a batched one; None = no READY
-    // generation or no route for this family x value-type (the caller
-    // degrades to the exact FLAT path - the reference's
-    // below-training-threshold fallback, engine.cc:280-308), or a broad
-    // scalar filter on a graph family (the planner switch,
+    // Shape: (_qid, vec_id, _score) for every request - a single query
+    // is qid 0; None = no READY generation or no route for this family x
+    // value-type (the caller degrades to the exact FLAT path - the
+    // reference's below-training-threshold fallback, engine.cc:280-308),
+    // or a broad scalar filter on a graph family (the planner switch,
     // engine.cc:355-373).
     //
     // The recipe per family (vector_manager.cc:941-1176 with the
@@ -1022,13 +971,17 @@ object SearchApi {
     //    never re-shipped across gate-loop retries.
     //  - score gates (doc_query.go:67-78): scan families gate IN-SCAN at
     //    heap admission; the beam-limited graph families over-fetch
-    //    through the driver-bounded gate loops above.
+    //    through the driver-bounded gate loop above.
     //  - realtime tail: every family merges the buffered writes through
-    //    mergeTail/mergeTailBatch (vector_manager.cc:941-1012,1096-1176);
-    //    the tail leg brute-scores the buffer in the condition's value
-    //    domain with the filter and THIS condition's gate in-scan (the
-    //    gate is on the final score, so pre-gating the tail stays exact
-    //    for the graph loops too - they re-gate the merged stream).
+    //    mergeTail (vector_manager.cc:941-1012,1096-1176); the tail leg
+    //    brute-scores the buffer in the condition's value domain with
+    //    the filter and THIS condition's gate in-scan (the gate is on the
+    //    final score, so pre-gating the tail stays exact for the graph
+    //    loop too - it re-gates the merged stream).
+    //  - scan families keep one operator per shape: a single query
+    //    prunes with a literal list IN and scores a literal query, a
+    //    batch joins a broadcast query table; only the plumbing after
+    //    the operator call is shared.
     def legFor(vc: VecCond, lc: IndexLifecycle, k: Int): Option[DataFrame] = {
       val fOptsO = space.vectorFields.find(_.name == vc.field).flatMap(_.vector)
       if (fOptsO.isEmpty) None
@@ -1051,17 +1004,20 @@ object SearchApi {
         def noDocidRoute(family: String): Nothing =
           throw new IllegalArgumentException(
             noDocidMsg(space.name, vc.field, family))
-        def asVecId(c: Column): Column =
-          if (rid.isEmpty) c.as("vec_id") else c.cast("long").as("vec_id")
+        val nq = vc.queries.size
+        // a scan family's operator rows as leg rows: its single-query
+        // operator reports no `_qid`, so that query is qid 0
+        def legRows(hits: DataFrame, id: String): DataFrame =
+          hits.select(if (nq == 1) lit(0L).as("_qid") else col("_qid"),
+            if (rid.isEmpty) col(id).as("vec_id")
+            else col(id).cast("long").as("vec_id"),
+            col("_score"))
         val isBin = fOpts.valueType == "binary"
         val isI8 = fOpts.valueType == "int8"
-        val fieldMetric = metricOf(space, vc.field)
         // the integer kernels are ip/l2 (matching [[Knn.searchInt8]]) -
         // other int8 metrics keep the FLAT fallback
-        val i8Metric = Set("ip", "l2", "l2sq").contains(fieldMetric)
-        // binary ranks by code Hamming, ascending => direction entry l2
-        val metric = if (isBin) "l2" else fieldMetric
-        val batched = vc.queries.size > 1
+        val i8Metric = Set("ip", "l2", "l2sq").contains(metricOf(space, vc.field))
+        val metric = rankMetric(space, vc.field)
         // per-query encodings, computed ONCE (normalization is declared
         // float-only - a no-op on int8/binary fields)
         val qsN: Seq[(Long, Seq[Float])] = vc.queries.zipWithIndex.map {
@@ -1089,92 +1045,54 @@ object SearchApi {
             Some((vc.minScore.getOrElse(Double.NegativeInfinity),
               vc.maxScore.getOrElse(Double.PositiveInfinity)))
           else None
-        // tail leg, single query: value-typed brute scan of the buffer
-        def tailScan(d: Int)(td: DataFrame): DataFrame =
-          (if (isBin)
-            Knn.searchBinary(td, col(vc.field), qCodes.head._2, d,
-              filter = pred, minScore = vc.minScore, maxScore = vc.maxScore,
-              tieBreak = Some(col("_id")))
-          else if (isI8)
-            Knn.searchInt8(td, col(vc.field), qI8.head._2, d, metric,
-              filter = pred, minScore = vc.minScore, maxScore = vc.maxScore,
-              tieBreak = Some(col("_id")))
-          else
-            Knn.search(td, col(vc.field), qsN.head._2, d, metric,
-              filter = pred, minScore = vc.minScore, maxScore = vc.maxScore,
-              tieBreak = Some(col("_id"))))
-            .select(col(ridName).cast("long").as("vec_id"), col("_score"))
-        def withTail(deny: Set[Long], d: Int)(base: Int => DataFrame): DataFrame =
-          if (!tailOn) base(d)
-          else tail.get.mergeTail(corpus.schema, d, metric, deny)(tailScan(d))(base)
-        // tail leg, batched: ONE pass over the (bounded) buffer serves
-        // every query; int8/binary score via a broadcast query cross join
-        def tailScanB(d: Int)(td: DataFrame): DataFrame = {
+        // tail leg: ONE brute pass over the (bounded) buffer in the
+        // condition's value domain - a literal query for one, a broadcast
+        // query table for a batch - then the per-query top-d
+        def tailScan(d: Int)(td: DataFrame): DataFrame = {
           val spark = corpus.sparkSession
           import spark.implicits._
-          val filteredTd = pred.map(td.filter).getOrElse(td)
-          if (isBin)
-            Knn.scoreGate(filteredTd
-              .select(col(ridName).cast("long").as("vec_id"),
-                col(vc.field).as("_c"))
-              .crossJoin(broadcast(qCodes.toDF("_qid", "_qcode")))
-              .select(col("_qid"),
-                graft.Graft.F.hamming(col("_c"), col("_qcode"))
-                  .cast("double").as("_score"),
-                col("vec_id"))
-              .filter(col("_score").isNotNull), vc.minScore, vc.maxScore)
-          else if (isI8)
-            Knn.scoreGate(filteredTd
-              .select(col(ridName).cast("long").as("vec_id"),
-                col(vc.field).as("_c"))
-              .crossJoin(broadcast(qI8.toDF("_qid", "_qb")))
-              .select(col("_qid"),
-                Knn.scoreInt8(metric, col("_c"), col("_qb")).as("_score"),
-                col("vec_id"))
-              .filter(col("_score").isNotNull), vc.minScore, vc.maxScore)
-          else {
-            val qDf = qsN.toDF("_qid", "_qv")
-              .select(col("_qid"), col("_qv").cast("array<float>").as("_qv"))
-            Knn.searchBatch(filteredTd, col(vc.field), struct(col(ridName)),
-              qDf, "_qid", "_qv", d, metric,
-              minScore = vc.minScore, maxScore = vc.maxScore)
-              .select(col("_qid"),
-                col(s"_item.$ridName").cast("long").as("vec_id"),
-                col("_score"))
-          }
+          val filtered = pred.map(td.filter).getOrElse(td)
+          val withQ =
+            if (nq == 1) filtered.withColumn("_qid", lit(0L)).withColumn("_q",
+              if (isBin) lit(qCodes.head._2) else if (isI8) lit(qI8.head._2)
+              else Knn.queryLit(qsN.head._2))
+            else filtered.crossJoin(broadcast(
+              if (isBin) qCodes.toDF("_qid", "_q")
+              else if (isI8) qI8.toDF("_qid", "_q")
+              else qsN.toDF("_qid", "_q")
+                .select(col("_qid"), col("_q").cast("array<float>").as("_q"))))
+          val (v, q) = (col(vc.field), col("_q"))
+          val score =
+            if (isBin) graft.Graft.F.hamming(v, q).cast("double")
+            else if (isI8) Knn.scoreInt8(metric, v, q)
+            else Knn.score(metric, v, q)
+          val scored = withQ.select(col("_qid"),
+            col(ridName).cast("long").as("vec_id"), score.as("_score"))
+          Knn.topKPerQuery(Knn.scoreGate(scored, vc.minScore, vc.maxScore),
+            nq, d, Knn.ascending(metric))
         }
-        def withTailB(deny: Set[Long], d: Int)(base: Int => DataFrame): DataFrame =
+        def withTail(deny: Set[Long], d: Int)(base: Int => DataFrame): DataFrame =
           if (!tailOn) base(d)
-          else tail.get.mergeTailBatch(corpus.schema, d, metric, deny)(tailScanB(d))(base)
+          else tail.get.mergeTail(corpus.schema, d, metric, nq, deny)(
+            tailScan(d))(base)
         // graph-family core (HNSW and Vamana differ only in their walk
         // operators): allow-functor filtering with the broad-filter FLAT
-        // switch, ONE allow broadcast per leg, value-typed tail merge.
-        // Score gates ride INTO the walk's result heap (the `band`
-        // threaded at the case sites below), so a gated leg's first
-        // gate-loop probe already returns the gated ranking's prefix and
-        // the walk runs ONCE — no depth-doubling segment-IO re-pay, no
-        // persist pin needed (the r17 pin existed for the multi-probe
-        // loop this replaces).
+        // switch, the admission (allow-set minus deny, or deny alone)
+        // broadcast ONCE per leg outside the gate loop's retried closure,
+        // value-typed tail merge. Score gates ride INTO the walk's result
+        // heap (the `band` threaded at the case sites below), so a gated
+        // leg's first gate-loop probe already returns the gated ranking's
+        // prefix and the walk runs ONCE — no depth-doubling segment-IO
+        // re-pay.
         def graphLeg(deny: Set[Long])(
-            walk: (Seq[Float], Int) => DataFrame)(
-            walkBc: (Seq[Float], Int,
-              org.apache.spark.broadcast.Broadcast[Set[Long]]) => DataFrame)(
-            walkBatch: (Seq[(Long, Seq[Float])], Int,
-              Option[Set[Long]]) => DataFrame): Option[DataFrame] =
+            walk: (Int, Option[org.apache.spark.broadcast.Broadcast[
+              graft.operators.HnswIndex.Admission]]) => DataFrame)
+            : Option[DataFrame] =
           allowProbe.map { allow =>
-            if (!batched) {
-              val base: Int => DataFrame = allow match {
-                case Some(a) =>
-                  val bc = corpus.sparkSession.sparkContext.broadcast(a -- deny)
-                  kb => walkBc(walkQs.head._2, kb, bc)
-                case None => kb => walk(walkQs.head._2, kb)
-              }
-              gateLoop(corpus.sparkSession, k, metric, vc.minScore,
-                vc.maxScore)(d => withTail(deny, d)(base))
-            } else
-              gateBatchLoop(corpus.sparkSession, k, metric, vc.minScore,
-                vc.maxScore)(d =>
-                withTailB(deny, d)(kb => walkBatch(walkQs, kb, allow)))
+            val admit = graft.operators.HnswIndex.admission(
+              corpus.sparkSession, allow, deny)
+            gateLoop(corpus.sparkSession, k, metric, vc.minScore,
+              vc.maxScore)(d => withTail(deny, d)(kb => walk(kb, admit)))
           }
         // clustered generations (SPANN layout): prune to the union of
         // every query's nprobe route - the shard_id filter is parquet
@@ -1211,20 +1129,24 @@ object SearchApi {
           // below all come from this one READY generation
           lc.ready(kind).flatMap { g =>
             val deny = g.deny
+            // a scan family's served layout: delete-gated, then the
+            // scalar predicate (evaluated in-scan inside the probed lists)
+            lazy val served = {
+              val gated = graft.operators.Documents.dropIds(g.table,
+                col(ridName), deny, g.table.schema(ridName).dataType)
+              pred.map(gated.filter).getOrElse(gated)
+            }
             kind match {
               case Kind.Hnsw =>
                 val segments = pruneShards(
                   g.table.as(Encoders.product[graft.operators.HnswIndex.Segment]),
                   g.routedModel(metric))
                 val ef = math.max(param("efSearch", fOpts).getOrElse(64), k)
-                graphLeg(deny)(
-                  (q, kb) => graft.operators.HnswIndex.search(segments, q, kb,
-                    math.max(ef, kb), metric, deny = deny, band = band))(
-                  (q, kb, bc) => graft.operators.HnswIndex.searchFilteredBc(
-                    segments, q, kb, math.max(ef, kb), metric, bc, band = band))(
-                  (qs, kb, allow) => graft.operators.HnswIndex.searchBatch(
-                    segments, qs, kb, math.max(ef, kb), metric, deny = deny,
-                    allowIds = allow, band = band))
+                graphLeg(deny)((kb, admit) =>
+                  graft.operators.HnswIndex.fanOut(segments, walkQs, kb,
+                    metric, admit)((seg, q, a) =>
+                    graft.operators.HnswIndex.searchSegment(seg, q, kb,
+                      math.max(ef, kb), metric, a, band)))
               // the reference's DiskANN-static class
               // (gamma_index_diskann_static.cc): `l_search`/`beam_width`
               // resolve over the space's `L`/`beam_width`
@@ -1241,15 +1163,11 @@ object SearchApi {
                     .orElse(fOpts.indexParams.get("L").filter(_ > 0))
                     .getOrElse(100), k)
                 val bw = param("beam_width", fOpts).getOrElse(4)
-                graphLeg(deny)(
-                  (q, kb) => graft.operators.VamanaIndex.search(segments, q, kb,
-                    math.max(l, kb), bw, metric, deny = deny, band = band))(
-                  (q, kb, bc) => graft.operators.VamanaIndex.searchFilteredBc(
-                    segments, q, kb, math.max(l, kb), bw, metric, bc,
-                    band = band))(
-                  (qs, kb, allow) => graft.operators.VamanaIndex.searchBatch(
-                    segments, qs, kb, math.max(l, kb), bw, metric, deny = deny,
-                    allowIds = allow, band = band))
+                graphLeg(deny)((kb, admit) =>
+                  graft.operators.HnswIndex.fanOut(segments, walkQs, kb,
+                    metric, admit)((seg, q, a) =>
+                    graft.operators.VamanaIndex.searchSegment(seg, q, kb,
+                      math.max(l, kb), bw, metric, a, band)))
               // GPU_* spaces execute on CUDA in the reference; here they
               // serve from the equivalent CPU layout - same semantics.
               // `nprobe` resolves request index_params -> space params ->
@@ -1257,45 +1175,37 @@ object SearchApi {
               // capped at ncentroids. INT8 probes with the FLOAT query
               // (centroids live in the de-quantized domain, see
               // IndexLifecycle.rebuild) and scores in-scan with the
-              // integer kernels.
+              // integer kernels. Gates apply in-scan - zero over-fetch,
+              // no gate loop; a batch runs one probe-union pass.
               case Kind.Ivf =>
                 val model = g.centroidModel(metric)
-                val served = applyDeny(g.table, deny, ridName)
                 val nprobe = math.min(
                   param("nprobe", fOpts).getOrElse(80), model.ncentroids)
-                if (!batched)
-                  // predicate + gate IN-SCAN inside the probed lists -
-                  // zero over-fetch, no gate loop
-                  Some(withTail(deny, k)(kb =>
-                    (if (isI8)
+                Some(withTail(deny, k)(kb =>
+                  if (nq == 1) legRows(
+                    if (isI8)
                       IvfIndex.searchInt8(served, col(vc.field), model,
-                        qsN.head._2, qI8.head._2, kb, nprobe, filter = pred,
+                        qsN.head._2, qI8.head._2, kb, nprobe,
                         minScore = vc.minScore, maxScore = vc.maxScore,
                         tieBreak = Some(col("_id")))
                     else
                       IvfIndex.search(served, col(vc.field), model,
-                        qsN.head._2, kb, nprobe, filter = pred,
+                        qsN.head._2, kb, nprobe,
                         minScore = vc.minScore, maxScore = vc.maxScore,
-                        tieBreak = Some(col("_id"))))
-                      .select(asVecId(col(ridName)), col("_score"))))
-                else {
-                  // one probe-union pass serves the whole batch
-                  val servedF = pred.map(served.filter).getOrElse(served)
-                  Some(withTailB(deny, k)(kb =>
-                    (if (isI8)
-                      IvfIndex.searchBatchInt8(servedF, col(vc.field),
+                        tieBreak = Some(col("_id"))), ridName)
+                  else legRows(
+                    if (isI8)
+                      IvfIndex.searchBatchInt8(served, col(vc.field),
                         struct(col(ridName)),
                         qsN.zip(qI8).map { case ((qid, q), (_, code)) =>
                           (qid, q, code) },
                         model, kb, nprobe,
                         minScore = vc.minScore, maxScore = vc.maxScore)
                     else
-                      IvfIndex.searchBatch(servedF, col(vc.field),
+                      IvfIndex.searchBatch(served, col(vc.field),
                         struct(col(ridName)), qsN, model, kb, nprobe,
-                        minScore = vc.minScore, maxScore = vc.maxScore))
-                      .select(col("_qid"), asVecId(col(s"_item.$ridName")),
-                        col("_score"))))
-                }
+                        minScore = vc.minScore, maxScore = vc.maxScore),
+                    s"_item.$ridName")))
               // the compressed families: ADC over residual codes inside
               // nprobe lists, then a `recall_num`-deep exact rerank
               // (gamma_index_ivfpq.cc:765-768 - recall_num caps at
@@ -1309,37 +1219,30 @@ object SearchApi {
               // rerank with the integer kernels.
               case Kind.Pq | Kind.Scann =>
                 val (ivf, pq) = (g.ivfModel(metric), g.pqModel(metric))
-                val served0 = applyDeny(g.table, deny, ridName)
-                val served = pred.map(served0.filter).getOrElse(served0)
                 val nprobe = math.min(
                   param("nprobe", fOpts).getOrElse(80), ivf.ncentroids)
                 val recallNum = math.max(
                   param("recall_num", fOpts).getOrElse(
                     if (kind == Kind.Scann) math.max(10 * k, 100) else k), k)
-                if (!batched)
-                  Some(withTail(deny, k)(kb =>
+                Some(withTail(deny, k)(kb =>
+                  if (nq == 1) legRows(
                     graft.operators.PqIndex.searchIvfResidual(served,
                       col(vc.field), ivf, pq, walkQs.head._2, kb, nprobe,
                       math.max(recallNum, kb), idCol = col("_id"),
                       minScore = vc.minScore, maxScore = vc.maxScore,
-                      rerankInt8 = if (isI8) Some(qI8.head._2) else None)
-                      .select(asVecId(col(ridName)), col("_score"))))
-                else
-                  Some(withTailB(deny, k)(kb =>
+                      rerankInt8 = if (isI8) Some(qI8.head._2) else None),
+                    ridName)
+                  else legRows(
                     graft.operators.PqIndex.searchBatchIvfResidual(served,
                       col(vc.field), ivf, pq, walkQs, kb, nprobe,
                       math.max(recallNum, kb), idCol = col(ridName),
                       minScore = vc.minScore, maxScore = vc.maxScore,
-                      rerankInt8 = if (isI8) Some(qI8) else None)
-                      .select(col("_qid"), asVecId(col("_id")),
-                        col("_score"))))
+                      rerankInt8 = if (isI8) Some(qI8) else None), "_id")))
               // RaBitQ class: coarse probe, residual sign-code estimator
               // (qb in [0,8]), `recall_num`-deep exact rerank
               // (gamma_index_ivfrabitq.cc:105,214-223)
               case Kind.Rabitq =>
                 val ivf = g.ivfModel(metric)
-                val served0 = applyDeny(g.table, deny, ridName)
-                val served = pred.map(served0.filter).getOrElse(served0)
                 val nprobe = math.min(
                   param("nprobe", fOpts).getOrElse(80), ivf.ncentroids)
                 val shortlist = math.max(
@@ -1348,25 +1251,22 @@ object SearchApi {
                 val qbBits = req.indexParams.get("qb")
                   .orElse(fOpts.indexParams.get("qb"))
                   .filter(v => v >= 0 && v <= 8).getOrElse(4)
-                if (!batched)
-                  Some(withTail(deny, k)(kb =>
+                Some(withTail(deny, k)(kb =>
+                  if (nq == 1) legRows(
                     graft.operators.BinaryIndex.searchIvfResidual(served,
                       col(vc.field), ivf, walkQs.head._2, kb, nprobe,
                       math.max(shortlist, kb), idCol = col("_id"),
                       metric = metric, qb = qbBits, minScore = vc.minScore,
                       maxScore = vc.maxScore,
-                      rerankInt8 = if (isI8) Some(qI8.head._2) else None)
-                      .select(asVecId(col(ridName)), col("_score"))))
-                else
-                  Some(withTailB(deny, k)(kb =>
+                      rerankInt8 = if (isI8) Some(qI8.head._2) else None),
+                    ridName)
+                  else legRows(
                     graft.operators.BinaryIndex.searchBatchIvfResidual(served,
                       col(vc.field), ivf, walkQs, kb, nprobe,
                       math.max(shortlist, kb), idCol = col(ridName),
                       metric = metric, qb = qbBits, minScore = vc.minScore,
                       maxScore = vc.maxScore,
-                      rerankInt8 = if (isI8) Some(qI8) else None)
-                      .select(col("_qid"), asVecId(col("_id")),
-                        col("_score"))))
+                      rerankInt8 = if (isI8) Some(qI8) else None), "_id")))
               // binary value_type: the stored column IS the packed code;
               // the request's float features sign-binarize like the FLAT
               // binary path, then route = probe nprobe Hamming-nearest
@@ -1378,23 +1278,17 @@ object SearchApi {
                 val cents = g.binaryCentroids
                 val nprobe = math.min(
                   param("nprobe", fOpts).getOrElse(80), cents.length)
-                val served = applyDeny(g.table, deny, ridName)
-                if (!batched)
-                  Some(withTail(deny, k)(kb =>
+                Some(withTail(deny, k)(kb =>
+                  if (nq == 1) legRows(
                     graft.operators.BinaryIndex.searchBinaryIvf(served,
                       vc.field, cents, qCodes.head._2, kb, nprobe,
-                      filter = pred, minScore = vc.minScore,
-                      maxScore = vc.maxScore, tieBreak = Some(col("_id")))
-                      .select(asVecId(col(ridName)), col("_score"))))
-                else
-                  Some(withTailB(deny, k)(kb =>
-                    graft.operators.BinaryIndex.searchBatchBinaryIvf(
-                      pred.map(served.filter).getOrElse(served),
+                      minScore = vc.minScore, maxScore = vc.maxScore,
+                      tieBreak = Some(col("_id"))), ridName)
+                  else legRows(
+                    graft.operators.BinaryIndex.searchBatchBinaryIvf(served,
                       vc.field, cents, qCodes, kb, nprobe,
                       idCol = col(ridName), minScore = vc.minScore,
-                      maxScore = vc.maxScore)
-                      .select(col("_qid"), asVecId(col("_id")),
-                        col("_score"))))
+                      maxScore = vc.maxScore), "_id")))
             }
           }
         }
@@ -1405,110 +1299,42 @@ object SearchApi {
     // each field's OWN index and intersects docids,
     // vector_manager.cc:859,1024-1087; with a live buffer it merges the
     // buffer into the PER-FIELD searches before the intersection,
-    // :1096-1176). Each leg serves through its field's OWN READY
-    // generation KIND under the lifecycle's field scope
-    // ([[IndexLifecycle.scoped]]) - the (vec_id, _score) intersection
-    // join is family-agnostic, so mixed HNSW + IVF + Vamana conjunctions
-    // route too. Any field without a READY generation (or a family x
+    // :1096-1176; req_num flattens into one request per field,
+    // doc_query.go:296-318). Each leg serves through its field's OWN
+    // READY generation KIND under the lifecycle's field scope
+    // ([[IndexLifecycle.scoped]]) - the (_qid, vec_id) intersection join
+    // is family-agnostic, so mixed HNSW + IVF + Vamana conjunctions route
+    // too. Any field without a READY generation (or a family x
     // value-type with no route) degrades the WHOLE request to FLAT (a
     // partial intersection of one indexed and one brute leg would be no
     // cheaper and harder to bound).
-    val multiRouted: Option[DataFrame] =
-      if (req.isBruteSearch != 1 && req.vectors.size > 1 &&
-          req.vectors.forall(_.queries.size == 1)) {
-        // perFieldK scales with limit like the engine's per-index topn
-        val perFieldK = math.max(req.limit * 10, 200)
-        val legs: Seq[Option[DataFrame]] = req.vectors.map(vc =>
-          legFor(vc, lifecycle.scoped(vc.field), perFieldK))
-        if (legs.exists(_.isEmpty)) None
-        else {
-          val nf = legs.size
-          val w = req.weights.getOrElse(Seq.fill(nf)(1.0 / nf))
-          require(w.size == nf, "weights arity must match vector conditions")
-          val joined = legs.flatten.zipWithIndex
-            .map { case (df, i) =>
-              df.select(col("vec_id"), col("_score").as(s"_s$i")) }
-            .reduceLeft((a, b) => a.join(b, "vec_id"))
-          // lead condition sets the response direction
-          // (doc_query.go:1526-1528); a binary lead ranks ascending
-          val headMetric =
-            if (valueTypeOf(space, req.vectors.head.field) == "binary") "l2"
-            else metricOf(space, req.vectors.head.field)
-          val combined = (0 until nf)
-            .map(i => col(s"_s$i") * lit(w(i))).reduceLeft(_ + _)
-          val primary = if (Knn.ascending(headMetric)) col("_score").asc
-            else col("_score").desc
-          val scored = joined.withColumn("_score", combined)
-            .orderBy(primary, col("vec_id").asc)
-            .limit(req.limit + req.offset)
-          val ordered = joinBack(scored).orderBy(primary, col("_id"))
-          val sliced = if (req.offset > 0) ordered.offset(req.offset) else ordered
-          // conjunctive results carry (_id, _score), like the FLAT path
-          val projected = sliced.select(col("_id"), col("_score"))
-          Some(if (req.sort.nonEmpty) applySort(projected, req.sort)
-            else projected)
-        }
-      } else None
-    if (multiRouted.isDefined) return multiRouted.get
-
-    // ------ BATCHED multi-field conjunctive ROUTING (req_num > 1 on
-    // every condition): the reference flattens req_num into one request
-    // per field and intersects per (query, docid) (doc_query.go:296-318
-    // composed with vector_manager.cc:1024-1087). Each field's batch
-    // serves through its OWN READY generation in ONE pass (the
-    // per-family batch operators amortize segment reads / probe scans
-    // across the whole batch); unroutable shapes keep the FLAT per-field
-    // batch fallback.
-    val multiBatchRouted: Option[DataFrame] = {
-      val reqNum = req.vectors.headOption.map(_.queries.size).getOrElse(0)
-      if (req.isBruteSearch != 1 && req.vectors.size > 1 && reqNum > 1 &&
-          req.vectors.forall(_.queries.size == reqNum)) {
-        val perFieldK = math.max(req.limit * 10, 200)
-        val legs: Seq[Option[DataFrame]] = req.vectors.map(vc =>
-          legFor(vc, lifecycle.scoped(vc.field), perFieldK))
-        if (legs.exists(_.isEmpty)) None
-        else {
-          val nf = legs.size
-          val w = req.weights.getOrElse(Seq.fill(nf)(1.0 / nf))
-          require(w.size == nf, "weights arity must match vector conditions")
-          val joined = legs.flatten.zipWithIndex
-            .map { case (df, i) =>
-              df.select(col("_qid"), col("vec_id"),
-                col("_score").as(s"_s$i")) }
-            .reduceLeft((a, b) => a.join(b, Seq("_qid", "vec_id")))
-          // binary lead => ascending, like the FLAT twin's legDir
-          val headAsc = Knn.ascending(
-            if (valueTypeOf(space, req.vectors.head.field) == "binary") "l2"
-            else metricOf(space, req.vectors.head.field))
-          val combined = (0 until nf)
-            .map(i => col(s"_s$i") * lit(w(i))).reduceLeft(_ + _)
-          // per-qid bounded top-k + offset slice, the FLAT batched
-          // conjunction's exact shape
-          val agged = joined.withColumn("_score", combined)
-            .groupBy(col("_qid"))
-            .agg(graft.Graft.F.topK(col("_score"), struct(col("vec_id")),
-              req.limit + req.offset, headAsc).as("_tk"))
-          val sliced =
-            if (req.offset > 0)
-              agged.withColumn("_tk", slice(col("_tk"), req.offset + 1, req.limit))
-            else agged
-          val hits = sliced.select(col("_qid"), explode(col("_tk")).as("_e"))
-            .select(col("_qid"), col("_e.item.vec_id").as("vec_id"),
-              col("_e.score").as("_score"))
-          val primary = if (headAsc) col("_score").asc else col("_score").desc
-          val out = joinBack(hits, Seq(col("_qid")))
-            .orderBy(col("_qid").asc, primary, col("_id").asc)
-            .select(col("_qid"), col("_id"), col("_score"))
-          Some(if (req.sort.nonEmpty)
-            applySort(out, req.sort, qid = Some(col("_qid")))
-          else out)
-        }
-      } else None
+    val nq = req.vectors.headOption.map(_.queries.size).getOrElse(0)
+    if (req.isBruteSearch != 1 && req.vectors.size > 1 &&
+        req.vectors.forall(_.queries.size == nq)) {
+      val legs: Seq[Option[DataFrame]] = req.vectors.map(vc =>
+        legFor(vc, lifecycle.scoped(vc.field), perFieldK(req)))
+      if (legs.forall(_.isDefined)) {
+        val nf = legs.size
+        val w = req.weights.getOrElse(Seq.fill(nf)(1.0 / nf))
+        require(w.size == nf, "weights arity must match vector conditions")
+        val joined = legs.flatten.zipWithIndex
+          .map { case (df, i) =>
+            df.select(col("_qid"), col("vec_id"), col("_score").as(s"_s$i")) }
+          .reduceLeft((a, b) => a.join(b, Seq("_qid", "vec_id")))
+        // lead condition sets the response direction
+        // (doc_query.go:1526-1528); a binary lead ranks ascending
+        val headMetric = rankMetric(space, req.vectors.head.field)
+        val combined = (0 until nf)
+          .map(i => col(s"_s$i") * lit(w(i))).reduceLeft(_ + _)
+        val hits = Knn.topKPerQuery(joined.withColumn("_score", combined), nq,
+          req.limit + req.offset, Knn.ascending(headMetric))
+        // conjunctive results carry (_qid, _id, _score), like the FLAT path
+        return finish(joinBack(hits), headMetric, nq, Seq("_qid", "_id", "_score"))
+      }
     }
-    if (multiBatchRouted.isDefined) return multiBatchRouted.get
 
     // ------ single-condition routing: one [[legFor]] leg, payload
-    // joined back onto the LIVE view, finished per shape. Generations
+    // joined back onto the LIVE view, finished per query. Generations
     // resolve unscoped first (the single-vector-field convention), then
     // under the field's scope — a single-condition request against a
     // MULTI-field space serves from that field's own generation instead
@@ -1519,14 +1345,10 @@ object SearchApi {
     val routed: Option[DataFrame] =
       if (req.isBruteSearch != 1 && req.vectors.size == 1) {
         val vc = req.vectors.head
-        val m = if (valueTypeOf(space, vc.field) == "binary") "l2"
-          else metricOf(space, vc.field)
         legFor(vc, lifecycle, req.limit + req.offset)
           .orElse(legFor(vc, lifecycle.scoped(vc.field), req.limit + req.offset))
-          .map { hits =>
-            if (vc.queries.size == 1) finish(joinBack(hits), m)
-            else finishBatch(joinBack(hits, Seq(col("_qid"))), m)
-          }
+          .map(hits => finish(joinBack(hits), rankMetric(space, vc.field), nq,
+            projection(space, req, Seq("_qid", "_score"))))
       } else None
     routed.getOrElse(search(live, space, requestJson))
   }
@@ -1602,10 +1424,9 @@ object SearchApi {
         }
         base.join(broadcast(reqDf), Seq("_id")).orderBy(col("_ord"))
           .limit(req.limit)
-          .select(projection(space, req, Seq.empty): _*)
+          .select(projection(space, req, Seq.empty).map(col): _*)
       case _ =>
-        val pred = req.filter.map(
-      VearchFilters.parse(_, arrayFields(space), dateFields(space)))
+        val pred = filterOf(space, req)
         val filtered = pred.map(corpus.filter).getOrElse(corpus)
         // sort spec defines the scan order (sortorder/parse.go); `_id`
         // appended keeps the page boundary deterministic on ties
@@ -1613,7 +1434,7 @@ object SearchApi {
           if (req.sort.nonEmpty) filtered.orderBy(sortCols(req.sort) :+ col("_id").asc: _*)
           else filtered.orderBy(col("_id"))
         val sliced = if (req.offset > 0) ordered.offset(req.offset) else ordered
-        sliced.limit(req.limit).select(projection(space, req, Seq.empty): _*)
+        sliced.limit(req.limit).select(projection(space, req, Seq.empty).map(col): _*)
     }
   }
 }

@@ -134,9 +134,9 @@ private[graft] object IndexEntries {
       val segs = graft.sources.IndexStore.hnsw(s, dir)
       val allowed = t(s, dir, "embeddings")
         .filter(col("label").isin(1, 3, 5) && col("vec_id") =!= 0)
-        .select(col("vec_id"))
-      HnswIndex.searchFiltered(segs, qvec(s, dir), k = 10, ef = 1 << 30,
-        metric = "l2", allowedIds = allowed)
+        .select(col("vec_id").cast("long")).collect().map(_.getLong(0)).toSet
+      HnswIndex.search(segs, qvec(s, dir), k = 10, ef = 1 << 30,
+        metric = "l2", allow = Some(allowed))
         .join(t(s, dir, "embeddings").select(col("vec_id"), col("label")), Seq("vec_id"))
         .orderBy(col("_score"), col("vec_id")) // raw-score order, like the oracle
         .select(col("vec_id"), col("label"), round(col("_score"), 4).as("score"))

@@ -216,7 +216,7 @@ private[graft] object RealtimeEntries {
 
     // ── §2.8 BATCHED realtime: req_num=3 queries through the routed IVF
     //    planner with a live tail — per-qid base ∪ tail merge
-    //    (mergeTailBatch); all three query vectors live in the TAIL, so
+    //    (mergeTail); all three query vectors live in the TAIL, so
     //    every qid's top-1 is a buffered doc; full probe ⇒ exact per-qid
     //    blocks over the live view ≡ the full table, oracle-checked ──
     "q_ivf_batch_realtime" -> ((s, dir) => {
@@ -264,7 +264,7 @@ private[graft] object RealtimeEntries {
 
     // ── §2.8 BATCHED realtime through the GRAPH families: req_num=3
     //    with a live tail — the per-qid base ∪ tail merge
-    //    (mergeTailBatch) over one segment pass that walks every
+    //    (mergeTail) over one segment pass that walks every
     //    query's beam; every query vector is a TAIL doc, so each qid's
     //    top-1 is a buffered write; exact params ⇒ per-qid exact blocks
     //    over the live view ≡ the full table, oracle-checked ──

@@ -158,24 +158,18 @@ object BinaryIndex {
           Knn.score(metric, vecCol, col("_qq")))
     }
     // larger sign-dot = closer (descending, same as the single path)
-    val short = est.groupBy(col("_qid"))
-      .agg(graft.Graft.F.topK(col("_est"), struct(col("_sid")), shortlist,
-        asc = false).as("_tk"))
-      .select(col("_qid"), explode(col("_tk")).as("_e"))
-      .select(col("_qid"), col("_e.item._sid").as("_sid"))
+    val short = Knn.topKPerQuery(est, queries.size, shortlist, asc = false,
+        "_sid", "_est")
+      .select(col("_qid"), col("_sid"))
       .join(broadcast(qJoinDf), Seq("_qid"))
     val rerank0 = corpus.join(broadcast(short), idCol === col("_sid"))
       .select(col("_qid"),
         scoreExpr.as("_score"),
-        struct(idCol.as("id")).as("_item"))
+        idCol.as("_id"))
       .filter(col("_score").isNotNull)
     // in-scan score gate at the exact-rerank stage (see searchIvfResidual)
     val rerank = Knn.scoreGate(rerank0, minScore, maxScore)
-    rerank.groupBy(col("_qid"))
-      .agg(graft.Graft.F.topK(col("_score"), col("_item"), k,
-        Knn.ascending(metric)).as("_tk"))
-      .select(col("_qid"), explode(col("_tk")).as("_e"))
-      .select(col("_qid"), col("_e.item.id").as("_id"), col("_e.score").as("_score"))
+    Knn.topKPerQuery(rerank, queries.size, k, Knn.ascending(metric), "_id")
   }
 
   /** Quantize the query to qb bits per dimension (uniform min–max scalar
@@ -408,19 +402,15 @@ object BinaryIndex {
     val pruned =
       if (union.isEmpty) corpus.limit(0)
       else corpus.filter(col("list_id").isin(union: _*))
-    val scored0 = pruned.select(idCol.as("_sid"), col("list_id"), col(codeCol))
+    val scored0 = pruned.select(idCol.as("_id"), col("list_id"), col(codeCol))
       .join(broadcast(qDf), Seq("list_id"))
       .select(col("_qid"),
         F.hamming(col(codeCol), col("_qcode")).cast("double").as("_score"),
-        col("_sid"))
+        col("_id"))
       .filter(col("_score").isNotNull)
     // in-scan score gate (gamma_common_data.h:94-96): Hamming IS the
     // final score for the binary family — gate before the bounded heap
     val scored = Knn.scoreGate(scored0, minScore, maxScore)
-    scored.groupBy(col("_qid"))
-      .agg(graft.Graft.F.topK(col("_score"), struct(col("_sid")), k,
-        asc = true).as("_tk"))
-      .select(col("_qid"), explode(col("_tk")).as("_e"))
-      .select(col("_qid"), col("_e.item._sid").as("_id"), col("_e.score").as("_score"))
+    Knn.topKPerQuery(scored, queries.size, k, asc = true, "_id")
   }
 }

@@ -50,6 +50,30 @@ object Documents {
   def deleteByIds(df: DataFrame, idCol: String, ids: Seq[Any]): DataFrame =
     df.filter(!coalesce(col(idCol).isin(ids: _*), lit(false)))
 
+  /** Literal id lists up to this size ride a NOT-IN scan predicate; larger
+    * ones a broadcast anti-join ([[dropIds]]).
+    */
+  private[graft] val MaxLiteralIds = 1000
+
+  /** Drop the rows whose `key` is one of `ids` — the delete-ledger gate of
+    * a served layout or a realtime tail, and the tail's supersede gate on
+    * base hits. Up to [[MaxLiteralIds]] ids ride a NOT-IN predicate
+    * (parquet-pushable); more a broadcast anti-join, so a large delete
+    * batch never bloats the plan and codegen with a giant NOT-IN. The
+    * anti-join side carries the ids cast to `idType`, the key's type.
+    */
+  def dropIds(df: DataFrame, key: Column, ids: Iterable[Long],
+      idType: org.apache.spark.sql.types.DataType =
+        org.apache.spark.sql.types.LongType): DataFrame =
+    if (ids.isEmpty) df
+    else if (ids.size <= MaxLiteralIds) df.filter(!key.isin(ids.toSeq: _*))
+    else {
+      val spark = df.sparkSession
+      import spark.implicits._
+      val idDf = ids.toSeq.toDF("_drop_id").select(col("_drop_id").cast(idType))
+      df.join(broadcast(idDf), key === col("_drop_id"), "left_anti")
+    }
+
   /** Delete-by-query: runs the filter, removes matches
     * (handler_document.go:498-555 does query→ids→delete; relationally one
     * negated predicate — same result, no id round-trip). NULL predicate

@@ -633,10 +633,9 @@ object HnswIndex {
       metric, roundTo, deny)
   }
 
-  /** Single-query search over the segment table: per-shard graph walk via
-    * `flatMap` (no shuffle of the corpus), global TakeOrderedAndProject
-    * merge. `ef ≥ max shard size` ⇒ exact (see class doc).
-    * Output: (vec_id, _score), best-first.
+  /** Single-query search: [[searchBatch]] over one query (qid 0), whose
+    * merge is then Spark's TakeOrderedAndProject. `ef ≥ max shard size` ⇒
+    * exact (see class doc). Output: (vec_id, _score), best-first.
     *
     * `deny` is the DELETE gate (the reference's deleted-bitmap check,
     * IsValid = candidate ∧ ¬deleted — engine.cc:869-899,
@@ -644,121 +643,85 @@ object HnswIndex {
     * carry connectivity) but never admitted, so the walk returns k LIVE
     * hits — no ghost results, no under-filled response. The set is the
     * delete ledger since this generation (bounded by one rebuild
-    * interval), broadcast once.
+    * interval).
+    *
+    * `allow` is the hybrid scalar + HNSW path: the scalar predicate's
+    * surviving ids ride a broadcast into the walk, as the reference wires
+    * its scalar-filter bitmap into the hnswlib filter functor
+    * (gamma_index_hnswlib.cc). Disallowed nodes are traversed but never
+    * returned, so `ef ≥ |shard|` stays provably exact under ANY filter.
+    * Use it for SELECTIVE filters — a broad filter is better served by
+    * filter-first brute force ([[Knn.search]] with `filter`), the planner
+    * switch the reference makes (engine.cc:355-373).
     */
   def search(segments: Dataset[Segment], q: Seq[Float], k: Int, ef: Int,
       metric: String, roundTo: Option[Int] = None,
       deny: Set[Long] = Set.empty,
-      band: Option[(Double, Double)] = None): DataFrame = {
-    val spark = segments.sparkSession
-    import spark.implicits._
-    val qa = q.toArray
-    val hits =
-      if (deny.isEmpty)
-        segments.flatMap(seg => searchSegment(seg, qa, k, ef, metric,
-            band = band))
-          .toDF("vec_id", "_score")
-      else {
-        val bc = spark.sparkContext.broadcast(deny)
-        segments.flatMap(seg =>
-            searchSegment(seg, qa, k, ef, metric,
-              id => !bc.value.contains(id), band = band))
-          .toDF("vec_id", "_score")
-      }
-    val primary = if (ascending(metric)) col("_score").asc else col("_score").desc
-    val top = hits.orderBy(primary, col("vec_id").asc).limit(k)
-    roundTo.map(d => top.withColumn("_score", round(col("_score"), d))).getOrElse(top)
-  }
-
-  /** Filtered search (the reference's hybrid scalar + HNSW path): the
-    * scalar predicate's surviving ids ride a broadcast into the graph
-    * walk, as the reference wires its scalar-filter bitmap into the
-    * hnswlib filter functor (gamma_index_hnswlib.cc). Disallowed nodes
-    * are traversed but never returned, so `ef ≥ |shard|` stays provably
-    * exact under ANY filter. Use for SELECTIVE filters — a broad filter
-    * is better served by filter-first brute force ([[Knn.search]] with
-    * `filter`), the same planner switch the reference makes
-    * (engine.cc:355-373).
-    */
-  def searchFiltered(segments: Dataset[Segment], q: Seq[Float], k: Int, ef: Int,
-      metric: String, allowedIds: DataFrame, roundTo: Option[Int] = None,
-      deny: Set[Long] = Set.empty): DataFrame = {
-    val spark = segments.sparkSession
-    import spark.implicits._
-    val idCol = allowedIds.columns.head
-    searchFilteredIds(segments, q, k, ef, metric,
-      allowedIds.select(col(idCol).cast("long")).as[Long].collect().toSet,
-      roundTo, deny)
-  }
-
-  /** [[searchFiltered]] with an ALREADY-COLLECTED allow-set: callers
-    * that probe the filter's selectivity first (the planner switch,
-    * engine.cc:355-373) reuse that probe's rows here instead of paying
-    * a second driver action to re-collect the same ids.
-    */
-  def searchFilteredIds(segments: Dataset[Segment], q: Seq[Float], k: Int,
-      ef: Int, metric: String, allowIds: Set[Long],
-      roundTo: Option[Int] = None, deny: Set[Long] = Set.empty): DataFrame =
-    searchFilteredBc(segments, q, k, ef, metric,
-      segments.sparkSession.sparkContext.broadcast(allowIds -- deny), roundTo)
-
-  /** Pre-broadcast variant of [[searchFilteredIds]]: callers that retry
-    * the walk at increasing depths (the score-gate loop) hoist ONE
-    * allow-set broadcast out of the retried closure instead of
-    * re-shipping it every probe. `allowBc` must already exclude denied
-    * ids.
-    */
-  def searchFilteredBc(segments: Dataset[Segment], q: Seq[Float], k: Int,
-      ef: Int, metric: String,
-      allowBc: org.apache.spark.broadcast.Broadcast[Set[Long]],
-      roundTo: Option[Int] = None,
-      band: Option[(Double, Double)] = None): DataFrame = {
-    val spark = segments.sparkSession
-    import spark.implicits._
-    val qa = q.toArray
-    val hits = segments
-      .flatMap(seg => searchSegment(seg, qa, k, ef, metric,
-        allowBc.value.contains _, band = band))
-      .toDF("vec_id", "_score")
-    val primary = if (ascending(metric)) col("_score").asc else col("_score").desc
-    val top = hits.orderBy(primary, col("vec_id").asc).limit(k)
+      band: Option[(Double, Double)] = None,
+      allow: Option[Set[Long]] = None): DataFrame = {
+    val top = searchBatch(segments, Seq(0L -> q), k, ef, metric, deny, allow,
+      band).drop("_qid")
     roundTo.map(d => top.withColumn("_score", round(col("_score"), d))).getOrElse(top)
   }
 
   /** Batched search (vearch `req_num`): every query walks each segment in
     * the SAME task pass — one segment deserialization amortized across the
-    * whole batch — then a bounded top-k aggregate merges per-shard lists,
-    * keeping the shuffle at |queries|·k rows. Output: (_qid, vec_id,
-    * _score), best-first within each qid.
+    * whole batch — then [[fanOut]]'s per-query merge. Output: (_qid,
+    * vec_id, _score), best-first within each qid. `allowIds` is the
+    * batch's shared scalar-filter allow-set (see [[search]]).
     */
   def searchBatch(segments: Dataset[Segment], queries: Seq[(Long, Seq[Float])],
       k: Int, ef: Int, metric: String, deny: Set[Long] = Set.empty,
-      // filtered batch (the reference's flattened req_num WITH a scalar
-      // filter): one allow-set broadcast serves every query in the
-      // batch — the collect amortizes exactly like the segment read
       allowIds: Option[Set[Long]] = None,
-      band: Option[(Double, Double)] = None): DataFrame = {
+      band: Option[(Double, Double)] = None): DataFrame =
+    fanOut(segments, queries, k, metric,
+      admission(segments.sparkSession, allowIds, deny)) { (seg, q, admit) =>
+      searchSegment(seg, q, k, ef, metric, admit, band)
+    }
+
+  /** A graph walk's admission gate, shipped to the executors as ONE
+    * broadcast: the allow-set minus the deny set (members admitted), or
+    * the deny set alone (members refused).
+    */
+  private[graft] final case class Admission(ids: Set[Long], allowList: Boolean) {
+    def admits(id: Long): Boolean = ids.contains(id) == allowList
+  }
+
+  /** Broadcast a walk's [[Admission]] — None, and nothing broadcast, when
+    * there is neither an allow-set nor a deny set. Callers that retry a
+    * walk at growing depths build it once, outside the retried closure.
+    */
+  private[graft] def admission(spark: org.apache.spark.sql.SparkSession,
+      allow: Option[Set[Long]], deny: Set[Long])
+      : Option[org.apache.spark.broadcast.Broadcast[Admission]] =
+    allow.map(a => Admission(a -- deny, allowList = true))
+      .orElse(if (deny.isEmpty) None else Some(Admission(deny, allowList = false)))
+      .map(spark.sparkContext.broadcast(_))
+
+  /** The fan-out every graph family searches through: each segment row's
+    * task walks every query with the family's `walk(segment, query,
+    * admit)`, emitting per-segment top lists (no shuffle of the corpus),
+    * and [[Knn.topKPerQuery]] merges them per query — the distributed
+    * analog of the reference's router k-way merge over partitions
+    * (client.go:1497-1576). Output: (_qid, vec_id, _score).
+    */
+  private[graft] def fanOut[S](segments: Dataset[S],
+      queries: Seq[(Long, Seq[Float])], k: Int, metric: String,
+      admit: Option[org.apache.spark.broadcast.Broadcast[Admission]])(
+      walk: (S, Array[Float], Long => Boolean) => Array[(Long, Double)])
+      : DataFrame = {
     val spark = segments.sparkSession
     import spark.implicits._
     val qs = queries.map { case (qid, v) => (qid, v.toArray) }.toArray
-    val effBc = spark.sparkContext.broadcast(allowIds.map(_ -- deny))
-    val denyBc = spark.sparkContext.broadcast(deny)
     val hits = segments.flatMap { seg =>
-      val allow: Long => Boolean = effBc.value match {
-        case Some(ok) => ok.contains _
-        case None if denyBc.value.isEmpty => _ => true
-        case None => id => !denyBc.value.contains(id)
+      val allow: Long => Boolean = admit match {
+        case Some(bc) => val a = bc.value; a.admits
+        case None => _ => true
       }
       qs.iterator.flatMap { case (qid, qa) =>
-        searchSegment(seg, qa, k, ef, metric, allow, band = band).iterator
-          .map { case (id, s) => (qid, id, s) }
+        walk(seg, qa, allow).iterator.map { case (id, s) => (qid, id, s) }
       }
     }.toDF("_qid", "vec_id", "_score")
-    hits.groupBy(col("_qid"))
-      .agg(graft.Graft.F.topK(col("_score"), struct(col("vec_id")), k,
-        ascending(metric)).as("_tk"))
-      .select(col("_qid"), explode(col("_tk")).as("_e"))
-      .select(col("_qid"), col("_e.item.vec_id").as("vec_id"),
-        col("_e.score").as("_score"))
+    Knn.topKPerQuery(hits, qs.length, k, ascending(metric))
   }
 }

@@ -157,11 +157,8 @@ object IvfIndex {
     // score-range gate IN-SCAN (gamma_common_data.h:94-96): candidates
     // outside [min,max] never reach the bounded per-qid heap
     val scored = Knn.scoreGate(scored0, minScore, maxScore)
-    scored.groupBy(col("_qid"))
-      .agg(graft.Graft.F.topK(col("_score"), col("_item"), k,
-        Knn.ascending(model.metric)).as("_tk"))
-      .select(col("_qid"), explode(col("_tk")).as("_e"))
-      .select(col("_qid"), col("_e.item").as("_item"), col("_e.score").as("_score"))
+    Knn.topKPerQuery(scored, queries.size, k, Knn.ascending(model.metric),
+      "_item")
   }
 
   /** IVF search over an assigned corpus: probe filter then exact scoring.
@@ -255,10 +252,7 @@ object IvfIndex {
       .select(col("_qid"), scoreCol.as("_score"), payload.as("_item"))
       .filter(col("_score").isNotNull)
     val scored = Knn.scoreGate(scored0, minScore, maxScore)
-    scored.groupBy(col("_qid"))
-      .agg(graft.Graft.F.topK(col("_score"), col("_item"), k,
-        Knn.ascending(model.metric)).as("_tk"))
-      .select(col("_qid"), explode(col("_tk")).as("_e"))
-      .select(col("_qid"), col("_e.item").as("_item"), col("_e.score").as("_score"))
+    Knn.topKPerQuery(scored, queries.size, k, Knn.ascending(model.metric),
+      "_item")
   }
 }

@@ -184,15 +184,44 @@ object Knn {
     // (gamma_common_data.h:94-96); gating after top-k would return fewer
     // than k rows even when enough in-range docs exist
     val gated = scoreGate(scored, minScore, maxScore)
-    val agged = gated.groupBy(col("_qid"))
-      .agg(F.topK(col("_score"), col("_item"), k + offset, ascending(metric)).as("_tk"))
-    // per-qid pagination = slicing the already-sorted top array
-    val sliced = if (offset > 0) agged.withColumn("_tk", slice(col("_tk"), offset + 1, k))
-      else agged
-    sliced
-      .select(col("_qid"), explode(col("_tk")).as("_e"))
-      .select(col("_qid"), col("_e.item").as("_item"), col("_e.score").as("_score"))
+    topKPerQuery(gated, QueryTable, k, ascending(metric), "_item", offset = offset)
   }
+
+  /** Query count of a query TABLE (a DataFrame the driver never counts):
+    * its merge runs per qid.
+    */
+  private[graft] val QueryTable: Int = Int.MaxValue
+
+  /** The per-query top-k merge every batched search ends in: `hits` rows
+    * (_qid, `item`, `score`) → (_qid, `item`, `score`), best-first within
+    * each qid, ranks `offset+1 .. offset+k` of each query kept. `nq` is
+    * the query count the caller knows on the driver:
+    *  - one query: `ORDER BY score, item LIMIT offset+k` — Spark's
+    *    TakeOrderedAndProject, no `_qid` exchange;
+    *  - more: the bounded TopKAgg heap per qid, shuffling at most k rows
+    *    per query per partition.
+    * Both return the same rows: null scores never rank, and TopKAgg breaks
+    * exact-score ties by the item's native order, ascending — the sort's
+    * tie key here.
+    */
+  def topKPerQuery(hits: DataFrame, nq: Int, k: Int, asc: Boolean,
+      item: String = "vec_id", score: String = "_score",
+      offset: Int = 0): DataFrame =
+    if (nq <= 1) {
+      val top = hits.filter(col(score).isNotNull)
+        .select(col("_qid"), col(item), col(score))
+        .orderBy(if (asc) col(score).asc else col(score).desc, col(item).asc)
+        .limit(k + offset)
+      if (offset > 0) top.offset(offset) else top
+    } else {
+      val agged = hits.groupBy(col("_qid"))
+        .agg(F.topK(col(score), col(item), k + offset, asc).as("_tk"))
+      val sliced =
+        if (offset > 0) agged.withColumn("_tk", slice(col("_tk"), offset + 1, k))
+        else agged
+      sliced.select(col("_qid"), explode(col("_tk")).as("_e"))
+        .select(col("_qid"), col("_e.item").as(item), col("_e.score").as(score))
+    }
 
   /** Multi-vector conjunctive search (vearch: N vector conditions on
     * different fields; per-field top-k, docid INTERSECTION, combined score

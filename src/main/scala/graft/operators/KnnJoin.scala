@@ -69,10 +69,7 @@ object KnnJoin {
         Knn.score(model.metric, vecCol, col("_qv")).as("_score"),
         payload.as("_item"))
       .filter(col("_score").isNotNull)
-    scored.groupBy(col("_qid"))
-      .agg(Graft.F.topK(col("_score"), col("_item"), k,
-        Knn.ascending(model.metric)).as("_tk"))
-      .select(col("_qid"), explode(col("_tk")).as("_e"))
-      .select(col("_qid"), col("_e.item").as("_item"), col("_e.score").as("_score"))
+    Knn.topKPerQuery(scored, Knn.QueryTable, k, Knn.ascending(model.metric),
+      "_item")
   }
 }

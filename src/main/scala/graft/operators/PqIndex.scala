@@ -623,24 +623,18 @@ object PqIndex {
           .select(col("_qid"), col("_qq").cast("array<float>").as("_qq")),
           Knn.score(pq.metric, vecCol, col("_qq")))
     }
-    val short = adc.groupBy(col("_qid"))
-      .agg(graft.Graft.F.topK(col("_adc"), struct(col("_sid")), recallNum,
-        asc = true).as("_tk"))
-      .select(col("_qid"), explode(col("_tk")).as("_e"))
-      .select(col("_qid"), col("_e.item._sid").as("_sid"))
+    val short = Knn.topKPerQuery(adc, queries.size, recallNum, asc = true,
+        "_sid", "_adc")
+      .select(col("_qid"), col("_sid"))
       .join(broadcast(qJoinDf), Seq("_qid"))
     val rerank0 = corpus.join(broadcast(short), idCol === col("_sid"))
       .select(col("_qid"),
         scoreExpr.as("_score"),
-        struct(idCol.as("id")).as("_item"))
+        idCol.as("_id"))
       .filter(col("_score").isNotNull)
     // in-scan score gate at the exact-rerank stage (see searchIvfResidual)
     val rerank = Knn.scoreGate(rerank0, minScore, maxScore)
-    rerank.groupBy(col("_qid"))
-      .agg(graft.Graft.F.topK(col("_score"), col("_item"), k,
-        Knn.ascending(pq.metric)).as("_tk"))
-      .select(col("_qid"), explode(col("_tk")).as("_e"))
-      .select(col("_qid"), col("_e.item.id").as("_id"), col("_e.score").as("_score"))
+    Knn.topKPerQuery(rerank, queries.size, k, Knn.ascending(pq.metric), "_id")
   }
 
   /** ADC score column for a query (lower is better for both metrics; IP is
@@ -718,22 +712,16 @@ object PqIndex {
           .as("_adc"),
         col("_sid"))
       .filter(col("_adc").isNotNull)
-    val short = adc.groupBy(col("_qid"))
-      .agg(graft.Graft.F.topK(col("_adc"), struct(col("_sid")), recallNum,
-        asc = true).as("_tk"))
-      .select(col("_qid"), explode(col("_tk")).as("_e"))
-      .select(col("_qid"), col("_e.item._sid").as("_sid"))
+    val short = Knn.topKPerQuery(adc, queries.size, recallNum, asc = true,
+        "_sid", "_adc")
+      .select(col("_qid"), col("_sid"))
       .join(broadcast(qDf.select(col("_qid"), col("_qv"))), Seq("_qid"))
     val rerank = corpus.join(broadcast(short), idCol === col("_sid"))
       .select(col("_qid"),
         Knn.score(pq.metric, vecCol, col("_qv")).as("_score"),
-        struct(idCol.as("id")).as("_item"))
+        idCol.as("_id"))
       .filter(col("_score").isNotNull)
-    rerank.groupBy(col("_qid"))
-      .agg(graft.Graft.F.topK(col("_score"), col("_item"), k,
-        Knn.ascending(pq.metric)).as("_tk"))
-      .select(col("_qid"), explode(col("_tk")).as("_e"))
-      .select(col("_qid"), col("_e.item.id").as("_id"), col("_e.score").as("_score"))
+    Knn.topKPerQuery(rerank, queries.size, k, Knn.ascending(pq.metric), "_id")
   }
 
   /** Two-stage search: ADC top-recallNum over CODES ONLY → id shortlist →

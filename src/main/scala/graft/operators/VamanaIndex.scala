@@ -366,108 +366,36 @@ object VamanaIndex {
     top.map { case (d, idx) => (seg.nodes(idx).id, HnswIndex.reportScore(metric, d)) }
   }
 
-  /** Search over the segment table: per-shard beam walk via `flatMap`,
-    * global TakeOrderedAndProject merge. Output (vec_id, _score),
-    * best-first. `deny` is the delete ledger (see
-    * [[HnswIndex.search]]'s contract).
+  /** Single-query search: [[searchBatch]] over one query (qid 0).
+    * Output (vec_id, _score), best-first. `deny` is the delete ledger and
+    * `allow` the scalar-filter allow-set, both with
+    * [[HnswIndex.search]]'s contract — the reference gates EVERY index
+    * family through the same filter-bitmap functor
+    * (gamma_common_data.h:94-105, wired engine.cc:355-373), the DiskANN
+    * class included, so `l ≥ |shard|` stays provably exact under ANY
+    * filter.
     */
   def search(segments: Dataset[Segment], q: Seq[Float], k: Int, l: Int,
       beamWidth: Int = 4, metric: String = "l2", roundTo: Option[Int] = None,
       deny: Set[Long] = Set.empty,
-      band: Option[(Double, Double)] = None): DataFrame = {
-    val spark = segments.sparkSession
-    import spark.implicits._
-    val qa = q.toArray
-    val hits =
-      if (deny.isEmpty)
-        segments.flatMap(seg => searchSegment(seg, qa, k, l, beamWidth, metric,
-            band = band))
-          .toDF("vec_id", "_score")
-      else {
-        val bc = spark.sparkContext.broadcast(deny)
-        segments.flatMap(seg => searchSegment(seg, qa, k, l, beamWidth, metric,
-            id => !bc.value.contains(id), band = band))
-          .toDF("vec_id", "_score")
-      }
-    val primary = if (ascending(metric)) col("_score").asc else col("_score").desc
-    val top = hits.orderBy(primary, col("vec_id").asc).limit(k)
-    roundTo.map(d => top.withColumn("_score", round(col("_score"), d))).getOrElse(top)
-  }
-
-  /** Filtered search (the reference's hybrid scalar + graph path): the
-    * scalar predicate's surviving ids ride a broadcast into the beam
-    * walk, exactly the [[HnswIndex.searchFilteredIds]] contract — the
-    * reference gates EVERY index family through the same filter-bitmap
-    * functor (gamma_common_data.h:94-105, wired engine.cc:355-373), the
-    * DiskANN class included. Disallowed nodes are traversed (they still
-    * carry connectivity) but never admitted, so `l ≥ |shard|` stays
-    * provably exact under ANY filter. Callers probe selectivity first
-    * (the planner switch) and reuse that probe's ids here — no second
-    * driver action.
-    */
-  def searchFilteredIds(segments: Dataset[Segment], q: Seq[Float], k: Int,
-      l: Int, beamWidth: Int, metric: String, allowIds: Set[Long],
-      roundTo: Option[Int] = None, deny: Set[Long] = Set.empty): DataFrame =
-    searchFilteredBc(segments, q, k, l, beamWidth, metric,
-      segments.sparkSession.sparkContext.broadcast(allowIds -- deny), roundTo)
-
-  /** Pre-broadcast variant of [[searchFilteredIds]]: callers that retry
-    * the walk at increasing depths (the score-gate loop) hoist ONE
-    * allow-set broadcast out of the retried closure instead of
-    * re-shipping it every probe. `allowBc` must already exclude denied
-    * ids.
-    */
-  def searchFilteredBc(segments: Dataset[Segment], q: Seq[Float], k: Int,
-      l: Int, beamWidth: Int, metric: String,
-      allowBc: org.apache.spark.broadcast.Broadcast[Set[Long]],
-      roundTo: Option[Int] = None,
-      band: Option[(Double, Double)] = None): DataFrame = {
-    val spark = segments.sparkSession
-    import spark.implicits._
-    val qa = q.toArray
-    val hits = segments
-      .flatMap(seg => searchSegment(seg, qa, k, l, beamWidth, metric,
-        allowBc.value.contains _, band = band))
-      .toDF("vec_id", "_score")
-    val primary = if (ascending(metric)) col("_score").asc else col("_score").desc
-    val top = hits.orderBy(primary, col("vec_id").asc).limit(k)
+      band: Option[(Double, Double)] = None,
+      allow: Option[Set[Long]] = None): DataFrame = {
+    val top = searchBatch(segments, Seq(0L -> q), k, l, beamWidth, metric,
+      deny, allow, band).drop("_qid")
     roundTo.map(d => top.withColumn("_score", round(col("_score"), d))).getOrElse(top)
   }
 
   /** Batched search (vearch `req_num`): every query walks each segment in
     * the SAME task pass — one deserialization amortized across the batch —
-    * then the bounded top-k aggregate merges per-shard lists
-    * ([[HnswIndex.searchBatch]]'s shape). Output: (_qid, vec_id, _score).
-    * `allowIds` = the batch's shared scalar-filter allow-set (collected
-    * once, broadcast into every query's walk — amortized like the
-    * segment read).
+    * through [[HnswIndex.fanOut]]. Output: (_qid, vec_id, _score).
     */
   def searchBatch(segments: Dataset[Segment], queries: Seq[(Long, Seq[Float])],
       k: Int, l: Int, beamWidth: Int = 4, metric: String = "l2",
       deny: Set[Long] = Set.empty,
       allowIds: Option[Set[Long]] = None,
-      band: Option[(Double, Double)] = None): DataFrame = {
-    val spark = segments.sparkSession
-    import spark.implicits._
-    val qs = queries.map { case (qid, v) => (qid, v.toArray) }.toArray
-    val effBc = spark.sparkContext.broadcast(allowIds.map(_ -- deny))
-    val denyBc = spark.sparkContext.broadcast(deny)
-    val hits = segments.flatMap { seg =>
-      val allow: Long => Boolean = effBc.value match {
-        case Some(ok) => ok.contains _
-        case None if denyBc.value.isEmpty => _ => true
-        case None => id => !denyBc.value.contains(id)
-      }
-      qs.iterator.flatMap { case (qid, qa) =>
-        searchSegment(seg, qa, k, l, beamWidth, metric, allow, band = band)
-          .iterator.map { case (id, s) => (qid, id, s) }
-      }
-    }.toDF("_qid", "vec_id", "_score")
-    hits.groupBy(col("_qid"))
-      .agg(graft.Graft.F.topK(col("_score"), struct(col("vec_id")), k,
-        ascending(metric)).as("_tk"))
-      .select(col("_qid"), explode(col("_tk")).as("_e"))
-      .select(col("_qid"), col("_e.item.vec_id").as("vec_id"),
-        col("_e.score").as("_score"))
-  }
+      band: Option[(Double, Double)] = None): DataFrame =
+    HnswIndex.fanOut(segments, queries, k, metric,
+      HnswIndex.admission(segments.sparkSession, allowIds, deny)) {
+      (seg, q, admit) => searchSegment(seg, q, k, l, beamWidth, metric, admit, band)
+    }
 }

@@ -131,21 +131,6 @@ final class RealtimeTail(
         }
     }
 
-  /** Anti-join base hits against the (bounded) collected tail ids:
-    * literal NOT-IN for tiny tails, broadcast anti-join above the same
-    * size switch as the deny gates.
-    */
-  private def dropTailIds(baseHits: DataFrame, ids: Array[Long]): DataFrame =
-    if (ids.isEmpty) baseHits
-    else if (ids.length <= 1000)
-      baseHits.filter(!col("vec_id").isin(ids.toIndexedSeq: _*))
-    else {
-      val spark = baseHits.sparkSession
-      import spark.implicits._
-      baseHits.join(broadcast(ids.toIndexedSeq.toDF("vec_id")),
-        Seq("vec_id"), "left_anti")
-    }
-
   private def readOrEmpty(path: String, schema: StructType): DataFrame = {
     // only a MISSING path means "no data yet"; any other failure (corrupt
     // footer, permission, schema clash) must propagate — swallowing it
@@ -187,13 +172,15 @@ final class RealtimeTail(
     * delete-gated: what a compaction folds into the base, and the tail
     * leg every merge scores.
     */
-  def buffered(schema: StructType, deny: Set[Long] = Set.empty): DataFrame = {
-    val tail = readOrEmpty(tailPath, schema)
+  def buffered(schema: StructType, deny: Set[Long] = Set.empty): DataFrame =
+    buffered(readOrEmpty(tailPath, schema), deny)
+
+  private def buffered(tail: DataFrame, deny: Set[Long]): DataFrame = {
     val dedupedTail = orderCol match {
       case Some(oc) => graft.operators.Documents.lastWinsById(tail, idCol, oc)
       case None     => tail.dropDuplicates(idCol) // arbitrary winner — see ctor note
     }
-    denyTail(dedupedTail, deny)
+    graft.operators.Documents.dropIds(dedupedTail, col(rid).cast("long"), deny)
   }
 
   /** Remove the tail table (call AFTER its rows are folded into the
@@ -205,25 +192,6 @@ final class RealtimeTail(
     fs.delete(p, true)
     ()
   }
-
-  /** Delete-gate the tail: denied ids never surface from a buffered
-    * write (a delete beats an earlier buffered upsert of the same id).
-    * Tiny ledgers ride an isin literal (parquet-pushable); bigger ones a
-    * broadcast anti-join — the same size switch as the base-leg gate
-    * ([[graft.api.SearchApi]]'s applyDeny), so a large one-interval
-    * delete batch never bloats the plan/codegen with a giant NOT-IN.
-    */
-  private def denyTail(df: DataFrame, deny: Set[Long]): DataFrame =
-    if (deny.isEmpty) df
-    else if (deny.size <= 1000)
-      df.filter(!col(rid).cast("long").isin(deny.toSeq: _*))
-    else {
-      val spark = df.sparkSession
-      import spark.implicits._
-      val denyDf = deny.toSeq.toDF("_deny_id")
-      df.join(broadcast(denyDf), col(rid).cast("long") === col("_deny_id"),
-        "left_anti")
-    }
 
   /** The generic realtime merge every index family serves through — the
     * reference's buffer-over-index union (vector_manager.cc:941-1012,
@@ -237,82 +205,56 @@ final class RealtimeTail(
     * interval of ingest, so the brute leg stays bounded regardless of
     * base size. Requires an integral id (index hit ids are longs).
     *
-    * `tailSearch` scores the deduped, delete-gated tail and must return
-    * `(vec_id: long, _score)` rows; `baseSearch(kBase)` runs the family's
-    * index search at the over-fetched depth — up to |tail| of the base's
-    * top hits may be superseded and dropped, and the base's next-ranked
-    * docs then belong in the merged top-k, so the base leg over-fetches
-    * by the (bounded) tail size and survivors always suffice.
+    * `tailSearch` scores the deduped, delete-gated tail and
+    * `baseSearch(kBase)` runs the family's index search at the
+    * over-fetched depth, both returning `(_qid, vec_id: long, _score)`
+    * rows for each of the request's `nq` queries. Up to |tail| of the
+    * base's top hits may be superseded and dropped, and the base's
+    * next-ranked docs then belong in the merged top-k, so the base leg
+    * over-fetches by the (bounded) tail size and survivors always
+    * suffice. A tail row supersedes its base id for EVERY query (the
+    * id-level last-write-wins is query-independent), so the anti-join
+    * gates on `vec_id` alone; [[graft.operators.Knn.topKPerQuery]] is the
+    * final merge.
     */
   private[graft] def mergeTail(schema: StructType, k: Int, metric: String,
-      deny: Set[Long] = Set.empty)(tailSearch: DataFrame => DataFrame)(
+      nq: Int, deny: Set[Long] = Set.empty)(
+      tailSearch: DataFrame => DataFrame)(
       baseSearch: Int => DataFrame): DataFrame = {
-    import graft.operators.Knn
+    import graft.operators.{Documents, Knn}
     val tail = readOrEmpty(tailPath, schema)
-    val dedupedTail0 = orderCol match {
-      case Some(oc) => graft.operators.Documents.lastWinsById(tail, idCol, oc)
-      case None     => tail.dropDuplicates(idCol)
-    }
-    val dedupedTail = denyTail(dedupedTail0, deny)
+    val dedupedTail = buffered(tail, deny)
     val tailHits = tailSearch(dedupedTail)
-      .select(col("vec_id").cast("long").as("vec_id"), col("_score"))
+      .select(col("_qid"), col("vec_id").cast("long").as("vec_id"), col("_score"))
     val baseHits = tailRidArray(tail) match {
       case Some(ids0) =>
         // one cached collect serves kBase AND the anti-join — no count
         // job, no distributed anti-join build, per query
         val ids = if (deny.isEmpty) ids0 else ids0.filterNot(deny.contains)
         val kBase = (k + math.min(ids.length.toLong, (Int.MaxValue - k).toLong)).toInt
-        dropTailIds(baseSearch(kBase), ids)
+        Documents.dropIds(baseSearch(kBase), col("vec_id"), ids)
       case None =>
         // over-cap tail: the original distributed path
         val tailIds = dedupedTail.select(col(rid).cast("long").as("vec_id"))
         val kBase = (k + math.min(tailIds.count(), (Int.MaxValue - k).toLong)).toInt
         baseSearch(kBase).join(tailIds, Seq("vec_id"), "left_anti")
     }
-    val primary =
-      if (Knn.ascending(metric)) col("_score").asc else col("_score").desc
-    baseHits.unionByName(tailHits).orderBy(primary, col("vec_id").asc).limit(k)
+    Knn.topKPerQuery(baseHits.unionByName(tailHits), nq, k, Knn.ascending(metric))
   }
 
-  /** Batched (`req_num`) instance of [[mergeTail]]: per-qid base ∪ tail.
-    * `tailSearch` scores the deduped, delete-gated tail for EVERY query
-    * and returns `(_qid, vec_id: long, _score)` rows (≤ req_num·k);
-    * `baseSearch(kBase)` runs the family's batched index search at the
-    * over-fetched depth. A tail row supersedes its base id for ALL
-    * queries (the id-level last-write-wins is query-independent), so the
-    * anti-join gates on `vec_id` alone; the per-qid bounded top-k
-    * aggregate is the final merge.
+  /** One float query `q` through [[mergeTail]]: `base(kBase)` returns the
+    * family's `(vec_id, _score)` hits, the tail scores exactly (with the
+    * same scalar `filter`). Output: (vec_id, _score), best-first.
     */
-  private[graft] def mergeTailBatch(schema: StructType, k: Int,
-      metric: String, deny: Set[Long] = Set.empty)(
-      tailSearch: DataFrame => DataFrame)(
-      baseSearch: Int => DataFrame): DataFrame = {
-    import graft.operators.Knn
-    val tail = readOrEmpty(tailPath, schema)
-    val dedupedTail0 = orderCol match {
-      case Some(oc) => graft.operators.Documents.lastWinsById(tail, idCol, oc)
-      case None     => tail.dropDuplicates(idCol)
-    }
-    val dedupedTail = denyTail(dedupedTail0, deny)
-    val tailHits = tailSearch(dedupedTail)
-      .select(col("_qid"), col("vec_id").cast("long").as("vec_id"), col("_score"))
-    val baseHits = tailRidArray(tail) match {
-      case Some(ids0) =>
-        val ids = if (deny.isEmpty) ids0 else ids0.filterNot(deny.contains)
-        val kBase = (k + math.min(ids.length.toLong, (Int.MaxValue - k).toLong)).toInt
-        dropTailIds(baseSearch(kBase), ids)
-      case None =>
-        val tailIds = dedupedTail.select(col(rid).cast("long").as("vec_id"))
-        val kBase = (k + math.min(tailIds.count(), (Int.MaxValue - k).toLong)).toInt
-        baseSearch(kBase).join(tailIds, Seq("vec_id"), "left_anti")
-    }
-    baseHits.unionByName(tailHits)
-      .groupBy(col("_qid"))
-      .agg(graft.Graft.F.topK(col("_score"), struct(col("vec_id")), k,
-        Knn.ascending(metric)).as("_tk"))
-      .select(col("_qid"), explode(col("_tk")).as("_e"))
-      .select(col("_qid"), col("_e.item.vec_id").as("vec_id"),
-        col("_e.score").as("_score"))
+  private def searchOne(schema: StructType, vecCol: String, q: Seq[Float],
+      k: Int, metric: String, deny: Set[Long], filter: Option[Column])(
+      base: Int => DataFrame): DataFrame = {
+    def qid0(hits: DataFrame, id: Column) =
+      hits.select(lit(0L).as("_qid"), id.cast("long").as("vec_id"), col("_score"))
+    mergeTail(schema, k, metric, 1, deny) { t =>
+      qid0(graft.operators.Knn.search(t, col(vecCol), q, k, metric,
+        filter = filter, tieBreak = Some(col(idCol))), col(idCol))
+    } { kBase => qid0(base(kBase), col("vec_id")) }.drop("_qid")
   }
 
   /** Realtime graph-ANN search: the READY HNSW generation (built over the
@@ -329,13 +271,9 @@ final class RealtimeTail(
       ef: Int,
       metric: String = "l2",
       deny: Set[Long] = Set.empty): DataFrame = {
-    import graft.operators.{HnswIndex, Knn}
-    mergeTail(schema, k, metric, deny) { t =>
-      Knn.search(t, col(vecCol), q, k, metric, tieBreak = Some(col(idCol)))
-        .select(col(idCol).cast("long").as("vec_id"), col("_score"))
-    } { kBase =>
-      HnswIndex.search(segments, q, kBase, math.max(ef, kBase), metric,
-        deny = deny)
+    searchOne(schema, vecCol, q, k, metric, deny, None) { kBase =>
+      graft.operators.HnswIndex.search(segments, q, kBase,
+        math.max(ef, kBase), metric, deny = deny)
     }
   }
 
@@ -355,15 +293,10 @@ final class RealtimeTail(
       nprobe: Int,
       deny: Set[Long] = Set.empty,
       filter: Option[Column] = None): DataFrame = {
-    import graft.operators.{IvfIndex, Knn}
-    mergeTail(schema, k, model.metric, deny) { t =>
-      Knn.search(t, col(vecCol), q, k, model.metric, filter = filter,
-        tieBreak = Some(col(idCol)))
-        .select(col(idCol).cast("long").as("vec_id"), col("_score"))
-    } { kBase =>
-      IvfIndex.search(table, col(vecCol), model, q, kBase, nprobe,
-        filter = filter, tieBreak = Some(col(idCol)))
-        .select(col(idCol).cast("long").as("vec_id"), col("_score"))
+    searchOne(schema, vecCol, q, k, model.metric, deny, filter) { kBase =>
+      graft.operators.IvfIndex.search(table, col(vecCol), model, q, kBase,
+        nprobe, filter = filter, tieBreak = Some(col(idCol)))
+        .select(col(idCol).as("vec_id"), col("_score"))
     }
   }
 
@@ -384,15 +317,10 @@ final class RealtimeTail(
       recallNum: Int,
       deny: Set[Long] = Set.empty,
       filter: Option[Column] = None): DataFrame = {
-    import graft.operators.{Knn, PqIndex}
-    mergeTail(schema, k, pq.metric, deny) { t =>
-      Knn.search(t, col(vecCol), q, k, pq.metric, filter = filter,
-        tieBreak = Some(col(idCol)))
-        .select(col(idCol).cast("long").as("vec_id"), col("_score"))
-    } { kBase =>
-      PqIndex.searchIvfResidual(table, col(vecCol), ivf, pq, q, kBase,
-        nprobe, math.max(recallNum, kBase), idCol = col(idCol))
-        .select(col(idCol).cast("long").as("vec_id"), col("_score"))
+    searchOne(schema, vecCol, q, k, pq.metric, deny, filter) { kBase =>
+      graft.operators.PqIndex.searchIvfResidual(table, col(vecCol), ivf, pq,
+        q, kBase, nprobe, math.max(recallNum, kBase), idCol = col(idCol))
+        .select(col(idCol).as("vec_id"), col("_score"))
     }
   }
 
@@ -411,13 +339,9 @@ final class RealtimeTail(
       beamWidth: Int = 4,
       metric: String = "l2",
       deny: Set[Long] = Set.empty): DataFrame = {
-    import graft.operators.{Knn, VamanaIndex}
-    mergeTail(schema, k, metric, deny) { t =>
-      Knn.search(t, col(vecCol), q, k, metric, tieBreak = Some(col(idCol)))
-        .select(col(idCol).cast("long").as("vec_id"), col("_score"))
-    } { kBase =>
-      VamanaIndex.search(segments, q, kBase, math.max(l, kBase), beamWidth,
-        metric, deny = deny)
+    searchOne(schema, vecCol, q, k, metric, deny, None) { kBase =>
+      graft.operators.VamanaIndex.search(segments, q, kBase,
+        math.max(l, kBase), beamWidth, metric, deny = deny)
     }
   }
 

@@ -143,8 +143,8 @@ class HnswIndexSpec extends SparkSpec {
 
   test("filtered search with exact params ≡ filter-first brute force") {
     val pred = col("label").isin(1, 3, 5) && col("vec_id") =!= 0
-    val got = HnswIndex.searchFiltered(segs, qv, k = 10, ef = 1 << 30,
-      metric = "l2", allowedIds = emb.filter(pred).select($"vec_id"))
+    val got = HnswIndex.search(segs, qv, k = 10, ef = 1 << 30,
+      metric = "l2", allow = Some(emb.filter(pred).select($"vec_id").as[Long].collect().toSet))
       .select($"vec_id", $"_score").collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val want = Knn.search(emb, col("embedding"), qv, k = 10, metric = "l2",
@@ -156,9 +156,9 @@ class HnswIndexSpec extends SparkSpec {
 
   test("filtered search: empty allow-set → no rows; tiny allow-set → exactly those") {
     val none = emb.filter($"vec_id" < 0).select($"vec_id")
-    assert(HnswIndex.searchFiltered(segs, qv, 10, 1 << 30, "l2", none).count() == 0)
+    assert(HnswIndex.search(segs, qv, 10, 1 << 30, "l2", allow = Some(none.as[Long].collect().toSet)).count() == 0)
     val three = emb.filter($"vec_id".isin(7, 42, 399)).select($"vec_id")
-    val got = HnswIndex.searchFiltered(segs, qv, 10, 1 << 30, "l2", three)
+    val got = HnswIndex.search(segs, qv, 10, 1 << 30, "l2", allow = Some(three.as[Long].collect().toSet))
       .select($"vec_id").collect().map(_.getLong(0)).toSet
     assert(got == Set(7L, 42L, 399L)) // disallowed nodes still carry connectivity
   }

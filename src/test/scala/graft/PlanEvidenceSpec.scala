@@ -250,6 +250,65 @@ class PlanEvidenceSpec extends SparkSpec {
       "should converge on the first probe (one bounded aggregate action)")
   }
 
+  test("routed HNSW merge choice: one query merges with TakeOrderedAndProject, req_num=2 with one TopKAgg") {
+    // a single query is a batch of one, but its per-query top-k merge
+    // must stay Spark's TakeOrderedAndProject (no `_qid` exchange, no
+    // aggregate); a batch merges through exactly one bounded TopKAgg
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, TakeOrderedAndProjectExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{Complete, Final}
+    val root = java.nio.file.Files.createTempDirectory("pe_merge").toString
+    val spacePath = s"$root/space"
+    emb.select($"vec_id".cast("long").as("_id"), $"label", $"embedding")
+      .write.parquet(spacePath)
+    val stored = spark.read.parquet(spacePath)
+    val sp = graft.schema.Space.fromJson(
+      """{"name":"merge_space","fields":[
+          {"name":"label","type":"integer","index":{"type":"SCALAR"}},
+          {"name":"embedding","type":"vector","dimension":64,
+           "index":{"type":"HNSW","params":{"nlinks":16,"efConstruction":60}}}]}""")
+    val lc = new graft.api.IndexLifecycle(spark, spacePath)
+    lc.rebuildHnsw("_id", "embedding",
+      graft.operators.HnswIndex.Params(16, 60, "l2", numShards = 3))
+    val qv = q0
+    object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    // the physical plans of every action the routed request runs
+    def plansOf(features: Seq[Seq[Float]]): Seq[SparkPlan] = {
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = {
+          seen.add(qe.executedPlan); ()
+        }
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        graft.api.SearchApi.searchAuto(stored, sp,
+          s"""{"vectors":[{"field":"embedding","feature":${features.flatten.mkString("[", ",", "]")}}],"limit":7}""",
+          lc)
+        var n = -1
+        (0 until 30).takeWhile { _ =>
+          Thread.sleep(100); val m = seen.size; val moving = m == 0 || m != n
+          n = m; moving }
+      } finally spark.listenerManager.unregister(listener)
+      scala.jdk.CollectionConverters.IterableHasAsScala(seen).asScala.toSeq
+    }
+    def topKMerges(plans: Seq[SparkPlan]): Int = plans.map(p => Aqe.collect(p) {
+      case a: BaseAggregateExec if a.aggregateExpressions.exists(e =>
+        (e.mode == Final || e.mode == Complete) &&
+          e.aggregateFunction.isInstanceOf[graft.functions.TopKAgg]) => a
+    }.size).sum
+    val single = plansOf(Seq(qv))
+    assert(single.exists(p =>
+      Aqe.collect(p) { case t: TakeOrderedAndProjectExec => t }.nonEmpty),
+      s"single-query hits must merge with TakeOrderedAndProject:\n${single.mkString("\n")}")
+    assert(topKMerges(single) == 0,
+      s"single-query hits must not run a TopKAgg aggregate:\n${single.mkString("\n")}")
+    val batch = plansOf(Seq(qv, qv.reverse))
+    assert(topKMerges(batch) == 1,
+      s"req_num=2 hits must merge through exactly one TopKAgg:\n${batch.mkString("\n")}")
+  }
+
   test("gate loop backstop still depth-doubles when hits are NOT gated in-walk") {
     // the exactness backstop for any hitsAt that does not thread the
     // band: an artificially tight first depth (ungated top-d prefixes)
@@ -262,8 +321,9 @@ class PlanEvidenceSpec extends SparkSpec {
     val out = graft.api.SearchApi.gateLoop(spark, 5, "l2",
       minScore = Some(1000.0), maxScore = None) { depth =>
       probes += 1
-      all.take(depth).toDF("vec_id", "_score") // ungated top-depth prefix
-    }.collect().map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._2)
+      all.take(depth).map { case (id, s) => (0L, id, s) }
+        .toDF("_qid", "vec_id", "_score") // ungated top-depth prefix
+    }.collect().map(r => (r.getLong(1), r.getDouble(2))).sortBy(_._2)
     // gated top-5 of the full ranking = scores 1000..1004
     assert(out.toSeq == (1000 to 1004).map(i => (i.toLong, i.toDouble)))
     // depth starts at max(4k, 64) = 64 and must double past 1000:
@@ -271,7 +331,7 @@ class PlanEvidenceSpec extends SparkSpec {
     assert(probes == 5, s"expected 5 doubling probes, got $probes")
     // batched variant: two queries, one exhausts early (short stream)
     var bprobes = 0
-    val bout = graft.api.SearchApi.gateBatchLoop(spark, 5, "l2",
+    val bout = graft.api.SearchApi.gateLoop(spark, 5, "l2",
       minScore = Some(1000.0), maxScore = None) { depth =>
       bprobes += 1
       (all.take(depth).map { case (id, s) => (0L, id, s) } ++

@@ -33,6 +33,27 @@ class RoutedParitySpec extends SparkSpec {
         {"name":"embedding","type":"vector","dimension":64,
          "index":$index}]}""")
 
+  /** Batch-of-one identity: each `_qid` block of a batched routed
+    * response equals the single-query routed response for that query
+    * (same k, offset, filter and gate) — `singles(i)` serves qid i.
+    */
+  private def assertBlocksAreSingles(batched: org.apache.spark.sql.DataFrame,
+      singles: Seq[org.apache.spark.sql.DataFrame], ctx: String): Unit = {
+    val qi = batched.columns.indexOf("_qid")
+    assert(qi >= 0, s"$ctx: batched response has no _qid column")
+    val blocks = batched.collect().toSeq
+      .groupBy(r => r.getAs[Number](qi).longValue)
+      .view.mapValues(_.map(r =>
+        org.apache.spark.sql.Row.fromSeq(r.toSeq.patch(qi, Nil, 1)).toString))
+      .toMap
+    singles.zipWithIndex.foreach { case (single, i) =>
+      val want = single.collect().map(_.toString).toSeq
+      val got = blocks.getOrElse(i.toLong, Seq.empty)
+      assert(got == want,
+        s"$ctx qid=$i: batch block ${got.take(3)} vs single ${want.take(3)}")
+    }
+  }
+
   test("random request shapes: routed ≡ brute FLAT for every float family at exactness params") {
     val rnd = new scala.util.Random(20260816L) // fixed seed — deterministic
     val base = spark.read.parquet(s"$sf/embeddings.parquet")
@@ -72,11 +93,11 @@ class RoutedParitySpec extends SparkSpec {
           case _ => s""","max_score":${pct(0.5 + rnd.nextDouble() * 0.4)}"""
         }
         val batched = rnd.nextBoolean()
-        val feature =
-          if (!batched) q.mkString("[", ",", "]")
-          else (q ++ queries(rnd.nextInt(queries.size))).mkString("[", ",", "]")
-        val req = s"""{"vectors":[{"field":"embedding","feature":$feature$gate}]
+        val qs = if (!batched) Seq(q) else Seq(q, queries(rnd.nextInt(queries.size)))
+        def reqOf(vs: Seq[Seq[Float]]) =
+          s"""{"vectors":[{"field":"embedding","feature":${vs.flatten.mkString("[", ",", "]")}$gate}]
              $filter,"limit":$k,"offset":$offset}"""
+        val req = reqOf(qs)
         def rows(df: org.apache.spark.sql.DataFrame) =
           df.collect().map(_.toString).toSeq
         val routed = rows(SearchApi.searchAuto(corpus, sp, req, lc))
@@ -85,6 +106,10 @@ class RoutedParitySpec extends SparkSpec {
           s"family=$family draw=$draw k=$k offset=$offset batched=$batched " +
             s"filter=${filter.nonEmpty} gate=${gate.nonEmpty}: " +
             s"routed ${routed.take(3)} vs brute ${brute.take(3)}")
+        if (batched)
+          assertBlocksAreSingles(SearchApi.searchAuto(corpus, sp, req, lc),
+            qs.map(v => SearchApi.searchAuto(corpus, sp, reqOf(Seq(v)), lc)),
+            s"family=$family draw=$draw")
       }
     }
   }
@@ -133,9 +158,9 @@ class RoutedParitySpec extends SparkSpec {
         val k = 1 + rnd.nextInt(12)
         val (q1, q2) = queries(rnd.nextInt(queries.size))
         val batched = rnd.nextBoolean()
+        val (o1, o2) = queries(rnd.nextInt(queries.size))
         def feat(q: Seq[Float], other: Seq[Float]) =
           (if (batched) q ++ other else q).mkString("[", ",", "]")
-        val (o1, o2) = queries(rnd.nextInt(queries.size))
         val gate1 =
           if (rnd.nextInt(3) == 0)
             s""","max_score":${pctOf("v1", q1, 0.6 + rnd.nextDouble() * 0.3)}"""
@@ -148,12 +173,13 @@ class RoutedParitySpec extends SparkSpec {
                  {"operator":"IN","field":"label","value":${labels.mkString("[", ",", "]")}}]}"""
           }
         val w = 0.1 + rnd.nextDouble() * 0.8
-        val req = s"""{"vectors":[
-              {"field":"v1","feature":${feat(q1, o1)}$gate1},
-              {"field":"v2","feature":${feat(q2, o2)}}],
+        def reqOf(v1: String, v2: String) = s"""{"vectors":[
+              {"field":"v1","feature":$v1$gate1},
+              {"field":"v2","feature":$v2}],
             "ranker":{"type":"WeightedRanker","params":{
               "weights":[$w,${1.0 - w}]}}
             $filter,"limit":$k}"""
+        val req = reqOf(feat(q1, o1), feat(q2, o2))
         def rows(df: org.apache.spark.sql.DataFrame) =
           df.collect().map(_.toString).toSeq
         val routed = rows(SearchApi.searchAuto(stored, sp, req, lc))
@@ -162,6 +188,12 @@ class RoutedParitySpec extends SparkSpec {
           s"conj draw=$draw/$sub fams=$f1+$f2 k=$k batched=$batched " +
             s"filter=${filter.nonEmpty} gate=${gate1.nonEmpty}: " +
             s"routed ${routed.take(3)} vs brute ${brute.take(3)}")
+        def lit1(v: Seq[Float]) = v.mkString("[", ",", "]")
+        if (batched)
+          assertBlocksAreSingles(SearchApi.searchAuto(stored, sp, req, lc),
+            Seq((q1, q2), (o1, o2)).map { case (a, b) =>
+              SearchApi.searchAuto(stored, sp, reqOf(lit1(a), lit1(b)), lc) },
+            s"conj draw=$draw/$sub fams=$f1+$f2")
       }
     }
   }
@@ -211,9 +243,7 @@ class RoutedParitySpec extends SparkSpec {
         val k = 1 + rnd.nextInt(15)
         val q = queries(rnd.nextInt(queries.size))
         val batched = rnd.nextBoolean()
-        val feature =
-          if (!batched) q.mkString("[", ",", "]")
-          else (q ++ queries(rnd.nextInt(queries.size))).mkString("[", ",", "]")
+        val qs = if (!batched) Seq(q) else Seq(q, queries(rnd.nextInt(queries.size)))
         val gate =
           if (rnd.nextInt(3) == 0)
             s""","max_score":${pct(0.5 + rnd.nextDouble() * 0.4)}"""
@@ -225,8 +255,10 @@ class RoutedParitySpec extends SparkSpec {
             s""","filters":{"operator":"AND","conditions":[
                  {"operator":"IN","field":"label","value":${labels.mkString("[", ",", "]")}}]}"""
           }
-        val req = s"""{"vectors":[{"field":"embedding","feature":$feature$gate}]
+        def reqOf(vs: Seq[Seq[Float]]) =
+          s"""{"vectors":[{"field":"embedding","feature":${vs.flatten.mkString("[", ",", "]")}$gate}]
              $filter,"limit":$k}"""
+        val req = reqOf(qs)
         def rows(df: org.apache.spark.sql.DataFrame) =
           df.collect().map(_.toString).toSeq
         val routed = rows(SearchApi.searchAuto(corpus, sp, req, lc, tail = Some(rt)))
@@ -235,6 +267,12 @@ class RoutedParitySpec extends SparkSpec {
           s"tail family=$family draw=$draw k=$k batched=$batched " +
             s"tail=${fresh.size}+${updates.size} filter=${filter.nonEmpty} " +
             s"gate=${gate.nonEmpty}: routed ${routed.take(3)} vs brute ${brute.take(3)}")
+        if (batched)
+          assertBlocksAreSingles(
+            SearchApi.searchAuto(corpus, sp, req, lc, tail = Some(rt)),
+            qs.map(v => SearchApi.searchAuto(corpus, sp, reqOf(Seq(v)), lc,
+              tail = Some(rt))),
+            s"tail family=$family draw=$draw")
       }
     }
   }
@@ -281,10 +319,10 @@ class RoutedParitySpec extends SparkSpec {
         val k = 1 + rnd.nextInt(15)
         val q = queries(rnd.nextInt(queries.size))
         val batched = rnd.nextBoolean()
-        val feature =
-          if (!batched) q.mkString("[", ",", "]")
-          else (q ++ queries(rnd.nextInt(queries.size))).mkString("[", ",", "]")
-        val req = s"""{"vectors":[{"field":"embedding","feature":$feature}],"limit":$k}"""
+        val qs = if (!batched) Seq(q) else Seq(q, queries(rnd.nextInt(queries.size)))
+        def reqOf(vs: Seq[Seq[Float]]) =
+          s"""{"vectors":[{"field":"embedding","feature":${vs.flatten.mkString("[", ",", "]")}}],"limit":$k}"""
+        val req = reqOf(qs)
         def rows(df: org.apache.spark.sql.DataFrame) =
           df.collect().map(_.toString).toSeq
         val routedDf = SearchApi.searchAuto(corpus, sp, req, lc, tail = Some(rt))
@@ -297,6 +335,11 @@ class RoutedParitySpec extends SparkSpec {
         val served = routedDf.select("_id").collect().map(_.getLong(0)).toSet
         assert(delIds.forall(id => !served.contains(id)),
           s"ghost: deleted $delIds intersects served $served")
+        if (batched)
+          assertBlocksAreSingles(routedDf,
+            qs.map(v => SearchApi.searchAuto(corpus, sp, reqOf(Seq(v)), lc,
+              tail = Some(rt))),
+            s"del family=$family draw=$draw")
       }
     }
   }

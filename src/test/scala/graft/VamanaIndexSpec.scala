@@ -163,8 +163,8 @@ class VamanaIndexSpec extends SparkSpec {
     // neighborhood entirely
     val allow = emb.filter($"label".isin(1, 3, 5) && $"vec_id" =!= 0)
       .select($"vec_id").collect().map(_.getLong(0)).toSet
-    val got = VamanaIndex.searchFilteredIds(segs, qv, k = 10, l = 1 << 30,
-      beamWidth = 4, metric = "l2", allowIds = allow)
+    val got = VamanaIndex.search(segs, qv, k = 10, l = 1 << 30,
+      beamWidth = 4, metric = "l2", allow = Some(allow))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val brute = Knn.search(emb.filter($"label".isin(1, 3, 5) && $"vec_id" =!= 0),
       col("embedding"), qv, 10, "l2", tieBreak = Some(col("vec_id")))
@@ -174,8 +174,8 @@ class VamanaIndexSpec extends SparkSpec {
     assert(got.forall(h => allow.contains(h._1)))
     // deny composes: allow ∖ deny
     val denied = got.head._1
-    val got2 = VamanaIndex.searchFilteredIds(segs, qv, k = 10, l = 1 << 30,
-      beamWidth = 4, metric = "l2", allowIds = allow, deny = Set(denied))
+    val got2 = VamanaIndex.search(segs, qv, k = 10, l = 1 << 30,
+      beamWidth = 4, metric = "l2", allow = Some(allow), deny = Set(denied))
       .collect().map(_.getLong(0)).toSeq
     assert(!got2.contains(denied) && got2.size == 10)
   }
@@ -191,8 +191,8 @@ class VamanaIndexSpec extends SparkSpec {
       .map { case (qid, rows) =>
         qid -> rows.sortBy(_.getDouble(2)).map(_.getLong(1)).toSeq }
     queries.foreach { case (qid, q) =>
-      val single = VamanaIndex.searchFilteredIds(segs, q, k = 5, l = 1 << 30,
-        beamWidth = 4, metric = "l2", allowIds = allow)
+      val single = VamanaIndex.search(segs, q, k = 5, l = 1 << 30,
+        beamWidth = 4, metric = "l2", allow = Some(allow))
         .collect().map(_.getLong(0)).toSeq
       assert(batch(qid) == single, s"qid=$qid filtered batch/single diverged")
     }
