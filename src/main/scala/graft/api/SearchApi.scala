@@ -330,12 +330,13 @@ object SearchApi {
     * the spec would differ from the single-field surface.
     */
   private def applySort(df: DataFrame, sort: Seq[(String, Boolean)],
-      qid: Option[Column] = None): DataFrame = {
+      qid: Option[Column] = None, bound: Option[Int] = None): DataFrame = {
     val missing = sort.map(_._1).filterNot(df.columns.contains)
     require(missing.isEmpty,
       s"sort field(s) ${missing.mkString(", ")} not in result columns " +
         s"[${df.columns.mkString(", ")}]")
-    df.orderBy(qid.map(_.asc).toSeq ++ sortCols(sort) :+ col("_id").asc: _*)
+    val sorted = df.orderBy(qid.map(_.asc).toSeq ++ sortCols(sort) :+ col("_id").asc: _*)
+    bound.fold(sorted)(sorted.limit)
   }
 
   private def arrayFields(space: Space): Set[String] =
@@ -838,33 +839,41 @@ object SearchApi {
     // [[legFor]]; is_brute_search=1 forces the exact FLAT scan
     // (engine.cc:280-308).
     val pred = filterOf(space, req)
-    // one finisher for every routed shape: payload rows ordered by score
-    // then `_id`; `offset` slices WITHIN each query's block (row_number
-    // over <= req_num*(k+offset) hit rows - tiny) and the blocks come in
-    // REQUEST order. `cols` is the response projection; a single-query
-    // request drops its `_qid` (qid 0) and keeps the global sort + offset.
+    // one finisher for every routed shape: the hits' payload rows (see
+    // [[joinBack]]) ordered by score then `_id`; `offset` slices WITHIN
+    // each query's block and the blocks come in REQUEST order. `cols` is
+    // the response projection (it always carries `_id` and `_score`); a
+    // single-query request drops its `_qid` (qid 0). Every sort is
+    // BOUNDED by the fetched row count n, known on the driver: the
+    // routing-id join yields at most one row per hit, so `limit(n)` drops
+    // nothing, and Spark plans the sort as one TakeOrderedAndProject - no
+    // range-partitioning sample job, map stage or result stage to order
+    // <= req_num*(k+offset) rows. The keys (_qid, _score, _id) are a
+    // total order, so the rows and their order are the unbounded sort's.
     def finish(hits: DataFrame, metric: String, nq: Int,
         cols: Seq[String]): DataFrame = {
-      val order = Seq(
+      val (fetched, n) = joinBack(hits)
+      val qid = if (nq > 1) Some(col("_qid")) else None
+      val rank = Seq(
         if (Knn.ascending(metric)) col("_score").asc else col("_score").desc,
         col("_id").asc)
-      val qid = if (nq > 1) Some(col("_qid")) else None
-      val ordered = qid match {
-        case None =>
-          val o = hits.orderBy(order: _*)
-          if (req.offset > 0) o.offset(req.offset) else o
-        case Some(q) =>
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(q).orderBy(order: _*)
-          val sliced =
-            if (req.offset > 0) hits.withColumn("_rn", row_number().over(w))
-              .filter(col("_rn") > req.offset).drop("_rn")
-            else hits
-          sliced.orderBy(q.asc +: order: _*)
-      }
-      val projected = ordered.select(
+      val order = qid.map(_.asc).toSeq ++ rank
+      val projected = fetched.select(
         cols.filter(c => c != "_qid" || qid.isDefined).map(col): _*)
-      if (req.sort.nonEmpty) applySort(projected, req.sort, qid) else projected
+      // the offset slice ranks by score, whatever a sort spec orders by;
+      // a batch slices per qid with row_number over its tiny hit rows
+      val sliced = (qid, req.offset) match {
+        case (_, 0) => projected
+        case (None, off) => projected.orderBy(order: _*).limit(n).offset(off)
+        case (Some(q), off) =>
+          val w = org.apache.spark.sql.expressions.Window
+            .partitionBy(q).orderBy(rank: _*)
+          projected.withColumn("_rn", row_number().over(w))
+            .filter(col("_rn") > off).drop("_rn")
+      }
+      if (req.sort.nonEmpty) applySort(sliced, req.sort, qid, Some(n))
+      else if (qid.isEmpty && req.offset > 0) sliced // already in score order
+      else sliced.orderBy(order: _*).limit(n)
     }
     // score-gated GRAPH serving: see [[gateLoop]] on the object — the
     // walks thread the band into their RESULT heaps, so the loop's first
@@ -885,7 +894,7 @@ object SearchApi {
     // `_docid` sidecar (bucket derivation needs the PK hash, so those
     // spaces prune by id-IN only), and the joined row carries the string
     // `_id` the projection serves (the reference's docid->PK bridge).
-    def joinBack(hits: DataFrame): DataFrame = {
+    def joinBack(hits: DataFrame): (DataFrame, Int) = {
       val idT = corpus.schema(ridName).dataType
       // hits carry the routing id as `vec_id`: a LONG for every routed
       // family, the PK itself (native type) on the rid-free scan serve —
@@ -915,8 +924,9 @@ object SearchApi {
           else baseP
         case _ => live.filter(idFilter)
       }
-      pruned.join(broadcast(local.select(
-        col("vec_id").as(ridName), col("_score"), col("_qid"))), ridName)
+      (pruned.join(broadcast(local.select(
+        col("vec_id").as(ridName), col("_score"), col("_qid"))), ridName),
+        rows.length)
     }
     // shared scalar-filter functor for the GRAPH families: ONE bounded
     // take() both probes the selectivity and collects the allow-set (the
@@ -1329,7 +1339,7 @@ object SearchApi {
         val hits = Knn.topKPerQuery(joined.withColumn("_score", combined), nq,
           req.limit + req.offset, Knn.ascending(headMetric))
         // conjunctive results carry (_qid, _id, _score), like the FLAT path
-        return finish(joinBack(hits), headMetric, nq, Seq("_qid", "_id", "_score"))
+        return finish(hits, headMetric, nq, Seq("_qid", "_id", "_score"))
       }
     }
 
@@ -1347,7 +1357,7 @@ object SearchApi {
         val vc = req.vectors.head
         legFor(vc, lifecycle, req.limit + req.offset)
           .orElse(legFor(vc, lifecycle.scoped(vc.field), req.limit + req.offset))
-          .map(hits => finish(joinBack(hits), rankMetric(space, vc.field), nq,
+          .map(hits => finish(hits, rankMetric(space, vc.field), nq,
             projection(space, req, Seq("_qid", "_score"))))
       } else None
     routed.getOrElse(search(live, space, requestJson))

@@ -3,7 +3,7 @@ package graft.schema
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.SidecarIO
+import graft.sources.{IndexStore, SidecarIO}
 
 /** The master's admin surface (SURVEY §2.10: db/space/alias CRUD) mapped to
   * catalog operations: a database is a directory namespace, a space is a
@@ -342,11 +342,18 @@ final class SpaceCatalog(spark: SparkSession, root: String) {
   def realtimeTail(db: String, spaceName: String,
       orderCol: Option[String] = None): graft.streaming.RealtimeTail = {
     val path = dir(db, spaceName)
+    tailOf(path, spark.read.parquet(path).columns, orderCol)
+  }
+
+  /** [[realtimeTail]] for a space whose table is already open: `columns`
+    * come from that frame, so the serving paths pay no second schema
+    * read per request.
+    */
+  private def tailOf(path: String, columns: Seq[String],
+      orderCol: Option[String] = None): graft.streaming.RealtimeTail = {
     // docid-carrying spaces merge and delete-gate on the sidecar (the
     // string `_id` can't ride the long index bridges)
-    val rid =
-      if (spark.read.parquet(path).columns.contains("_docid")) Some("_docid")
-      else None
+    val rid = if (columns.contains("_docid")) Some("_docid") else None
     new graft.streaming.RealtimeTail(spark, path, s"$path.tail",
       s"$path.ckpt", "_id", orderCol, ridCol = rid)
   }
@@ -411,12 +418,13 @@ final class SpaceCatalog(spark: SparkSession, root: String) {
     */
   def search(db: String, spaceName: String, space: Space,
       requestJson: String): DataFrame = {
-    val lc = new graft.api.IndexLifecycle(spark, dir(db, spaceName))
+    val path = dir(db, spaceName)
+    val lc = new graft.api.IndexLifecycle(spark, path)
+    val corpus = openServing(path)
     val tail =
-      if (space.config.enableRealtime) Some(realtimeTail(db, spaceName))
+      if (space.config.enableRealtime) Some(tailOf(path, corpus.columns))
       else None
-    graft.api.SearchApi.searchAuto(readPathRaw(dir(db, spaceName)), space,
-      requestJson, lc, tail)
+    graft.api.SearchApi.searchAuto(corpus, space, requestJson, lc, tail)
   }
 
   /** Declaration-driven `/document/query` (point lookups / filtered
@@ -428,16 +436,17 @@ final class SpaceCatalog(spark: SparkSession, root: String) {
     */
   def query(db: String, spaceName: String, space: Space,
       requestJson: String): DataFrame = {
-    val lc = new graft.api.IndexLifecycle(spark, dir(db, spaceName))
+    val path = dir(db, spaceName)
+    val lc = new graft.api.IndexLifecycle(spark, path)
     // hand the bucket-carrying frame through (the `_bucket` column stays
     // internal to SearchApi.query) so document_ids point reads can
     // partition-prune; a realtime space's live snapshot is unbucketed —
     // there the id-IN pushdown still reaches the base scan through the
     // snapshot union
-    val corpus = readPathRaw(dir(db, spaceName))
+    val corpus = openServing(path)
     val live =
       if (space.config.enableRealtime) {
-        val rt = realtimeTail(db, spaceName)
+        val rt = tailOf(path, corpus.columns)
         if (rt.hasTail) {
           val dropped =
             if (corpus.columns.contains("_bucket")) corpus.drop("_bucket")
@@ -448,22 +457,29 @@ final class SpaceCatalog(spark: SparkSession, root: String) {
     graft.api.SearchApi.query(live, space, requestJson, Some(lc))
   }
 
-  private def readPath(path: String): DataFrame = {
-    val df = readPathRaw(path)
-    if (df.columns.contains("_bucket")) df.drop("_bucket") else df
-  }
-
-  /** [[readPath]] WITHOUT dropping the physical `_bucket` partition
-    * column — [[search]] hands this to the serving path so payload
-    * fetches can partition-prune on the id-hash layout; `searchAuto`
-    * keeps the column internal (never projected into results).
+  /** A fresh read of the healed table without the physical `_bucket`
+    * column — what writers, views and [[read]] see.
     */
-  private def readPathRaw(path: String): DataFrame = {
+  private def readPath(path: String): DataFrame = {
     // readers only touch aside dirs old enough that no LIVE swap can own
     // them — a reader acting on an in-flight writer's aside would
     // resurrect just-deleted rows or make the writer's move-in collide
     recover(path, minAgeMs = ReadRecoveryGraceMs)
-    spark.read.parquet(path)
+    val df = spark.read.parquet(path)
+    if (df.columns.contains("_bucket")) df.drop("_bucket") else df
+  }
+
+  /** The serving open of [[search]] and [[query]]: the healed table WITH
+    * its physical `_bucket` partition column, so payload fetches can
+    * partition-prune on the id-hash layout (`searchAuto` keeps the column
+    * internal, never projected into results). It goes through the
+    * leaf-signature open cache ([[IndexStore.openTable]]): a warm request
+    * pays one directory walk, not a file listing plus a schema-inference
+    * job, and any rewrite of a data file reopens the table.
+    */
+  private def openServing(path: String): DataFrame = {
+    recover(path, minAgeMs = ReadRecoveryGraceMs)
+    IndexStore.openTable(spark, path)
   }
 
   /** A live replaceBucket/swapIn completes its swap in well under this;

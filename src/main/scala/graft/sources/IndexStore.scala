@@ -60,25 +60,44 @@ object IndexStore {
     * `spark.read.parquet(path)` lists files AND schedules a footer/
     * schema-inference job on every call — a fixed metadata job per
     * query, since serving handlers open the space table per request.
-    * The opened plan is reused while the directory's (name, length,
-    * mtime) listing is unchanged — exactly what any rewrite, append or
-    * compaction swap changes (parquet part files carry per-write UUID
-    * names, so content changes always change the signature). A missing
-    * or unlistable path falls through to the direct read so the
-    * caller sees the ordinary error.
+    * The opened plan is reused while the table's LEAF listing — every
+    * data file's (relative path, length, mtime), walked through
+    * partition dirs like `_bucket=N/` — is unchanged: exactly what any
+    * rewrite, append or compaction swap changes (parquet part files
+    * carry per-write UUID names). The walk reaches the leaves because a
+    * rewrite inside a partition dir need not move that dir's own mtime
+    * (an object store has none). It uses `listStatus` per directory,
+    * not `listFiles`: on the local FS every `LocatedFileStatus` forks a
+    * permission `stat`. Names the parquet reader skips (`.` prefixed, or
+    * `_` prefixed except `k=v` partition dirs) stay out of the
+    * signature, so a sidecar write alone does not reopen. A missing or
+    * unlistable path drops its entry and falls through to the direct
+    * read, so the caller sees the ordinary error.
     */
   private val openCache = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String), (String, DataFrame)]
 
+  private def leafSignature(spark: SparkSession, path: String): String = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def readable(name: String): Boolean =
+      !((name.startsWith("_") && !name.contains("=")) || name.startsWith("."))
+    def walk(dir: org.apache.hadoop.fs.Path, rel: String): Seq[String] =
+      fs.listStatus(dir).toSeq.filter(st => readable(st.getPath.getName)).flatMap { st =>
+        val name = rel + st.getPath.getName
+        if (st.isDirectory) walk(st.getPath, name + "/")
+        else Seq(s"$name:${st.getLen}:${st.getModificationTime}")
+      }
+    walk(root, "").sorted.mkString(",")
+  }
+
   def openTable(spark: SparkSession, path: String): DataFrame = {
     val sig =
-      try {
-        val p = new org.apache.hadoop.fs.Path(path)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.listStatus(p).map(st =>
-          s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-          .sorted.mkString(",")
-      } catch { case NonFatal(_) => return spark.read.parquet(path) }
+      try leafSignature(spark, path)
+      catch { case NonFatal(_) =>
+        openCache.remove((spark, path))
+        return spark.read.parquet(path)
+      }
     openCache.get((spark, path)) match {
       case Some((s, df)) if s == sig => df
       case _ =>

@@ -128,4 +128,47 @@ class IndexStoreSpec extends AnyFunSuite {
     IndexStore.invalidateOpen(dir)
     assert(!(IndexStore.openTable(spark, dir) eq second))
   }
+
+  test("openTable: a rewrite inside one _bucket=N dir reopens, even with the dir mtime kept") {
+    // an object store gives directories no mtime, so the signature must
+    // reach the leaf files under each partition dir
+    val spark = SparkSpec.spark
+    import spark.implicits._
+    val dir = tmpDir()
+    Seq((1L, 0), (2L, 1)).toDF("id", "_bucket")
+      .write.partitionBy("_bucket").parquet(dir)
+    val first = IndexStore.openTable(spark, dir)
+    assert(first.agg(org.apache.spark.sql.functions.sum("id")).head().getLong(0) == 3L)
+    val bucket = Paths.get(dir, "_bucket=1")
+    val kept = Files.getLastModifiedTime(bucket)
+    val fresh = s"${tmpDir()}-fresh"
+    Seq(7L).toDF("id").write.parquet(fresh)
+    Files.list(bucket).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .foreach(Files.delete)
+    Files.list(Paths.get(fresh)).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.startsWith("part-"))
+      .foreach(f => Files.move(f, bucket.resolve(f.getFileName)))
+    Files.setLastModifiedTime(bucket, kept)
+    val second = IndexStore.openTable(spark, dir)
+    assert(!(second eq first), "a rewritten partition must reopen the table")
+    assert(second.agg(org.apache.spark.sql.functions.sum("id")).head().getLong(0) == 8L)
+  }
+
+  test("openTable: a path that fails to list drops its cached open") {
+    // a deleted space or pruned generation must not pin its file index;
+    // restoring the same files (same names, lengths, mtimes) opens anew
+    val spark = SparkSpec.spark
+    import spark.implicits._
+    val dir = tmpDir()
+    Seq((1L, "a")).toDF("id", "v").write.parquet(dir)
+    val first = IndexStore.openTable(spark, dir)
+    assert(IndexStore.openTable(spark, dir) eq first)
+    val aside = Paths.get(s"$dir.aside")
+    Files.move(Paths.get(dir), aside)
+    intercept[org.apache.spark.sql.AnalysisException](IndexStore.openTable(spark, dir))
+    Files.move(aside, Paths.get(dir))
+    val reopened = IndexStore.openTable(spark, dir)
+    assert(!(reopened eq first), "a failed listing must drop the cached entry")
+    assert(reopened.count() == 1)
+  }
 }

@@ -309,6 +309,52 @@ class PlanEvidenceSpec extends SparkSpec {
       s"req_num=2 hits must merge through exactly one TopKAgg:\n${batch.mkString("\n")}")
   }
 
+  test("catalog routed request end to end: warm open, ≤3 jobs, bounded TakeOrderedAndProject fetch") {
+    // SpaceCatalog.search + collect, the whole request: the space open is
+    // a cache hit (no schema-inference job) and the payload fetch orders
+    // its ≤ req_num·k rows with one TakeOrderedAndProject — no
+    // range-partitioned sort (bounds-sampling job + map stage + result)
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.{SparkPlan, TakeOrderedAndProjectExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val root = java.nio.file.Files.createTempDirectory("pe_catalog").toString
+    val cat = new graft.schema.SpaceCatalog(spark, root)
+    cat.createDb("d")
+    val sp = graft.schema.Space.fromJson(
+      """{"name":"s","fields":[
+          {"name":"label","type":"integer","index":{"type":"SCALAR"}},
+          {"name":"embedding","type":"vector","dimension":64,
+           "index":{"type":"HNSW","params":{"nlinks":16,"efConstruction":60}}}]}""")
+    cat.createSpace("d", sp)
+    cat.upsert("d", "s", emb.select(concat(lit("d-"), $"vec_id").as("_id"),
+      $"label", $"embedding"), partitionNum = 4)
+    new graft.api.IndexLifecycle(spark, s"$root/d/s")
+      .rebuildDeclared(sp, "embedding", idCol = "_docid", numShards = 3)
+    val qv = q0
+    def req(qs: Seq[Seq[Float]]) =
+      s"""{"vectors":[{"field":"embedding","feature":${qs.flatten.mkString("[", ",", "]")}}],"limit":9}"""
+    object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    def fetchPlan(qs: Seq[Seq[Float]]): SparkPlan = {
+      val df = cat.search("d", "s", sp, req(qs))
+      assert(df.collect().length == 9 * qs.size)
+      df.queryExecution.executedPlan
+    }
+    def assertBounded(plan: SparkPlan, ctx: String): Unit = {
+      assert(Aqe.collect(plan) { case t: TakeOrderedAndProjectExec => t }.nonEmpty,
+        s"$ctx fetch must sort with TakeOrderedAndProject:\n$plan")
+      assert(Aqe.collect(plan) {
+        case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+      }.isEmpty, s"$ctx fetch must not range-partition its hits:\n$plan")
+    }
+    // warm: the first request opens the space and lists its layouts
+    fetchPlan(Seq(qv))
+    val n = jobsDuring { cat.search("d", "s", sp, req(Seq(qv))).collect() }
+    assert(n >= 1 && n <= 3,
+      s"warm unfiltered catalog request ran $n jobs (hits action ≤2 + fetch 1)")
+    assertBounded(fetchPlan(Seq(qv)), "single-query")
+    assertBounded(fetchPlan(Seq(qv, qv.reverse)), "req_num=2")
+  }
+
   test("gate loop backstop still depth-doubles when hits are NOT gated in-walk") {
     // the exactness backstop for any hitsAt that does not thread the
     // band: an artificially tight first depth (ungated top-d prefixes)

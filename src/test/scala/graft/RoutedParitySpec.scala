@@ -35,7 +35,7 @@ class RoutedParitySpec extends SparkSpec {
 
   /** Batch-of-one identity: each `_qid` block of a batched routed
     * response equals the single-query routed response for that query
-    * (same k, offset, filter and gate) — `singles(i)` serves qid i.
+    * (same k, offset, filter, gate and sort) — `singles(i)` serves qid i.
     */
   private def assertBlocksAreSingles(batched: org.apache.spark.sql.DataFrame,
       singles: Seq[org.apache.spark.sql.DataFrame], ctx: String): Unit = {
@@ -76,27 +76,38 @@ class RoutedParitySpec extends SparkSpec {
       lc.rebuildDeclared(sp, "embedding", numShards = 4)
       val corpus = spark.read.parquet(spacePath)
 
-      for (draw <- 0 until 6) {
-        val k = 1 + rnd.nextInt(20)
-        val offset = rnd.nextInt(4)
-        val q = queries(rnd.nextInt(queries.size))
+      // fixed draws after the random ones, on their own seeded stream so
+      // the random draws stay as they were: a single query with offset > 0
+      // and sort-spec requests (single with an offset, and batched), so
+      // the finisher's bounded sorts always meet the unrouted response
+      val fixedRnd = new scala.util.Random(20261018L)
+      val fixed = Seq(
+        (5, 3, false, ""),
+        (6, 2, false, ""","sort":[{"label":{"order":"desc"}}]"""),
+        (4, 0, true, ""","sort":[{"label":{"order":"asc"}}]"""))
+      for (draw <- 0 until 6 + fixed.size) {
+        val r = if (draw < 6) rnd else fixedRnd
+        val (k, offset, fixedBatched, sort) =
+          if (draw < 6) (1 + r.nextInt(20), r.nextInt(4), None, "")
+          else fixed(draw - 6) match { case (k, o, b, s) => (k, o, Some(b), s) }
+        val q = queries(r.nextInt(queries.size))
         val filter =
-          if (rnd.nextBoolean()) ""
+          if (r.nextBoolean()) ""
           else {
-            val labels = (0 until 1 + rnd.nextInt(4)).map(_ => rnd.nextInt(10)).distinct
+            val labels = (0 until 1 + r.nextInt(4)).map(_ => r.nextInt(10)).distinct
             s""","filters":{"operator":"AND","conditions":[
                  {"operator":"IN","field":"label","value":${labels.mkString("[", ",", "]")}}]}"""
           }
-        val gate = rnd.nextInt(3) match {
+        val gate = r.nextInt(3) match {
           case 0 => ""
-          case 1 => s""","min_score":${pct(0.05 + rnd.nextDouble() * 0.3)}"""
-          case _ => s""","max_score":${pct(0.5 + rnd.nextDouble() * 0.4)}"""
+          case 1 => s""","min_score":${pct(0.05 + r.nextDouble() * 0.3)}"""
+          case _ => s""","max_score":${pct(0.5 + r.nextDouble() * 0.4)}"""
         }
-        val batched = rnd.nextBoolean()
-        val qs = if (!batched) Seq(q) else Seq(q, queries(rnd.nextInt(queries.size)))
+        val batched = fixedBatched.getOrElse(r.nextBoolean())
+        val qs = if (!batched) Seq(q) else Seq(q, queries(r.nextInt(queries.size)))
         def reqOf(vs: Seq[Seq[Float]]) =
           s"""{"vectors":[{"field":"embedding","feature":${vs.flatten.mkString("[", ",", "]")}$gate}]
-             $filter,"limit":$k,"offset":$offset}"""
+             $filter$sort,"limit":$k,"offset":$offset}"""
         val req = reqOf(qs)
         def rows(df: org.apache.spark.sql.DataFrame) =
           df.collect().map(_.toString).toSeq
@@ -104,7 +115,7 @@ class RoutedParitySpec extends SparkSpec {
         val brute = rows(SearchApi.search(corpus, sp, req))
         assert(routed == brute,
           s"family=$family draw=$draw k=$k offset=$offset batched=$batched " +
-            s"filter=${filter.nonEmpty} gate=${gate.nonEmpty}: " +
+            s"filter=${filter.nonEmpty} gate=${gate.nonEmpty} sort=${sort.nonEmpty}: " +
             s"routed ${routed.take(3)} vs brute ${brute.take(3)}")
         if (batched)
           assertBlocksAreSingles(SearchApi.searchAuto(corpus, sp, req, lc),
