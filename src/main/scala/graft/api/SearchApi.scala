@@ -639,6 +639,64 @@ object SearchApi {
     */
   @volatile var maxFilterAllowIds: Int = 1 << 20
 
+  /** The allow-set of scalar predicate `p` over an opened snapshot, from
+    * the snapshot's resident SCALAR projection: the routing id plus every
+    * SCALAR-declared non-vector field (vearch filters through in-memory
+    * per-field scalar indexes before the ANN walk, engine.cc). One bounded
+    * collect builds the projection on the first filtered request, and it
+    * is memoized on the [[graft.sources.IndexStore.openTable]] entry that
+    * holds `frame`, so any rewrite of a data file drops it. It is kept
+    * only while the snapshot has at most [[maxFilterAllowIds]] rows. The
+    * projection is a local relation: Catalyst's analyzer resolves `p`
+    * over it and the bound (interpreted) predicate runs over its rows on
+    * the driver, so every comparison rule (NaN, -0.0, null, coercion,
+    * arrays_overlap) is Catalyst's, and no Spark job runs.
+    *
+    * Exactness: the projection holds every row of the files `frame` reads,
+    * and the same predicate runs over it, so the set equals
+    * `frame.filter(p)`'s under Catalyst's semantics. (A parquet scan's
+    * filter pushdown can skip -0.0 rows under `= 0`; the projection keeps
+    * them, as Catalyst and vearch's IEEE compare do.) None = not
+    * applicable and the caller probes the frame: `frame` is no current
+    * open-cache snapshot, a field `p` references is not SCALAR-declared,
+    * or the snapshot is over the cap.
+    */
+  private[graft] def residentAllow(frame: DataFrame, space: Space,
+      rid: String, p: Column): Option[Array[Long]] = {
+    val scalars = space.fields
+      .filter(f => f.indexed && f.kind != FieldKind.VectorK).map(_.name)
+      .filter(frame.columns.contains)
+    val refs = org.apache.spark.sql.graft.Bridge.columnNames(p)
+    if (!frame.columns.contains(rid) || !refs.forall(scalars.contains)) None
+    else {
+      val cols = (rid +: scalars).distinct
+      val cap = maxFilterAllowIds
+      graft.sources.IndexStore.derived(frame, ("scalars", cols, cap)) {
+        val sel = frame.select(cols.map(col): _*)
+        val rows = sel.limit(cap + 1).collect()
+        if (rows.length > cap) None
+        else Some(frame.sparkSession.createDataFrame(
+          java.util.Arrays.asList(rows: _*), sel.schema))
+      }.flatten.map { proj =>
+        import org.apache.spark.sql.catalyst.expressions.{BindReferences, Predicate}
+        import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
+        // analysis resolves and coerces `p` over the projection as it
+        // would over `frame`; the bound predicate then runs over its rows
+        proj.filter(p).queryExecution.analyzed match {
+          case Filter(cond, rel: LocalRelation) =>
+            val keep = Predicate.createInterpreted(
+              BindReferences.bindReference(cond, rel.output))
+            val at = rel.output.indexWhere(_.name == rid)
+            val intId =
+              rel.output(at).dataType == org.apache.spark.sql.types.IntegerType
+            rel.data.iterator.filter(keep.eval)
+              .map(r => if (intId) r.getInt(at).toLong else r.getLong(at))
+              .toArray
+        }
+      }
+    }
+  }
+
   /** Driver-side twin of the catalog layout's `_bucket = pmod(hash(_id),
     * nb)` (SpaceCatalog.withBucket) for ANY PK type (the canonical
     * `_id` is a string): Spark's `hash()` is Murmur3 with seed 42 over
@@ -937,12 +995,17 @@ object SearchApi {
     // it, and at most once per request (multi-field conjunctions share
     // it across every graph leg). Some(None) = no filter; None = broad
     // filter -> the whole request degrades to filter-first brute FLAT.
+    // Without a tail `live` IS the opened snapshot, so the snapshot's
+    // resident SCALAR projection ([[residentAllow]]) answers the same
+    // predicate over the same rows with no Spark job.
     lazy val allowProbe: Option[Option[Set[Long]]] = pred match {
       case Some(p) =>
-        val probed = live.filter(p).select(col(ridName).cast("long"))
-          .take(maxFilterAllowIds + 1)
+        val probed = (if (tailOn) None
+          else residentAllow(corpus0, space, ridName, p)).getOrElse(
+            live.filter(p).select(col(ridName).cast("long"))
+              .take(maxFilterAllowIds + 1).map(_.getLong(0)))
         if (probed.length > maxFilterAllowIds) None
-        else Some(Some(probed.map(_.getLong(0)).toSet))
+        else Some(Some(probed.toSet))
       case None => Some(None)
     }
     // one precedence chain for every index param: request index_params
@@ -1094,15 +1157,24 @@ object SearchApi {
         // leg's first gate-loop probe already returns the gated ranking's
         // prefix and the walk runs ONCE — no depth-doubling segment-IO
         // re-pay.
+        // Zero-result short-circuit (engine.cc:365-372): an empty
+        // allow-set admits no row, base or tail, so the leg is its own plan
+        // under `limit(0)`, which the optimizer folds to an empty local
+        // relation: the leg's schema, no walk, and no payload fetch scan
+        // downstream.
         def graphLeg(deny: Set[Long])(
             walk: (Int, Option[org.apache.spark.broadcast.Broadcast[
               graft.operators.HnswIndex.Admission]]) => DataFrame)
             : Option[DataFrame] =
           allowProbe.map { allow =>
+            val none = allow.exists(_.isEmpty)
             val admit = graft.operators.HnswIndex.admission(
               corpus.sparkSession, allow, deny)
             gateLoop(corpus.sparkSession, k, metric, vc.minScore,
-              vc.maxScore)(d => withTail(deny, d)(kb => walk(kb, admit)))
+              vc.maxScore) { d =>
+              val hits = withTail(deny, d)(kb => walk(kb, admit))
+              if (none) hits.limit(0) else hits
+            }
           }
         // clustered generations (SPANN layout): prune to the union of
         // every query's nprobe route - the shard_id filter is parquet

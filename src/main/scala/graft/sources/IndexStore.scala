@@ -75,7 +75,13 @@ object IndexStore {
     * read, so the caller sees the ordinary error.
     */
   private val openCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (String, DataFrame)]
+    .empty[(SparkSession, String), Opened]
+
+  /** One opened snapshot: its leaf signature, the frame, and the values
+    * [[derived]] from exactly that frame. */
+  private final class Opened(val sig: String, val df: DataFrame) {
+    val memo = scala.collection.mutable.HashMap.empty[Any, AnyRef]
+  }
 
   private def leafSignature(spark: SparkSession, path: String): String = {
     val root = new org.apache.hadoop.fs.Path(path)
@@ -99,13 +105,26 @@ object IndexStore {
         return spark.read.parquet(path)
       }
     openCache.get((spark, path)) match {
-      case Some((s, df)) if s == sig => df
+      case Some(e) if e.sig == sig => e.df
       case _ =>
         val df = spark.read.parquet(path)
-        openCache.put((spark, path), (sig, df))
+        openCache.put((spark, path), new Opened(sig, df))
         df
     }
   }
+
+  /** A value computed once per opened snapshot: `build` runs at most once
+    * per `key` for the [[openTable]] entry that holds `df` (by identity),
+    * and the value lives on that entry — a rewrite that reopens the path
+    * drops it with the old frame, so it can never outlive the files it
+    * was computed from. None when no current entry holds `df`: a raw
+    * `spark.read`, a transformed frame, or a snapshot already superseded
+    * by a later [[openTable]].
+    */
+  def derived[T <: AnyRef](df: DataFrame, key: Any)(build: => T): Option[T] =
+    openCache.valuesIterator.find(_.df eq df).map { e =>
+      e.synchronized(e.memo.getOrElseUpdate(key, build)).asInstanceOf[T]
+    }
 
   /** Drop a path's cached open plan (belt-and-braces for in-place
     * appends — the signature check alone already invalidates them).

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.fs.{FileContext, Options, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileContext, FileSystem, Options, Path}
 
 /** Sidecar (state file / ledger / model) IO through the Hadoop
   * FileSystem API — resolved per-path by SCHEME, like the table
@@ -17,7 +17,13 @@ import org.apache.hadoop.fs.{FileContext, Options, Path}
   * Writes are tmp + rename-OVERWRITE (`FileContext.rename` — the atomic
   * replace; plain `FileSystem.rename` refuses existing destinations on
   * some FS), preserving the crash contract the `java.nio` ATOMIC_MOVE
-  * gave on local paths. Appends use true `FileSystem.append` where the
+  * gave on local paths. Each write has its own tmp name, so concurrent
+  * writers never share a half-written file. Sidecar bytes are read and
+  * written BELOW a client-side checksum layer (the local
+  * `ChecksumFileSystem`): that layer keeps a `.crc` file beside each
+  * file and renames the pair in two steps, so a reader could pair new
+  * bytes with the old checksum and fail. Without it the swap is one
+  * POSIX rename. Appends use true `FileSystem.append` where the
   * FS supports it and fall back to read-concat-rewrite otherwise — see
   * [[appendString]] for the cross-JVM writer contract.
   */
@@ -34,16 +40,20 @@ private[graft] object SidecarIO {
     p.getFileSystem(conf).exists(p)
   }
 
+  /** The FS that holds a sidecar's bytes: the path's FS below any
+    * client-side checksum layer (see the object doc). */
+  private def bytesFs(p: Path): FileSystem = p.getFileSystem(conf) match {
+    case c: ChecksumFileSystem => c.getRawFileSystem
+    case fs => fs
+  }
+
   def readString(path: String): String = {
     val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val len = fs.getFileStatus(p).getLen
-    require(len <= Int.MaxValue, s"sidecar $path too large: $len")
-    val buf = new Array[Byte](len.toInt)
-    val in = fs.open(p)
-    try in.readFully(0, buf)
+    // read the OPENED file to its end: a length taken from a separate
+    // stat may belong to the version a concurrent rename replaced
+    val in = bytesFs(p).open(p)
+    try new String(in.readAllBytes(), StandardCharsets.UTF_8)
     finally in.close()
-    new String(buf, StandardCharsets.UTF_8)
   }
 
   def readLines(path: String): Seq[String] =
@@ -51,15 +61,24 @@ private[graft] object SidecarIO {
 
   def writeString(path: String, s: String): Unit = {
     val p = new Path(path)
-    val tmp = new Path(s"$path.tmp")
-    val fs = p.getFileSystem(conf)
+    val tmp = new Path(s"$path.${java.util.UUID.randomUUID()}.tmp")
+    val fs = bytesFs(p)
     val out = fs.create(tmp, true)
     try out.write(s.getBytes(StandardCharsets.UTF_8))
     finally out.close()
-    val fc =
-      if (p.toUri.getScheme == null) FileContext.getFileContext(conf)
-      else FileContext.getFileContext(p.toUri, conf)
-    fc.rename(tmp, p, Options.Rename.OVERWRITE)
+    p.getFileSystem(conf) match {
+      case c: ChecksumFileSystem =>
+        // the raw local FS renames with rename(2): an atomic replace
+        if (!fs.rename(tmp, p))
+          throw new java.io.IOException(s"could not move $tmp to $p")
+        // a `.crc` left by an older checksummed write no longer matches
+        fs.delete(c.getChecksumFile(p), false)
+      case _ =>
+        val fc =
+          if (p.toUri.getScheme == null) FileContext.getFileContext(conf)
+          else FileContext.getFileContext(p.toUri, conf)
+        fc.rename(tmp, p, Options.Rename.OVERWRITE)
+    }
     ()
   }
 

@@ -12,4 +12,10 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** The column names `c` references, as written (before resolution). */
+  def columnNames(c: Column): Seq[String] = c.node.collect {
+    case a: org.apache.spark.sql.internal.UnresolvedAttribute =>
+      a.nameParts.mkString(".")
+  }
 }

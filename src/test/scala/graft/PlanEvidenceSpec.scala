@@ -172,21 +172,6 @@ class PlanEvidenceSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
-  /** Driver jobs launched while `body` runs, scoped to a unique job
-    * group; waits out the async status store before reporting.
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val group = s"action-audit-${java.util.UUID.randomUUID()}"
-    spark.sparkContext.setJobGroup(group, "action audit", false)
-    try body finally spark.sparkContext.clearJobGroup()
-    def jobs(): Int =
-      spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
-    var n = jobs(); var stable = false
-    (0 until 30).takeWhile { _ =>
-      Thread.sleep(100); val m = jobs(); stable = m == n; n = m; !stable }
-    n
-  }
-
   test("routed serving action pin: one bounded hits action unfiltered, +one probe take with a filter, gate loop probe-bounded") {
     // the r15 gateLoop episode: extra per-request driver actions are how
     // routed serving quietly stops scaling — pin the counts
@@ -353,6 +338,28 @@ class PlanEvidenceSpec extends SparkSpec {
       s"warm unfiltered catalog request ran $n jobs (hits action ≤2 + fetch 1)")
     assertBounded(fetchPlan(Seq(qv)), "single-query")
     assertBounded(fetchPlan(Seq(qv, qv.reverse)), "req_num=2")
+
+    // a filtered request takes its allow-set from the snapshot's resident
+    // SCALAR projection (built by the first filtered request): warm, the
+    // scalar filter runs no job, so the request runs no more than the
+    // unfiltered one
+    def filtered(cond: String) =
+      s"""{"vectors":[{"field":"embedding","feature":${qv.mkString("[", ",", "]")}}],
+        "filters":{"operator":"AND","conditions":[$cond]},"limit":9}"""
+    val some = filtered("""{"operator":"IN","field":"label","value":[1,3]}""")
+    assert(cat.search("d", "s", sp, some).collect().length == 9)
+    val nf = jobsDuring { cat.search("d", "s", sp, some).collect() }
+    assert(nf <= n && nf <= 3,
+      s"warm filtered catalog request ran $nf jobs, unfiltered $n")
+    // a filter that matches nothing: an empty allow-set short-circuits
+    // the walk and the payload fetch, and the response keeps its schema
+    val nothing = filtered("""{"operator":">","field":"label","value":1000}""")
+    val n0 = jobsDuring {
+      assert(cat.search("d", "s", sp, nothing).collect().isEmpty)
+    }
+    assert(n0 == 0, s"an empty allow-set still ran $n0 jobs")
+    assert(cat.search("d", "s", sp, nothing).schema ==
+      cat.search("d", "s", sp, some).schema)
   }
 
   test("gate loop backstop still depth-doubles when hits are NOT gated in-walk") {

@@ -48,6 +48,21 @@ trait SparkSpec extends AnyFunSuite {
       df.queryExecution.executedPlan.toString).mkString("\n"))
   }
 
+  /** Driver jobs launched while `body` runs, scoped to a unique job
+    * group; waits out the async status store before reporting.
+    */
+  def jobsDuring(body: => Unit): Int = {
+    val group = s"action-audit-${java.util.UUID.randomUUID()}"
+    spark.sparkContext.setJobGroup(group, "action audit", false)
+    try body finally spark.sparkContext.clearJobGroup()
+    def jobs(): Int =
+      spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
+    var n = jobs(); var stable = false
+    (0 until 30).takeWhile { _ =>
+      Thread.sleep(100); val m = jobs(); stable = m == n; n = m; !stable }
+    n
+  }
+
   /** Total shuffle-write RECORDS for the jobs `body` runs — the
     * measurement behind "this operator shuffles the corpus exactly once /
     * never" claims. Scoped to a unique job group so concurrently-running
