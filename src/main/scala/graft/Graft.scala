@@ -145,6 +145,13 @@ object Graft {
       // has no ns timestamp — this flag reads them as epoch-ns longs) and µs
       // TIMESTAMP_NTZ; SparkEntry.events() normalizes either to epoch-ns.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // Parquet row groups are pruned by min/max statistics only. The
+      // dictionary filter compares float and double values by bits
+      // (equals, Float.compare), so it drops a row group whose only match
+      // is -0.0 under `= 0`, `IN (0)`, `>= 0` or `<= -0.0`, where Catalyst
+      // (and the driver-side resident allow-set) treats -0.0 = 0.0. With
+      // it off, every scan path answers those filters alike.
+      .config("parquet.filter.dictionary.enabled", "false")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

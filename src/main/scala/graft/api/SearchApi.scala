@@ -642,57 +642,52 @@ object SearchApi {
   /** The allow-set of scalar predicate `p` over an opened snapshot, from
     * the snapshot's resident SCALAR projection: the routing id plus every
     * SCALAR-declared non-vector field (vearch filters through in-memory
-    * per-field scalar indexes before the ANN walk, engine.cc). One bounded
-    * collect builds the projection on the first filtered request, and it
-    * is memoized on the [[graft.sources.IndexStore.openTable]] entry that
-    * holds `frame`, so any rewrite of a data file drops it. It is kept
-    * only while the snapshot has at most [[maxFilterAllowIds]] rows. The
-    * projection is a local relation: Catalyst's analyzer resolves `p`
-    * over it and the bound (interpreted) predicate runs over its rows on
-    * the driver, so every comparison rule (NaN, -0.0, null, coercion,
-    * arrays_overlap) is Catalyst's, and no Spark job runs.
+    * per-field scalar indexes before the ANN walk, engine.cc). It is an
+    * [[graft.sources.IndexStore.residentColumns]] copy: collected once on
+    * the first filtered request, kept on the open-cache entry that holds
+    * `frame` (any rewrite of a data file drops it), and only for a
+    * snapshot whose parquet footers count at most [[maxFilterAllowIds]]
+    * rows, decided before anything is collected. Catalyst's analyzer
+    * resolves `p` over the copy and the bound (interpreted) predicate runs
+    * over its rows on the driver, so every comparison rule (NaN, -0.0,
+    * null, coercion, arrays_overlap) is Catalyst's, and no Spark job runs.
     *
-    * Exactness: the projection holds every row of the files `frame` reads,
-    * and the same predicate runs over it, so the set equals
-    * `frame.filter(p)`'s under Catalyst's semantics. (A parquet scan's
-    * filter pushdown can skip -0.0 rows under `= 0`; the projection keeps
-    * them, as Catalyst and vearch's IEEE compare do.) None = not
-    * applicable and the caller probes the frame: `frame` is no current
-    * open-cache snapshot, a field `p` references is not SCALAR-declared,
-    * or the snapshot is over the cap.
+    * Exactness: the copy holds every row of the files `frame` reads, and
+    * the same predicate runs over it, so the set equals
+    * `frame.filter(p)`'s. None = not applicable and the caller probes the
+    * frame: `frame` is no current open-cache snapshot, a field `p`
+    * references is not SCALAR-declared, the routing id is not an
+    * integral column, or the snapshot is over the cap.
     */
   private[graft] def residentAllow(frame: DataFrame, space: Space,
       rid: String, p: Column): Option[Array[Long]] = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BindReferences, Predicate}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
+    import org.apache.spark.sql.types.{IntegerType, LongType}
     val scalars = space.fields
       .filter(f => f.indexed && f.kind != FieldKind.VectorK).map(_.name)
       .filter(frame.columns.contains)
     val refs = org.apache.spark.sql.graft.Bridge.columnNames(p)
     if (!frame.columns.contains(rid) || !refs.forall(scalars.contains)) None
-    else {
-      val cols = (rid +: scalars).distinct
-      val cap = maxFilterAllowIds
-      graft.sources.IndexStore.derived(frame, ("scalars", cols, cap)) {
-        val sel = frame.select(cols.map(col): _*)
-        val rows = sel.limit(cap + 1).collect()
-        if (rows.length > cap) None
-        else Some(frame.sparkSession.createDataFrame(
-          java.util.Arrays.asList(rows: _*), sel.schema))
-      }.flatten.map { proj =>
-        import org.apache.spark.sql.catalyst.expressions.{BindReferences, Predicate}
-        import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
-        // analysis resolves and coerces `p` over the projection as it
-        // would over `frame`; the bound predicate then runs over its rows
-        proj.filter(p).queryExecution.analyzed match {
-          case Filter(cond, rel: LocalRelation) =>
+    else graft.sources.IndexStore.residentColumns(frame,
+        (rid +: scalars).distinct, maxFilterAllowIds).flatMap { proj =>
+      // analysis resolves and coerces `p` over the copy as it would over
+      // `frame`; the bound predicate then runs over the copy's rows
+      proj.filter(p).queryExecution.analyzed match {
+        case Filter(cond, rel: LocalRelation) =>
+          val at = rel.output.indexWhere(_.name == rid)
+          val id = rel.output(at).dataType match {
+            case IntegerType => Some((r: InternalRow) => r.getInt(at).toLong)
+            case LongType    => Some((r: InternalRow) => r.getLong(at))
+            case _           => None
+          }
+          id.map { id =>
             val keep = Predicate.createInterpreted(
               BindReferences.bindReference(cond, rel.output))
-            val at = rel.output.indexWhere(_.name == rid)
-            val intId =
-              rel.output(at).dataType == org.apache.spark.sql.types.IntegerType
-            rel.data.iterator.filter(keep.eval)
-              .map(r => if (intId) r.getInt(at).toLong else r.getLong(at))
-              .toArray
-        }
+            rel.data.iterator.filter(keep.eval).map(id).toArray
+          }
+        case _ => None
       }
     }
   }
@@ -997,7 +992,8 @@ object SearchApi {
     // filter -> the whole request degrades to filter-first brute FLAT.
     // Without a tail `live` IS the opened snapshot, so the snapshot's
     // resident SCALAR projection ([[residentAllow]]) answers the same
-    // predicate over the same rows with no Spark job.
+    // predicate over the same rows with no Spark job. A tail skips it
+    // before any footer is read.
     lazy val allowProbe: Option[Option[Set[Long]]] = pred match {
       case Some(p) =>
         val probed = (if (tailOn) None

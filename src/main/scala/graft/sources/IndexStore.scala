@@ -61,7 +61,7 @@ object IndexStore {
     * schema-inference job on every call — a fixed metadata job per
     * query, since serving handlers open the space table per request.
     * The opened plan is reused while the table's LEAF listing — every
-    * data file's (relative path, length, mtime), walked through
+    * data file's (path, length, mtime), walked through
     * partition dirs like `_bucket=N/` — is unchanged: exactly what any
     * rewrite, append or compaction swap changes (parquet part files
     * carry per-write UUID names). The walk reaches the leaves because a
@@ -77,54 +77,89 @@ object IndexStore {
   private val openCache = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String), Opened]
 
-  /** One opened snapshot: its leaf signature, the frame, and the values
-    * [[derived]] from exactly that frame. */
-  private final class Opened(val sig: String, val df: DataFrame) {
-    val memo = scala.collection.mutable.HashMap.empty[Any, AnyRef]
+  /** One opened snapshot: its leaf signature, the data files it lists,
+    * the frame, and the snapshot's resident column copy
+    * ([[residentColumns]]).
+    */
+  private final class Opened(val sig: String,
+      leaves: Seq[org.apache.hadoop.fs.FileStatus], val df: DataFrame) {
+    /** The snapshot's row count, summed from its parquet footers: driver
+      * file reads, no Spark job. None when a footer cannot be read.
+      */
+    lazy val rows: Option[Long] =
+      try {
+        val conf = df.sparkSession.sparkContext.hadoopConfiguration
+        Some(leaves.map { st =>
+          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+          try r.getRecordCount finally r.close()
+        }.sum)
+      } catch { case NonFatal(_) => None }
+    /** (columns, their resident copy); guarded by `this`. */
+    var resident: Option[(Seq[String], DataFrame)] = None
   }
 
-  private def leafSignature(spark: SparkSession, path: String): String = {
+  private def leafFiles(spark: SparkSession, path: String)
+      : Seq[org.apache.hadoop.fs.FileStatus] = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def readable(name: String): Boolean =
       !((name.startsWith("_") && !name.contains("=")) || name.startsWith("."))
-    def walk(dir: org.apache.hadoop.fs.Path, rel: String): Seq[String] =
+    def walk(dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
       fs.listStatus(dir).toSeq.filter(st => readable(st.getPath.getName)).flatMap { st =>
-        val name = rel + st.getPath.getName
-        if (st.isDirectory) walk(st.getPath, name + "/")
-        else Seq(s"$name:${st.getLen}:${st.getModificationTime}")
+        if (st.isDirectory) walk(st.getPath) else Seq(st)
       }
-    walk(root, "").sorted.mkString(",")
+    walk(root)
   }
 
+  private def signature(leaves: Seq[org.apache.hadoop.fs.FileStatus]): String =
+    leaves.map(st => s"${st.getPath}:${st.getLen}:${st.getModificationTime}")
+      .sorted.mkString(",")
+
   def openTable(spark: SparkSession, path: String): DataFrame = {
-    val sig =
-      try leafSignature(spark, path)
+    val leaves =
+      try leafFiles(spark, path)
       catch { case NonFatal(_) =>
         openCache.remove((spark, path))
         return spark.read.parquet(path)
       }
+    val sig = signature(leaves)
     openCache.get((spark, path)) match {
       case Some(e) if e.sig == sig => e.df
       case _ =>
         val df = spark.read.parquet(path)
-        openCache.put((spark, path), new Opened(sig, df))
+        openCache.put((spark, path), new Opened(sig, leaves, df))
         df
     }
   }
 
-  /** A value computed once per opened snapshot: `build` runs at most once
-    * per `key` for the [[openTable]] entry that holds `df` (by identity),
-    * and the value lives on that entry — a rewrite that reopens the path
-    * drops it with the old frame, so it can never outlive the files it
-    * was computed from. None when no current entry holds `df`: a raw
-    * `spark.read`, a transformed frame, or a snapshot already superseded
-    * by a later [[openTable]].
+  /** A driver-resident copy of columns `cols` of the snapshot that
+    * [[openTable]] returned as `df` (found by identity among the open
+    * entries), as a local relation. One collect builds it on the first
+    * call; it lives on the open-cache entry, so a rewrite that reopens
+    * the path drops it with the old frame and it never outlives the
+    * files it was read from. Residency is decided BEFORE anything is
+    * collected: the snapshot's parquet footers must count at most
+    * `maxRows` rows. None when no current entry holds `df` (a raw
+    * `spark.read`, a transformed frame, a superseded snapshot), a footer
+    * is unreadable, or the snapshot has more than `maxRows` rows.
     */
-  def derived[T <: AnyRef](df: DataFrame, key: Any)(build: => T): Option[T] =
-    openCache.valuesIterator.find(_.df eq df).map { e =>
-      e.synchronized(e.memo.getOrElseUpdate(key, build)).asInstanceOf[T]
-    }
+  def residentColumns(df: DataFrame, cols: Seq[String],
+      maxRows: Long): Option[DataFrame] =
+    openCache.valuesIterator.find(_.df eq df)
+      .filter(_.rows.exists(_ <= maxRows))
+      .map { e =>
+        e.synchronized {
+          e.resident match {
+            case Some((c, copy)) if c == cols => copy
+            case _ =>
+              val copy = org.apache.spark.sql.graft.Bridge
+                .localCopy(df.select(cols.map(col): _*))
+              e.resident = Some((cols, copy))
+              copy
+          }
+        }
+      }
 
   /** Drop a path's cached open plan (belt-and-braces for in-place
     * appends — the signature check alone already invalidates them).

@@ -1,8 +1,12 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import scala.collection.immutable.ArraySeq
+
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.classic.{Dataset, ExpressionUtils, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 
 /** Expression ⇄ Column bridge. `ExpressionUtils` is `private[sql]`, so the
   * shim lives under the org.apache.spark.sql namespace (the standard
@@ -17,5 +21,20 @@ object Bridge {
   def columnNames(c: Column): Seq[String] = c.node.collect {
     case a: org.apache.spark.sql.internal.UnresolvedAttribute =>
       a.nameParts.mkString(".")
+  }
+
+  /** `df`'s rows collected to the driver (one Spark action) as a local
+    * relation over fresh attributes of the same names and types. The
+    * collected UnsafeRows are kept as they arrive, with no round trip
+    * through external `Row`s.
+    */
+  def localCopy(df: DataFrame): DataFrame = {
+    val qe = df.queryExecution
+    val rows = SQLExecution.withNewExecutionId(qe, Some("collect")) {
+      qe.executedPlan.executeCollect()
+    }
+    Dataset.ofRows(df.sparkSession.asInstanceOf[SparkSession],
+      LocalRelation(qe.analyzed.output.map(_.newInstance()),
+        ArraySeq.unsafeWrapArray(rows)))
   }
 }

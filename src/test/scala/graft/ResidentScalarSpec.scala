@@ -17,12 +17,10 @@ import graft.sources.IndexStore
   * snapshot over the cap, a frame that is no open-cache snapshot) keep
   * probing the frame itself.
   *
-  * One known difference: the parquet scan's filter pushdown can drop rows
-  * holding -0.0 under `= 0` on float and double fields (a row group whose
-  * dictionary holds -0.0 but not 0.0 is skipped), while Catalyst
-  * (and the resident projection it evaluates) treats -0.0 = 0.0. The
-  * reference here is Catalyst over every row of the snapshot (pushdown
-  * off); the pushed-down probe must match it everywhere else.
+  * The reference is Catalyst over every row of the snapshot (pushdown
+  * off). The shipped session's pushed-down scans must match it too,
+  * -0.0 under zero comparisons included: parquet's dictionary filter,
+  * which compares floats by bits, is off (`Graft.session`).
   */
 class ResidentScalarSpec extends SparkSpec {
   import spark.implicits._
@@ -94,10 +92,13 @@ class ResidentScalarSpec extends SparkSpec {
     and(cond("l", "<=", "9223372036854775807"), cond("l", "!=", "3")),
     and(cond("f", ">=", "0")),
     and(cond("f", "=", "0")),
+    and(cond("f", "<=", "-0.0")),
     and(cond("f", "!=", "0")),
     and(cond("f", "<", "3.0e38")),
     and(cond("f", ">", "1e39")),
     and(cond("d", "=", "0")),
+    and(cond("d", ">=", "0")),
+    and(cond("d", "IN", "[0, 2.5]")),
     and(cond("d", ">", "0")),
     and(cond("d", "<", "-1e308")),
     and(cond("d", ">=", "1e-300"), cond("d", "<", "2.5")),
@@ -159,23 +160,15 @@ class ResidentScalarSpec extends SparkSpec {
     def negZero(field: String) = cat.read("d", "s")
       .filter(col(field).cast("string") === "-0.0")
       .select(col("_docid")).collect().map(_.getLong(0)).toSet
-    val zeroEq = Map(
-      and(cond("f", "=", "0")) -> negZero("f"),
-      and(cond("d", "=", "0")) -> negZero("d"))
-    assert(zeroEq.values.forall(_.nonEmpty))
+    assert(negZero("f").nonEmpty && negZero("d").nonEmpty)
     val sizes = filters.map { json =>
       val resident = SearchApi.residentAllow(frame, space, "_docid", pred(json))
       assert(resident.isDefined, s"no resident allow-set for $json")
       val expected = withoutPushdown(probe(spark.read.parquet(path), json))
       assert(resident.get.toSet == expected, s"allow-set differs for $json")
       assert(resident.get.length == expected.size, s"duplicate ids for $json")
-      // the pushed-down probe may drop only -0.0 rows, and only under = 0
-      val pushed = probe(frame, json)
-      assert(pushed.subsetOf(expected) &&
-        (expected -- pushed).subsetOf(zeroEq.getOrElse(json, Set.empty)),
-        s"pushed-down probe differs for $json")
-      assert(routedIds(cat, json) == withoutPushdown(flatIds(cat, json)),
-        s"routed != FLAT for $json")
+      assert(probe(frame, json) == expected, s"pushed-down probe differs for $json")
+      assert(routedIds(cat, json) == flatIds(cat, json), s"routed != FLAT for $json")
       expected.size
     }
     // the shapes discriminate: some admit nothing, none admits everything
@@ -219,13 +212,42 @@ class ResidentScalarSpec extends SparkSpec {
     // a frame that is no open-cache snapshot
     assert(SearchApi.residentAllow(spark.read.parquet(path), space, "_docid",
       pred(scalar)).isEmpty)
-    // a snapshot over the cap
+    // a snapshot over the cap: its footers say so before any job runs
+    val (_, path2, _) = catalogSpace("resident_overcap")
+    val frame2 = IndexStore.openTable(spark, path2)
     val saved = SearchApi.maxFilterAllowIds
     try {
+      SearchApi.maxFilterAllowIds = n - 1
+      var over: Option[Array[Long]] = Some(Array.empty)
+      assert(jobsDuring {
+        over = SearchApi.residentAllow(frame2, space, "_docid", pred(scalar))
+      } == 0)
+      assert(over.isEmpty)
       SearchApi.maxFilterAllowIds = 1
       assert(SearchApi.residentAllow(frame, space, "_docid", pred(scalar)).isEmpty)
       assert(routedIds(cat, scalar) == flatIds(cat, scalar))
     } finally SearchApi.maxFilterAllowIds = saved
+    // at exactly the cap the copy is built once, then reused with no job
+    try {
+      SearchApi.maxFilterAllowIds = n
+      assert(SearchApi.residentAllow(frame2, space, "_docid", pred(scalar)).isDefined)
+      assert(jobsDuring {
+        SearchApi.residentAllow(frame2, space, "_docid", pred(scalar))
+      } == 0)
+    } finally SearchApi.maxFilterAllowIds = saved
+  }
+
+  test("parquet scans keep -0.0 rows under zero comparisons, as Catalyst does") {
+    // one row group whose float and double dictionaries hold -0.0 but not 0.0
+    val path = java.nio.file.Files.createTempDirectory("negzero").toString + "/t"
+    Seq((1, -0.0f, -0.0), (2, -1.5f, -1.5), (3, -0.0f, -0.0)).toDF("id", "f", "d")
+      .coalesce(1).write.parquet(path)
+    for (p <- Seq("f = 0", "f >= 0", "f IN (0)", "f <= cast(-0.0 as float)",
+        "d = 0", "d >= 0", "d IN (0.0, 1.0)", "d <= -0.0")) {
+      val pushed = spark.read.parquet(path).filter(expr(p)).count()
+      val all = withoutPushdown(spark.read.parquet(path).filter(expr(p)).count())
+      assert(pushed == all && all >= 2, s"$p: pushed-down scan $pushed, Catalyst $all")
+    }
   }
 
   test("a realtime tail keeps the frame probe: buffered writes pass the filter") {

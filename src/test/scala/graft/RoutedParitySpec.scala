@@ -125,6 +125,44 @@ class RoutedParitySpec extends SparkSpec {
     }
   }
 
+  test("-0.0 draws under pushdown: routed (resident allow-set) ≡ brute FLAT") {
+    // a double SCALAR field that holds -0.0 and never +0.0, on a snapshot
+    // opened through the open cache, so the routed leg reads its
+    // allow-set from the resident projection while FLAT scans parquet
+    // with the shipped session's pushdown on
+    val rnd = new scala.util.Random(20261019L)
+    val base = spark.read.parquet(s"$sf/embeddings.parquet")
+      .select(col("vec_id").cast("long").as("_id"), col("label"),
+        when(col("label") < 5, lit(-0.0)).otherwise(col("label").cast("double")).as("w"),
+        col("embedding"))
+    val queries = base.filter($"_id" < 8).orderBy("_id").select("embedding")
+      .collect().map(_.getSeq[Float](0)).toSeq
+    val sp = Space.fromJson(
+      s"""{"name":"parity_negzero","fields":[
+          {"name":"label","type":"integer","index":{"type":"SCALAR"}},
+          {"name":"w","type":"double","index":{"type":"SCALAR"}},
+          {"name":"embedding","type":"vector","dimension":64,
+           "index":${families.toMap.apply("HNSW")}}]}""")
+    val spacePath = java.nio.file.Files.createTempDirectory("parity_negzero").toString + "/space"
+    base.write.parquet(spacePath)
+    val lc = new IndexLifecycle(spark, spacePath)
+    lc.rebuildDeclared(sp, "embedding", numShards = 4)
+    val corpus = graft.sources.IndexStore.openTable(spark, spacePath)
+    for ((cond, draw) <- Seq("""{"operator":"=","field":"w","value":0}""",
+        """{"operator":">=","field":"w","value":0}""",
+        """{"operator":"IN","field":"w","value":[0, 7]}""",
+        """{"operator":"<=","field":"w","value":-0.0}""").zipWithIndex) {
+      val q = queries(rnd.nextInt(queries.size))
+      val req = s"""{"vectors":[{"field":"embedding","feature":${q.mkString("[", ",", "]")}}],
+        "filters":{"operator":"AND","conditions":[$cond]},"limit":${5 + rnd.nextInt(10)}}"""
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).toSeq
+      val routed = rows(SearchApi.searchAuto(corpus, sp, req, lc))
+      val brute = rows(SearchApi.search(corpus, sp, req))
+      assert(routed.nonEmpty && routed == brute,
+        s"negzero draw=$draw $cond: routed ${routed.take(3)} vs brute ${brute.take(3)}")
+    }
+  }
+
   test("random MULTI-FIELD conjunctions: routed per-field legs ≡ brute conjunction") {
     // two 32-dim fields, a random exactness-parameterized family PER
     // FIELD, random weights/filters/gates, single and req_num-batched —
