@@ -110,7 +110,9 @@ object Bench {
     // bench JSON unparseable for the driver (BENCH_r01 "parsed": null)
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_LOCAL.json"), json + "\n")
-    catch { case _: Throwable => }
+    catch { case NonFatal(e) =>
+      System.err.println(s"[bench] could not write BENCH_LOCAL.json: $e")
+    }
     // the JSON must be the LAST stdout line of the run: round 7's driver
     // capture was a tail window, and Spark-shutdown logs after the print
     // pushed the JSON's front out of it ("parsed": null). Silence the

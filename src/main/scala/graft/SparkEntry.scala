@@ -80,6 +80,24 @@ object SparkEntry {
 
   private[graft] def init(s: SparkSession): SparkSession = { Graft.registerFunctions(s); s }
 
+  /** The embeddings of vec_id 0, 1, 2 — the req_num=3 batch of the
+    * batched queries.
+    */
+  private[graft] def batchRows(s: SparkSession, dir: String): Array[Seq[Float]] =
+    t(s, dir, "embeddings").filter(col("vec_id") < 3)
+      .orderBy(col("vec_id")).select(col("embedding")).collect()
+      .map(_.getSeq[Float](0))
+
+  /** `req` against fixture space `key` ([[graft.sources.IndexStore.space]]),
+    * served by the catalog's recipe ([[graft.schema.SpaceCatalog.search]]):
+    * the declared index picks the READY generation, and an
+    * `enable_realtime` declaration unions the tail at `space.tail`.
+    */
+  private[graft] def searchFixture(s: SparkSession, dir: String, key: String,
+      spaceJson: String, req: String): DataFrame =
+    new graft.schema.SpaceCatalog(s, graft.sources.IndexStore.space(s, dir, key))
+      .search(key, "space", Space.fromJson(spaceJson), req)
+
   /** Shared body of q_asof_join / q_asof_skew: each click picks the
     * user's most recent prior purchase. Timestamps are truncated to µs
     * BEFORE the join — DuckDB timestamps are µs-precision, so joining on

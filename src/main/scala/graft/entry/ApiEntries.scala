@@ -158,19 +158,15 @@ private[graft] object ApiEntries {
     //    ⇒ exact, so the whole routing stack is oracle-checked ──
     "q_api_search_hnsw" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.hnswSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"hnsw_space","fields":[
+      val sp = """{"name":"hnsw_space","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"embedding","type":"vector","dimension":64,
              "index":{"type":"HNSW",
-                      "params":{"nlinks":16,"efConstruction":100,"efSearch":1000000}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
+                      "params":{"nlinks":16,"efConstruction":100,"efSearch":1000000}}}]}"""
       val req = s"""{"vectors":[{"field":"embedding","feature":${qvec(s, dir).mkString("[", ",", "]")}}],
         "filters":{"operator":"AND","conditions":[
           {"operator":"IN","field":"label","value":[1,3,5]}]},"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apihnsw", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
@@ -182,20 +178,14 @@ private[graft] object ApiEntries {
     //    per-qid against DuckDB ──
     "q_api_search_batch" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.hnswSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"hnsw_space","fields":[
+      val sp = """{"name":"hnsw_space","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"embedding","type":"vector","dimension":64,
              "index":{"type":"HNSW",
-                      "params":{"nlinks":16,"efConstruction":100,"efSearch":1000000}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
-      val flat = t(s, dir, "embeddings").filter(col("vec_id") < 3)
-        .orderBy(col("vec_id")).select(col("embedding")).collect()
-        .flatMap(_.getSeq[Float](0))
+                      "params":{"nlinks":16,"efConstruction":100,"efSearch":1000000}}}]}"""
+      val flat = batchRows(s, dir).flatten
       val req = s"""{"vectors":[{"field":"embedding","feature":${flat.mkString("[", ",", "]")}}],"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apihnsw", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
@@ -206,18 +196,14 @@ private[graft] object ApiEntries {
     //    selective-gate SQL as q_knn_score_range_routed ──
     "q_api_search_symbol" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.hnswSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"hnsw_space","fields":[
+      val sp = """{"name":"hnsw_space","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"embedding","type":"vector","dimension":64,
              "index":{"type":"HNSW",
-                      "params":{"nlinks":16,"efConstruction":100,"efSearch":1000000}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
+                      "params":{"nlinks":16,"efConstruction":100,"efSearch":1000000}}}]}"""
       val req = s"""{"vectors":[{"field":"embedding","feature":${qvec(s, dir).mkString("[", ",", "]")},
         "symbol":">=","value":1.41}],"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apihnsw", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
@@ -228,18 +214,14 @@ private[graft] object ApiEntries {
     //    against the brute L2 top-k ──
     "q_api_search_flat_override" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.hnswSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"hnsw_space","fields":[
+      val sp = """{"name":"hnsw_space","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"embedding","type":"vector","dimension":64,
              "index":{"type":"HNSW",
-                      "params":{"nlinks":16,"efConstruction":100,"efSearch":1000000}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
+                      "params":{"nlinks":16,"efConstruction":100,"efSearch":1000000}}}]}"""
       val req = s"""{"vectors":[{"field":"embedding","feature":${qvec(s, dir).mkString("[", ",", "]")},
         "index_type":"FLAT"}],"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apihnsw", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
@@ -251,41 +233,29 @@ private[graft] object ApiEntries {
     //    full rerank ⇒ exact per-qid, oracle-checked ──
     "q_api_search_ivfpq_batch" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.pqSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"pq_space","fields":[
+      val sp = """{"name":"pq_space","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"embedding","type":"vector","dimension":64,
              "index":{"type":"IVFPQ",
-                      "params":{"ncentroids":8,"nprobe":8,"nsubvector":8}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
-      val flat = t(s, dir, "embeddings").filter(col("vec_id") < 3)
-        .orderBy(col("vec_id")).select(col("embedding")).collect()
-        .flatMap(_.getSeq[Float](0))
+                      "params":{"ncentroids":8,"nprobe":8,"nsubvector":8}}}]}"""
+      val flat = batchRows(s, dir).flatten
       val req = s"""{"vectors":[{"field":"embedding","feature":${flat.mkString("[", ",", "]")}}],
         "index_params":{"recall_num":1048576},"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apipq", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
     "q_api_search_rabitq_batch" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.rbSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"rb_space","fields":[
+      val sp = """{"name":"rb_space","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"embedding","type":"vector","dimension":64,
              "index":{"type":"IVFRABITQ",
-                      "params":{"ncentroids":8,"nprobe":8,"qb":4}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
-      val flat = t(s, dir, "embeddings").filter(col("vec_id") < 3)
-        .orderBy(col("vec_id")).select(col("embedding")).collect()
-        .flatMap(_.getSeq[Float](0))
+                      "params":{"ncentroids":8,"nprobe":8,"qb":4}}}]}"""
+      val flat = batchRows(s, dir).flatten
       val req = s"""{"vectors":[{"field":"embedding","feature":${flat.mkString("[", ",", "]")}}],
         "index_params":{"recall_num":1048576},"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apirb", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
@@ -293,19 +263,13 @@ private[graft] object ApiEntries {
     // exact per-qid Hamming top-k, re-derived bit-by-bit in DuckDB
     "q_api_search_binaryivf_batch" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.binarySpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"bivf_space","fields":[
+      val sp = """{"name":"bivf_space","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"embedding","type":"vector","dimension":64,
-             "index":{"type":"BINARYIVF","params":{"ncentroids":8,"nprobe":8}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
-      val flat = t(s, dir, "embeddings").filter(col("vec_id") < 3)
-        .orderBy(col("vec_id")).select(col("embedding")).collect()
-        .flatMap(_.getSeq[Float](0))
+             "index":{"type":"BINARYIVF","params":{"ncentroids":8,"nprobe":8}}}]}"""
+      val flat = batchRows(s, dir).flatten
       val req = s"""{"vectors":[{"field":"embedding","feature":${flat.mkString("[", ",", "]")}}],"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apibivf", sp, req)
     }),
 
     // ── §2.2+§2.4 ROUTED API search over a SPANN-CLUSTERED HNSW space:
@@ -315,17 +279,13 @@ private[graft] object ApiEntries {
     //    clustered lifecycle + routing stack is oracle-checked ──
     "q_api_search_hnsw_routed" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.hnswRoutedSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"hnswr_space","fields":[
+      val sp = """{"name":"hnswr_space","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"embedding","type":"vector","dimension":64,
              "index":{"type":"HNSW",
-                      "params":{"nlinks":16,"efConstruction":100,"efSearch":1000000}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
+                      "params":{"nlinks":16,"efConstruction":100,"efSearch":1000000}}}]}"""
       val req = s"""{"vectors":[{"field":"embedding","feature":${qvec(s, dir).mkString("[", ",", "]")}}],"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apihnswr", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
@@ -336,18 +296,14 @@ private[graft] object ApiEntries {
     //    nprobe = ncentroids + recall_num ≥ corpus ⇒ exact, oracled ──
     "q_api_search_ivfpq" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.pqSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"pq_space","fields":[
+      val sp = """{"name":"pq_space","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"embedding","type":"vector","dimension":64,
              "index":{"type":"IVFPQ",
-                      "params":{"ncentroids":8,"nprobe":8,"nsubvector":8}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
+                      "params":{"ncentroids":8,"nprobe":8,"nsubvector":8}}}]}"""
       val req = s"""{"vectors":[{"field":"embedding","feature":${qvec(s, dir).mkString("[", ",", "]")}}],
         "index_params":{"recall_num":1048576},"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apipq", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
@@ -357,18 +313,14 @@ private[graft] object ApiEntries {
     //    rerank ⇒ exact, oracled ──
     "q_api_search_rabitq" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.rbSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"rb_space","fields":[
+      val sp = """{"name":"rb_space","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"embedding","type":"vector","dimension":64,
              "index":{"type":"IVFRABITQ",
-                      "params":{"ncentroids":8,"nprobe":8,"qb":4}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
+                      "params":{"ncentroids":8,"nprobe":8,"qb":4}}}]}"""
       val req = s"""{"vectors":[{"field":"embedding","feature":${qvec(s, dir).mkString("[", ",", "]")}}],
         "index_params":{"recall_num":1048576},"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apirb", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
@@ -379,16 +331,12 @@ private[graft] object ApiEntries {
     //    Hamming top-k, re-derived bit-by-bit in DuckDB ──
     "q_api_search_binaryivf" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.binarySpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"bivf_space","fields":[
+      val sp = """{"name":"bivf_space","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"embedding","type":"vector","dimension":64,
-             "index":{"type":"BINARYIVF","params":{"ncentroids":8,"nprobe":8}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
+             "index":{"type":"BINARYIVF","params":{"ncentroids":8,"nprobe":8}}}]}"""
       val req = s"""{"vectors":[{"field":"embedding","feature":${qvec(s, dir).mkString("[", ",", "]")}}],"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apibivf", sp, req)
     }),
 
     // ── §2.2+§2.4 ROUTED API search over a DISKANN_STATIC space — the
@@ -397,18 +345,14 @@ private[graft] object ApiEntries {
     //    ⇒ exact, so the routing stack is oracle-checked ──
     "q_api_search_diskann" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.vamanaSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"vam_space","fields":[
+      val sp = """{"name":"vam_space","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"embedding","type":"vector","dimension":64,
              "index":{"type":"DISKANN_STATIC",
-                      "params":{"R":32,"L":64,"beam_width":4}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
+                      "params":{"R":32,"L":64,"beam_width":4}}}]}"""
       val req = s"""{"vectors":[{"field":"embedding","feature":${qvec(s, dir).mkString("[", ",", "]")}}],
         "index_params":{"l_search":1048576},"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apivam", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
@@ -421,18 +365,14 @@ private[graft] object ApiEntries {
     //    pruned-IO layout it needs most at scale ──
     "q_api_search_diskann_routed" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.vamanaRoutedSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"vamr_space","fields":[
+      val sp = """{"name":"vamr_space","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"embedding","type":"vector","dimension":64,
              "index":{"type":"DISKANN_STATIC",
-                      "params":{"R":32,"L":64,"beam_width":4}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
+                      "params":{"R":32,"L":64,"beam_width":4}}}]}"""
       val req = s"""{"vectors":[{"field":"embedding","feature":${qvec(s, dir).mkString("[", ",", "]")}}],
         "index_params":{"l_search":1048576},"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apivamr", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
@@ -445,21 +385,15 @@ private[graft] object ApiEntries {
     //    per-qid blocks, oracle-checked ──
     "q_api_search_diskann_batch" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.vamanaSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"vam_space_b","fields":[
+      val sp = """{"name":"vam_space_b","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"embedding","type":"vector","dimension":64,
              "index":{"type":"DISKANN_STATIC",
-                      "params":{"R":32,"L":64,"beam_width":4}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
-      val flat = t(s, dir, "embeddings").filter(col("vec_id") < 3)
-        .orderBy(col("vec_id")).select(col("embedding")).collect()
-        .flatMap(_.getSeq[Float](0))
+                      "params":{"R":32,"L":64,"beam_width":4}}}]}"""
+      val flat = batchRows(s, dir).flatten
       val req = s"""{"vectors":[{"field":"embedding","feature":${flat.mkString("[", ",", "]")}}],
         "index_params":{"l_search":1048576},"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apivam", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
@@ -470,21 +404,15 @@ private[graft] object ApiEntries {
     //    exact per-qid, oracled ──
     "q_api_search_diskann_routed_batch" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.vamanaRoutedSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"vamr_space_b","fields":[
+      val sp = """{"name":"vamr_space_b","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"embedding","type":"vector","dimension":64,
              "index":{"type":"DISKANN_STATIC",
-                      "params":{"R":32,"L":64,"beam_width":4}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
-      val flat = t(s, dir, "embeddings").filter(col("vec_id") < 3)
-        .orderBy(col("vec_id")).select(col("embedding")).collect()
-        .flatMap(_.getSeq[Float](0))
+                      "params":{"R":32,"L":64,"beam_width":4}}}]}"""
+      val flat = batchRows(s, dir).flatten
       val req = s"""{"vectors":[{"field":"embedding","feature":${flat.mkString("[", ",", "]")}}],
         "index_params":{"l_search":1048576},"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apivamr", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
@@ -494,20 +422,14 @@ private[graft] object ApiEntries {
     //    per-qid, oracled ──
     "q_api_search_hnsw_routed_batch" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.hnswRoutedSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"hnswr_space_b","fields":[
+      val sp = """{"name":"hnswr_space_b","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"embedding","type":"vector","dimension":64,
              "index":{"type":"HNSW",
-                      "params":{"nlinks":16,"efConstruction":100,"efSearch":1000000}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
-      val flat = t(s, dir, "embeddings").filter(col("vec_id") < 3)
-        .orderBy(col("vec_id")).select(col("embedding")).collect()
-        .flatMap(_.getSeq[Float](0))
+                      "params":{"nlinks":16,"efConstruction":100,"efSearch":1000000}}}]}"""
+      val flat = batchRows(s, dir).flatten
       val req = s"""{"vectors":[{"field":"embedding","feature":${flat.mkString("[", ",", "]")}}],"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apihnswr", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
@@ -522,20 +444,16 @@ private[graft] object ApiEntries {
     //    space); efSearch ≥ corpus + full probe ⇒ exact, oracled ──
     "q_api_search_hnsw_string" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.stringIdSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"str_hnsw","fields":[
+      val sp = """{"name":"str_hnsw","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"embedding","type":"vector","dimension":64,
              "index":{"type":"HNSW",
-                      "params":{"nlinks":16,"efConstruction":100,"efSearch":1000000}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
+                      "params":{"nlinks":16,"efConstruction":100,"efSearch":1000000}}}]}"""
       val req = s"""{"vectors":[{"field":"embedding","feature":${qvec(s, dir).mkString("[", ",", "]")}}],
         "filters":{"operator":"AND","conditions":[
           {"operator":"IN","field":"label","value":[1,3,5]}]},
         "limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apistr", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
@@ -548,18 +466,14 @@ private[graft] object ApiEntries {
     //    whole INT8 route is oracle-checked ──
     "q_api_search_ivf_int8" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.int8IvfSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"i8_ivf","fields":[
+      val sp = """{"name":"i8_ivf","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"iv","type":"vector","dimension":64,"value_type":"int8",
              "index":{"type":"IVFFLAT",
                       "params":{"ncentroids":8,"nprobe":8,
-                                "metric_type":"InnerProduct"}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
+                                "metric_type":"InnerProduct"}}}]}"""
       val req = s"""{"vectors":[{"field":"iv","feature":${qvec(s, dir).mkString("[", ",", "]")}}],"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apii8ivf", sp, req)
     }),
 
     // ── §2.4 INT8 BATCHED route: req_num=3 float queries quantize once,
@@ -568,21 +482,15 @@ private[graft] object ApiEntries {
     //    kernels; full probe ⇒ exact per-qid blocks ──
     "q_api_search_ivf_int8_batch" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.int8IvfSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"i8_ivf_b","fields":[
+      val sp = """{"name":"i8_ivf_b","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"iv","type":"vector","dimension":64,"value_type":"int8",
              "index":{"type":"IVFFLAT",
                       "params":{"ncentroids":8,"nprobe":8,
-                                "metric_type":"InnerProduct"}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
-      val flat = t(s, dir, "embeddings").filter(col("vec_id") < 3)
-        .orderBy(col("vec_id")).select(col("embedding")).collect()
-        .flatMap(_.getSeq[Float](0))
+                                "metric_type":"InnerProduct"}}}]}"""
+      val flat = batchRows(s, dir).flatten
       val req = s"""{"vectors":[{"field":"iv","feature":${flat.mkString("[", ",", "]")}}],"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apii8ivf", sp, req)
     }),
 
     // ── §2.4 INT8 through the ROUTED GRAPH planner (round-16 sweep: the
@@ -593,19 +501,15 @@ private[graft] object ApiEntries {
     //    bit-for-bit; efSearch ≥ corpus ⇒ exact, whole route oracled ──
     "q_api_search_hnsw_int8" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.int8HnswSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"i8_hnsw","fields":[
+      val sp = """{"name":"i8_hnsw","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"iv","type":"vector","dimension":64,"value_type":"int8",
              "index":{"type":"HNSW",
                       "params":{"nlinks":16,"efConstruction":100,
                                 "efSearch":1000000,
-                                "metric_type":"InnerProduct"}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
+                                "metric_type":"InnerProduct"}}}]}"""
       val req = s"""{"vectors":[{"field":"iv","feature":${qvec(s, dir).mkString("[", ",", "]")}}],"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apii8hnsw", sp, req)
     }),
 
     // ── INT8 BATCHED graph route: req_num=3 queries quantize once and
@@ -613,22 +517,16 @@ private[graft] object ApiEntries {
     //    amortized across the batch); per-qid exact blocks oracled ──
     "q_api_search_hnsw_int8_batch" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.int8HnswSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"i8_hnsw_b","fields":[
+      val sp = """{"name":"i8_hnsw_b","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"iv","type":"vector","dimension":64,"value_type":"int8",
              "index":{"type":"HNSW",
                       "params":{"nlinks":16,"efConstruction":100,
                                 "efSearch":1000000,
-                                "metric_type":"InnerProduct"}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
-      val flat = t(s, dir, "embeddings").filter(col("vec_id") < 3)
-        .orderBy(col("vec_id")).select(col("embedding")).collect()
-        .flatMap(_.getSeq[Float](0))
+                                "metric_type":"InnerProduct"}}}]}"""
+      val flat = batchRows(s, dir).flatten
       val req = s"""{"vectors":[{"field":"iv","feature":${flat.mkString("[", ",", "]")}}],"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apii8hnsw", sp, req)
     }),
 
     // ── INT8 through the COMPRESSED family (IVFPQ): ADC shortlist over
@@ -636,39 +534,29 @@ private[graft] object ApiEntries {
     //    INTEGER kernels; full probe + recall_num ≥ corpus ⇒ exact ──
     "q_api_search_ivfpq_int8" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.int8IvfPqSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"i8_ivfpq","fields":[
+      val sp = """{"name":"i8_ivfpq","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"iv","type":"vector","dimension":64,"value_type":"int8",
              "index":{"type":"IVFPQ",
                       "params":{"ncentroids":8,"nprobe":8,
                                 "recall_num":1000000,
-                                "metric_type":"InnerProduct"}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
+                                "metric_type":"InnerProduct"}}}]}"""
       val req = s"""{"vectors":[{"field":"iv","feature":${qvec(s, dir).mkString("[", ",", "]")}}],"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apii8ivfpq", sp, req)
     }),
 
     "q_api_search_ivfpq_int8_batch" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.int8IvfPqSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"i8_ivfpq_b","fields":[
+      val sp = """{"name":"i8_ivfpq_b","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"iv","type":"vector","dimension":64,"value_type":"int8",
              "index":{"type":"IVFPQ",
                       "params":{"ncentroids":8,"nprobe":8,
                                 "recall_num":1000000,
-                                "metric_type":"InnerProduct"}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
-      val flat = t(s, dir, "embeddings").filter(col("vec_id") < 3)
-        .orderBy(col("vec_id")).select(col("embedding")).collect()
-        .flatMap(_.getSeq[Float](0))
+                                "metric_type":"InnerProduct"}}}]}"""
+      val flat = batchRows(s, dir).flatten
       val req = s"""{"vectors":[{"field":"iv","feature":${flat.mkString("[", ",", "]")}}],"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apii8ivfpq", sp, req)
     }),
 
     // ── INT8 through IVFRABITQ (residual sign codes in the raw-code
@@ -676,38 +564,30 @@ private[graft] object ApiEntries {
     //    with this, INT8 rides EVERY non-binary index family ──
     "q_api_search_rabitq_int8" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.int8RabitqSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"i8_rb","fields":[
+      val sp = """{"name":"i8_rb","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"iv","type":"vector","dimension":64,"value_type":"int8",
              "index":{"type":"IVFRABITQ",
                       "params":{"ncentroids":8,"nprobe":8,
-                                "metric_type":"InnerProduct"}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
+                                "metric_type":"InnerProduct"}}}]}"""
       val req = s"""{"vectors":[{"field":"iv","feature":${qvec(s, dir).mkString("[", ",", "]")}}],
         "index_params":{"recall_num":1048576},"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apii8rb", sp, req)
     }),
 
     // ── INT8 through SCANN (anisotropic codebooks in the raw-code
     //    domain, integer-kernel rerank); deep recall_num ⇒ exact ──
     "q_api_search_scann_int8" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.int8ScannSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"i8_scann","fields":[
+      val sp = """{"name":"i8_scann","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"iv","type":"vector","dimension":64,"value_type":"int8",
              "index":{"type":"SCANN",
                       "params":{"ncentroids":8,"nprobe":8,
-                                "metric_type":"InnerProduct"}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
+                                "metric_type":"InnerProduct"}}}]}"""
       val req = s"""{"vectors":[{"field":"iv","feature":${qvec(s, dir).mkString("[", ",", "]")}}],
         "index_params":{"recall_num":1048576},"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apii8scann", sp, req)
     }),
 
     // ── INT8 through the DISKANN_STATIC (Vamana) route — the third
@@ -715,37 +595,27 @@ private[graft] object ApiEntries {
     //    walk); L ≥ corpus ⇒ exact, oracled like the others ──
     "q_api_search_diskann_int8" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.int8VamanaSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"i8_diskann","fields":[
+      val sp = """{"name":"i8_diskann","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"iv","type":"vector","dimension":64,"value_type":"int8",
              "index":{"type":"DISKANN_STATIC",
                       "params":{"R":32,"L":1000000,"beam_width":4,
-                                "metric_type":"InnerProduct"}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
+                                "metric_type":"InnerProduct"}}}]}"""
       val req = s"""{"vectors":[{"field":"iv","feature":${qvec(s, dir).mkString("[", ",", "]")}}],"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apii8vamana", sp, req)
     }),
 
     "q_api_search_diskann_int8_batch" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.int8VamanaSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"i8_diskann_b","fields":[
+      val sp = """{"name":"i8_diskann_b","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"iv","type":"vector","dimension":64,"value_type":"int8",
              "index":{"type":"DISKANN_STATIC",
                       "params":{"R":32,"L":1000000,"beam_width":4,
-                                "metric_type":"InnerProduct"}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
-      val flat = t(s, dir, "embeddings").filter(col("vec_id") < 3)
-        .orderBy(col("vec_id")).select(col("embedding")).collect()
-        .flatMap(_.getSeq[Float](0))
+                                "metric_type":"InnerProduct"}}}]}"""
+      val flat = batchRows(s, dir).flatten
       val req = s"""{"vectors":[{"field":"iv","feature":${flat.mkString("[", ",", "]")}}],"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apii8vamana", sp, req)
     }),
 
     // ── string-PK BATCHED graph route: req_num=3 through the batched
@@ -754,20 +624,14 @@ private[graft] object ApiEntries {
     //    per-qid blocks, oracled ──
     "q_api_search_hnsw_string_batch" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.stringIdSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"str_hnsw_b","fields":[
+      val sp = """{"name":"str_hnsw_b","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"embedding","type":"vector","dimension":64,
              "index":{"type":"HNSW",
-                      "params":{"nlinks":16,"efConstruction":100,"efSearch":1000000}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
-      val flat = t(s, dir, "embeddings").filter(col("vec_id") < 3)
-        .orderBy(col("vec_id")).select(col("embedding")).collect()
-        .flatMap(_.getSeq[Float](0))
+                      "params":{"nlinks":16,"efConstruction":100,"efSearch":1000000}}}]}"""
+      val flat = batchRows(s, dir).flatten
       val req = s"""{"vectors":[{"field":"embedding","feature":${flat.mkString("[", ",", "]")}}],"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apistr", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
@@ -775,17 +639,13 @@ private[graft] object ApiEntries {
     //    string _id, the deny gate keys on _docid; full probe ⇒ exact ──
     "q_api_search_ivf_string" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.stringIdSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"str_ivf","fields":[
+      val sp = """{"name":"str_ivf","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"embedding","type":"vector","dimension":64,
              "index":{"type":"IVFFLAT",
-                      "params":{"ncentroids":16,"nprobe":16}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
+                      "params":{"ncentroids":16,"nprobe":16}}}]}"""
       val req = s"""{"vectors":[{"field":"embedding","feature":${qvec(s, dir).mkString("[", ",", "]")}}],"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apistr", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
@@ -796,35 +656,27 @@ private[graft] object ApiEntries {
     //    id); full probe ⇒ exact, same oracle as the sidecar twin ──
     "q_api_search_ivf_nodocid" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.ridFreeSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"nodocid_ivf","fields":[
+      val sp = """{"name":"nodocid_ivf","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"embedding","type":"vector","dimension":64,
              "index":{"type":"IVFFLAT",
-                      "params":{"ncentroids":16,"nprobe":16}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
+                      "params":{"ncentroids":16,"nprobe":16}}}]}"""
       val req = s"""{"vectors":[{"field":"embedding","feature":${qvec(s, dir).mkString("[", ",", "]")}}],"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apinodocid", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
     // ── string-PK through the Vamana (DISKANN_STATIC) route ──
     "q_api_search_diskann_string" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.stringIdSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"str_vam","fields":[
+      val sp = """{"name":"str_vam","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"embedding","type":"vector","dimension":64,
              "index":{"type":"DISKANN_STATIC",
-                      "params":{"R":32,"L":64,"beam_width":4}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
+                      "params":{"R":32,"L":64,"beam_width":4}}}]}"""
       val req = s"""{"vectors":[{"field":"embedding","feature":${qvec(s, dir).mkString("[", ",", "]")}}],
         "index_params":{"l_search":1048576},"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apistr", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
@@ -839,10 +691,7 @@ private[graft] object ApiEntries {
     //    against the brute weighted intersection ──
     "q_api_search_multivec_routed" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.multiFieldSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"mv_space","fields":[
+      val sp = """{"name":"mv_space","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"v1","type":"vector","dimension":32,
              "index":{"type":"HNSW",
@@ -851,14 +700,13 @@ private[graft] object ApiEntries {
             {"name":"v2","type":"vector","dimension":32,
              "index":{"type":"HNSW",
                       "params":{"nlinks":16,"efConstruction":100,
-                                "metric_type":"InnerProduct"}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
+                                "metric_type":"InnerProduct"}}}]}"""
       val q = qvec(s, dir)
       val req = s"""{"vectors":[
           {"field":"v1","feature":${q.take(32).mkString("[", ",", "]")}},
           {"field":"v2","feature":${q.drop(32).mkString("[", ",", "]")}}],
         "index_params":{"efSearch":1048576},"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apimv", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
@@ -869,17 +717,13 @@ private[graft] object ApiEntries {
     //    exact, oracled ──
     "q_api_search_ssg" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.vamanaSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"ssg_space","fields":[
+      val sp = """{"name":"ssg_space","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"embedding","type":"vector","dimension":64,
-             "index":{"type":"SSG"}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
+             "index":{"type":"SSG"}}]}"""
       val req = s"""{"vectors":[{"field":"embedding","feature":${qvec(s, dir).mkString("[", ",", "]")}}],
         "index_params":{"l_search":1048576},"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apivam", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
@@ -891,17 +735,13 @@ private[graft] object ApiEntries {
     //    probe + full-depth rerank ⇒ exact, oracle-checked ──
     "q_api_search_scann" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.scannSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"scann_space","fields":[
+      val sp = """{"name":"scann_space","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"embedding","type":"vector","dimension":64,
-             "index":{"type":"SCANN","params":{"ncentroids":8,"nprobe":8}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
+             "index":{"type":"SCANN","params":{"ncentroids":8,"nprobe":8}}}]}"""
       val req = s"""{"vectors":[{"field":"embedding","feature":${qvec(s, dir).mkString("[", ",", "]")}}],
         "index_params":{"recall_num":1048576},"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apiscann2", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 

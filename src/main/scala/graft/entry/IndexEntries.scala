@@ -29,7 +29,7 @@ private[graft] object IndexEntries {
     //    q_ivf_exact/q_ivf_filtered stay oracled below) ──
     "q_ivf_search" -> ((s, dir) => {
       init(s)
-      val (table, model) = graft.sources.IndexStore.ivfFixed(s, dir, nc = 16)
+      val (table, model) = graft.sources.IndexStore.ivfFixed(s, dir)
       IvfIndex.search(table, col("embedding"), model, qvec(s, dir),
         k = 10, nprobe = 4, tieBreak = Some(col("vec_id")), roundTo = Some(4))
         .select(col("vec_id"), col("_score").as("score"))
@@ -39,7 +39,7 @@ private[graft] object IndexEntries {
     //    nprobe = ncentroids ≡ exact batch KNN (oracle-checked) ──
     "q_ivf_batch" -> ((s, dir) => {
       init(s)
-      val (table, model) = graft.sources.IndexStore.ivfFlat(s, dir, ncentroids = 16)
+      val (table, model) = graft.sources.IndexStore.ivfFlat(s, dir)
       val queries = t(s, dir, "embeddings").filter(col("vec_id") < 5)
         .select(col("vec_id"), col("embedding")).collect()
         .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
@@ -55,7 +55,7 @@ private[graft] object IndexEntries {
     //    the scan); exactness params ≡ filtered exact KNN (oracle) ──
     "q_ivf_filtered" -> ((s, dir) => {
       init(s)
-      val (table, model) = graft.sources.IndexStore.ivfFlat(s, dir, ncentroids = 16)
+      val (table, model) = graft.sources.IndexStore.ivfFlat(s, dir)
       IvfIndex.search(table, col("embedding"), model, qvec(s, dir),
         k = 10, nprobe = model.ncentroids,
         filter = Some(col("label").isin(1, 3, 5) && col("vec_id") =!= 0),
@@ -67,7 +67,7 @@ private[graft] object IndexEntries {
     //    proves the probe→score path end-to-end) ──
     "q_ivf_exact" -> ((s, dir) => {
       init(s)
-      val (table, model) = graft.sources.IndexStore.ivfFlat(s, dir, ncentroids = 16)
+      val (table, model) = graft.sources.IndexStore.ivfFlat(s, dir)
       IvfIndex.search(table, col("embedding"), model, qvec(s, dir),
         k = 10, nprobe = model.ncentroids,
         tieBreak = Some(col("vec_id")), roundTo = Some(4))
@@ -166,17 +166,13 @@ private[graft] object IndexEntries {
     //    deleted-bitmap gate (engine.cc:869-899) ──
     "q_hnsw_after_delete" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.apiDeleteSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"del_space","fields":[
+      val sp = """{"name":"del_space","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"embedding","type":"vector","dimension":64,
              "index":{"type":"HNSW",
-                      "params":{"nlinks":16,"efConstruction":100,"efSearch":1000000}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
+                      "params":{"nlinks":16,"efConstruction":100,"efSearch":1000000}}}]}"""
       val req = s"""{"vectors":[{"field":"embedding","feature":${qvec(s, dir).mkString("[", ",", "]")}}],"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apidel", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
@@ -187,17 +183,13 @@ private[graft] object IndexEntries {
     //    gate is oracle-checked end-to-end ──
     "q_ivf_after_delete" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.apiDeleteSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"del_space_ivf","fields":[
+      val sp = """{"name":"del_space_ivf","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"embedding","type":"vector","dimension":64,
              "index":{"type":"IVFFLAT",
-                      "params":{"ncentroids":16,"nprobe":16}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
+                      "params":{"ncentroids":16,"nprobe":16}}}]}"""
       val req = s"""{"vectors":[{"field":"embedding","feature":${qvec(s, dir).mkString("[", ",", "]")}}],"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apidel", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
@@ -207,7 +199,7 @@ private[graft] object IndexEntries {
     //    no loop; nprobe = ncentroids ⇒ oracle-exact ──
     "q_ivf_score_range" -> ((s, dir) => {
       init(s)
-      val (table, model) = graft.sources.IndexStore.ivfFlat(s, dir, ncentroids = 16)
+      val (table, model) = graft.sources.IndexStore.ivfFlat(s, dir)
       IvfIndex.search(table, col("embedding"), model, qvec(s, dir),
         k = 10, nprobe = model.ncentroids,
         minScore = Some(1.35), maxScore = Some(1.45),
@@ -221,18 +213,14 @@ private[graft] object IndexEntries {
     //    the gate sees every candidate's exact score ⇒ oracle-exact ──
     "q_ivfpq_score_range" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.pqSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"pq_space","fields":[
+      val sp = """{"name":"pq_space","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"embedding","type":"vector","dimension":64,
              "index":{"type":"IVFPQ",
-                      "params":{"ncentroids":8,"nprobe":8,"nsubvector":8}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
+                      "params":{"ncentroids":8,"nprobe":8,"nsubvector":8}}}]}"""
       val req = s"""{"vectors":[{"field":"embedding","feature":${qvec(s, dir).mkString("[", ",", "]")},
         "min_score":1.41}],"index_params":{"recall_num":1048576},"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apipq", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
@@ -269,20 +257,16 @@ private[graft] object IndexEntries {
     //    provably exact under the filter, oracle ≡ filtered exact KNN ──
     "q_diskann_filtered" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.vamanaSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"vam_space_f","fields":[
+      val sp = """{"name":"vam_space_f","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"embedding","type":"vector","dimension":64,
              "index":{"type":"DISKANN_STATIC",
-                      "params":{"R":32,"L":64,"beam_width":4}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
+                      "params":{"R":32,"L":64,"beam_width":4}}}]}"""
       val req = s"""{"vectors":[{"field":"embedding","feature":${qvec(s, dir).mkString("[", ",", "]")}}],
         "filters":{"operator":"AND","conditions":[
           {"operator":"IN","field":"label","value":[1,3,5]}]},
         "index_params":{"l_search":1048576},"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apivam", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
@@ -292,23 +276,17 @@ private[graft] object IndexEntries {
     //    full depth, oracled ──
     "q_diskann_filtered_batch" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.vamanaSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"vam_space_fb","fields":[
+      val sp = """{"name":"vam_space_fb","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"embedding","type":"vector","dimension":64,
              "index":{"type":"DISKANN_STATIC",
-                      "params":{"R":32,"L":64,"beam_width":4}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
-      val flat = t(s, dir, "embeddings").filter(col("vec_id") < 3)
-        .orderBy(col("vec_id")).select(col("embedding")).collect()
-        .flatMap(_.getSeq[Float](0))
+                      "params":{"R":32,"L":64,"beam_width":4}}}]}"""
+      val flat = batchRows(s, dir).flatten
       val req = s"""{"vectors":[{"field":"embedding","feature":${flat.mkString("[", ",", "]")}}],
         "filters":{"operator":"AND","conditions":[
           {"operator":"IN","field":"label","value":[1,3,5]}]},
         "index_params":{"l_search":1048576},"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apivam", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
@@ -318,33 +296,25 @@ private[graft] object IndexEntries {
     //    (or _id-gated) route returns it as a top-1 ghost ──
     "q_hnsw_string_after_delete" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.stringIdDeleteSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"str_del_h","fields":[
+      val sp = """{"name":"str_del_h","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"embedding","type":"vector","dimension":64,
              "index":{"type":"HNSW",
-                      "params":{"nlinks":16,"efConstruction":100,"efSearch":1000000}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
+                      "params":{"nlinks":16,"efConstruction":100,"efSearch":1000000}}}]}"""
       val req = s"""{"vectors":[{"field":"embedding","feature":${qvec(s, dir).mkString("[", ",", "]")}}],"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apistrdel", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
     "q_ivf_string_after_delete" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.stringIdDeleteSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"str_del_i","fields":[
+      val sp = """{"name":"str_del_i","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"embedding","type":"vector","dimension":64,
              "index":{"type":"IVFFLAT",
-                      "params":{"ncentroids":16,"nprobe":16}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
+                      "params":{"ncentroids":16,"nprobe":16}}}]}"""
       val req = s"""{"vectors":[{"field":"embedding","feature":${qvec(s, dir).mkString("[", ",", "]")}}],"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apistrdel", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
@@ -359,7 +329,7 @@ private[graft] object IndexEntries {
     "q_scann_search" -> ((s, dir) => {
       init(s)
       val (table, ivf, pq) = graft.sources.IndexStore
-        .scannFixed(s, dir, ncentroids = 8, m = 8, ksub = 16)
+        .scannFixed(s, dir)
       PqIndex.searchIvfResidual(table, col("embedding"), ivf, pq, qvec(s, dir),
         k = 10, nprobe = 4, recallNum = 100, idCol = col("vec_id"), roundTo = Some(4))
         .select(col("vec_id"), col("_score").as("score"))
@@ -375,7 +345,7 @@ private[graft] object IndexEntries {
     //    search code at exactness params) + RecallGateSpec ──
     "q_pq_search" -> ((s, dir) => {
       init(s)
-      val (table, model) = graft.sources.IndexStore.pqFixed(s, dir, m = 8, ksub = 16)
+      val (table, model) = graft.sources.IndexStore.pqFixed(s, dir)
       PqIndex.search(table, col("embedding"), model, qvec(s, dir),
         k = 10, recallNum = 50, idCol = col("vec_id"), roundTo = Some(4))
         .select(col("vec_id"), col("_score").as("score"))
@@ -385,7 +355,7 @@ private[graft] object IndexEntries {
     //    ADC shortlist → semi-join rerank end-to-end) ──
     "q_pq_exact" -> ((s, dir) => {
       init(s)
-      val (table, model) = graft.sources.IndexStore.pqFlat(s, dir, m = 8, ksub = 16)
+      val (table, model) = graft.sources.IndexStore.pqFlat(s, dir)
       PqIndex.search(table, col("embedding"), model, qvec(s, dir),
         k = 10, recallNum = 1 << 30, idCol = col("vec_id"), roundTo = Some(4))
         .select(col("vec_id"), col("_score").as("score"))
@@ -402,7 +372,7 @@ private[graft] object IndexEntries {
     "q_ivfpq_search" -> ((s, dir) => {
       init(s)
       val (table, ivf, pq) = graft.sources.IndexStore
-        .ivfPqResidualFixed(s, dir, ncentroids = 8, m = 8, ksub = 16)
+        .ivfPqResidualFixed(s, dir)
       PqIndex.searchIvfResidual(table, col("embedding"), ivf, pq, qvec(s, dir),
         k = 10, nprobe = 4, recallNum = 100, idCol = col("vec_id"), roundTo = Some(4))
         .select(col("vec_id"), col("_score").as("score"))
@@ -413,7 +383,7 @@ private[graft] object IndexEntries {
     "q_ivfpq_batch" -> ((s, dir) => {
       init(s)
       val (table, ivf, pq) = graft.sources.IndexStore
-        .ivfPqResidual(s, dir, ncentroids = 8, m = 8, ksub = 16)
+        .ivfPqResidual(s, dir)
       val queries = t(s, dir, "embeddings").filter(col("vec_id") < 5)
         .select(col("vec_id"), col("embedding")).collect()
         .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
@@ -429,7 +399,7 @@ private[graft] object IndexEntries {
     "q_ivfpq_exact" -> ((s, dir) => {
       init(s)
       val (table, ivf, pq) = graft.sources.IndexStore
-        .ivfPqResidual(s, dir, ncentroids = 8, m = 8, ksub = 16)
+        .ivfPqResidual(s, dir)
       PqIndex.searchIvfResidual(table, col("embedding"), ivf, pq, qvec(s, dir),
         k = 10, nprobe = ivf.ncentroids, recallNum = 1 << 30,
         idCol = col("vec_id"), roundTo = Some(4))
@@ -489,7 +459,7 @@ private[graft] object IndexEntries {
       // the constant, not the operator, is the fix); the sign-estimator
       // shortlist BOUNDARY keeps its own oracled operating points
       // (q_rabitq_search, q_binary_rerank)
-      val (table, ivf) = graft.sources.IndexStore.binaryIvfFixed(s, dir, nc = 16)
+      val (table, ivf) = graft.sources.IndexStore.binaryIvfFixed(s, dir)
       graft.operators.BinaryIndex.searchIvfResidual(table, col("embedding"), ivf,
         qvec(s, dir), k = 10, nprobe = 4, shortlist = 1 << 20,
         idCol = col("vec_id"), qb = 4, roundTo = Some(4))
@@ -499,7 +469,7 @@ private[graft] object IndexEntries {
     // ── §2.4 IVFRABITQ at exactness params ≡ exact KNN (oracle-checked) ──
     "q_rabitq_ivf_exact" -> ((s, dir) => {
       init(s)
-      val (table, ivf) = graft.sources.IndexStore.binaryIvf(s, dir, ncentroids = 16)
+      val (table, ivf) = graft.sources.IndexStore.binaryIvf(s, dir)
       graft.operators.BinaryIndex.searchIvfResidual(table, col("embedding"), ivf,
         qvec(s, dir), k = 10, nprobe = ivf.ncentroids, shortlist = 1 << 30,
         idCol = col("vec_id"), qb = 4, roundTo = Some(4))

@@ -196,7 +196,7 @@ private[graft] object KnnEntries {
       init(s)
       // build-once layout (reference build-vs-search split): the query
       // times probe-join + exact verify, never the KMeans fit
-      val (ndTable, ndModel) = graft.sources.IndexStore.neardupIvf(s, dir, ncentroids = 16)
+      val (ndTable, ndModel) = graft.sources.IndexStore.neardupIvf(s, dir)
       Dedup.embeddingNearDupKnnPrebuilt(ndTable, ndModel, "vec_id", "embedding",
         threshold = 0.4, nprobe = 16)
         .select(col("id_a"), col("id_b"), round(col("cos"), 4).as("cos"))
@@ -239,18 +239,14 @@ private[graft] object KnnEntries {
     //    oracle-exact (gate-before-select) ──
     "q_knn_score_range_routed" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.hnswSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"hnsw_space","fields":[
+      val sp = """{"name":"hnsw_space","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"embedding","type":"vector","dimension":64,
              "index":{"type":"HNSW",
-                      "params":{"nlinks":16,"efConstruction":100,"efSearch":1000000}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
+                      "params":{"nlinks":16,"efConstruction":100,"efSearch":1000000}}}]}"""
       val req = s"""{"vectors":[{"field":"embedding","feature":${qvec(s, dir).mkString("[", ",", "]")},
         "min_score":1.41}],"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apihnsw", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
@@ -261,21 +257,15 @@ private[graft] object KnnEntries {
     //    exhausts — per-qid oracle-exact ──
     "q_knn_score_range_batch" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.hnswSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"hnsw_space","fields":[
+      val sp = """{"name":"hnsw_space","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"embedding","type":"vector","dimension":64,
              "index":{"type":"HNSW",
-                      "params":{"nlinks":16,"efConstruction":100,"efSearch":1000000}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
-      val flat = t(s, dir, "embeddings").filter(col("vec_id") < 3)
-        .orderBy(col("vec_id")).select(col("embedding")).collect()
-        .flatMap(_.getSeq[Float](0))
+                      "params":{"nlinks":16,"efConstruction":100,"efSearch":1000000}}}]}"""
+      val flat = batchRows(s, dir).flatten
       val req = s"""{"vectors":[{"field":"embedding","feature":${flat.mkString("[", ",", "]")},
         "min_score":1.41}],"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apihnsw", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
@@ -288,10 +278,7 @@ private[graft] object KnnEntries {
     //    each leg exact ⇒ the composition shares the brute oracle ──
     "q_knn_multivec_mixed_routed_exact" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.multiFieldMixedSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"mv_mixed","fields":[
+      val sp = """{"name":"mv_mixed","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"v1","type":"vector","dimension":32,
              "index":{"type":"HNSW",
@@ -300,14 +287,13 @@ private[graft] object KnnEntries {
             {"name":"v2","type":"vector","dimension":32,
              "index":{"type":"IVFFLAT",
                       "params":{"ncentroids":8,"nprobe":8,
-                                "metric_type":"InnerProduct"}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
+                                "metric_type":"InnerProduct"}}}]}"""
       val q = qvec(s, dir)
       val req = s"""{"vectors":[
           {"field":"v1","feature":${q.take(32).mkString("[", ",", "]")}},
           {"field":"v2","feature":${q.drop(32).mkString("[", ",", "]")}}],
         "index_params":{"efSearch":1048576},"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apimvmixed", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
@@ -319,10 +305,7 @@ private[graft] object KnnEntries {
     //    Full probe + corpus-deep recall ⇒ both legs exact, oracled ──
     "q_knn_multivec_pq_routed_exact" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.multiFieldPqSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"mv_pq","fields":[
+      val sp = """{"name":"mv_pq","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"v1","type":"vector","dimension":32,
              "index":{"type":"IVFPQ",
@@ -331,14 +314,13 @@ private[graft] object KnnEntries {
             {"name":"v2","type":"vector","dimension":32,
              "index":{"type":"IVFRABITQ",
                       "params":{"ncentroids":8,"nprobe":8,
-                                "metric_type":"InnerProduct"}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
+                                "metric_type":"InnerProduct"}}}]}"""
       val q = qvec(s, dir)
       val req = s"""{"vectors":[
           {"field":"v1","feature":${q.take(32).mkString("[", ",", "]")}},
           {"field":"v2","feature":${q.drop(32).mkString("[", ",", "]")}}],
         "index_params":{"recall_num":1048576},"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apimvpq", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
@@ -350,10 +332,7 @@ private[graft] object KnnEntries {
     //    nprobe = ncentroids ⇒ both legs exact, whole route oracled ──
     "q_knn_multivec_int8_routed_exact" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.multiFieldInt8Space(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"mv_i8r","fields":[
+      val sp = """{"name":"mv_i8r","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"iv1","type":"vector","dimension":32,"value_type":"int8",
              "index":{"type":"HNSW",
@@ -362,14 +341,13 @@ private[graft] object KnnEntries {
             {"name":"iv2","type":"vector","dimension":32,"value_type":"int8",
              "index":{"type":"IVFFLAT",
                       "params":{"ncentroids":8,"nprobe":8,
-                                "metric_type":"InnerProduct"}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
+                                "metric_type":"InnerProduct"}}}]}"""
       val q = qvec(s, dir)
       val req = s"""{"vectors":[
           {"field":"iv1","feature":${q.take(32).mkString("[", ",", "]")}},
           {"field":"iv2","feature":${q.drop(32).mkString("[", ",", "]")}}],
         "index_params":{"efSearch":1048576},"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apimvint8", sp, req)
     }),
 
     // ── §2.3+§2.4 SCALAR-FILTERED mixed-family conjunction through the
@@ -379,10 +357,7 @@ private[graft] object KnnEntries {
     //    params ⇒ equals the filtered brute conjunction, oracled ──
     "q_knn_multivec_filtered_routed_exact" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.multiFieldMixedSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"mv_mixed_f","fields":[
+      val sp = """{"name":"mv_mixed_f","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"v1","type":"vector","dimension":32,
              "index":{"type":"HNSW",
@@ -391,8 +366,7 @@ private[graft] object KnnEntries {
             {"name":"v2","type":"vector","dimension":32,
              "index":{"type":"IVFFLAT",
                       "params":{"ncentroids":8,"nprobe":8,
-                                "metric_type":"InnerProduct"}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
+                                "metric_type":"InnerProduct"}}}]}"""
       val q = qvec(s, dir)
       val req = s"""{"vectors":[
           {"field":"v1","feature":${q.take(32).mkString("[", ",", "]")}},
@@ -400,7 +374,7 @@ private[graft] object KnnEntries {
         "filters":{"operator":"AND","conditions":[
           {"operator":"IN","field":"label","value":[1,3,5]}]},
         "index_params":{"efSearch":1048576},"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apimvmixed", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
@@ -411,10 +385,7 @@ private[graft] object KnnEntries {
     //    loop; exact params ⇒ equals the gated brute conjunction ──
     "q_knn_multivec_gated_routed_exact" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.multiFieldMixedSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"mv_mixed_g","fields":[
+      val sp = """{"name":"mv_mixed_g","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"v1","type":"vector","dimension":32,
              "index":{"type":"HNSW",
@@ -423,8 +394,7 @@ private[graft] object KnnEntries {
             {"name":"v2","type":"vector","dimension":32,
              "index":{"type":"IVFFLAT",
                       "params":{"ncentroids":8,"nprobe":8,
-                                "metric_type":"InnerProduct"}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
+                                "metric_type":"InnerProduct"}}}]}"""
       val q = qvec(s, dir)
       val req = s"""{"vectors":[
           {"field":"v1","feature":${q.take(32).mkString("[", ",", "]")},
@@ -432,7 +402,7 @@ private[graft] object KnnEntries {
           {"field":"v2","feature":${q.drop(32).mkString("[", ",", "]")},
            "min_score":0.05}],
         "index_params":{"efSearch":1048576},"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apimvmixed", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
@@ -444,10 +414,7 @@ private[graft] object KnnEntries {
     //    params ⇒ equals the per-qid brute conjunction, oracled ──
     "q_knn_multivec_batch_routed_exact" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.multiFieldMixedSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"mv_mixed_b","fields":[
+      val sp = """{"name":"mv_mixed_b","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"v1","type":"vector","dimension":32,
              "index":{"type":"HNSW",
@@ -456,18 +423,15 @@ private[graft] object KnnEntries {
             {"name":"v2","type":"vector","dimension":32,
              "index":{"type":"IVFFLAT",
                       "params":{"ncentroids":8,"nprobe":8,
-                                "metric_type":"InnerProduct"}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
-      val qrows = t(s, dir, "embeddings").filter(col("vec_id") < 3)
-        .orderBy(col("vec_id")).select(col("embedding")).collect()
-        .map(_.getSeq[Float](0))
+                                "metric_type":"InnerProduct"}}}]}"""
+      val qrows = batchRows(s, dir)
       val f1 = qrows.flatMap(_.take(32))
       val f2 = qrows.flatMap(_.drop(32))
       val req = s"""{"vectors":[
           {"field":"v1","feature":${f1.mkString("[", ",", "]")}},
           {"field":"v2","feature":${f2.mkString("[", ",", "]")}}],
         "index_params":{"efSearch":1048576},"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apimvmixed", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
@@ -477,10 +441,7 @@ private[graft] object KnnEntries {
     //    intersection; exact operating points ⇒ oracled per-qid blocks ──
     "q_knn_multivec_pq_batch_routed_exact" -> ((s, dir) => {
       init(s)
-      val spacePath = graft.sources.IndexStore.multiFieldPqSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"mv_pq_b","fields":[
+      val sp = """{"name":"mv_pq_b","fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"v1","type":"vector","dimension":32,
              "index":{"type":"IVFPQ",
@@ -489,18 +450,15 @@ private[graft] object KnnEntries {
             {"name":"v2","type":"vector","dimension":32,
              "index":{"type":"IVFRABITQ",
                       "params":{"ncentroids":8,"nprobe":8,
-                                "metric_type":"InnerProduct"}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
-      val qrows = t(s, dir, "embeddings").filter(col("vec_id") < 3)
-        .orderBy(col("vec_id")).select(col("embedding")).collect()
-        .map(_.getSeq[Float](0))
+                                "metric_type":"InnerProduct"}}}]}"""
+      val qrows = batchRows(s, dir)
       val f1 = qrows.flatMap(_.take(32))
       val f2 = qrows.flatMap(_.drop(32))
       val req = s"""{"vectors":[
           {"field":"v1","feature":${f1.mkString("[", ",", "]")}},
           {"field":"v2","feature":${f2.mkString("[", ",", "]")}}],
         "index_params":{"recall_num":1048576},"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc)
+      searchFixture(s, dir, "apimvpq", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
@@ -536,7 +494,7 @@ private[graft] object KnnEntries {
     //    bounded-heap top-k per query. No driver collect of either side ──
     "q_knn_join" -> ((s, dir) => {
       init(s)
-      val (table, model) = graft.sources.IndexStore.ivfFlat(s, dir, ncentroids = 16)
+      val (table, model) = graft.sources.IndexStore.ivfFlat(s, dir)
       val queries = t(s, dir, "embeddings").filter(col("vec_id") < 5)
         .select(col("vec_id"), col("embedding"))
       KnnJoin.ivf(queries, "vec_id", "embedding",
@@ -556,7 +514,7 @@ private[graft] object KnnEntries {
     //    kmeans-trained exact twin q_knn_join stays oracled above ──
     "q_knn_join_ann" -> ((s, dir) => {
       init(s)
-      val (table, model) = graft.sources.IndexStore.ivfFixed(s, dir, nc = 16)
+      val (table, model) = graft.sources.IndexStore.ivfFixed(s, dir)
       val queries = t(s, dir, "embeddings").filter(col("vec_id") < 5)
         .select(col("vec_id"), col("embedding"))
       KnnJoin.ivf(queries, "vec_id", "embedding",

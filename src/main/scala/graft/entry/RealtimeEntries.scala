@@ -58,20 +58,13 @@ private[graft] object RealtimeEntries {
     //    view ≡ the full table ──
     "q_hnsw_string_realtime" -> ((s, dir) => {
       init(s)
-      val (spacePath, tailPath) =
-        graft.sources.IndexStore.stringIdRealtimeSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val rt = new graft.streaming.RealtimeTail(s, spacePath, tailPath,
-        s"$tailPath.ckpt", "_id", ridCol = Some("_docid"))
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"str_rt","fields":[
+      val sp = """{"name":"str_rt","enable_realtime":true,"fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"embedding","type":"vector","dimension":64,
              "index":{"type":"HNSW",
-                      "params":{"nlinks":16,"efConstruction":100,"efSearch":1000000}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
+                      "params":{"nlinks":16,"efConstruction":100,"efSearch":1000000}}}]}"""
       val req = s"""{"vectors":[{"field":"embedding","feature":${qvec(s, dir).mkString("[", ",", "]")}}],"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc, tail = Some(rt))
+      searchFixture(s, dir, "apistrrt", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
@@ -81,13 +74,7 @@ private[graft] object RealtimeEntries {
     //    query vector, so the intersection's top-1 is a buffered doc ──
     "q_api_search_multivec_realtime" -> ((s, dir) => {
       init(s)
-      val (spacePath, tailPath) =
-        graft.sources.IndexStore.multiFieldRealtimeSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val rt = new graft.streaming.RealtimeTail(s, spacePath, tailPath,
-        s"$tailPath.ckpt", "_id")
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"mv_rt","fields":[
+      val sp = """{"name":"mv_rt","enable_realtime":true,"fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"v1","type":"vector","dimension":32,
              "index":{"type":"HNSW",
@@ -96,14 +83,13 @@ private[graft] object RealtimeEntries {
             {"name":"v2","type":"vector","dimension":32,
              "index":{"type":"HNSW",
                       "params":{"nlinks":16,"efConstruction":100,
-                                "metric_type":"InnerProduct"}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
+                                "metric_type":"InnerProduct"}}}]}"""
       val q = qvec(s, dir)
       val req = s"""{"vectors":[
           {"field":"v1","feature":${q.take(32).mkString("[", ",", "]")}},
           {"field":"v2","feature":${q.drop(32).mkString("[", ",", "]")}}],
         "index_params":{"efSearch":1048576},"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc, tail = Some(rt))
+      searchFixture(s, dir, "apimvrt", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
@@ -119,19 +105,13 @@ private[graft] object RealtimeEntries {
     //    hash-oracle against plain exact top-k in DuckDB ──
     "q_ivf_realtime" -> ((s, dir) => {
       init(s)
-      val (spacePath, tailPath) = graft.sources.IndexStore.realtimeSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val rt = new graft.streaming.RealtimeTail(s, spacePath, tailPath,
-        s"$tailPath.ckpt", "_id")
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"rt_ivf","fields":[
+      val sp = """{"name":"rt_ivf","enable_realtime":true,"fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"embedding","type":"vector","dimension":64,
              "index":{"type":"IVFFLAT",
-                      "params":{"ncentroids":16,"nprobe":16}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
+                      "params":{"ncentroids":16,"nprobe":16}}}]}"""
       val req = s"""{"vectors":[{"field":"embedding","feature":${qvec(s, dir).mkString("[", ",", "]")}}],"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc, tail = Some(rt))
+      searchFixture(s, dir, "apirt", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
@@ -141,76 +121,51 @@ private[graft] object RealtimeEntries {
     //    plumbing end-to-end, not just a pre-split parquet pair ──
     "q_ivf_realtime_stream" -> ((s, dir) => {
       init(s)
-      val (spacePath, tailPath) =
-        graft.sources.IndexStore.realtimeStreamSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val rt = new graft.streaming.RealtimeTail(s, spacePath, tailPath,
-        s"$tailPath.ckpt", "_id")
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"rt_ivf_s","fields":[
+      val sp = """{"name":"rt_ivf_s","enable_realtime":true,"fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"embedding","type":"vector","dimension":64,
              "index":{"type":"IVFFLAT",
-                      "params":{"ncentroids":16,"nprobe":16}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
+                      "params":{"ncentroids":16,"nprobe":16}}}]}"""
       val req = s"""{"vectors":[{"field":"embedding","feature":${qvec(s, dir).mkString("[", ",", "]")}}],"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc, tail = Some(rt))
+      searchFixture(s, dir, "apirtstream", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
     "q_ivfpq_realtime" -> ((s, dir) => {
       init(s)
-      val (spacePath, tailPath) = graft.sources.IndexStore.realtimeSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val rt = new graft.streaming.RealtimeTail(s, spacePath, tailPath,
-        s"$tailPath.ckpt", "_id")
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"rt_pq","fields":[
+      val sp = """{"name":"rt_pq","enable_realtime":true,"fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"embedding","type":"vector","dimension":64,
              "index":{"type":"IVFPQ",
-                      "params":{"ncentroids":8,"nprobe":8,"nsubvector":8}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
+                      "params":{"ncentroids":8,"nprobe":8,"nsubvector":8}}}]}"""
       val req = s"""{"vectors":[{"field":"embedding","feature":${qvec(s, dir).mkString("[", ",", "]")}}],
         "index_params":{"recall_num":1048576},"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc, tail = Some(rt))
+      searchFixture(s, dir, "apirt", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
     "q_hnsw_realtime" -> ((s, dir) => {
       init(s)
-      val (spacePath, tailPath) = graft.sources.IndexStore.realtimeSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val rt = new graft.streaming.RealtimeTail(s, spacePath, tailPath,
-        s"$tailPath.ckpt", "_id")
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"rt_hnsw","fields":[
+      val sp = """{"name":"rt_hnsw","enable_realtime":true,"fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"embedding","type":"vector","dimension":64,
              "index":{"type":"HNSW",
-                      "params":{"nlinks":16,"efConstruction":100,"efSearch":1000000}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
+                      "params":{"nlinks":16,"efConstruction":100,"efSearch":1000000}}}]}"""
       val req = s"""{"vectors":[{"field":"embedding","feature":${qvec(s, dir).mkString("[", ",", "]")}}],"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc, tail = Some(rt))
+      searchFixture(s, dir, "apirt", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
     "q_rabitq_realtime" -> ((s, dir) => {
       init(s)
-      val (spacePath, tailPath) = graft.sources.IndexStore.realtimeSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val rt = new graft.streaming.RealtimeTail(s, spacePath, tailPath,
-        s"$tailPath.ckpt", "_id")
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"rt_rb","fields":[
+      val sp = """{"name":"rt_rb","enable_realtime":true,"fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"embedding","type":"vector","dimension":64,
              "index":{"type":"IVFRABITQ",
-                      "params":{"ncentroids":8,"nprobe":8,"qb":4}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
+                      "params":{"ncentroids":8,"nprobe":8,"qb":4}}}]}"""
       val req = s"""{"vectors":[{"field":"embedding","feature":${qvec(s, dir).mkString("[", ",", "]")}}],
         "index_params":{"recall_num":1048576},"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc, tail = Some(rt))
+      searchFixture(s, dir, "apirt", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
@@ -221,44 +176,28 @@ private[graft] object RealtimeEntries {
     //    blocks over the live view ≡ the full table, oracle-checked ──
     "q_ivf_batch_realtime" -> ((s, dir) => {
       init(s)
-      val (spacePath, tailPath) = graft.sources.IndexStore.realtimeSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val rt = new graft.streaming.RealtimeTail(s, spacePath, tailPath,
-        s"$tailPath.ckpt", "_id")
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"rt_ivf_b","fields":[
+      val sp = """{"name":"rt_ivf_b","enable_realtime":true,"fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"embedding","type":"vector","dimension":64,
              "index":{"type":"IVFFLAT",
-                      "params":{"ncentroids":16,"nprobe":16}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
-      val flat = t(s, dir, "embeddings").filter(col("vec_id") < 3)
-        .orderBy(col("vec_id")).select(col("embedding")).collect()
-        .flatMap(_.getSeq[Float](0))
+                      "params":{"ncentroids":16,"nprobe":16}}}]}"""
+      val flat = batchRows(s, dir).flatten
       val req = s"""{"vectors":[{"field":"embedding","feature":${flat.mkString("[", ",", "]")}}],"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc, tail = Some(rt))
+      searchFixture(s, dir, "apirt", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
     "q_ivfpq_batch_realtime" -> ((s, dir) => {
       init(s)
-      val (spacePath, tailPath) = graft.sources.IndexStore.realtimeSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val rt = new graft.streaming.RealtimeTail(s, spacePath, tailPath,
-        s"$tailPath.ckpt", "_id")
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"rt_pq_b","fields":[
+      val sp = """{"name":"rt_pq_b","enable_realtime":true,"fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"embedding","type":"vector","dimension":64,
              "index":{"type":"IVFPQ",
-                      "params":{"ncentroids":8,"nprobe":8,"nsubvector":8}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
-      val flat = t(s, dir, "embeddings").filter(col("vec_id") < 3)
-        .orderBy(col("vec_id")).select(col("embedding")).collect()
-        .flatMap(_.getSeq[Float](0))
+                      "params":{"ncentroids":8,"nprobe":8,"nsubvector":8}}}]}"""
+      val flat = batchRows(s, dir).flatten
       val req = s"""{"vectors":[{"field":"embedding","feature":${flat.mkString("[", ",", "]")}}],
         "index_params":{"recall_num":1048576},"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc, tail = Some(rt))
+      searchFixture(s, dir, "apirt", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
@@ -270,44 +209,28 @@ private[graft] object RealtimeEntries {
     //    over the live view ≡ the full table, oracle-checked ──
     "q_hnsw_batch_realtime" -> ((s, dir) => {
       init(s)
-      val (spacePath, tailPath) = graft.sources.IndexStore.realtimeSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val rt = new graft.streaming.RealtimeTail(s, spacePath, tailPath,
-        s"$tailPath.ckpt", "_id")
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"rt_hnsw_b","fields":[
+      val sp = """{"name":"rt_hnsw_b","enable_realtime":true,"fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"embedding","type":"vector","dimension":64,
              "index":{"type":"HNSW",
-                      "params":{"nlinks":16,"efConstruction":100,"efSearch":1000000}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
-      val flat = t(s, dir, "embeddings").filter(col("vec_id") < 3)
-        .orderBy(col("vec_id")).select(col("embedding")).collect()
-        .flatMap(_.getSeq[Float](0))
+                      "params":{"nlinks":16,"efConstruction":100,"efSearch":1000000}}}]}"""
+      val flat = batchRows(s, dir).flatten
       val req = s"""{"vectors":[{"field":"embedding","feature":${flat.mkString("[", ",", "]")}}],"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc, tail = Some(rt))
+      searchFixture(s, dir, "apirt", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
     "q_diskann_batch_realtime" -> ((s, dir) => {
       init(s)
-      val (spacePath, tailPath) = graft.sources.IndexStore.realtimeSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val rt = new graft.streaming.RealtimeTail(s, spacePath, tailPath,
-        s"$tailPath.ckpt", "_id")
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"rt_vam_b","fields":[
+      val sp = """{"name":"rt_vam_b","enable_realtime":true,"fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"embedding","type":"vector","dimension":64,
              "index":{"type":"DISKANN_STATIC",
-                      "params":{"R":32,"L":64,"beam_width":4}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
-      val flat = t(s, dir, "embeddings").filter(col("vec_id") < 3)
-        .orderBy(col("vec_id")).select(col("embedding")).collect()
-        .flatMap(_.getSeq[Float](0))
+                      "params":{"R":32,"L":64,"beam_width":4}}}]}"""
+      val flat = batchRows(s, dir).flatten
       val req = s"""{"vectors":[{"field":"embedding","feature":${flat.mkString("[", ",", "]")}}],
         "index_params":{"l_search":1048576},"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc, tail = Some(rt))
+      searchFixture(s, dir, "apirt", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 
@@ -315,36 +238,24 @@ private[graft] object RealtimeEntries {
     // leg ranks by code Hamming exactly like the probed base lists
     "q_binaryivf_realtime" -> ((s, dir) => {
       init(s)
-      val (spacePath, tailPath) = graft.sources.IndexStore.realtimeBinarySpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val rt = new graft.streaming.RealtimeTail(s, spacePath, tailPath,
-        s"$tailPath.ckpt", "_id")
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"rt_bivf","fields":[
+      val sp = """{"name":"rt_bivf","enable_realtime":true,"fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"embedding","type":"vector","dimension":64,
-             "index":{"type":"BINARYIVF","params":{"ncentroids":8,"nprobe":8}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
+             "index":{"type":"BINARYIVF","params":{"ncentroids":8,"nprobe":8}}}]}"""
       val req = s"""{"vectors":[{"field":"embedding","feature":${qvec(s, dir).mkString("[", ",", "]")}}],"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc, tail = Some(rt))
+      searchFixture(s, dir, "apirtb", sp, req)
     }),
 
     "q_diskann_realtime" -> ((s, dir) => {
       init(s)
-      val (spacePath, tailPath) = graft.sources.IndexStore.realtimeSpace(s, dir)
-      val lc = new graft.api.IndexLifecycle(s, spacePath)
-      val rt = new graft.streaming.RealtimeTail(s, spacePath, tailPath,
-        s"$tailPath.ckpt", "_id")
-      val sp = graft.schema.Space.fromJson(
-        """{"name":"rt_vam","fields":[
+      val sp = """{"name":"rt_vam","enable_realtime":true,"fields":[
             {"name":"label","type":"integer","index":{"type":"SCALAR"}},
             {"name":"embedding","type":"vector","dimension":64,
              "index":{"type":"DISKANN_STATIC",
-                      "params":{"R":32,"L":64,"beam_width":4}}}]}""")
-      val stored = graft.sources.IndexStore.openTable(s, spacePath)
+                      "params":{"R":32,"L":64,"beam_width":4}}}]}"""
       val req = s"""{"vectors":[{"field":"embedding","feature":${qvec(s, dir).mkString("[", ",", "]")}}],
         "index_params":{"l_search":1048576},"limit":10}"""
-      SearchApi.searchAuto(stored, sp, req, lc, tail = Some(rt))
+      searchFixture(s, dir, "apirt", sp, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
   )

@@ -4,10 +4,10 @@ import java.nio.file.{Files, Paths}
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{BinaryIndex, HnswIndex, IvfIndex, PqIndex}
+import graft.operators.{BinaryIndex, HnswIndex, IvfIndex, PqIndex, VamanaIndex}
 
 /** Build-once cache of physical index layouts over the test fixtures.
   *
@@ -20,20 +20,25 @@ import graft.operators.{BinaryIndex, HnswIndex, IvfIndex, PqIndex}
   * deployment would query:
   *
   *  - ivfFlat:  table partitioned by `list_id` → probe = partition pruning
-  *  - ivfPq:    same layout + `pq_code` column → ADC scans codes only
   *  - pqFlat:   `pq_code` alongside raw vectors (column-pruned stage 1)
   *  - binary:   packed sign codes `bcode` (stage 1 reads dim/8 bytes/row)
   *
+  * Every fixture is a row of one of two tables: `layouts` (operator
+  * layouts the index operators read directly) and `spaces` (catalog-shaped
+  * spaces with lifecycle generations, served by
+  * [[graft.schema.SpaceCatalog.search]]). [[warm]] builds both.
+  *
   * Location: `$SPARK_GRAFT_INDEX_DIR` or `java.io.tmpdir`/graft_index —
-  * outside the repo, keyed by fixture basename + layout params, marked
-  * ready atomically AFTER model+table are fully written.
+  * outside the repo, keyed by fixture basename + fingerprint + row key,
+  * marked ready atomically AFTER model+table are fully written.
   */
 object IndexStore {
 
   /** Bump to invalidate cached layouts when build code changes.
     * v3: HnswIndex.Segment grew the `chain` column (incremental append).
+    * v4: realtime fixture tails moved to `space.tail` (catalog layout).
     */
-  private val Version = "v3"
+  private val Version = "v4"
 
   /** Resident serving mode (Bench's untimed warmup sets it, mirroring
     * `SparkEntry.cacheTables`): layout tables are read once and pinned in
@@ -192,10 +197,15 @@ object IndexStore {
     f"${h & 0xffffffffL}%08x"
   }
 
-  private def dirFor(sfDir: String, kind: String): String = {
+  /** The dir every fixture of `sfDir` lives under — a catalog root whose
+    * databases are the fixture keys.
+    */
+  private[graft] def fixtureRoot(sfDir: String): String = {
     val base = Paths.get(sfDir).toAbsolutePath.normalize.getFileName.toString
-    s"$rootDir/$Version/$base-${fingerprint(sfDir)}/$kind"
+    s"$rootDir/$Version/$base-${fingerprint(sfDir)}"
   }
+
+  private def dirFor(sfDir: String, kind: String): String = s"${fixtureRoot(sfDir)}/$kind"
 
   private def ready(dir: String): Boolean =
     Files.exists(Paths.get(dir, "_GRAFT_READY"))
@@ -428,1148 +438,501 @@ object IndexStore {
   private def emb(spark: SparkSession, sfDir: String): DataFrame =
     spark.read.parquet(s"$sfDir/embeddings.parquet")
 
-  /** IVFFLAT layout: embeddings + `list_id`, partitioned by `list_id`. */
-  def ivfFlat(spark: SparkSession, sfDir: String,
-      ncentroids: Int = 16): (DataFrame, IvfIndex.Model) = {
-    val dir = dirFor(sfDir, s"ivf$ncentroids")
-    buildOnce(dir) {
-      val e = emb(spark, sfDir)
-      val model = IvfIndex.train(e, "embedding", ncentroids)
-      IvfIndex.buildTable(e, "embedding", model, s"$dir/table")
-      writeIvfModel(s"$dir/model.txt", model)
-      markReady(dir)
-    }
-    (readLayout(spark, s"$dir/table"), readIvfModel(s"$dir/model.txt"))
+  /** The embeddings of rows `vec_id < n`, in id order — the corpus-seeded
+    * centroids and codebooks of the deterministic (`*Fixed`) layouts.
+    */
+  private def firstRows(e: DataFrame, n: Int): Array[Array[Float]] =
+    e.filter(col("vec_id") < n).orderBy("vec_id")
+      .select("embedding").collect().map(_.getSeq[Float](0).toArray)
+
+  // dim from the data, not a constant — a 128-d fixture would otherwise
+  // get codebooks over its first 64 components only
+  private def dimOf(e: DataFrame): Int =
+    e.select(size(col("embedding"))).head().getInt(0)
+
+  private val hnswL2 = HnswIndex.Params(m = 16, efConstruction = 100, metric = "l2", numShards = 4)
+  private val hnswIp = hnswL2.copy(metric = "ip")
+  private val vamanaL2 = VamanaIndex.Params(r = 32, l = 64, alpha = 1.2, metric = "l2", numShards = 4)
+
+  // ── operator layouts ──────────────────────────────────────────────────
+
+  /** One operator layout: its cache key (the dir name under the fixture
+    * root), the parquet tables under its dir that resident serving pins,
+    * and its build, which writes those tables and their model sidecars
+    * into the dir. Every parameter is the one value the queries use.
+    */
+  private final case class Layout(key: String, tables: String*)(
+      val build: (SparkSession, String, DataFrame, String) => Unit)
+
+  private def writeIvfPq(dir: String, coded: DataFrame, ivf: IvfIndex.Model,
+      pq: PqIndex.Model): Unit = {
+    coded.write.mode("overwrite").partitionBy("list_id").parquet(s"$dir/table")
+    writeIvfModel(s"$dir/ivf.txt", ivf)
+    writePqModel(s"$dir/pq.txt", pq)
   }
 
-  /** Cosine-metric IVF assignment for the embedding near-dup queries —
-    * the build-vs-search lifecycle split (`engine.cc:972-1012`): KMeans
-    * train + `list_id` assignment happen HERE, once per fixture, so
-    * `q_embed_neardup_knn` times the probe-join + exact verify, not the
-    * model fit. Config mirrors the query's historical in-query train
-    * (cosine, seed 42, maxIter 8) so the deterministic model — and the
-    * output hash — are unchanged.
+  /** IVF+RaBitQ: residual sign codes (`rbcode`) + raw vectors for the
+    * rerank, `list_id`-partitioned under the given quantizer.
     */
-  def neardupIvf(spark: SparkSession, sfDir: String,
-      ncentroids: Int = 16): (DataFrame, IvfIndex.Model) = {
-    val dir = dirFor(sfDir, s"neardup$ncentroids")
-    buildOnce(dir) {
-      val e = emb(spark, sfDir)
-      val model = IvfIndex.train(e, "embedding", ncentroids,
+  private def writeRbIvf(dir: String, e: DataFrame, ivf: IvfIndex.Model): Unit = {
+    BinaryIndex.encodeResidual(IvfIndex.assign(e, "embedding", ivf), "embedding", ivf)
+      .write.mode("overwrite").partitionBy("list_id").parquet(s"$dir/table")
+    writeIvfModel(s"$dir/ivf.txt", ivf)
+  }
+
+  /** SPANN-style clustered HNSW: shards = the quantizer's lists, table
+    * partitioned by `shard_id` so the query route is partition pruning.
+    */
+  private def writeHnswClustered(dir: String, e: DataFrame, ivf: IvfIndex.Model): Unit = {
+    HnswIndex.buildClustered(e, "vec_id", "embedding", hnswL2.copy(numShards = 16), ivf)
+      .write.mode("overwrite").partitionBy("shard_id").parquet(s"$dir/table")
+    writeIvfModel(s"$dir/ivf.txt", ivf)
+  }
+
+  private def halves(e: DataFrame): DataFrame = e.select(col("vec_id"),
+    slice(col("embedding"), 1, 32).as("v1"), slice(col("embedding"), 33, 32).as("v2"))
+
+  private val layouts: Seq[Layout] = Seq(
+    /** IVFFLAT: embeddings + `list_id`, partitioned by `list_id`. */
+    Layout("ivf16", "table") { (_, _, e, dir) =>
+      val model = IvfIndex.train(e, "embedding", 16)
+      IvfIndex.buildTable(e, "embedding", model, s"$dir/table")
+      writeIvfModel(s"$dir/model.txt", model)
+    },
+    /** Cosine IVF for the embedding near-dup queries, trained here once
+      * so `q_embed_neardup_knn` times the probe-join, not the model fit.
+      * Config mirrors the query's historical in-query train (cosine, seed
+      * 42, maxIter 8), so the model and the output hash are unchanged.
+      */
+    Layout("neardup16", "table") { (_, _, e, dir) =>
+      val model = IvfIndex.train(e, "embedding", 16,
         metric = "cosine", seed = 42L, maxIter = 8)
       IvfIndex.buildTable(e, "embedding", model, s"$dir/table")
       writeIvfModel(s"$dir/model.txt", model)
-      markReady(dir)
-    }
-    (readLayout(spark, s"$dir/table"), readIvfModel(s"$dir/model.txt"))
-  }
-
-  /** Deterministic-oracle IVF layout for the k-NN join's PRUNED operating
-    * point: centroids are the corpus rows `vec_id < nc` (the
-    * q_semantic_dedup centroid-seed device), assignment argmin-L2 — the
-    * whole probe/assign/candidate pipeline replays in SQL while the
-    * layout keeps the `partitionBy(list_id)` pruning shape.
-    */
-  def ivfFixed(spark: SparkSession, sfDir: String,
-      nc: Int = 16): (DataFrame, IvfIndex.Model) = {
-    val dir = dirFor(sfDir, s"ivffix$nc")
-    buildOnce(dir) {
-      val e = emb(spark, sfDir)
-      val cents = e.filter(col("vec_id") < nc).orderBy("vec_id")
-        .select("embedding").collect().map(_.getSeq[Float](0).toArray)
-      val model = IvfIndex.Model(cents, "l2")
+    },
+    /** Deterministic IVF: centroids are the corpus rows `vec_id < 16`,
+      * assignment argmin-L2, so the probe/assign/candidate pipeline
+      * replays in SQL while keeping the `partitionBy(list_id)` shape.
+      */
+    Layout("ivffix16", "table") { (_, _, e, dir) =>
+      val model = IvfIndex.Model(firstRows(e, 16), "l2")
       IvfIndex.buildTable(e, "embedding", model, s"$dir/table")
       writeIvfModel(s"$dir/model.txt", model)
-      markReady(dir)
-    }
-    (readLayout(spark, s"$dir/table"), readIvfModel(s"$dir/model.txt"))
-  }
-
-  /** [[pqFlat]] at a DETERMINISTIC operating point: the m sub-codebooks
-    * are the corpus's own first-`ksub` rows' subvectors (vec_id < ksub,
-    * id order) instead of Lloyd-trained, so every encode argmin and ADC
-    * lookup replays in closed-form SQL — the pruned `recall_num`
-    * shortlist boundary becomes oracle-checkable (the [[ivfFixed]]
-    * precedent, applied to the PQ stage). Same search code, same layout
-    * shape; only the codebook source differs.
-    */
-  def pqFixed(spark: SparkSession, sfDir: String,
-      m: Int = 8, ksub: Int = 16): (DataFrame, PqIndex.Model) = {
-    val dir = dirFor(sfDir, s"pqfix${m}_$ksub")
-    buildOnce(dir) {
-      val e = emb(spark, sfDir)
-      val dim = e.select(size(col("embedding"))).head().getInt(0)
-      require(dim % m == 0, s"dim $dim must divide into m=$m subvectors")
-      val dsub = dim / m
-      val rows = e.filter(col("vec_id") < ksub).orderBy("vec_id")
-        .select("embedding").collect().map(_.getSeq[Float](0).toArray)
-      val codebooks = Array.tabulate(m) { sub =>
-        rows.map(v =>
-          java.util.Arrays.copyOfRange(v, sub * dsub, (sub + 1) * dsub))
+    },
+    /** Flat PQ at a DETERMINISTIC operating point: the 8 sub-codebooks
+      * are the first-16 corpus rows' subvectors, not Lloyd-trained, so
+      * every encode argmin and ADC lookup replays in closed-form SQL.
+      */
+    Layout("pqfix8_16", "table") { (_, _, e, dir) =>
+      val dim = dimOf(e)
+      require(dim % 8 == 0, s"dim $dim must divide into m=8 subvectors")
+      val dsub = dim / 8
+      val rows = firstRows(e, 16)
+      val codebooks = Array.tabulate(8) { sub =>
+        rows.map(v => java.util.Arrays.copyOfRange(v, sub * dsub, (sub + 1) * dsub))
       }
-      val pq = PqIndex.Model(m, rows.length, dsub, codebooks, "l2")
-      PqIndex.encode(e, "embedding", pq)
-        .write.mode("overwrite").parquet(s"$dir/table")
+      val pq = PqIndex.Model(8, rows.length, dsub, codebooks, "l2")
+      PqIndex.encode(e, "embedding", pq).write.mode("overwrite").parquet(s"$dir/table")
       writePqModel(s"$dir/pq.txt", pq)
-      markReady(dir)
-    }
-    (readLayout(spark, s"$dir/table"), readPqModel(s"$dir/pq.txt"))
-  }
-
-  /** IVFPQ layout: `list_id`-partitioned table carrying `pq_code` + raw
-    * vectors (the raw column is only read by the rerank stage's semi-join).
-    */
-  def ivfPq(spark: SparkSession, sfDir: String, ncentroids: Int = 8,
-      m: Int = 8, ksub: Int = 16): (DataFrame, IvfIndex.Model, PqIndex.Model) = {
-    val dir = dirFor(sfDir, s"ivfpq${ncentroids}_${m}_$ksub")
-    buildOnce(dir) {
-      val e = emb(spark, sfDir)
-      // dim from the data, not a constant — a 128-d fixture would
-      // otherwise get codebooks over its first 64 components only
-      val dim = e.select(size(col("embedding"))).head().getInt(0)
-      val ivf = IvfIndex.train(e, "embedding", ncentroids)
-      val pq = PqIndex.train(e, "embedding", dim = dim, m = m, ksub = ksub,
-        maxTrainRows = 200000L, maxIter = 8)
-      PqIndex.encode(IvfIndex.assign(e, "embedding", ivf), "embedding", pq)
-        .write.mode("overwrite").partitionBy("list_id").parquet(s"$dir/table")
-      writeIvfModel(s"$dir/ivf.txt", ivf)
-      writePqModel(s"$dir/pq.txt", pq)
-      markReady(dir)
-    }
-    (readLayout(spark, s"$dir/table"),
-      readIvfModel(s"$dir/ivf.txt"),
-      readPqModel(s"$dir/pq.txt"))
-  }
-
-  /** Residual IVFPQ layout — codebooks trained and codes computed on
-    * v − centroid(list_id) ([[PqIndex.trainResidual]]); the adopted
-    * default for the q_ivfpq queries after winning the RecallGateSpec
-    * codebook head-to-head (+4 recall@10 points at the tight operating
-    * point on the normalized distribution).
-    */
-  def ivfPqResidual(spark: SparkSession, sfDir: String, ncentroids: Int = 8,
-      m: Int = 8, ksub: Int = 16): (DataFrame, IvfIndex.Model, PqIndex.Model) = {
-    val dir = dirFor(sfDir, s"ivfpqr${ncentroids}_${m}_$ksub")
-    buildOnce(dir) {
-      val e = emb(spark, sfDir)
-      val dim = e.select(size(col("embedding"))).head().getInt(0)
-      val ivf = IvfIndex.train(e, "embedding", ncentroids)
+    },
+    /** Residual IVFPQ: codebooks trained and codes computed on
+      * v − centroid(list_id); the q_ivfpq default after winning the
+      * RecallGateSpec codebook head-to-head.
+      */
+    Layout("ivfpqr8_8_16", "table") { (_, _, e, dir) =>
+      val ivf = IvfIndex.train(e, "embedding", 8)
       val assigned = IvfIndex.assign(e, "embedding", ivf)
-      val pq = PqIndex.trainResidual(assigned, "embedding", dim, m, ivf,
-        ksub = ksub, maxTrainRows = 200000L, maxIter = 8)
-      PqIndex.encodeResidual(assigned, "embedding", ivf, pq)
-        .write.mode("overwrite").partitionBy("list_id").parquet(s"$dir/table")
-      writeIvfModel(s"$dir/ivf.txt", ivf)
-      writePqModel(s"$dir/pq.txt", pq)
-      markReady(dir)
-    }
-    (readLayout(spark, s"$dir/table"),
-      readIvfModel(s"$dir/ivf.txt"),
-      readPqModel(s"$dir/pq.txt"))
-  }
-
-  /** [[ivfPqResidual]] at a DETERMINISTIC operating point (the
-    * [[pqFixed]] / [[ivfFixed]] recipe applied to both stages): coarse
-    * centroids = rows vec_id < ncentroids, residual sub-codebooks = the
-    * float-rounded residuals of rows vec_id < ksub w.r.t. their OWN
-    * assigned fixed centroid. Every decision — the double-domain
-    * assignment argmin ([[graft.functions.VecKernels.argminL2]]), the
-    * float-product probe ranking (IvfIndex.Model.nearestCentroids), the
-    * double-domain residual encode, the float residual-query LUT, the
-    * in-order ADC sum, the recall_num boundary — replays in closed-form
-    * SQL, so the full probe∘ADC∘rerank composition is oracle-checkable
-    * at a PRUNED (lossy) operating point.
-    */
-  def ivfPqResidualFixed(spark: SparkSession, sfDir: String,
-      ncentroids: Int = 8, m: Int = 8, ksub: Int = 16)
-      : (DataFrame, IvfIndex.Model, PqIndex.Model) = {
-    val dir = dirFor(sfDir, s"ivfpqrfix${ncentroids}_${m}_$ksub")
-    buildOnce(dir) {
-      val e = emb(spark, sfDir)
-      val dim = e.select(size(col("embedding"))).head().getInt(0)
-      require(dim % m == 0, s"dim $dim must divide into m=$m subvectors")
-      val dsub = dim / m
-      val cents = e.filter(col("vec_id") < ncentroids).orderBy("vec_id")
-        .select("embedding").collect().map(_.getSeq[Float](0).toArray)
+      val pq = PqIndex.trainResidual(assigned, "embedding", dimOf(e), 8, ivf,
+        ksub = 16, maxTrainRows = 200000L, maxIter = 8)
+      writeIvfPq(dir, PqIndex.encodeResidual(assigned, "embedding", ivf, pq), ivf, pq)
+    },
+    /** Residual IVFPQ at a DETERMINISTIC operating point: coarse
+      * centroids = rows `vec_id < 8`, sub-codebooks = the float-rounded
+      * residuals of rows `vec_id < 16` w.r.t. their OWN assigned fixed
+      * centroid (double-subtracted, then float-rounded — the arithmetic
+      * the SQL oracle replays with CAST(… AS REAL)). Every decision
+      * replays in closed-form SQL, so probe∘ADC∘rerank is
+      * oracle-checkable at a pruned operating point.
+      */
+    Layout("ivfpqrfix8_8_16", "table") { (_, _, e, dir) =>
+      val dim = dimOf(e)
+      require(dim % 8 == 0, s"dim $dim must divide into m=8 subvectors")
+      val dsub = dim / 8
+      val cents = firstRows(e, 8)
       val ivf = IvfIndex.Model(cents, "l2")
-      val rows = e.filter(col("vec_id") < ksub).orderBy("vec_id")
-        .select("embedding").collect().map(_.getSeq[Float](0).toArray)
-      // residual of each codebook row w.r.t. its assigned fixed centroid,
-      // double-subtracted then float-rounded (the storage domain) — the
-      // same arithmetic the SQL oracle replays with CAST(… AS REAL)
-      def assignOf(v: Array[Float]): Int = {
-        var best = 0; var bestD = Double.MaxValue
-        var c = 0
-        while (c < cents.length) {
-          var s = 0.0; var i = 0
-          while (i < dim) {
-            val d = v(i).toDouble - cents(c)(i).toDouble
-            s += d * d; i += 1
-          }
-          if (s < bestD) { bestD = s; best = c }
-          c += 1
-        }
-        best
+      val rows = firstRows(e, 16).map { v =>
+        val c = cents(graft.functions.VecKernels.argminL2(
+          org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(v), cents))
+        Array.tabulate(dim)(j => (v(j).toDouble - c(j).toDouble).toFloat)
       }
-      val codebooks = Array.tabulate(m) { sub =>
-        rows.map { v =>
-          val cent = cents(assignOf(v))
-          Array.tabulate(dsub) { i =>
-            val j = sub * dsub + i
-            (v(j).toDouble - cent(j).toDouble).toFloat
-          }
-        }
+      val codebooks = Array.tabulate(8) { sub =>
+        rows.map(r => java.util.Arrays.copyOfRange(r, sub * dsub, (sub + 1) * dsub))
       }
-      val pq = PqIndex.Model(m, rows.length, dsub, codebooks, "l2")
-      PqIndex.encodeResidual(IvfIndex.assign(e, "embedding", ivf), "embedding", ivf, pq)
-        .write.mode("overwrite").partitionBy("list_id").parquet(s"$dir/table")
-      writeIvfModel(s"$dir/ivf.txt", ivf)
-      writePqModel(s"$dir/pq.txt", pq)
-      markReady(dir)
-    }
-    (readLayout(spark, s"$dir/table"),
-      readIvfModel(s"$dir/ivf.txt"),
-      readPqModel(s"$dir/pq.txt"))
-  }
-
-  /** [[ivfPqResidualFixed]] with the ScaNN ANISOTROPIC encode
-    * ([[PqIndex.encodeResidualAnisotropic]] at the trained-default
-    * η = etaForThreshold(0.2, dim)) instead of the plain-L2 argmin:
-    * fixed centroids and codebooks make the score-aware assignment
-    * objective itself — l2 + (η−1)·(⟨r−c, x⟩/‖x‖)², all-double,
-    * in-index-order ([[graft.functions.VecKernels.pqEncodeResidualAniso]])
-    * — SQL-replayable, so the SCANN operating point's every codeword
-    * choice and the pruned shortlist boundary hash-pin.
-    */
-  def scannFixed(spark: SparkSession, sfDir: String,
-      ncentroids: Int = 8, m: Int = 8, ksub: Int = 16)
-      : (DataFrame, IvfIndex.Model, PqIndex.Model) = {
-    val dir = dirFor(sfDir, s"scannfix${ncentroids}_${m}_$ksub")
-    buildOnce(dir) {
-      // identical fixed models to ivfPqResidualFixed — only the encode
-      // objective differs
-      val (_, ivf, pq) = ivfPqResidualFixed(spark, sfDir, ncentroids, m, ksub)
-      val e = emb(spark, sfDir)
-      PqIndex.encodeResidualAnisotropic(
-        IvfIndex.assign(e, "embedding", ivf), "embedding", ivf, pq)
-        .write.mode("overwrite").partitionBy("list_id").parquet(s"$dir/table")
-      writeIvfModel(s"$dir/ivf.txt", ivf)
-      writePqModel(s"$dir/pq.txt", pq)
-      markReady(dir)
-    }
-    (readLayout(spark, s"$dir/table"),
-      readIvfModel(s"$dir/ivf.txt"),
-      readPqModel(s"$dir/pq.txt"))
-  }
-
-  /** Flat PQ layout: `pq_code` alongside raw vectors, no coarse partition. */
-  def pqFlat(spark: SparkSession, sfDir: String,
-      m: Int = 8, ksub: Int = 16): (DataFrame, PqIndex.Model) = {
-    val dir = dirFor(sfDir, s"pq${m}_$ksub")
-    buildOnce(dir) {
-      val e = emb(spark, sfDir)
-      val dim = e.select(size(col("embedding"))).head().getInt(0)
-      val pq = PqIndex.train(e, "embedding", dim = dim, m = m, ksub = ksub,
+      val pq = PqIndex.Model(8, rows.length, dsub, codebooks, "l2")
+      writeIvfPq(dir, PqIndex.encodeResidual(IvfIndex.assign(e, "embedding", ivf),
+        "embedding", ivf, pq), ivf, pq)
+    },
+    /** [[ivfPqResidualFixed]]'s models with the ScaNN ANISOTROPIC encode
+      * (η = etaForThreshold(0.2, dim)) instead of the plain-L2 argmin:
+      * the score-aware assignment is all-double and in index order, so
+      * every codeword choice and the pruned shortlist boundary hash-pin.
+      */
+    Layout("scannfix8_8_16", "table") { (spark, sfDir, e, dir) =>
+      val (_, ivf, pq) = ivfPqResidualFixed(spark, sfDir)
+      writeIvfPq(dir, PqIndex.encodeResidualAnisotropic(
+        IvfIndex.assign(e, "embedding", ivf), "embedding", ivf, pq), ivf, pq)
+    },
+    /** Flat PQ: `pq_code` alongside raw vectors, no coarse partition. */
+    Layout("pq8_16", "table") { (_, _, e, dir) =>
+      val pq = PqIndex.train(e, "embedding", dim = dimOf(e), m = 8, ksub = 16,
         maxTrainRows = 200000L, maxIter = 8)
-      PqIndex.encode(e, "embedding", pq)
-        .write.mode("overwrite").parquet(s"$dir/table")
+      PqIndex.encode(e, "embedding", pq).write.mode("overwrite").parquet(s"$dir/table")
       writePqModel(s"$dir/pq.txt", pq)
-      markReady(dir)
-    }
-    (readLayout(spark, s"$dir/table"), readPqModel(s"$dir/pq.txt"))
-  }
-
-  /** Binary (sign-bit) layout: embeddings + packed `bcode`. */
-  def binary(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = dirFor(sfDir, "binary")
-    buildOnce(dir) {
-      BinaryIndex.encode(emb(spark, sfDir), "embedding")
+    },
+    /** Binary (sign-bit) layout: embeddings + packed `bcode`. */
+    Layout("binary", "table") { (_, _, e, dir) =>
+      BinaryIndex.encode(e, "embedding").write.mode("overwrite").parquet(s"$dir/table")
+    },
+    // reuses ivfFlat's trained quantizer (same data, same params) —
+    // retraining an identical KMeans doubled the dominant warmup cost
+    Layout("rbivf16", "table") { (spark, sfDir, e, dir) =>
+      writeRbIvf(dir, e, ivfFlat(spark, sfDir)._2)
+    },
+    /** [[binaryIvf]] over the DETERMINISTIC quantizer of [[ivfFixed]]:
+      * the probe route replays in SQL, so the family's pruned nprobe
+      * operating point is hash-checkable at every fixture size (a
+      * KMeans quantizer's probe set is only incidentally exact).
+      */
+    Layout("rbivffix16", "table") { (spark, sfDir, e, dir) =>
+      writeRbIvf(dir, e, ivfFixed(spark, sfDir)._2)
+    },
+    /** [[hnswClustered]] over [[ivfFixed]]'s quantizer: the shard route
+      * replays in SQL, and with `ef ≥ |shard|` the in-shard walks are
+      * exhaustive. VALIDITY BOUND: the entries' ef=4096 covers shards of
+      * ~rows/16 through ~65k embedding rows (fixture mult ≈ 33); past
+      * that the oracle fails LOUD and the fix is the ef constant.
+      */
+    Layout("hnswrfix16_16_100", "table") { (spark, sfDir, e, dir) =>
+      writeHnswClustered(dir, e, ivfFixed(spark, sfDir)._2)
+    },
+    /** HNSW graph segments, one row per shard, each a whole serialized
+      * graph. The build is deterministic (hash levels, id-sorted
+      * insertion), so every search over it is reproducible.
+      */
+    Layout("hnsw16_100_4_l2", "table") { (_, _, e, dir) =>
+      HnswIndex.build(e, "vec_id", "embedding", hnswL2)
         .write.mode("overwrite").parquet(s"$dir/table")
-      markReady(dir)
-    }
-    readLayout(spark, s"$dir/table")
-  }
-
-  /** IVF+RaBitQ layout: `list_id`-partitioned table carrying residual
-    * sign codes (`rbcode`) + raw vectors for the rerank.
-    */
-  def binaryIvf(spark: SparkSession, sfDir: String,
-      ncentroids: Int = 16): (DataFrame, IvfIndex.Model) = {
-    val dir = dirFor(sfDir, s"rbivf$ncentroids")
-    buildOnce(dir) {
-      val e = emb(spark, sfDir)
-      // reuse ivfFlat's trained quantizer (same data, same params) —
-      // retraining an identical KMeans doubled the dominant warmup cost
-      val ivf = ivfFlat(spark, sfDir, ncentroids)._2
-      BinaryIndex.encodeResidual(IvfIndex.assign(e, "embedding", ivf), "embedding", ivf)
-        .write.mode("overwrite").partitionBy("list_id").parquet(s"$dir/table")
-      writeIvfModel(s"$dir/ivf.txt", ivf)
-      markReady(dir)
-    }
-    (readLayout(spark, s"$dir/table"), readIvfModel(s"$dir/ivf.txt"))
-  }
-
-  /** [[binaryIvf]] over the DETERMINISTIC coarse quantizer
-    * ([[ivfFixed]]'s centroid-seed device — centroids are the corpus
-    * rows `vec_id < nc`): the probe route replays in closed-form SQL,
-    * so the family's PRUNED nprobe operating point is hash-checkable at
-    * every fixture size (a kmeans-trained quantizer's probe set is only
-    * incidentally exact — r20 found it missing true neighbors at two of
-    * the three fixture seeds). The sign-estimator boundary keeps its
-    * own oracled operating points (`q_rabitq_search`, `q_binary_rerank`);
-    * this layout pins the ROUTE.
-    */
-  def binaryIvfFixed(spark: SparkSession, sfDir: String,
-      nc: Int = 16): (DataFrame, IvfIndex.Model) = {
-    val dir = dirFor(sfDir, s"rbivffix$nc")
-    buildOnce(dir) {
-      val e = emb(spark, sfDir)
-      val ivf = ivfFixed(spark, sfDir, nc)._2
-      BinaryIndex.encodeResidual(IvfIndex.assign(e, "embedding", ivf), "embedding", ivf)
-        .write.mode("overwrite").partitionBy("list_id").parquet(s"$dir/table")
-      writeIvfModel(s"$dir/ivf.txt", ivf)
-      markReady(dir)
-    }
-    (readLayout(spark, s"$dir/table"), readIvfModel(s"$dir/ivf.txt"))
-  }
-
-  /** [[hnswClustered]] over the DETERMINISTIC coarse quantizer — same
-    * rationale as [[binaryIvfFixed]]: the shard route replays in SQL,
-    * and with `ef ≥ |shard|` the in-shard walks are exhaustive, so the
-    * routed graph family's pruned operating point is exact-within-route
-    * by construction. VALIDITY BOUND: the exhaustiveness premise is the
-    * CALLER's ef against this fixture's shard sizes (~rows/nc) — the
-    * entries' ef=4096 holds through ~65k embedding rows (fixture mult
-    * ≈ 33); past that the oracle fails LOUD and the fix is the ef
-    * constant (or derive it from the segment row count), not the
-    * operator.
-    */
-  def hnswClusteredFixed(spark: SparkSession, sfDir: String, nc: Int = 16,
-      m: Int = 16, efConstruction: Int = 100)
-      : (org.apache.spark.sql.Dataset[HnswIndex.Segment], IvfIndex.Model) = {
-    import spark.implicits._
-    val dir = dirFor(sfDir, s"hnswrfix${nc}_${m}_$efConstruction")
-    buildOnce(dir) {
-      val ivf = ivfFixed(spark, sfDir, nc)._2
-      HnswIndex.buildClustered(emb(spark, sfDir), "vec_id", "embedding",
-        HnswIndex.Params(m, efConstruction, "l2", nc), ivf)
-        .write.mode("overwrite").partitionBy("shard_id").parquet(s"$dir/table")
-      writeIvfModel(s"$dir/ivf.txt", ivf)
-      markReady(dir)
-    }
-    (readLayout(spark, s"$dir/table").as[HnswIndex.Segment],
-      readIvfModel(s"$dir/ivf.txt"))
-  }
-
-  /** HNSW layout: the graph-segment table (one row per shard, each a
-    * whole serialized graph — [[HnswIndex]] class doc). The build is
-    * deterministic (hash levels, id-sorted insertion), so the stored
-    * segments are a pure function of (fixture, params) and every search
-    * over them is reproducible.
-    */
-  def hnsw(spark: SparkSession, sfDir: String, m: Int = 16,
-      efConstruction: Int = 100, numShards: Int = 4,
-      metric: String = "l2"): org.apache.spark.sql.Dataset[HnswIndex.Segment] = {
-    import spark.implicits._
-    val dir = dirFor(sfDir, s"hnsw${m}_${efConstruction}_${numShards}_$metric")
-    buildOnce(dir) {
-      HnswIndex.build(emb(spark, sfDir), "vec_id", "embedding",
-        HnswIndex.Params(m, efConstruction, metric, numShards))
+    },
+    // reuses ivfFlat's quantizer, so the routing stays consistent with
+    // the scan-path IVF layouts
+    Layout("hnswr16_16_100", "table") { (spark, sfDir, e, dir) =>
+      writeHnswClustered(dir, e, ivfFlat(spark, sfDir)._2)
+    },
+    /** DiskANN-static (Vamana): flat α-RNG graph segments, one per shard. */
+    Layout("vamana32_64_4", "table") { (_, _, e, dir) =>
+      VamanaIndex.build(e, "vec_id", "embedding", vamanaL2)
         .write.mode("overwrite").parquet(s"$dir/table")
-      markReady(dir)
-    }
-    readLayout(spark, s"$dir/table").as[HnswIndex.Segment]
-  }
-
-  /** Clustered-shard HNSW layout (SPANN-style, [[HnswIndex.buildClustered]]):
-    * shards = the shared coarse quantizer's lists, table partitioned by
-    * `shard_id` so the query route is parquet partition pruning.
-    */
-  def hnswClustered(spark: SparkSession, sfDir: String, ncentroids: Int = 16,
-      m: Int = 16, efConstruction: Int = 100)
-      : (org.apache.spark.sql.Dataset[HnswIndex.Segment], IvfIndex.Model) = {
-    import spark.implicits._
-    val dir = dirFor(sfDir, s"hnswr${ncentroids}_${m}_$efConstruction")
-    buildOnce(dir) {
-      // reuse ivfFlat's trained quantizer (same data/params) — and the
-      // routing stays consistent with the scan-path IVF layouts
-      val ivf = ivfFlat(spark, sfDir, ncentroids)._2
-      HnswIndex.buildClustered(emb(spark, sfDir), "vec_id", "embedding",
-        HnswIndex.Params(m, efConstruction, "l2", ncentroids), ivf)
-        .write.mode("overwrite").partitionBy("shard_id").parquet(s"$dir/table")
-      writeIvfModel(s"$dir/ivf.txt", ivf)
-      markReady(dir)
-    }
-    (readLayout(spark, s"$dir/table").as[HnswIndex.Segment],
-      readIvfModel(s"$dir/ivf.txt"))
-  }
-
-  /** Routed-API fixture: the embeddings table materialized as a SPACE
-    * (long `_id`) with a READY HNSW generation built through the
-    * lifecycle — the layout [[graft.api.SearchApi.searchAuto]] serves.
-    */
-  def hnswSpace(spark: SparkSession, sfDir: String): String = {
-    val dir = dirFor(sfDir, "apihnsw")
-    val spacePath = s"$dir/space"
-    buildOnce(dir) {
-      emb(spark, sfDir)
-        .select(col("vec_id").cast("long").as("_id"), col("label"), col("embedding"))
-        .write.mode("overwrite").parquet(spacePath)
-      new graft.api.IndexLifecycle(spark, spacePath).rebuildHnsw("_id", "embedding",
-        HnswIndex.Params(m = 16, efConstruction = 100, metric = "l2", numShards = 4))
-      markReady(dir)
-    }
-    spacePath
-  }
-
-  /** DiskANN-static (Vamana) layout: flat α-RNG graph segments, one row
-    * per shard ([[graft.operators.VamanaIndex]]). Deterministic build ⇒
-    * reproducible searches, same as the HNSW layout.
-    */
-  def vamana(spark: SparkSession, sfDir: String, r: Int = 32, l: Int = 64,
-      numShards: Int = 4): org.apache.spark.sql.Dataset[graft.operators.VamanaIndex.Segment] = {
-    import spark.implicits._
-    val dir = dirFor(sfDir, s"vamana${r}_${l}_$numShards")
-    buildOnce(dir) {
-      graft.operators.VamanaIndex.build(emb(spark, sfDir), "vec_id", "embedding",
-        graft.operators.VamanaIndex.Params(r, l, 1.2, "l2", numShards))
-        .write.mode("overwrite").parquet(s"$dir/table")
-      markReady(dir)
-    }
-    readLayout(spark, s"$dir/table").as[graft.operators.VamanaIndex.Segment]
-  }
-
-  /** Multi-field graph layouts: one HNSW segment table PER vector field
-    * (the two 32-d halves of the embedding), both inner-product metric —
-    * the layout the reference's multi-field conjunctive search serves
-    * from (one index per vector field, results intersected on docid,
-    * vector_manager.cc:1024-1087).
-    */
-  def hnswMultiField(spark: SparkSession, sfDir: String)
-      : (org.apache.spark.sql.Dataset[HnswIndex.Segment],
-         org.apache.spark.sql.Dataset[HnswIndex.Segment]) = {
-    import spark.implicits._
-    val dir = dirFor(sfDir, "hnswmv")
-    buildOnce(dir) {
-      val two = emb(spark, sfDir).select(col("vec_id"),
-        slice(col("embedding"), 1, 32).as("v1"),
-        slice(col("embedding"), 33, 32).as("v2"))
-      val p = HnswIndex.Params(m = 16, efConstruction = 100, metric = "ip",
-        numShards = 4)
-      HnswIndex.build(two, "vec_id", "v1", p)
-        .write.mode("overwrite").parquet(s"$dir/v1")
-      HnswIndex.build(two, "vec_id", "v2", p)
-        .write.mode("overwrite").parquet(s"$dir/v2")
-      markReady(dir)
-    }
-    (readLayout(spark, s"$dir/v1").as[HnswIndex.Segment],
-      readLayout(spark, s"$dir/v2").as[HnswIndex.Segment])
-  }
-
-  /** Multi-field REALTIME fixture: the [[hnswMultiField]] per-field graph
-    * layouts built over the BASE split (vec_id ≥ 10) plus a TAIL
-    * (vec_id < 10 — including the query vector) carrying both field
-    * slices — the shape the reference's multi-field conjunctive serves
-    * when the memory buffer is live (vector_manager.cc:1024-1176 merges
-    * the buffer into the PER-FIELD searches before the docid
-    * intersection).
-    */
-  def realtimeMultiField(spark: SparkSession, sfDir: String)
-      : (String, String,
-         org.apache.spark.sql.Dataset[HnswIndex.Segment],
-         org.apache.spark.sql.Dataset[HnswIndex.Segment]) = {
-    import spark.implicits._
-    val dir = dirFor(sfDir, "hnswmvrt")
-    val basePath = s"$dir/base"; val tailPath = s"$dir/tail"
-    buildOnce(dir) {
-      val two = emb(spark, sfDir).select(col("vec_id"),
-        slice(col("embedding"), 1, 32).as("v1"),
-        slice(col("embedding"), 33, 32).as("v2"))
-      two.filter(col("vec_id") >= 10).write.mode("overwrite").parquet(basePath)
-      two.filter(col("vec_id") < 10).write.mode("overwrite").parquet(tailPath)
-      val p = HnswIndex.Params(m = 16, efConstruction = 100, metric = "ip",
-        numShards = 4)
-      val base = spark.read.parquet(basePath)
-      HnswIndex.build(base, "vec_id", "v1", p)
-        .write.mode("overwrite").parquet(s"$dir/v1")
-      HnswIndex.build(base, "vec_id", "v2", p)
-        .write.mode("overwrite").parquet(s"$dir/v2")
-      markReady(dir)
-    }
-    (basePath, tailPath,
-      readLayout(spark, s"$dir/v1").as[HnswIndex.Segment],
-      readLayout(spark, s"$dir/v2").as[HnswIndex.Segment])
-  }
-
-  /** Multi-vector-field SPACE fixture: the two 32-d halves of the
-    * embedding as separate declared vector fields (v1, v2), each with a
-    * READY HNSW generation under its FIELD SCOPE
-    * ([[graft.api.IndexLifecycle.scoped]]) — the layout the reference's
-    * per-field index intersection serves from (one index per vector
-    * field, vector_manager.cc:1024-1087), declaration-driven.
-    */
-  def multiFieldSpace(spark: SparkSession, sfDir: String): String = {
-    val dir = dirFor(sfDir, "apimv")
-    val spacePath = s"$dir/space"
-    buildOnce(dir) {
-      emb(spark, sfDir)
-        .select(col("vec_id").cast("long").as("_id"), col("label"),
-          slice(col("embedding"), 1, 32).as("v1"),
-          slice(col("embedding"), 33, 32).as("v2"))
-        .write.mode("overwrite").parquet(spacePath)
-      val lc = new graft.api.IndexLifecycle(spark, spacePath)
-      val p = HnswIndex.Params(m = 16, efConstruction = 100, metric = "ip",
-        numShards = 4)
-      lc.scoped("v1").rebuildHnsw("_id", "v1", p)
-      lc.scoped("v2").rebuildHnsw("_id", "v2", p)
-      markReady(dir)
-    }
-    spacePath
-  }
-
-  /** INT8 SPACE fixture: the embeddings symmetric-quantized to int8
-    * codes (`iv`, the ingest-side quantizer) with a READY IVFFLAT
-    * generation trained in the de-quantized domain
-    * ([[graft.api.IndexLifecycle.rebuild]]) — the INT8 routed
-    * serving layout (index_model.h:19).
-    */
-  def int8IvfSpace(spark: SparkSession, sfDir: String): String = {
-    val dir = dirFor(sfDir, "apii8ivf")
-    val spacePath = s"$dir/space"
-    buildOnce(dir) {
-      emb(spark, sfDir)
-        .select(col("vec_id").cast("long").as("_id"), col("label"),
-          graft.Graft.F.quantizeI8(col("embedding")).as("iv"))
-        .write.mode("overwrite").parquet(spacePath)
-      new graft.api.IndexLifecycle(spark, spacePath).rebuild("iv", 8)
-      markReady(dir)
-    }
-    spacePath
-  }
-
-  /** INT8 space under a READY HNSW generation: the graph stores the raw
-    * code values as floats ([[graft.api.IndexLifecycle.rebuildHnsw]])
-    * so walk scores equal the integer kernels exactly — the routed int8
-    * graph serving fixture (reference: INT8 across every index family,
-    * index_model.h:19).
-    */
-  def int8HnswSpace(spark: SparkSession, sfDir: String): String = {
-    val dir = dirFor(sfDir, "apii8hnsw")
-    val spacePath = s"$dir/space"
-    buildOnce(dir) {
-      emb(spark, sfDir)
-        .select(col("vec_id").cast("long").as("_id"), col("label"),
-          graft.Graft.F.quantizeI8(col("embedding")).as("iv"))
-        .write.mode("overwrite").parquet(spacePath)
-      new graft.api.IndexLifecycle(spark, spacePath).rebuildHnsw("_id", "iv",
-        HnswIndex.Params(m = 16, efConstruction = 100, metric = "ip",
-          numShards = 4))
-      markReady(dir)
-    }
-    spacePath
-  }
-
-  /** INT8 space under a READY IVFPQ generation — codebooks in the
-    * raw-code float domain, integer-kernel rerank
-    * ([[graft.api.IndexLifecycle.rebuildIvfPq]]).
-    */
-  def int8IvfPqSpace(spark: SparkSession, sfDir: String): String = {
-    val dir = dirFor(sfDir, "apii8ivfpq")
-    val spacePath = s"$dir/space"
-    buildOnce(dir) {
-      emb(spark, sfDir)
-        .select(col("vec_id").cast("long").as("_id"), col("label"),
-          graft.Graft.F.quantizeI8(col("embedding")).as("iv"))
-        .write.mode("overwrite").parquet(spacePath)
-      new graft.api.IndexLifecycle(spark, spacePath)
-        .rebuildIvfPq("iv", ncentroids = 8, m = 8)
-      markReady(dir)
-    }
-    spacePath
-  }
-
-  /** INT8 space under a READY Vamana (DISKANN_STATIC) generation — same
-    * raw-code float domain as [[int8HnswSpace]].
-    */
-  def int8VamanaSpace(spark: SparkSession, sfDir: String): String = {
-    val dir = dirFor(sfDir, "apii8vamana")
-    val spacePath = s"$dir/space"
-    buildOnce(dir) {
-      emb(spark, sfDir)
-        .select(col("vec_id").cast("long").as("_id"), col("label"),
-          graft.Graft.F.quantizeI8(col("embedding")).as("iv"))
-        .write.mode("overwrite").parquet(spacePath)
-      new graft.api.IndexLifecycle(spark, spacePath).rebuildVamana("_id", "iv",
-        graft.operators.VamanaIndex.Params(r = 32, l = 100, metric = "ip",
-          numShards = 4))
-      markReady(dir)
-    }
-    spacePath
-  }
-
-  /** MIXED-family multi-vector SPACE fixture: v1 under a READY HNSW
-    * generation, v2 under a READY IVFFLAT generation — the reference
-    * intersects per-field results for ANY family combination
-    * (vector_manager.cc:1024-1087), so the conjunctive route must not
-    * demand a homogeneous index set.
-    */
-  def multiFieldMixedSpace(spark: SparkSession, sfDir: String): String = {
-    val dir = dirFor(sfDir, "apimvmixed")
-    val spacePath = s"$dir/space"
-    buildOnce(dir) {
-      emb(spark, sfDir)
-        .select(col("vec_id").cast("long").as("_id"), col("label"),
-          slice(col("embedding"), 1, 32).as("v1"),
-          slice(col("embedding"), 33, 32).as("v2"))
-        .write.mode("overwrite").parquet(spacePath)
-      val lc = new graft.api.IndexLifecycle(spark, spacePath)
-      lc.scoped("v1").rebuildHnsw("_id", "v1",
-        HnswIndex.Params(m = 16, efConstruction = 100, metric = "ip",
-          numShards = 4))
-      lc.scoped("v2").rebuild("v2", ncentroids = 8)
-      markReady(dir)
-    }
-    spacePath
-  }
-
-  /** INT8 multi-vector SPACE fixture: iv1 under a READY int8 HNSW
-    * generation (raw-code float domain), iv2 under a READY int8 IVFFLAT
-    * generation (de-quantized centroid domain) — the conjunctive route
-    * intersects per-field legs whatever the value type
-    * (index_model.h:19, vector_manager.cc:1024-1087).
-    */
-  def multiFieldInt8Space(spark: SparkSession, sfDir: String): String = {
-    val dir = dirFor(sfDir, "apimvint8")
-    val spacePath = s"$dir/space"
-    buildOnce(dir) {
-      emb(spark, sfDir)
-        .select(col("vec_id").cast("long").as("_id"), col("label"),
-          graft.Graft.F.quantizeI8(slice(col("embedding"), 1, 32)).as("iv1"),
-          graft.Graft.F.quantizeI8(slice(col("embedding"), 33, 32)).as("iv2"))
-        .write.mode("overwrite").parquet(spacePath)
-      val lc = new graft.api.IndexLifecycle(spark, spacePath)
-      lc.scoped("iv1").rebuildHnsw("_id", "iv1",
-        HnswIndex.Params(m = 16, efConstruction = 100, metric = "ip",
-          numShards = 4))
-      lc.scoped("iv2").rebuild("iv2", ncentroids = 8)
-      markReady(dir)
-    }
-    spacePath
-  }
-
-  /** COMPRESSED-family multi-vector SPACE fixture: v1 under a READY
-    * IVFPQ generation, v2 under a READY IVFRABITQ generation — the
-    * conjunctive route intersects per-field legs for the compressed
-    * families too (vector_manager.cc:1024-1087).
-    */
-  def multiFieldPqSpace(spark: SparkSession, sfDir: String): String = {
-    val dir = dirFor(sfDir, "apimvpq")
-    val spacePath = s"$dir/space"
-    buildOnce(dir) {
-      emb(spark, sfDir)
-        .select(col("vec_id").cast("long").as("_id"), col("label"),
-          slice(col("embedding"), 1, 32).as("v1"),
-          slice(col("embedding"), 33, 32).as("v2"))
-        .write.mode("overwrite").parquet(spacePath)
-      val lc = new graft.api.IndexLifecycle(spark, spacePath)
-      lc.scoped("v1").rebuildIvfPq("v1", ncentroids = 8, m = 8, ksub = 16)
-      lc.scoped("v2").rebuildIvfRabitq("v2", ncentroids = 8)
-      markReady(dir)
-    }
-    spacePath
-  }
-
-  /** [[multiFieldSpace]] with a realtime TAIL (vec_id < 10, including
-    * the query vector): per-field READY generations over the BASE split
-    * — the shape the tail-aware conjunctive route serves.
-    */
-  def multiFieldRealtimeSpace(spark: SparkSession, sfDir: String): (String, String) = {
-    val dir = dirFor(sfDir, "apimvrt")
-    val spacePath = s"$dir/space"
-    val tailPath = s"$dir/tail"
-    buildOnce(dir) {
-      val two = emb(spark, sfDir)
-        .select(col("vec_id").cast("long").as("_id"), col("label"),
-          slice(col("embedding"), 1, 32).as("v1"),
-          slice(col("embedding"), 33, 32).as("v2"))
-      two.filter(col("_id") >= 10).write.mode("overwrite").parquet(spacePath)
-      two.filter(col("_id") < 10).write.mode("overwrite").parquet(tailPath)
-      val lc = new graft.api.IndexLifecycle(spark, spacePath)
-      val p = HnswIndex.Params(m = 16, efConstruction = 100, metric = "ip",
-        numShards = 4)
-      lc.scoped("v1").rebuildHnsw("_id", "v1", p)
-      lc.scoped("v2").rebuildHnsw("_id", "v2", p)
-      markReady(dir)
-    }
-    (spacePath, tailPath)
-  }
-
-  /** Routed-API clustered-HNSW fixture: a SPACE with a READY
-    * SPANN-clustered graph generation (shards = quantizer lists,
-    * partitionBy(shard_id)) built through the lifecycle — what
-    * `searchAuto` serves with parquet partition pruning.
-    */
-  def hnswRoutedSpace(spark: SparkSession, sfDir: String): String = {
-    val dir = dirFor(sfDir, "apihnswr")
-    val spacePath = s"$dir/space"
-    buildOnce(dir) {
-      emb(spark, sfDir)
-        .select(col("vec_id").cast("long").as("_id"), col("label"), col("embedding"))
-        .write.mode("overwrite").parquet(spacePath)
-      new graft.api.IndexLifecycle(spark, spacePath).rebuildHnswClustered(
-        "_id", "embedding",
-        HnswIndex.Params(m = 16, efConstruction = 100, metric = "l2"),
-        ncentroids = 16)
-      markReady(dir)
-    }
-    spacePath
-  }
-
-  /** Routed-API IVFPQ fixture: a SPACE with a READY residual-IVFPQ
-    * generation built through the lifecycle.
-    */
-  def pqSpace(spark: SparkSession, sfDir: String): String = {
-    val dir = dirFor(sfDir, "apipq")
-    val spacePath = s"$dir/space"
-    buildOnce(dir) {
-      emb(spark, sfDir)
-        .select(col("vec_id").cast("long").as("_id"), col("label"), col("embedding"))
-        .write.mode("overwrite").parquet(spacePath)
-      new graft.api.IndexLifecycle(spark, spacePath)
-        .rebuildIvfPq("embedding", ncentroids = 8, m = 8, ksub = 16)
-      markReady(dir)
-    }
-    spacePath
-  }
-
-  /** Routed-API BINARYIVF fixture: a SPACE whose vector column holds
-    * PACKED SIGN CODES (value_type=binary) with a READY Hamming-IVF
-    * generation built through the lifecycle.
-    */
-  def binarySpace(spark: SparkSession, sfDir: String): String = {
-    val dir = dirFor(sfDir, "apibivf")
-    val spacePath = s"$dir/space"
-    buildOnce(dir) {
-      emb(spark, sfDir)
-        .select(col("vec_id").cast("long").as("_id"), col("label"),
-          graft.Graft.columnOf(graft.functions.SignBits(
-            graft.Graft.exprOf(col("embedding").cast("array<float>"))))
-            .as("embedding"))
-        .write.mode("overwrite").parquet(spacePath)
-      new graft.api.IndexLifecycle(spark, spacePath)
-        .rebuildBinaryIvf("embedding", ncentroids = 8)
-      markReady(dir)
-    }
-    spacePath
-  }
-
-  /** Routed-API SCANN fixture: a SPACE with a READY anisotropic-PQ
-    * generation built through the lifecycle (score-aware codebooks +
-    * assignment — the native ScaNN class).
-    */
-  def scannSpace(spark: SparkSession, sfDir: String): String = {
-    val dir = dirFor(sfDir, "apiscann2")
-    val spacePath = s"$dir/space"
-    buildOnce(dir) {
-      emb(spark, sfDir)
-        .select(col("vec_id").cast("long").as("_id"), col("label"), col("embedding"))
-        .write.mode("overwrite").parquet(spacePath)
-      new graft.api.IndexLifecycle(spark, spacePath)
-        .rebuildScann("embedding", ncentroids = 8, m = 8, ksub = 16)
-      markReady(dir)
-    }
-    spacePath
-  }
-
-  /** INT8 space under a READY SCANN generation (anisotropic codebooks
-    * trained in the raw-code float domain, integer-kernel rerank).
-    */
-  def int8ScannSpace(spark: SparkSession, sfDir: String): String = {
-    val dir = dirFor(sfDir, "apii8scann")
-    val spacePath = s"$dir/space"
-    buildOnce(dir) {
-      emb(spark, sfDir)
-        .select(col("vec_id").cast("long").as("_id"), col("label"),
-          graft.Graft.F.quantizeI8(col("embedding")).as("iv"))
-        .write.mode("overwrite").parquet(spacePath)
-      new graft.api.IndexLifecycle(spark, spacePath)
-        .rebuildScann("iv", ncentroids = 8, m = 8, ksub = 16)
-      markReady(dir)
-    }
-    spacePath
-  }
-
-  /** INT8 space under a READY IVFRABITQ generation (quantizer + residual
-    * sign codes in the raw-code float domain, integer-kernel rerank).
-    */
-  def int8RabitqSpace(spark: SparkSession, sfDir: String): String = {
-    val dir = dirFor(sfDir, "apii8rb")
-    val spacePath = s"$dir/space"
-    buildOnce(dir) {
-      emb(spark, sfDir)
-        .select(col("vec_id").cast("long").as("_id"), col("label"),
-          graft.Graft.F.quantizeI8(col("embedding")).as("iv"))
-        .write.mode("overwrite").parquet(spacePath)
-      new graft.api.IndexLifecycle(spark, spacePath)
-        .rebuildIvfRabitq("iv", ncentroids = 8)
-      markReady(dir)
-    }
-    spacePath
-  }
-
-  /** Routed-API IVFRABITQ fixture: a SPACE with a READY residual
-    * sign-code generation built through the lifecycle.
-    */
-  def rbSpace(spark: SparkSession, sfDir: String): String = {
-    val dir = dirFor(sfDir, "apirb")
-    val spacePath = s"$dir/space"
-    buildOnce(dir) {
-      emb(spark, sfDir)
-        .select(col("vec_id").cast("long").as("_id"), col("label"), col("embedding"))
-        .write.mode("overwrite").parquet(spacePath)
-      new graft.api.IndexLifecycle(spark, spacePath)
-        .rebuildIvfRabitq("embedding", ncentroids = 8)
-      markReady(dir)
-    }
-    spacePath
-  }
-
-  /** Routed-API Vamana fixture: the embeddings table as a SPACE with a
-    * READY DiskANN-static generation built through the lifecycle.
-    */
-  def vamanaSpace(spark: SparkSession, sfDir: String): String = {
-    val dir = dirFor(sfDir, "apivam")
-    val spacePath = s"$dir/space"
-    buildOnce(dir) {
-      emb(spark, sfDir)
-        .select(col("vec_id").cast("long").as("_id"), col("label"), col("embedding"))
-        .write.mode("overwrite").parquet(spacePath)
-      new graft.api.IndexLifecycle(spark, spacePath).rebuildVamana("_id", "embedding",
-        graft.operators.VamanaIndex.Params(r = 32, l = 64, alpha = 1.2,
-          metric = "l2", numShards = 4))
-      markReady(dir)
-    }
-    spacePath
-  }
-
-  /** Routed-API CLUSTERED-Vamana fixture: a SPACE with a READY
-    * SPANN-routed DiskANN-static generation (shards = quantizer lists,
-    * partitionBy(shard_id)) built through the lifecycle — what
-    * `searchAuto` serves with parquet partition pruning.
-    */
-  def vamanaRoutedSpace(spark: SparkSession, sfDir: String): String = {
-    val dir = dirFor(sfDir, "apivamr")
-    val spacePath = s"$dir/space"
-    buildOnce(dir) {
-      emb(spark, sfDir)
-        .select(col("vec_id").cast("long").as("_id"), col("label"), col("embedding"))
-        .write.mode("overwrite").parquet(spacePath)
-      new graft.api.IndexLifecycle(spark, spacePath).rebuildVamanaClustered(
-        "_id", "embedding",
-        graft.operators.VamanaIndex.Params(r = 32, l = 64, alpha = 1.2,
-          metric = "l2"),
-        ncentroids = 16)
-      markReady(dir)
-    }
-    spacePath
-  }
-
-  /** Realtime-serving fixture (`enable_realtime`): the embeddings corpus
-    * split into a BASE space (vec_id ≥ 10) whose index generations are
-    * built through the lifecycle, and a TAIL table (vec_id < 10) of
-    * fresh writes not yet folded by the compaction loop. The live view
-    * (base ∪ tail) is exactly the full embeddings table, so every
-    * realtime route at exact params oracles against the plain exact
-    * top-k — and vec_id 0 (the query vector, distance 0) lives in the
-    * TAIL, so a route that skips the buffer union is missing its top-1,
-    * not some tail-end row. One space carries a READY generation of
-    * every float family (separate sidecars per kind).
-    */
-  def realtimeSpace(spark: SparkSession, sfDir: String): (String, String) = {
-    val dir = dirFor(sfDir, "apirt")
-    val spacePath = s"$dir/space"
-    val tailPath = s"$dir/tail"
-    buildOnce(dir) {
-      val all = emb(spark, sfDir)
-        .select(col("vec_id").cast("long").as("_id"), col("label"), col("embedding"))
-      all.filter(col("_id") >= 10).write.mode("overwrite").parquet(spacePath)
-      all.filter(col("_id") < 10).write.mode("overwrite").parquet(tailPath)
-      val lc = new graft.api.IndexLifecycle(spark, spacePath)
-      lc.rebuild("embedding", ncentroids = 16)
-      lc.rebuildIvfPq("embedding", ncentroids = 8, m = 8, ksub = 16)
-      lc.rebuildIvfRabitq("embedding", ncentroids = 8)
-      lc.rebuildHnsw("_id", "embedding",
-        HnswIndex.Params(m = 16, efConstruction = 100, metric = "l2", numShards = 4))
-      lc.rebuildVamana("_id", "embedding",
-        graft.operators.VamanaIndex.Params(r = 32, l = 64, alpha = 1.2,
-          metric = "l2", numShards = 4))
-      markReady(dir)
-    }
-    (spacePath, tailPath)
-  }
-
-  /** Realtime fixture whose TAIL is produced by the ACTUAL streaming
-    * ingest path — `RealtimeTail.startIngest` (readStream → parquet sink
-    * with a checkpoint, one processed micro-batch, then stopped) — not a
-    * static parquet write: the checkpoint/trigger plumbing itself is
-    * under the oracle. Same base/tail split as [[realtimeSpace]]
-    * (tail = vec_id < 10, including the query vector), READY IVF
-    * generation over the base.
-    */
-  def realtimeStreamSpace(spark: SparkSession, sfDir: String): (String, String) = {
-    val dir = dirFor(sfDir, "apirtstream")
-    val spacePath = s"$dir/space"
-    val tailPath = s"$dir/tail"
-    buildOnce(dir) {
-      val all = emb(spark, sfDir)
-        .select(col("vec_id").cast("long").as("_id"), col("label"), col("embedding"))
-      all.filter(col("_id") >= 10).write.mode("overwrite").parquet(spacePath)
-      new graft.api.IndexLifecycle(spark, spacePath)
-        .rebuild("embedding", ncentroids = 16)
-      // the fresh writes arrive THROUGH the stream: staged as a file
-      // source, ingested by startIngest, drained, stopped
-      val staging = s"$dir/staging"
-      all.filter(col("_id") < 10).write.mode("overwrite").parquet(staging)
-      val rt = new graft.streaming.RealtimeTail(spark, spacePath, tailPath,
-        s"$dir/ckpt", "_id")
-      val src = spark.readStream.schema(all.schema).parquet(staging)
-      val q = rt.startIngest(src, intervalMs = 100L)
-      try q.processAllAvailable() finally q.stop()
-      markReady(dir)
-    }
-    (spacePath, tailPath)
-  }
-
-  /** BINARYIVF realtime fixture: the same base/tail split with the
-    * vector column holding PACKED SIGN CODES (value_type=binary) and a
-    * READY Hamming-IVF generation over the base — the binary family's
-    * instance of [[realtimeSpace]].
-    */
-  def realtimeBinarySpace(spark: SparkSession, sfDir: String): (String, String) = {
-    val dir = dirFor(sfDir, "apirtb")
-    val spacePath = s"$dir/space"
-    val tailPath = s"$dir/tail"
-    buildOnce(dir) {
-      val all = emb(spark, sfDir)
-        .select(col("vec_id").cast("long").as("_id"), col("label"),
-          graft.Graft.columnOf(graft.functions.SignBits(
-            graft.Graft.exprOf(col("embedding").cast("array<float>"))))
-            .as("embedding"))
-      all.filter(col("_id") >= 10).write.mode("overwrite").parquet(spacePath)
-      all.filter(col("_id") < 10).write.mode("overwrite").parquet(tailPath)
-      new graft.api.IndexLifecycle(spark, spacePath)
-        .rebuildBinaryIvf("embedding", ncentroids = 8)
-      markReady(dir)
-    }
-    (spacePath, tailPath)
-  }
-
-  /** Delete-visibility fixture: a space with BOTH a READY HNSW generation
-    * and a READY IVF generation built over the FULL embeddings corpus,
-    * then ids 0–4 deleted THROUGH the lifecycle (space table rewritten,
-    * delete ledger recorded) — the generations still physically contain
-    * the five docs, so any routed search that skips the ledger gate
-    * returns ghosts (vec_id 0 is the query vector itself — top-1 would be
-    * a ghost). The reference's contract under test: deleted-bitmap gating
-    * at search time (engine.cc:869-899, gamma_common_data.h:94-105).
-    */
-  def apiDeleteSpace(spark: SparkSession, sfDir: String): String = {
-    val dir = dirFor(sfDir, "apidel")
-    val spacePath = s"$dir/space"
-    buildOnce(dir) {
-      emb(spark, sfDir)
-        .select(col("vec_id").cast("long").as("_id"), col("label"), col("embedding"))
-        .write.mode("overwrite").parquet(spacePath)
-      val lc = new graft.api.IndexLifecycle(spark, spacePath)
-      lc.rebuildHnsw("_id", "embedding",
-        HnswIndex.Params(m = 16, efConstruction = 100, metric = "l2", numShards = 4))
-      lc.rebuild("embedding", ncentroids = 16)
-      lc.deleteByIds("_id", Seq(0L, 1L, 2L, 3L, 4L))
-      markReady(dir)
-    }
-    spacePath
-  }
-
-  /** String-PK fixture — the reference's PRIMARY id model (auto-generated
-    * string UUIDs, client.go:1197-1221): `_id = "doc-" || vec_id` with the
-    * dense `_docid` sidecar ([[graft.api.Ingest.assignDocids]]; here the
-    * known vec_id, so oracles can re-derive the mapping), and READY HNSW +
-    * IVF + Vamana generations built over `_docid` — string-PK spaces ride
-    * the routed index arms instead of falling back to brute FLAT.
-    */
-  def stringIdSpace(spark: SparkSession, sfDir: String): String = {
-    val dir = dirFor(sfDir, "apistr")
-    val spacePath = s"$dir/space"
-    buildOnce(dir) {
-      emb(spark, sfDir)
-        .select(concat(lit("doc-"), col("vec_id")).as("_id"),
-          col("vec_id").cast("long").as("_docid"), col("label"), col("embedding"))
-        .write.mode("overwrite").parquet(spacePath)
-      val lc = new graft.api.IndexLifecycle(spark, spacePath)
-      lc.rebuildHnsw("_docid", "embedding",
-        HnswIndex.Params(m = 16, efConstruction = 100, metric = "l2", numShards = 4))
-      lc.rebuild("embedding", ncentroids = 16)
-      lc.rebuildVamana("_docid", "embedding",
-        graft.operators.VamanaIndex.Params(r = 32, l = 64, alpha = 1.2,
-          metric = "l2", numShards = 4))
-      markReady(dir)
-    }
-    spacePath
-  }
-
-  /** Rid-FREE string-PK fixture (r19): string `_id`, NO `_docid` sidecar
-    * — the hand-rolled-space shape that bypasses the catalog's docid
-    * minting. Scan families serve it directly (their layouts carry the
-    * PK); only an IVFFLAT generation is built because graph generations
-    * need a long id column this space deliberately lacks.
-    */
-  def ridFreeSpace(spark: SparkSession, sfDir: String): String = {
-    val dir = dirFor(sfDir, "apinodocid")
-    val spacePath = s"$dir/space"
-    buildOnce(dir) {
-      emb(spark, sfDir)
-        .select(concat(lit("doc-"), col("vec_id")).as("_id"),
-          col("label"), col("embedding"))
-        .write.mode("overwrite").parquet(spacePath)
-      val lc = new graft.api.IndexLifecycle(spark, spacePath)
-      lc.rebuild("embedding", ncentroids = 16)
-      markReady(dir)
-    }
-    spacePath
-  }
-
-  /** String-PK realtime fixture: the [[realtimeSpace]] base/tail split
-    * (tail = vec_id < 10, including the query vector) with string `_id`s
-    * and the `_docid` sidecar carried by BOTH base and tail — the shape a
-    * streamed string-PK corpus has after [[graft.api.Ingest.assignDocids]]
-    * runs on each batch. READY HNSW + IVF generations over the base's
-    * `_docid`.
-    */
-  def stringIdRealtimeSpace(spark: SparkSession, sfDir: String): (String, String) = {
-    val dir = dirFor(sfDir, "apistrrt")
-    val spacePath = s"$dir/space"
-    val tailPath = s"$dir/tail"
-    buildOnce(dir) {
-      val all = emb(spark, sfDir)
-        .select(concat(lit("doc-"), col("vec_id")).as("_id"),
-          col("vec_id").cast("long").as("_docid"), col("label"), col("embedding"))
-      all.filter(col("_docid") >= 10).write.mode("overwrite").parquet(spacePath)
-      all.filter(col("_docid") < 10).write.mode("overwrite").parquet(tailPath)
-      val lc = new graft.api.IndexLifecycle(spark, spacePath)
-      lc.rebuildHnsw("_docid", "embedding",
-        HnswIndex.Params(m = 16, efConstruction = 100, metric = "l2", numShards = 4))
-      lc.rebuild("embedding", ncentroids = 16)
-      markReady(dir)
-    }
-    (spacePath, tailPath)
-  }
-
-  /** String-PK delete-visibility fixture: READY HNSW + IVF generations
-    * over the FULL corpus, then `doc-0`…`doc-4` deleted through
-    * [[graft.api.IndexLifecycle.deleteByPk]] — the ledger records their
-    * DOCIDs, so any routed search that gates on the wrong id space (or
-    * not at all) returns ghosts (`doc-0` is the query vector itself).
-    */
-  def stringIdDeleteSpace(spark: SparkSession, sfDir: String): String = {
-    val dir = dirFor(sfDir, "apistrdel")
-    val spacePath = s"$dir/space"
-    buildOnce(dir) {
-      emb(spark, sfDir)
-        .select(concat(lit("doc-"), col("vec_id")).as("_id"),
-          col("vec_id").cast("long").as("_docid"), col("label"), col("embedding"))
-        .write.mode("overwrite").parquet(spacePath)
-      val lc = new graft.api.IndexLifecycle(spark, spacePath)
-      lc.rebuildHnsw("_docid", "embedding",
-        HnswIndex.Params(m = 16, efConstruction = 100, metric = "l2", numShards = 4))
-      lc.rebuild("embedding", ncentroids = 16)
-      lc.deleteByPk("_id", Seq("doc-0", "doc-1", "doc-2", "doc-3", "doc-4"))
-      markReady(dir)
-    }
-    spacePath
-  }
-
-  /** Media fixture: the synthesized PNG/WAV/pseudo-video corpus
-    * ([[graft.operators.Multimodal.synthesize]] over the embeddings ids)
-    * written ONCE per fixture. Media queries then time decode + features
-    * + search — round 7's q_media_pipeline re-synthesized and re-encoded
-    * PNGs inside the timed query, which is data-generation cost, not
-    * operator cost. At 100 TB the corpus arrives as stored bytes; this
-    * layout is that shape.
-    */
-  def media(spark: SparkSession, sfDir: String): DataFrame = {
-    // "media3": layout revision (file count floored at cluster width) —
-    // distinct cache key
-    val dir = dirFor(sfDir, "media3")
-    buildOnce(dir) {
-      val ids = emb(spark, sfDir).select(col("vec_id"))
-      // file count scales with the corpus (~2k payloads per file): decode
-      // parallelism comes from the LAYOUT, the way a 100 TB media table
-      // gets it from file/row-group splits. One file for everything made
-      // the whole decode serial at sf1 (one task, 10.7× at 10× rows —
-      // BENCH_SCALING r11); a per-USE repartition was measured slower at
-      // sf0.1 (the exchange beats the decode it parallelizes), so the
-      // split happens ONCE here at build time. Round 21: floor at the
-      // cluster width — below ~2k·cores rows the 2k/file target left the
-      // codec work (the REAL per-row CPU here) on a single core; at
-      // production scale the rows/file term dominates and the floor is
-      // moot.
+    },
+    /** Multi-field graphs: one inner-product HNSW segment table PER
+      * vector field (the two 32-d halves of the embedding), the layout
+      * the reference's multi-field conjunction serves from.
+      */
+    Layout("hnswmv", "v1", "v2") { (_, _, e, dir) =>
+      val two = halves(e)
+      HnswIndex.build(two, "vec_id", "v1", hnswIp).write.mode("overwrite").parquet(s"$dir/v1")
+      HnswIndex.build(two, "vec_id", "v2", hnswIp).write.mode("overwrite").parquet(s"$dir/v2")
+    },
+    /** [[hnswMultiField]] built over the BASE split (vec_id ≥ 10), plus a
+      * TAIL (vec_id < 10, the query vector among them) carrying both
+      * field slices — multi-field conjunction with a live buffer.
+      */
+    Layout("hnswmvrt", "v1", "v2") { (spark, _, e, dir) =>
+      val two = halves(e)
+      two.filter(col("vec_id") >= 10).write.mode("overwrite").parquet(s"$dir/base")
+      two.filter(col("vec_id") < 10).write.mode("overwrite").parquet(s"$dir/tail")
+      val base = spark.read.parquet(s"$dir/base")
+      HnswIndex.build(base, "vec_id", "v1", hnswIp).write.mode("overwrite").parquet(s"$dir/v1")
+      HnswIndex.build(base, "vec_id", "v2", hnswIp).write.mode("overwrite").parquet(s"$dir/v2")
+    },
+    /** The synthesized PNG/WAV/pseudo-video corpus over the embeddings
+      * ids, written ONCE: media queries time decode + features + search,
+      * not data generation. ~2k payloads per file gives the decode its
+      * parallelism from the LAYOUT (one file made it serial at sf1; a
+      * per-use repartition measured slower), floored at the cluster
+      * width so small fixtures do not decode on one core. "media3" is
+      * the layout revision.
+      */
+    Layout("media3", "table") { (spark, _, e, dir) =>
+      val ids = e.select(col("vec_id"))
       val files = math.max(spark.sparkContext.defaultParallelism.toLong,
         math.max(1L, ids.count() / 2000L)).toInt
       graft.operators.Multimodal.synthesize(spark, ids, "vec_id")
         .repartition(files)
         .write.mode("overwrite").parquet(s"$dir/table")
-      markReady(dir)
-    }
-    readLayout(spark, s"$dir/table")
+    })
+
+  /** Build layout `key` once for this fixture and return its dir. */
+  private def layoutDir(spark: SparkSession, sfDir: String, key: String): String = {
+    val row = layouts.find(_.key == key)
+      .getOrElse(throw new IllegalArgumentException(s"no fixture layout '$key'"))
+    val dir = dirFor(sfDir, key)
+    buildOnce(dir) { row.build(spark, sfDir, emb(spark, sfDir), dir); markReady(dir) }
+    dir
   }
 
-  /** Build every layout the declared queries use — called from Bench's
-    * untimed warmup so builds never pollute per-query timings.
+  private def ivfLayout(spark: SparkSession, sfDir: String, key: String,
+      model: String): (DataFrame, IvfIndex.Model) = {
+    val dir = layoutDir(spark, sfDir, key)
+    (readLayout(spark, s"$dir/table"), readIvfModel(s"$dir/$model"))
+  }
+
+  private def pqLayout(spark: SparkSession, sfDir: String,
+      key: String): (DataFrame, PqIndex.Model) = {
+    val dir = layoutDir(spark, sfDir, key)
+    (readLayout(spark, s"$dir/table"), readPqModel(s"$dir/pq.txt"))
+  }
+
+  private def ivfPqLayout(spark: SparkSession, sfDir: String,
+      key: String): (DataFrame, IvfIndex.Model, PqIndex.Model) = {
+    val dir = layoutDir(spark, sfDir, key)
+    (readLayout(spark, s"$dir/table"), readIvfModel(s"$dir/ivf.txt"),
+      readPqModel(s"$dir/pq.txt"))
+  }
+
+  private def segments(spark: SparkSession, path: String): Dataset[HnswIndex.Segment] = {
+    import spark.implicits._
+    readLayout(spark, path).as[HnswIndex.Segment]
+  }
+
+  def ivfFlat(spark: SparkSession, sfDir: String): (DataFrame, IvfIndex.Model) =
+    ivfLayout(spark, sfDir, "ivf16", "model.txt")
+  def neardupIvf(spark: SparkSession, sfDir: String): (DataFrame, IvfIndex.Model) =
+    ivfLayout(spark, sfDir, "neardup16", "model.txt")
+  def ivfFixed(spark: SparkSession, sfDir: String): (DataFrame, IvfIndex.Model) =
+    ivfLayout(spark, sfDir, "ivffix16", "model.txt")
+  def pqFixed(spark: SparkSession, sfDir: String): (DataFrame, PqIndex.Model) =
+    pqLayout(spark, sfDir, "pqfix8_16")
+  def pqFlat(spark: SparkSession, sfDir: String): (DataFrame, PqIndex.Model) =
+    pqLayout(spark, sfDir, "pq8_16")
+  def ivfPqResidual(spark: SparkSession, sfDir: String)
+      : (DataFrame, IvfIndex.Model, PqIndex.Model) = ivfPqLayout(spark, sfDir, "ivfpqr8_8_16")
+  def ivfPqResidualFixed(spark: SparkSession, sfDir: String)
+      : (DataFrame, IvfIndex.Model, PqIndex.Model) = ivfPqLayout(spark, sfDir, "ivfpqrfix8_8_16")
+  def scannFixed(spark: SparkSession, sfDir: String)
+      : (DataFrame, IvfIndex.Model, PqIndex.Model) = ivfPqLayout(spark, sfDir, "scannfix8_8_16")
+  def binary(spark: SparkSession, sfDir: String): DataFrame =
+    readLayout(spark, s"${layoutDir(spark, sfDir, "binary")}/table")
+  def binaryIvf(spark: SparkSession, sfDir: String): (DataFrame, IvfIndex.Model) =
+    ivfLayout(spark, sfDir, "rbivf16", "ivf.txt")
+  def binaryIvfFixed(spark: SparkSession, sfDir: String): (DataFrame, IvfIndex.Model) =
+    ivfLayout(spark, sfDir, "rbivffix16", "ivf.txt")
+
+  def hnsw(spark: SparkSession, sfDir: String): Dataset[HnswIndex.Segment] =
+    segments(spark, s"${layoutDir(spark, sfDir, "hnsw16_100_4_l2")}/table")
+
+  private def clusteredLayout(spark: SparkSession, sfDir: String,
+      key: String): (Dataset[HnswIndex.Segment], IvfIndex.Model) = {
+    val dir = layoutDir(spark, sfDir, key)
+    (segments(spark, s"$dir/table"), readIvfModel(s"$dir/ivf.txt"))
+  }
+
+  def hnswClustered(spark: SparkSession, sfDir: String)
+      : (Dataset[HnswIndex.Segment], IvfIndex.Model) = clusteredLayout(spark, sfDir, "hnswr16_16_100")
+  def hnswClusteredFixed(spark: SparkSession, sfDir: String)
+      : (Dataset[HnswIndex.Segment], IvfIndex.Model) = clusteredLayout(spark, sfDir, "hnswrfix16_16_100")
+
+  def vamana(spark: SparkSession, sfDir: String): Dataset[VamanaIndex.Segment] = {
+    import spark.implicits._
+    readLayout(spark, s"${layoutDir(spark, sfDir, "vamana32_64_4")}/table").as[VamanaIndex.Segment]
+  }
+
+  def hnswMultiField(spark: SparkSession, sfDir: String)
+      : (Dataset[HnswIndex.Segment], Dataset[HnswIndex.Segment]) = {
+    val dir = layoutDir(spark, sfDir, "hnswmv")
+    (segments(spark, s"$dir/v1"), segments(spark, s"$dir/v2"))
+  }
+
+  /** (base path, tail path, v1 segments, v2 segments). */
+  def realtimeMultiField(spark: SparkSession, sfDir: String)
+      : (String, String, Dataset[HnswIndex.Segment], Dataset[HnswIndex.Segment]) = {
+    val dir = layoutDir(spark, sfDir, "hnswmvrt")
+    (s"$dir/base", s"$dir/tail", segments(spark, s"$dir/v1"), segments(spark, s"$dir/v2"))
+  }
+
+  def media(spark: SparkSession, sfDir: String): DataFrame =
+    readLayout(spark, s"${layoutDir(spark, sfDir, "media3")}/table")
+
+  // ── fixture spaces ────────────────────────────────────────────────────
+
+  /** The projections of `embeddings` a fixture space stores: long `_id`
+    * (= vec_id) with the float embedding, its int8 codes `iv`, its two
+    * 32-d halves `v1`/`v2`, their int8 codes `iv1`/`iv2`, or its packed
+    * sign codes (value_type=binary); or string `_id` = "doc-" || vec_id,
+    * with the dense `_docid` sidecar (= vec_id, so oracles re-derive the
+    * mapping) or without one (the hand-rolled shape that bypasses the
+    * catalog's docid minting).
+    */
+  private object Shape extends Enumeration {
+    val LongId, Int8, Halves, Int8Halves, SignCodes, StrDocid, StrNoDocid = Value
+  }
+
+  private def columns(shape: Shape.Value): Seq[Column] = {
+    import graft.Graft.F.quantizeI8
+    val (id, label, e) = (col("vec_id").cast("long").as("_id"), col("label"), col("embedding"))
+    val str = concat(lit("doc-"), col("vec_id")).as("_id")
+    val (h1, h2) = (slice(e, 1, 32), slice(e, 33, 32))
+    shape match {
+      case Shape.LongId => Seq(id, label, e)
+      case Shape.Int8 => Seq(id, label, quantizeI8(e).as("iv"))
+      case Shape.Halves => Seq(id, label, h1.as("v1"), h2.as("v2"))
+      case Shape.Int8Halves => Seq(id, label, quantizeI8(h1).as("iv1"), quantizeI8(h2).as("iv2"))
+      case Shape.SignCodes => Seq(id, label, graft.Graft.columnOf(graft.functions.SignBits(
+        graft.Graft.exprOf(e.cast("array<float>")))).as("embedding"))
+      case Shape.StrDocid => Seq(str, col("vec_id").cast("long").as("_docid"), label, e)
+      case Shape.StrNoDocid => Seq(str, label, e)
+    }
+  }
+
+  /** Where a fixture space's fresh writes live. A realtime space keeps
+    * its routing ids `< 10` (the query vector among them, so a route
+    * that skips the buffer misses its top-1) in `space.tail` — written
+    * directly, or through `RealtimeTail.startIngest` so the
+    * checkpoint/trigger plumbing is under the oracle too — and the rest
+    * in `space`; its live view is exactly the full embeddings table.
+    */
+  private object Tail extends Enumeration { val NoTail, Static, Stream = Value }
+
+  /** One fixture space: its cache key, projection, tail, and lifecycle
+    * steps over the base table, in build order.
+    */
+  private final case class SpaceRow(key: String, shape: Shape.Value,
+      tail: Tail.Value = Tail.NoTail)(val steps: graft.api.IndexLifecycle => Unit)
+
+  private val spaces: Seq[SpaceRow] = {
+    import Shape._
+    import Tail.{Static, Stream}
+    def mvHnsw(a: String, b: String)(lc: graft.api.IndexLifecycle): Unit = {
+      lc.scoped(a).rebuildHnsw("_id", a, hnswIp)
+      lc.scoped(b).rebuildHnsw("_id", b, hnswIp)
+    }
+    Seq(
+      SpaceRow("apihnsw", LongId)(_.rebuildHnsw("_id", "embedding", hnswL2)),
+      SpaceRow("apihnswr", LongId)(
+        _.rebuildHnswClustered("_id", "embedding", hnswL2, ncentroids = 16)),
+      SpaceRow("apipq", LongId)(_.rebuildIvfPq("embedding", ncentroids = 8, m = 8, ksub = 16)),
+      SpaceRow("apirb", LongId)(_.rebuildIvfRabitq("embedding", ncentroids = 8)),
+      SpaceRow("apiscann2", LongId)(_.rebuildScann("embedding", ncentroids = 8, m = 8, ksub = 16)),
+      SpaceRow("apivam", LongId)(_.rebuildVamana("_id", "embedding", vamanaL2)),
+      SpaceRow("apivamr", LongId)(
+        _.rebuildVamanaClustered("_id", "embedding", vamanaL2, ncentroids = 16)),
+      SpaceRow("apibivf", SignCodes)(_.rebuildBinaryIvf("embedding", ncentroids = 8)),
+      // delete visibility: generations over the FULL corpus, then ids
+      // 0–4 deleted through the lifecycle — the generations still hold
+      // them (vec_id 0 is the query vector), so a search that skips the
+      // ledger gate returns ghosts
+      SpaceRow("apidel", LongId) { lc =>
+        lc.rebuildHnsw("_id", "embedding", hnswL2)
+        lc.rebuild("embedding", ncentroids = 16)
+        lc.deleteByIds("_id", Seq(0L, 1L, 2L, 3L, 4L))
+      },
+      SpaceRow("apii8ivf", Int8)(_.rebuild("iv", 8)),
+      SpaceRow("apii8hnsw", Int8)(_.rebuildHnsw("_id", "iv", hnswIp)),
+      SpaceRow("apii8ivfpq", Int8)(_.rebuildIvfPq("iv", ncentroids = 8, m = 8)),
+      SpaceRow("apii8vamana", Int8)(_.rebuildVamana("_id", "iv",
+        VamanaIndex.Params(r = 32, l = 100, metric = "ip", numShards = 4))),
+      SpaceRow("apii8scann", Int8)(_.rebuildScann("iv", ncentroids = 8, m = 8, ksub = 16)),
+      SpaceRow("apii8rb", Int8)(_.rebuildIvfRabitq("iv", ncentroids = 8)),
+      // per-field generations under each field's lifecycle scope
+      SpaceRow("apimv", Halves)(mvHnsw("v1", "v2")),
+      SpaceRow("apimvmixed", Halves) { lc =>
+        lc.scoped("v1").rebuildHnsw("_id", "v1", hnswIp)
+        lc.scoped("v2").rebuild("v2", ncentroids = 8)
+      },
+      SpaceRow("apimvint8", Int8Halves) { lc =>
+        lc.scoped("iv1").rebuildHnsw("_id", "iv1", hnswIp)
+        lc.scoped("iv2").rebuild("iv2", ncentroids = 8)
+      },
+      SpaceRow("apimvpq", Halves) { lc =>
+        lc.scoped("v1").rebuildIvfPq("v1", ncentroids = 8, m = 8, ksub = 16)
+        lc.scoped("v2").rebuildIvfRabitq("v2", ncentroids = 8)
+      },
+      SpaceRow("apimvrt", Halves, Static)(mvHnsw("v1", "v2")),
+      // one realtime space carries a READY generation of every float family
+      SpaceRow("apirt", LongId, Static) { lc =>
+        lc.rebuild("embedding", ncentroids = 16)
+        lc.rebuildIvfPq("embedding", ncentroids = 8, m = 8, ksub = 16)
+        lc.rebuildIvfRabitq("embedding", ncentroids = 8)
+        lc.rebuildHnsw("_id", "embedding", hnswL2)
+        lc.rebuildVamana("_id", "embedding", vamanaL2)
+      },
+      SpaceRow("apirtstream", LongId, Stream)(_.rebuild("embedding", ncentroids = 16)),
+      SpaceRow("apirtb", SignCodes, Static)(_.rebuildBinaryIvf("embedding", ncentroids = 8)),
+      // string PK: graph generations route on `_docid`
+      SpaceRow("apistr", StrDocid) { lc =>
+        lc.rebuildHnsw("_docid", "embedding", hnswL2)
+        lc.rebuild("embedding", ncentroids = 16)
+        lc.rebuildVamana("_docid", "embedding", vamanaL2)
+      },
+      SpaceRow("apinodocid", StrNoDocid)(_.rebuild("embedding", ncentroids = 16)),
+      SpaceRow("apistrrt", StrDocid, Static) { lc =>
+        lc.rebuildHnsw("_docid", "embedding", hnswL2)
+        lc.rebuild("embedding", ncentroids = 16)
+      },
+      // the ledger records the DOCIDs of doc-0…doc-4
+      SpaceRow("apistrdel", StrDocid) { lc =>
+        lc.rebuildHnsw("_docid", "embedding", hnswL2)
+        lc.rebuild("embedding", ncentroids = 16)
+        lc.deleteByPk("_id", Seq("doc-0", "doc-1", "doc-2", "doc-3", "doc-4"))
+      })
+  }
+
+  /** Every fixture key, operator layouts first — what [[warm]] builds. */
+  private[graft] def fixtureKeys: Seq[String] = layouts.map(_.key) ++ spaces.map(_.key)
+
+  /** Build fixture space `key` once and return the catalog root it lives
+    * under, so `new SpaceCatalog(spark, root).search(key, "space", …)`
+    * serves it: table `<root>/<key>/space`, its generations beside it,
+    * a realtime tail at `space.tail` with its checkpoint at `space.ckpt`.
+    */
+  def space(spark: SparkSession, sfDir: String, key: String): String = {
+    val row = spaces.find(_.key == key)
+      .getOrElse(throw new IllegalArgumentException(s"no fixture space '$key'"))
+    val root = fixtureRoot(sfDir)
+    val dir = s"$root/$key"
+    val path = s"$dir/space"
+    buildOnce(dir) {
+      val all = emb(spark, sfDir).select(columns(row.shape): _*)
+      val rid = col(if (all.columns.contains("_docid")) "_docid" else "_id")
+      (if (row.tail == Tail.NoTail) all else all.filter(rid >= 10))
+        .write.mode("overwrite").parquet(path)
+      row.steps(new graft.api.IndexLifecycle(spark, path))
+      val fresh = all.filter(rid < 10)
+      row.tail match {
+        case Tail.Static => fresh.write.mode("overwrite").parquet(s"$path.tail")
+        case Tail.Stream =>
+          // staged as a file source, ingested by startIngest, drained, stopped
+          fresh.write.mode("overwrite").parquet(s"$dir/staging")
+          val q = new graft.streaming.RealtimeTail(spark, path, s"$path.tail",
+            s"$path.ckpt", "_id").startIngest(
+            spark.readStream.schema(all.schema).parquet(s"$dir/staging"), intervalMs = 100L)
+          try q.processAllAvailable() finally q.stop()
+        case _ => ()
+      }
+      markReady(dir)
+    }
+    root
+  }
+
+  /** Build every fixture the declared queries read — called from Bench's
+    * untimed warmup so builds never pollute per-query timings. In
+    * resident mode each layout table's cache entry is materialized here
+    * too, so the first timed query measures the walk/probe, not the load.
     */
   def warm(spark: SparkSession, sfDir: String): Unit = {
-    // in resident mode, materialize each layout's cache entry here so the
-    // first timed query measures the walk/probe, not the one-time load
-    def m(df: DataFrame): Unit = if (resident) { df.count(); () }
-    m(ivfFlat(spark, sfDir)._1)
-    m(neardupIvf(spark, sfDir)._1)
-    m(ivfPq(spark, sfDir)._1)
-    m(ivfPqResidual(spark, sfDir)._1)
-    m(pqFlat(spark, sfDir)._1)
-    m(binary(spark, sfDir))
-    m(binaryIvf(spark, sfDir)._1)
-    m(hnsw(spark, sfDir).toDF())
-    m(hnswClustered(spark, sfDir)._1.toDF())
-    locally { val (a, b) = hnswMultiField(spark, sfDir); m(a.toDF()); m(b.toDF()) }
-    m(vamana(spark, sfDir).toDF())
-    vamanaSpace(spark, sfDir)
-    vamanaRoutedSpace(spark, sfDir)
-    hnswRoutedSpace(spark, sfDir)
-    pqSpace(spark, sfDir)
-    scannSpace(spark, sfDir)
-    rbSpace(spark, sfDir)
-    binarySpace(spark, sfDir)
-    hnswSpace(spark, sfDir)
-    apiDeleteSpace(spark, sfDir)
-    realtimeSpace(spark, sfDir)
-    realtimeBinarySpace(spark, sfDir)
-    realtimeStreamSpace(spark, sfDir)
-    stringIdSpace(spark, sfDir)
-    stringIdRealtimeSpace(spark, sfDir)
-    stringIdDeleteSpace(spark, sfDir)
-    locally { val (_, _, a, b) = realtimeMultiField(spark, sfDir)
-      m(a.toDF()); m(b.toDF()) }
-    multiFieldSpace(spark, sfDir)
-    multiFieldRealtimeSpace(spark, sfDir)
-    multiFieldMixedSpace(spark, sfDir)
-    multiFieldInt8Space(spark, sfDir)
-    multiFieldPqSpace(spark, sfDir)
-    int8IvfSpace(spark, sfDir)
-    int8HnswSpace(spark, sfDir)
-    int8VamanaSpace(spark, sfDir)
-    int8IvfPqSpace(spark, sfDir)
-    int8ScannSpace(spark, sfDir)
-    int8RabitqSpace(spark, sfDir)
-    m(media(spark, sfDir))
-    ()
+    layouts.foreach { l =>
+      val dir = layoutDir(spark, sfDir, l.key)
+      if (resident) l.tables.foreach(t => readLayout(spark, s"$dir/$t").count())
+    }
+    spaces.foreach(r => space(spark, sfDir, r.key))
   }
 }

@@ -2,10 +2,16 @@
 """Local mimic of the driver's DuckDB-oracle compare.
 
 Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
+       python3 tools/check_oracle.py <sfDir> <verifyOutDir> --same-as <otherVerifyOutDir>
 
 Reads each <out>/<name>/ parquet written by graft.Verify, runs the matching
 oracle_sql.json query in DuckDB over the sfDir tables, sorts columns by name,
 and compares row sets. This is a builder-side pre-flight, not the judge.
+
+--same-as compares every query output of <verifyOutDir> with the one of the
+same name in <otherVerifyOutDir> (e.g. a Verify run of the parent commit),
+row for row after the same normalization, queries without oracle SQL
+included. A change meant to keep behaviour must show every output the same.
 """
 import sys, json, glob, os
 import duckdb
@@ -74,5 +80,51 @@ def main(sf_dir, out_dir):
     print(f"== {n_pass} pass, {n_fail} fail ==")
     return 1 if n_fail else 0
 
+def outputs(out_dir):
+    """Query name -> its parquet part files, for every query dir Verify wrote."""
+    return {os.path.basename(os.path.dirname(f)): sorted(glob.glob(f"{os.path.dirname(f)}/*.parquet"))
+            for f in glob.glob(f"{out_dir}/*/*.parquet")}
+
+def cell(v):
+    """A hashable, NaN-equal canonical form of one value (arrays → tuples)."""
+    if hasattr(v, "tolist"):
+        v = v.tolist()
+    if isinstance(v, (list, tuple)):
+        return tuple(cell(x) for x in v)
+    if isinstance(v, dict):
+        return tuple(sorted((k, cell(x)) for k, x in v.items()))
+    if v is None or v is pd.NA or (isinstance(v, float) and v != v):
+        return None
+    return v
+
+def rows(files):
+    df = norm(pd.concat([pd.read_parquet(f) for f in files]))
+    return list(df.columns), [tuple(cell(v) for v in r) for r in df.itertuples(index=False)]
+
+def same_as(out_dir, other_dir):
+    mine, theirs = outputs(out_dir), outputs(other_dir)
+    n_same = n_diff = 0
+    for name in sorted(set(mine) | set(theirs)):
+        if name not in mine or name not in theirs:
+            side = out_dir if name not in mine else other_dir
+            print(f"DIFF {name}: no output in {side}"); n_diff += 1; continue
+        (cg, got), (cw, want) = rows(mine[name]), rows(theirs[name])
+        if cg != cw:
+            print(f"DIFF {name}: columns {cg} vs {cw}"); n_diff += 1; continue
+        if got != want:
+            bad = [i for i, (a, b) in enumerate(zip(got, want)) if a != b]
+            first = bad[0] if bad else min(len(got), len(want))
+            print(f"DIFF {name}: rows {len(got)} vs {len(want)}, first difference at row {first}")
+            print("  this :", got[first:first + 2])
+            print("  other:", want[first:first + 2])
+            n_diff += 1; continue
+        print(f"SAME {name} ({len(got)} rows)"); n_same += 1
+    print(f"== {n_same} same, {n_diff} differ ==")
+    return 1 if n_diff else 0
+
 if __name__ == "__main__":
+    if len(sys.argv) == 5 and sys.argv[3] == "--same-as":
+        sys.exit(same_as(sys.argv[2], sys.argv[4]))
+    if len(sys.argv) != 3:
+        sys.exit(__doc__)
     sys.exit(main(sys.argv[1], sys.argv[2]))
