@@ -450,187 +450,75 @@ object SearchApi {
       case _ =>
         (vc.queries.zipWithIndex
           .map { case (q, i) => (i.toLong, maybeNormalize(space, vc.field, q)) }
-          .toDF("_qid", "_qv")
-          .select(col("_qid"), col("_qv").cast("array<float>").as("_qv")),
+          .toDF("_qid", "_qv"),
           None)
     }
   }
 
-  /** Single-query score column for a condition (the conjunction's
-    * per-field scorer) — None = the metric kernels.
-    */
-  private def flatScoreFn(space: Space, vc: VecCond): Option[Column => Column] =
-    valueTypeOf(space, vc.field) match {
-      case "int8" =>
-        val qBytes = graft.functions.VecKernels.quantizeI8(
-          new org.apache.spark.sql.catalyst.util.GenericArrayData(
-            vc.queries.head.toArray))
-        Some((c: Column) =>
-          Knn.scoreInt8(metricOf(space, vc.field), c, lit(qBytes)))
-      case "binary" =>
-        val qCode = graft.functions.VecKernels.signBits(
-          new org.apache.spark.sql.catalyst.util.GenericArrayData(
-            vc.queries.head.toArray))
-        Some((c: Column) =>
-          graft.Graft.F.hamming(c, lit(qCode)).cast("double"))
-      case _ => None
-    }
-
-  /** `POST /document/search` → DataFrame. Output carries `_score` (and
-    * `_qid` for batched requests).
+  /** `POST /document/search` → DataFrame: the exact FLAT path. Every
+    * request is a batch of its req_num queries (a single query is qid 0),
+    * and every condition scores through [[Knn.searchBatch]] in its
+    * field's value domain ([[flatBatchQueries]]), with its score gate
+    * in-scan (gamma_common_data.h:94-96). The query count known here
+    * picks the per-query merge ([[Knn.topKPerQuery]]): one
+    * TakeOrderedAndProject for one query, the TopKAgg heap per qid for
+    * more. Blocks come in REQUEST order, rows by score then `_id` within
+    * each block (the routed finisher's contract); a sort spec re-orders
+    * rows within each block. Output carries `_score`, and `_qid` for
+    * req_num > 1.
     */
   def search(corpus: DataFrame, space: Space, requestJson: String): DataFrame = {
     val req = parseSearch(requestJson, space)
     require(req.vectors.nonEmpty, "search request needs at least one vector condition")
-    val pred = filterOf(space, req)
-
-    if (req.vectors.size == 1 && req.vectors.head.queries.size == 1) {
-      val vc = req.vectors.head
-      val q = maybeNormalize(space, vc.field, vc.queries.head)
-      // the field's value_type picks the distance path (index_model.h:19):
-      // float → metric kernels; int8 → request floats quantized with the
-      // SAME symmetric quantizer as ingest, integer-accumulate kernels;
-      // binary → request floats sign-binarized, Hamming ascending
-      val result = valueTypeOf(space, vc.field) match {
-        case "int8" =>
-          val qBytes = graft.functions.VecKernels.quantizeI8(
-            new org.apache.spark.sql.catalyst.util.GenericArrayData(q.toArray))
-          Knn.searchInt8(corpus, col(vc.field), qBytes,
-            req.limit + req.offset, metricOf(space, vc.field),
-            filter = pred, minScore = vc.minScore, maxScore = vc.maxScore,
-            tieBreak = Some(col("_id")))
-        case "binary" =>
-          val qCode = graft.functions.VecKernels.signBits(
-            new org.apache.spark.sql.catalyst.util.GenericArrayData(q.toArray))
-          Knn.searchBinary(corpus, col(vc.field), qCode,
-            req.limit + req.offset, filter = pred,
-            minScore = vc.minScore, maxScore = vc.maxScore,
-            tieBreak = Some(col("_id")))
-        case _ =>
-          Knn.search(corpus, col(vc.field), q,
-            req.limit + req.offset, metricOf(space, vc.field),
-            filter = pred, minScore = vc.minScore, maxScore = vc.maxScore,
-            tieBreak = Some(col("_id")))
-      }
-      val sliced = if (req.offset > 0) result.offset(req.offset) else result
-      val projected = sliced.select(projection(space, req, Seq("_score")).map(col): _*)
-      // sort spec re-orders the RESPONSE (selection stays score-driven,
-      // the reference's sortorder applies to the result set)
-      if (req.sort.nonEmpty) applySort(projected, req.sort)
-      else projected
-    } else if (req.vectors.size > 1 && req.vectors.head.queries.size == 1) {
-      // multi-field conjunctive: per-field top-k, id intersection, weighted;
-      // each field scored with its OWN metric_type (vector_manager.cc:1024-1087)
-      require(req.vectors.forall(_.queries.size == 1),
-        "all vector conditions must carry the same req_num")
-      val filtered = pred.map(corpus.filter).getOrElse(corpus)
-      // each condition scores through its FIELD's value-type path
-      // (index_model.h:19): float → metric kernels; int8 → quantized
-      // query + integer kernels; binary → sign code + Hamming (ascending,
-      // so the field's direction entry is l2). maybeNormalize is a no-op
-      // for non-float fields (normalization validates float-only).
-      val fields = req.vectors.map { vc =>
-        (col(vc.field), maybeNormalize(space, vc.field, vc.queries.head),
-          rankMetric(space, vc.field))
-      }
-      val scoreFns: Seq[Option[Column => Column]] =
-        req.vectors.map(flatScoreFn(space, _))
-      // per-condition min/max gates apply in-scan before each field's
-      // bounded top-k (gamma_common_data.h:94-96), matching the batched
-      // multi-field path's pre-selection gates
-      val ranked = Knn.multiVectorSearchMetrics(filtered, "_id", fields,
-        perFieldK = perFieldK(req), k = req.limit + req.offset,
-        weights = req.weights,
-        gates = req.vectors.map(vc => (vc.minScore, vc.maxScore)),
-        scoreFns = scoreFns)
-      val sliced = if (req.offset > 0) ranked.offset(req.offset) else ranked
-      val projected = sliced.select(col("_id"), col("_score"))
-      if (req.sort.nonEmpty) applySort(projected, req.sort)
-      else projected
-    } else if (req.vectors.size > 1) {
-      // batched (req_num > 1) multi-field: per-field BATCH top-k with that
-      // field's metric → (qid, id) intersection → WeightedRanker → per-qid
-      // top-k. One result block per query id, like the single-field batch.
-      val reqNum = req.vectors.head.queries.size
-      require(req.vectors.forall(_.queries.size == reqNum),
-        "all vector conditions must carry the same req_num")
-      val spark = corpus.sparkSession
-      import spark.implicits._
-      val filtered = pred.map(corpus.filter).getOrElse(corpus)
-      val nf = req.vectors.size
-      val w = req.weights.getOrElse(Seq.fill(nf)(1.0 / nf))
-      require(w.size == nf, "weights arity must match vector conditions")
-      // per-condition value-type dispatch shared with the single-query
-      // conjunction ([[flatBatchQueries]])
-      val perField = req.vectors.zipWithIndex.map { case (vc, i) =>
-        val (queries, scoreFn) = flatBatchQueries(space, vc, spark)
-        Knn.searchBatch(filtered, col(vc.field), struct(col("_id")), queries,
-          "_qid", "_qv", perFieldK(req), rankMetric(space, vc.field),
-          minScore = vc.minScore, maxScore = vc.maxScore, scoreFn = scoreFn)
-          .select(col("_qid"), col("_item._id").as("_id"), col("_score").as(s"_s$i"))
-      }
-      val joined = perField.reduceLeft((a, b) => a.join(b, Seq("_qid", "_id")))
-      val combined = (0 until nf).map(i => col(s"_s$i") * lit(w(i))).reduceLeft(_ + _)
-      val headAsc = Knn.ascending(rankMetric(space, req.vectors.head.field))
-      // blocks in REQUEST order (the reference's response shape), rows
-      // by score within each block — the same contract as the routed
-      // finisher (the r20 parity sweep caught the unordered gap)
-      val primaryB = if (headAsc) col("_score").asc else col("_score").desc
-      val out = Knn.topKPerQuery(joined.withColumn("_score", combined), reqNum,
-          req.limit, headAsc, "_id", offset = req.offset)
-        .orderBy(col("_qid").asc, primaryB, col("_id").asc)
-      // sort spec re-orders rows WITHIN each query's block
-      if (req.sort.nonEmpty) applySort(out, req.sort, qid = Some(col("_qid")))
-      else out
-    } else {
-      // one field, req_num > 1 → batch: one result block per query id;
-      // value-type dispatch through [[flatBatchQueries]]
-      val vc = req.vectors.head
-      val spark = corpus.sparkSession
-      val (queries, scoreFn) = flatBatchQueries(space, vc, spark)
-      val m = rankMetric(space, vc.field)
-      val filtered = pred.map(corpus.filter).getOrElse(corpus)
-      val payload = struct(corpus.columns.map(col).toIndexedSeq: _*)
-      // gates + pagination inside the batch operator (pre-selection gate,
-      // per-qid offset slice) — same semantics as the single-query path
-      val res = Knn.searchBatch(filtered, col(vc.field), payload, queries,
-        "_qid", "_qv", req.limit, m,
-        minScore = vc.minScore, maxScore = vc.maxScore, offset = req.offset,
-        scoreFn = scoreFn)
-      val flat = res.select(col("_qid"), col("_score"), col("_item.*"))
-      // blocks in REQUEST order, rows by score within each block — the
-      // routed finisher's contract (r20 parity sweep caught the gap)
-      val primaryB =
-        if (Knn.ascending(m)) col("_score").asc else col("_score").desc
-      val projected = flat
-        .select(projection(space, req, Seq("_qid", "_score")).map(col): _*)
-        .orderBy(col("_qid").asc, primaryB, col("_id").asc)
-      // sort spec re-orders rows WITHIN each query's block
-      if (req.sort.nonEmpty) applySort(projected, req.sort, qid = Some(col("_qid")))
-      else projected
+    val nq = req.vectors.head.queries.size
+    require(req.vectors.forall(_.queries.size == nq),
+      "all vector conditions must carry the same req_num")
+    val filtered = filterOf(space, req).map(corpus.filter).getOrElse(corpus)
+    def topK(vc: VecCond, item: Column, k: Int, offset: Int): DataFrame = {
+      val (queries, scoreFn) = flatBatchQueries(space, vc, corpus.sparkSession)
+      Knn.searchBatch(filtered, col(vc.field), item, queries, "_qid", "_qv", k,
+        rankMetric(space, vc.field), minScore = vc.minScore,
+        maxScore = vc.maxScore, offset = offset, scoreFn = scoreFn, nq = nq)
     }
+    // (hits, ranking metric, response columns, response column of a hit)
+    val (hits, metric, cols, colOf) =
+      if (req.vectors.size == 1) {
+        // the item leads with `_id`: exact-score ties at the k boundary
+        // break by `_id`
+        val item = struct((col("_id") +:
+          corpus.columns.filter(_ != "_id").map(col)).toIndexedSeq: _*)
+        (topK(req.vectors.head, item, req.limit, req.offset),
+          rankMetric(space, req.vectors.head.field),
+          projection(space, req, Seq("_qid", "_score")),
+          (c: String) => if (c == "_qid" || c == "_score") col(c) else col("_item")(c).as(c))
+      } else {
+        // multi-field conjunctive: per-field top-k, (qid, id)
+        // intersection, WeightedRanker; each field scores with its OWN
+        // metric_type and gate (vector_manager.cc:1024-1087)
+        val nf = req.vectors.size
+        val w = req.weights.getOrElse(Seq.fill(nf)(1.0 / nf))
+        require(w.size == nf, "weights arity must match vector conditions")
+        val joined = req.vectors.zipWithIndex.map { case (vc, i) =>
+          topK(vc, struct(col("_id")), perFieldK(req), 0)
+            .select(col("_qid"), col("_item._id").as("_id"), col("_score").as(s"_s$i"))
+        }.reduceLeft((a, b) => a.join(b, Seq("_qid", "_id")))
+        val combined = (0 until nf).map(i => col(s"_s$i") * lit(w(i))).reduceLeft(_ + _)
+        // the lead condition sets the response direction (doc_query.go:1526-1528)
+        val m = rankMetric(space, req.vectors.head.field)
+        (Knn.topKPerQuery(joined.withColumn("_score", combined), nq, req.limit,
+          Knn.ascending(m), "_id", offset = req.offset), m, Seq("_qid", "_id", "_score"),
+          (c: String) => col(c))
+      }
+    val qid = if (nq > 1) Some(col("_qid")) else None
+    val projected = hits.select(cols.filter(c => c != "_qid" || qid.isDefined).map(colOf): _*)
+    // one query's merge (TakeOrderedAndProject) already ranks by score
+    // then `_id`; a batch's blocks are put in request order
+    val out = qid.fold(projected)(q => projected.orderBy(q.asc,
+      if (Knn.ascending(metric)) col("_score").asc else col("_score").desc,
+      col("_id").asc))
+    if (req.sort.nonEmpty) applySort(out, req.sort, qid) else out
   }
 
-  /** Index-routed search — the reference's planner switch
-    * (is_brute_search 0/2 serve from the declared index when one is READY,
-    * 1 forces the brute scan; engine.cc:280-308). Routes a
-    * single-condition float search by the field's declared `index.type`:
-    *
-    *  - HNSW → the graph generation built by
-    *    [[IndexLifecycle.rebuildHnsw]], `efSearch` from the space's index
-    *    params; scalar filters ride the broadcast allow-set into the walk
-    *    (the reference's filter-bitmap functor). Needs an integral id.
-    *  - IVFFLAT → the `list_id` generation built by
-    *    [[IndexLifecycle.rebuild]]; `nprobe` resolves request
-    *    `index_params` → space params → the model default 80
-    *    (IVFFlatModelParams, gamma_index_ivfflat.cc:52-54), capped at
-    *    ncentroids; scalar filters evaluate inside the probed lists.
-    *
-    * Everything else — score gates, batched req_num, multi-field
-    * conjunctions, a missing/BUILDING generation, is_brute_search=1 —
-    * falls back to the exact FLAT path of [[search]], the same degrade
-    * the reference performs below training_threshold.
-    */
   /** Cap on the broadcast allow-set a filtered HNSW walk may collect to
     * the driver. Above it the planner falls back to filter-first brute
     * force — the reference's broad-filter switch (engine.cc:355-373): a
@@ -789,7 +677,21 @@ object SearchApi {
     result.get.toDF("_qid", "vec_id", "_score")
   }
 
-  /** `tail` is the space's realtime buffer (`enable_realtime` — the
+  /** Index-routed search — the reference's planner switch
+    * (is_brute_search 0/2 serve from the declared index when one is READY,
+    * 1 forces the brute scan; engine.cc:280-308). Every condition routes
+    * by its field's declared `index.type` (or the request's per-condition
+    * override) through [[legFor]]: one query or a req_num batch, single
+    * field or multi-field conjunction, scalar filters and score gates
+    * included. Index params resolve request `index_params` → space params
+    * → the family default (e.g. IVFFLAT `nprobe` 80, capped at
+    * ncentroids; gamma_index_ivfflat.cc:52-54). A condition without a
+    * READY generation or without a route for its family × value type, a
+    * broad scalar filter on a graph family, and is_brute_search=1 fall
+    * back to the exact FLAT path of [[search]] — the same degrade the
+    * reference performs below training_threshold.
+    *
+    * `tail` is the space's realtime buffer (`enable_realtime` — the
     * reference merges the memory buffer into EVERY index type's search,
     * vector_manager.cc:941-1012,1096-1176): when present and non-empty,
     * every routed leg serves base-index ∪ brute-tail through the per-qid
@@ -1047,10 +949,11 @@ object SearchApi {
     //    the filter and THIS condition's gate in-scan (the gate is on the
     //    final score, so pre-gating the tail stays exact for the graph
     //    loop too - it re-gates the merged stream).
-    //  - scan families keep one operator per shape: a single query
-    //    prunes with a literal list IN and scores a literal query, a
-    //    batch joins a broadcast query table; only the plumbing after
-    //    the operator call is shared.
+    //  - one operator call per family: a scan family calls its batch
+    //    operator for any query count (a single query is a batch of
+    //    one), which prunes with a static `list_id IN` the union of
+    //    every query's probe lists and merges per query through
+    //    [[Knn.topKPerQuery]].
     def legFor(vc: VecCond, lc: IndexLifecycle, k: Int): Option[DataFrame] = {
       val fOptsO = space.vectorFields.find(_.name == vc.field).flatMap(_.vector)
       if (fOptsO.isEmpty) None
@@ -1074,10 +977,9 @@ object SearchApi {
           throw new IllegalArgumentException(
             noDocidMsg(space.name, vc.field, family))
         val nq = vc.queries.size
-        // a scan family's operator rows as leg rows: its single-query
-        // operator reports no `_qid`, so that query is qid 0
+        // a scan family's batch-operator rows as leg rows
         def legRows(hits: DataFrame, id: String): DataFrame =
-          hits.select(if (nq == 1) lit(0L).as("_qid") else col("_qid"),
+          hits.select(col("_qid"),
             if (rid.isEmpty) col(id).as("vec_id")
             else col(id).cast("long").as("vec_id"),
             col("_score"))
@@ -1115,27 +1017,17 @@ object SearchApi {
               vc.maxScore.getOrElse(Double.PositiveInfinity)))
           else None
         // tail leg: ONE brute pass over the (bounded) buffer in the
-        // condition's value domain - a literal query for one, a broadcast
-        // query table for a batch - then the per-query top-d
+        // condition's value domain, each row paired with every query of
+        // the literal (qid, query) array, then the per-query top-d
         def tailScan(d: Int)(td: DataFrame): DataFrame = {
-          val spark = corpus.sparkSession
-          import spark.implicits._
-          val filtered = pred.map(td.filter).getOrElse(td)
-          val withQ =
-            if (nq == 1) filtered.withColumn("_qid", lit(0L)).withColumn("_q",
-              if (isBin) lit(qCodes.head._2) else if (isI8) lit(qI8.head._2)
-              else Knn.queryLit(qsN.head._2))
-            else filtered.crossJoin(broadcast(
-              if (isBin) qCodes.toDF("_qid", "_q")
-              else if (isI8) qI8.toDF("_qid", "_q")
-              else qsN.toDF("_qid", "_q")
-                .select(col("_qid"), col("_q").cast("array<float>").as("_q"))))
-          val (v, q) = (col(vc.field), col("_q"))
+          val withQ = pred.map(td.filter).getOrElse(td).withColumn("_q", explode(
+            if (isBin) typedLit(qCodes) else if (isI8) typedLit(qI8) else typedLit(qsN)))
+          val (v, q) = (col(vc.field), col("_q._2"))
           val score =
             if (isBin) graft.Graft.F.hamming(v, q).cast("double")
             else if (isI8) Knn.scoreInt8(metric, v, q)
             else Knn.score(metric, v, q)
-          val scored = withQ.select(col("_qid"),
+          val scored = withQ.select(col("_q._1").as("_qid"),
             col(ridName).cast("long").as("vec_id"), score.as("_score"))
           Knn.topKPerQuery(Knn.scoreGate(scored, vc.minScore, vc.maxScore),
             nq, d, Knn.ascending(metric))
@@ -1260,18 +1152,7 @@ object SearchApi {
                 val nprobe = math.min(
                   param("nprobe", fOpts).getOrElse(80), model.ncentroids)
                 Some(withTail(deny, k)(kb =>
-                  if (nq == 1) legRows(
-                    if (isI8)
-                      IvfIndex.searchInt8(served, col(vc.field), model,
-                        qsN.head._2, qI8.head._2, kb, nprobe,
-                        minScore = vc.minScore, maxScore = vc.maxScore,
-                        tieBreak = Some(col("_id")))
-                    else
-                      IvfIndex.search(served, col(vc.field), model,
-                        qsN.head._2, kb, nprobe,
-                        minScore = vc.minScore, maxScore = vc.maxScore,
-                        tieBreak = Some(col("_id"))), ridName)
-                  else legRows(
+                  legRows(
                     if (isI8)
                       IvfIndex.searchBatchInt8(served, col(vc.field),
                         struct(col(ridName)),
@@ -1303,14 +1184,7 @@ object SearchApi {
                   param("recall_num", fOpts).getOrElse(
                     if (kind == Kind.Scann) math.max(10 * k, 100) else k), k)
                 Some(withTail(deny, k)(kb =>
-                  if (nq == 1) legRows(
-                    graft.operators.PqIndex.searchIvfResidual(served,
-                      col(vc.field), ivf, pq, walkQs.head._2, kb, nprobe,
-                      math.max(recallNum, kb), idCol = col("_id"),
-                      minScore = vc.minScore, maxScore = vc.maxScore,
-                      rerankInt8 = if (isI8) Some(qI8.head._2) else None),
-                    ridName)
-                  else legRows(
+                  legRows(
                     graft.operators.PqIndex.searchBatchIvfResidual(served,
                       col(vc.field), ivf, pq, walkQs, kb, nprobe,
                       math.max(recallNum, kb), idCol = col(ridName),
@@ -1330,15 +1204,7 @@ object SearchApi {
                   .orElse(fOpts.indexParams.get("qb"))
                   .filter(v => v >= 0 && v <= 8).getOrElse(4)
                 Some(withTail(deny, k)(kb =>
-                  if (nq == 1) legRows(
-                    graft.operators.BinaryIndex.searchIvfResidual(served,
-                      col(vc.field), ivf, walkQs.head._2, kb, nprobe,
-                      math.max(shortlist, kb), idCol = col("_id"),
-                      metric = metric, qb = qbBits, minScore = vc.minScore,
-                      maxScore = vc.maxScore,
-                      rerankInt8 = if (isI8) Some(qI8.head._2) else None),
-                    ridName)
-                  else legRows(
+                  legRows(
                     graft.operators.BinaryIndex.searchBatchIvfResidual(served,
                       col(vc.field), ivf, walkQs, kb, nprobe,
                       math.max(shortlist, kb), idCol = col(ridName),
@@ -1357,12 +1223,7 @@ object SearchApi {
                 val nprobe = math.min(
                   param("nprobe", fOpts).getOrElse(80), cents.length)
                 Some(withTail(deny, k)(kb =>
-                  if (nq == 1) legRows(
-                    graft.operators.BinaryIndex.searchBinaryIvf(served,
-                      vc.field, cents, qCodes.head._2, kb, nprobe,
-                      minScore = vc.minScore, maxScore = vc.maxScore,
-                      tieBreak = Some(col("_id"))), ridName)
-                  else legRows(
+                  legRows(
                     graft.operators.BinaryIndex.searchBatchBinaryIvf(served,
                       vc.field, cents, qCodes, kb, nprobe,
                       idCol = col(ridName), minScore = vc.minScore,

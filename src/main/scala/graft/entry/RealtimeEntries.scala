@@ -17,33 +17,41 @@ import graft.schema.Space
   * entries themselves.
   */
 private[graft] object RealtimeEntries {
+  /** The `apimvrt` fixture space: the `v1`/`v2` halves, each with an
+    * inner-product HNSW generation over the base, and a realtime tail.
+    */
+  private val mvRtSpace = """{"name":"mv_rt","enable_realtime":true,"fields":[
+      {"name":"label","type":"integer","index":{"type":"SCALAR"}},
+      {"name":"v1","type":"vector","dimension":32,
+       "index":{"type":"HNSW",
+                "params":{"nlinks":16,"efConstruction":100,
+                          "metric_type":"InnerProduct"}}},
+      {"name":"v2","type":"vector","dimension":32,
+       "index":{"type":"HNSW",
+                "params":{"nlinks":16,"efConstruction":100,
+                          "metric_type":"InnerProduct"}}}]}"""
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
-    // ── §2.4+§2.8 TAIL-AWARE multi-field conjunctive (round-12 gap:
-    //    with a realtime tail the multi-vector shape fell back to exact
-    //    FLAT): each field's graph search merges the buffered tail into
-    //    its OWN per-field top-k (RealtimeTail.searchHnsw = mergeTail
-    //    over the walk), THEN the docid intersection + WeightedRanker —
-    //    the reference merges the buffer into the per-field searches
+    // ── §2.4+§2.8 TAIL-AWARE multi-field conjunctive, composed by hand
+    //    over two single-condition requests: each field's request serves
+    //    its HNSW generation ∪ the buffered tail into its OWN per-field
+    //    top-k, THEN the docid intersection + WeightedRanker — the
+    //    reference merges the buffer into the per-field searches
     //    themselves (vector_manager.cc:1024-1176). The tail holds the
     //    query vector, so both per-field top-1s are buffered docs; exact
-    //    params ⇒ the composition oracles against the same brute
-    //    intersection as q_knn_multivec over the live view ≡ full table ──
+    //    params (efSearch ≥ |shard|) ⇒ the composition oracles against the
+    //    same brute intersection as q_knn_multivec over the live view ≡
+    //    full table ──
     "q_knn_multivec_realtime" -> ((s, dir) => {
       init(s)
-      val (basePath, tailPath, segsA, segsB) =
-        graft.sources.IndexStore.realtimeMultiField(s, dir)
-      val rt = new graft.streaming.RealtimeTail(s, basePath, tailPath,
-        s"$tailPath.ckpt", "vec_id")
-      val schema = graft.sources.IndexStore.openTable(s, basePath).schema
       val q = qvec(s, dir)
-      val f0 = rt.searchHnsw(segsA, schema, "v1", q.take(32), k = 100,
-        ef = 1 << 30, metric = "ip")
-        .select(col("vec_id"), col("_score").as("_s0"))
-      val f1 = rt.searchHnsw(segsB, schema, "v2", q.drop(32), k = 100,
-        ef = 1 << 30, metric = "ip")
-        .select(col("vec_id"), col("_score").as("_s1"))
-      f0.join(f1, "vec_id")
+      def leg(field: String, qv: Seq[Float], score: String) =
+        searchFixture(s, dir, "apimvrt", mvRtSpace,
+          s"""{"vectors":[{"field":"$field","feature":${qv.mkString("[", ",", "]")}}],
+            "index_params":{"efSearch":1048576},"limit":100}""")
+          .select(col("_id").as("vec_id"), col("_score").as(score))
+      leg("v1", q.take(32), "_s0").join(leg("v2", q.drop(32), "_s1"), "vec_id")
         .withColumn("_score", col("_s0") * 0.5 + col("_s1") * 0.5)
         .orderBy(col("_score").desc, col("vec_id"))
         .limit(10)
@@ -74,22 +82,12 @@ private[graft] object RealtimeEntries {
     //    query vector, so the intersection's top-1 is a buffered doc ──
     "q_api_search_multivec_realtime" -> ((s, dir) => {
       init(s)
-      val sp = """{"name":"mv_rt","enable_realtime":true,"fields":[
-            {"name":"label","type":"integer","index":{"type":"SCALAR"}},
-            {"name":"v1","type":"vector","dimension":32,
-             "index":{"type":"HNSW",
-                      "params":{"nlinks":16,"efConstruction":100,
-                                "metric_type":"InnerProduct"}}},
-            {"name":"v2","type":"vector","dimension":32,
-             "index":{"type":"HNSW",
-                      "params":{"nlinks":16,"efConstruction":100,
-                                "metric_type":"InnerProduct"}}}]}"""
       val q = qvec(s, dir)
       val req = s"""{"vectors":[
           {"field":"v1","feature":${q.take(32).mkString("[", ",", "]")}},
           {"field":"v2","feature":${q.drop(32).mkString("[", ",", "]")}}],
         "index_params":{"efSearch":1048576},"limit":10}"""
-      searchFixture(s, dir, "apimvrt", sp, req)
+      searchFixture(s, dir, "apimvrt", mvRtSpace, req)
         .withColumn("_score", round(col("_score"), 4))
     }),
 

@@ -146,25 +146,13 @@ object BinaryIndex {
       .select(col("_qid"), F.signAdot(col(codeCol), col("_qres")).as("_est"),
         col("_sid"))
       .filter(col("_est").isNotNull)
-    // the per-qid query the rerank scores against: float vectors for the
-    // metric kernels, or the quantized codes for the integer kernels
-    val (qJoinDf, scoreExpr): (DataFrame, Column) = rerankInt8 match {
-      case Some(qbs) =>
-        val qbDf = qbs.toDF("_qid", "_qq")
-        (qbDf, Knn.scoreInt8(metric, vecCol, col("_qq")))
-      case None =>
-        (queries.toDF("_qid", "_qq")
-          .select(col("_qid"), col("_qq").cast("array<float>").as("_qq")),
-          Knn.score(metric, vecCol, col("_qq")))
-    }
     // larger sign-dot = closer (descending, same as the single path)
     val short = Knn.topKPerQuery(est, queries.size, shortlist, asc = false,
         "_sid", "_est")
       .select(col("_qid"), col("_sid"))
-      .join(broadcast(qJoinDf), Seq("_qid"))
     val rerank0 = corpus.join(broadcast(short), idCol === col("_sid"))
       .select(col("_qid"),
-        scoreExpr.as("_score"),
+        Knn.rerankScore(metric, vecCol, queries, rerankInt8).as("_score"),
         idCol.as("_id"))
       .filter(col("_score").isNotNull)
     // in-scan score gate at the exact-rerank stage (see searchIvfResidual)
@@ -351,36 +339,14 @@ object BinaryIndex {
     assignBinary(df, codeCol, cents)
       .write.mode("overwrite").partitionBy("list_id").parquet(path)
 
-  /** BINARYIVF search: probe nprobe lists by query-code Hamming, rank
-    * candidates by Hamming ascending (the reference's search semantics —
-    * distance IS the bit distance, no float rerank). Output: corpus row +
-    * `_score` (Hamming as double), best-first. Exact at
-    * nprobe = ncentroids by construction.
-    */
-  def searchBinaryIvf(
-      corpus: DataFrame, // carries list_id + codeCol
-      codeCol: String,
-      cents: Array[Array[Byte]],
-      qCode: Array[Byte],
-      k: Int,
-      nprobe: Int,
-      filter: Option[Column] = None,
-      minScore: Option[Double] = None,
-      maxScore: Option[Double] = None,
-      tieBreak: Option[Column] = None): DataFrame = {
-    val lists = nearestBinaryCentroids(cents, qCode, nprobe)
-    val probed = corpus.filter(col("list_id").isin(lists: _*))
-    Knn.searchBinary(probed, col(codeCol), qCode, k, filter = filter,
-      minScore = minScore, maxScore = maxScore, tieBreak = tieBreak)
-  }
-
-  /** Batched BINARYIVF: per-query probe routes join in on `list_id`
-    * equality carrying each query's packed code; candidates rank by code
+  /** Batched BINARYIVF: per-query probe routes
+    * ([[IvfIndex.probed]]) pair each candidate with the packed code of
+    * every query probing its list; candidates rank by code
     * Hamming against THEIR query's code and a bounded per-qid top-k
     * merges — one scan of the union of probed lists serves the whole
-    * batch (the req_num flatten, doc_query.go:296-318). Ties break on id
-    * ascending (TopKAgg's native struct order), matching the single
-    * path's `ORDER BY hamming, id`. Output: (_qid, _id, _score).
+    * batch (the req_num flatten, doc_query.go:296-318); a single query is
+    * a batch of one. Ties break on id ascending ([[Knn.topKPerQuery]]).
+    * Exact at nprobe = ncentroids. Output: (_qid, _id, _score).
     */
   def searchBatchBinaryIvf(
       corpus: DataFrame, // carries list_id + codeCol
@@ -392,21 +358,11 @@ object BinaryIndex {
       idCol: Column,
       minScore: Option[Double] = None,
       maxScore: Option[Double] = None): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val qlRows = queries.flatMap { case (qid, qc) =>
-      nearestBinaryCentroids(cents, qc, nprobe).map(l => (qid, l, qc))
-    }
-    val qDf = qlRows.toDF("_qid", "list_id", "_qcode")
-    val union = qlRows.map(_._2).distinct
-    val pruned =
-      if (union.isEmpty) corpus.limit(0)
-      else corpus.filter(col("list_id").isin(union: _*))
-    val scored0 = pruned.select(idCol.as("_id"), col("list_id"), col(codeCol))
-      .join(broadcast(qDf), Seq("list_id"))
-      .select(col("_qid"),
-        F.hamming(col(codeCol), col("_qcode")).cast("double").as("_score"),
-        col("_id"))
+    val scored0 = IvfIndex.probed(corpus, queries.map { case (qid, qc) =>
+        (qid, qc, nearestBinaryCentroids(cents, qc, nprobe)) })
+      .select(col("_q._1").as("_qid"),
+        F.hamming(col(codeCol), col("_q._2")).cast("double").as("_score"),
+        idCol.as("_id"))
       .filter(col("_score").isNotNull)
     // in-scan score gate (gamma_common_data.h:94-96): Hamming IS the
     // final score for the binary family — gate before the bounded heap

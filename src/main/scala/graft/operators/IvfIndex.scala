@@ -113,14 +113,28 @@ object IvfIndex {
     graft.Graft.columnOf(graft.plans.IvfProbe(
       graft.Graft.exprOf(col("list_id")), model.centroids, q, nprobe))
 
-  /** Batched IVF search (vearch `req_num` batch over an index): each
-    * query's probe lists are computed driver-side (tiny quantizer search)
-    * and ride in a broadcast queries table; ONE join
-    * (`array_contains(lists, list_id)`) scores every query's probed
-    * candidates in a single pass, and the bounded top-k aggregate keeps
-    * the shuffle at |queries|·k rows — independent of corpus size. The
-    * per-query-driver-loop formulation this replaces scans the corpus
-    * once per query.
+  /** The probed candidates of a query batch: `corpus` rows in the union
+    * of every query's probe lists (a static `list_id IN`, so partition
+    * pruning), each paired with every query `(qid, query, lists)` that
+    * probes its list as the struct column `_q` (fields `_1`, `_2`, `_3`).
+    * The queries ride the plan as one literal array exploded per row —
+    * the pairs of a broadcast `array_contains` join, with no broadcast
+    * job.
+    */
+  private[graft] def probed[Q: scala.reflect.runtime.universe.TypeTag](
+      corpus: DataFrame, queries: Seq[(Long, Q, Seq[Int])]): DataFrame =
+    corpus.filter(col("list_id").isin(queries.flatMap(_._3).distinct: _*))
+      .withColumn("_q", explode(typedLit(queries)))
+      .filter(array_contains(col("_q._3"), col("list_id")))
+
+  /** Batched IVF search (vearch `req_num` batch over an index; a single
+    * query is a batch of one): each query's probe lists are computed
+    * driver-side (tiny quantizer search) and ride the plan as one literal
+    * array of (qid, query, lists), exploded per candidate and kept where
+    * `array_contains(lists, list_id)`, so one pass scores every query's
+    * probed candidates with no query-table broadcast; the per-query
+    * merge ([[Knn.topKPerQuery]]) keeps the shuffle at |queries|·k rows —
+    * independent of corpus size.
     *
     * Output: (_qid, _item, _score), best-first within each qid group.
     */
@@ -134,24 +148,12 @@ object IvfIndex {
       nprobe: Int,
       minScore: Option[Double] = None,
       maxScore: Option[Double] = None): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
     val perQueryLists = queries.map { case (qid, q) =>
       (qid, q, model.nearestCentroids(q, nprobe))
     }
-    val qDf = perQueryLists
-      .toDF("_qid", "_qv", "_lists")
-      .select(col("_qid"), col("_qv").cast("array<float>").as("_qv"), col("_lists"))
-    // static pre-filter on the UNION of all probed lists: the
-    // array_contains join condition alone is non-equi and cannot prune
-    // partitions — without this, the batched path scans the whole table
-    val union = perQueryLists.flatMap(_._3).distinct
-    val pruned =
-      if (union.isEmpty) corpus.limit(0)
-      else corpus.filter(col("list_id").isin(union: _*))
-    val cand = pruned.join(broadcast(qDf), array_contains(col("_lists"), col("list_id")))
-    val scored0 = cand
-      .select(col("_qid"), Knn.score(model.metric, vecCol, col("_qv")).as("_score"),
+    val scored0 = probed(corpus, perQueryLists)
+      .select(col("_q._1").as("_qid"),
+        Knn.score(model.metric, vecCol, col("_q._2")).as("_score"),
         payload.as("_item"))
       .filter(col("_score").isNotNull)
     // score-range gate IN-SCAN (gamma_common_data.h:94-96): candidates
@@ -189,38 +191,11 @@ object IvfIndex {
       tieBreak, roundTo)
   }
 
-  /** IVF search over an INT8 corpus (value_type=INT8, index_model.h:19 —
-    * the reference serves INT8 through every index family): the coarse
-    * quantizer is trained/probed in the de-quantized float domain
-    * (`qFloat` routes, [[graft.functions.VecKernels.dequantI8]] at
-    * build), the probed lists score with the integer-accumulate kernels
-    * against the symmetric-quantized query — exact-within-probe since
-    * i8 scores are a fixed 127²(/127) scaling of the de-quantized float
-    * scores (order-identical).
-    */
-  def searchInt8(
-      corpus: DataFrame, // carries list_id + the int8 (binary) column
-      vecCol: Column,
-      model: Model,
-      qFloat: Seq[Float],
-      qBytes: Array[Byte],
-      k: Int,
-      nprobe: Int,
-      filter: Option[Column] = None,
-      minScore: Option[Double] = None,
-      maxScore: Option[Double] = None,
-      tieBreak: Option[Column] = None,
-      roundTo: Option[Int] = None): DataFrame = {
-    val lists = model.nearestCentroids(qFloat, nprobe)
-    val probed = corpus.filter(col("list_id").isin(lists: _*))
-    Knn.searchInt8(probed, vecCol, qBytes, k, model.metric, filter,
-      minScore, maxScore, tieBreak, roundTo)
-  }
-
-  /** Batched INT8 IVF (req_num flatten, doc_query.go:296-318): per-query
-    * probe routes join on `list_id` equality carrying each query's int8
-    * code; one scan of the probed-list union scores every query with the
-    * integer kernels, bounded per-qid top-k. Output: (_qid, _item, _score).
+  /** Batched INT8 IVF (req_num flatten, doc_query.go:296-318): the
+    * coarse quantizer routes each query's FLOAT vector (centroids live in
+    * the de-quantized domain), and one scan of the probed-list union
+    * scores every query's int8 code with the integer kernels, bounded
+    * per-qid top-k. Output: (_qid, _item, _score).
     */
   def searchBatchInt8(
       corpus: DataFrame,
@@ -232,24 +207,11 @@ object IvfIndex {
       nprobe: Int,
       minScore: Option[Double] = None,
       maxScore: Option[Double] = None): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val qlRows = queries.flatMap { case (qid, qf, qb) =>
-      model.nearestCentroids(qf, nprobe).map(l => (qid, l, qb))
-    }
-    val qDf = qlRows.toDF("_qid", "list_id", "_qb")
-    val union = qlRows.map(_._2).distinct
-    val pruned =
-      if (union.isEmpty) corpus.limit(0)
-      else corpus.filter(col("list_id").isin(union: _*))
-    val scoreCol = model.metric match {
-      case "ip"   => graft.Graft.F.i8Dot(vecCol, col("_qb"))
-      case "l2"   => graft.Graft.F.i8L2(vecCol, col("_qb"))
-      case "l2sq" => graft.Graft.F.i8L2Sq(vecCol, col("_qb"))
-      case other  => throw new IllegalArgumentException(s"unknown int8 metric: $other")
-    }
-    val scored0 = pruned.join(broadcast(qDf), Seq("list_id"))
-      .select(col("_qid"), scoreCol.as("_score"), payload.as("_item"))
+    val scored0 = probed(corpus, queries.map { case (qid, qf, qb) =>
+        (qid, qb, model.nearestCentroids(qf, nprobe)) })
+      .select(col("_q._1").as("_qid"),
+        Knn.scoreInt8(model.metric, vecCol, col("_q._2")).as("_score"),
+        payload.as("_item"))
       .filter(col("_score").isNotNull)
     val scored = Knn.scoreGate(scored0, minScore, maxScore)
     Knn.topKPerQuery(scored, queries.size, k, Knn.ascending(model.metric),

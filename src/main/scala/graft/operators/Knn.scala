@@ -108,6 +108,20 @@ object Knn {
       .getOrElse(selected)
   }
 
+  /** The exact-rerank score of shortlist rows carrying `_qid`: each row's
+    * query looked up by qid from a driver-side literal map (no
+    * query-table join) — the float vectors under the metric kernels, or,
+    * for int8 spaces, the quantized codes under the integer kernels.
+    */
+  private[graft] def rerankScore(metric: String, vecCol: Column,
+      queries: Seq[(Long, Seq[Float])],
+      int8: Option[Seq[(Long, Array[Byte])]]): Column = int8 match {
+    case Some(codes) =>
+      scoreInt8(metric, vecCol, element_at(typedLit(codes.toMap), col("_qid")))
+    case None =>
+      score(metric, vecCol, element_at(typedLit(queries.toMap), col("_qid")))
+  }
+
   /** The score-range gate (doc_query.go:67-78), shared by every value-type
     * path — gates apply BEFORE top-k selection. Shared with the routed
     * index families: the reference applies the same gate IN-SCAN at heap
@@ -147,8 +161,9 @@ object Knn {
   }
 
   /** Batched multi-query KNN (vearch `req_num` query vectors per request,
-    * doc_query.go:296-318): the query set is broadcast against the corpus,
-    * then a bounded-heap aggregate keeps top-k per query id.
+    * doc_query.go:296-318): the query set is broadcast against the corpus
+    * (or, held on the driver, inlined as a literal), then a bounded-heap
+    * aggregate keeps top-k per query id.
     *
     * Scale: shuffle volume is |queries| × k rows (partial aggregation
     * reduces each partition to k per qid map-side) — independent of corpus
@@ -172,19 +187,37 @@ object Knn {
       // value_type dispatch (index_model.h:19): non-float corpora plug
       // their own kernel (int8 integer-accumulate, binary Hamming) —
       // `metric` still drives the sort direction
-      scoreFn: Option[(Column, Column) => Column] = None): DataFrame = {
+      scoreFn: Option[(Column, Column) => Column] = None,
+      // the query count when the caller knows it on the driver (one
+      // query merges with TakeOrderedAndProject); a query TABLE by default
+      nq: Int = QueryTable): DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.types.ArrayType
     val q = queries.select(col(qidCol).as("_qid"), col(qvecCol).as("_qvec"))
     val scorer = scoreFn.getOrElse((v: Column, qc: Column) => score(metric, v, qc))
-    val scored = corpus.crossJoin(broadcast(q))
-      .select(col("_qid"),
-        scorer(vecCol, col("_qvec")).as("_score"),
+    // a query table the driver holds (a LocalRelation, e.g. a request's own
+    // vectors) rides the plan as one literal array exploded per row: the
+    // same (row, query) pairs as the broadcast cross join, with no
+    // broadcast job
+    val (pairs, qid, qvec) = q.queryExecution.optimizedPlan match {
+      case r: LocalRelation =>
+        (corpus.withColumn("_q", explode(graft.Graft.columnOf(
+          org.apache.spark.sql.catalyst.expressions.Literal(
+            new org.apache.spark.sql.catalyst.util.GenericArrayData(
+              r.data.map(_.copy()).toArray[Any]), ArrayType(r.schema))))),
+          col("_q._qid"), col("_q._qvec"))
+      case _ => (corpus.crossJoin(broadcast(q)), col("_qid"), col("_qvec"))
+    }
+    val scored = pairs
+      .select(qid.as("_qid"),
+        scorer(vecCol, qvec).as("_score"),
         payload.as("_item"))
       .filter(col("_score").isNotNull)
     // gates apply BEFORE selection — vearch's in-scan score gate
     // (gamma_common_data.h:94-96); gating after top-k would return fewer
     // than k rows even when enough in-range docs exist
     val gated = scoreGate(scored, minScore, maxScore)
-    topKPerQuery(gated, QueryTable, k, ascending(metric), "_item", offset = offset)
+    topKPerQuery(gated, nq, k, ascending(metric), "_item", offset = offset)
   }
 
   /** Query count of a query TABLE (a DataFrame the driver never counts):
@@ -226,7 +259,9 @@ object Knn {
   /** Multi-vector conjunctive search (vearch: N vector conditions on
     * different fields; per-field top-k, docid INTERSECTION, combined score
     * = Σ wᵢ·scoreᵢ — vector_manager.cc:859,1024-1087; WeightedRanker
-    * doc_query.go:201-216, default weight 1/N).
+    * doc_query.go:201-216, default weight 1/N). Every field scores with
+    * `metric`; the tests' brute-force reference for the routed and FLAT
+    * conjunctions.
     *
     * Inner join on the id ≡ their sorted-docid seek-merge intersection.
     */
@@ -237,70 +272,23 @@ object Knn {
       perFieldK: Int,
       k: Int,
       metric: String = "l2",
-      weights: Option[Seq[Double]] = None): DataFrame =
-    multiVectorSearchMetrics(df, idCol,
-      fields.map { case (vc, qv) => (vc, qv, metric) }, perFieldK, k, weights)
-
-  /** Per-field metrics variant: the reference scores each vector condition
-    * with that FIELD's own metric_type (vector_manager.cc:1024-1087), so a
-    * mixed ip/l2 space must not apply the head field's metric everywhere.
-    * Each field's top-k uses its own sort direction; the combined
-    * WeightedRanker sum orders in the FIRST field's direction
-    * (doc_query.go:1526-1528 derives the response direction from the
-    * request's lead condition).
-    */
-  def multiVectorSearchMetrics(
-      df: DataFrame,
-      idCol: String,
-      fields: Seq[(Column, Seq[Float], String)], // (vector col, query, metric)
-      perFieldK: Int,
-      k: Int,
-      weights: Option[Seq[Double]] = None,
-      // per-condition min/max score gates (gamma_common_data.h:94-96 —
-      // the reference gates EACH condition's results before the docid
-      // intersection): applied in-scan, before that field's bounded
-      // top-k, same placement as the single-condition scan gate
-      gates: Seq[(Option[Double], Option[Double])] = Seq.empty,
-      // per-condition score override for non-float value types
-      // (index_model.h:19 — a conjunction may mix float, int8 and binary
-      // fields; the reference scores each condition with its field's own
-      // distance path): Some(col => scoreCol) replaces the float metric
-      // kernel for that condition; its query is already bound inside
-      scoreFns: Seq[Option[Column => Column]] = Seq.empty): DataFrame = {
+      weights: Option[Seq[Double]] = None): DataFrame = {
     require(fields.nonEmpty)
-    require(gates.isEmpty || gates.size == fields.size,
-      "gates arity must match vector conditions")
-    require(scoreFns.isEmpty || scoreFns.size == fields.size,
-      "scoreFns arity must match vector conditions")
     val w = weights.getOrElse(Seq.fill(fields.size)(1.0 / fields.size))
     require(w.size == fields.size)
-    val perField = fields.zipWithIndex.map { case ((vc, qv, m), i) =>
-      val scoreCol =
-        scoreFns.lift(i).flatten.map(fn => fn(vc))
-          .getOrElse(score(m, vc, queryLit(qv)))
-      val scored = df.select(col(idCol), scoreCol.as(s"_s$i"))
+    val dir = (c: Column) => if (ascending(metric)) c.asc else c.desc
+    val perField = fields.zipWithIndex.map { case ((vc, qv), i) =>
+      df.select(col(idCol), score(metric, vc, queryLit(qv)).as(s"_s$i"))
         .filter(col(s"_s$i").isNotNull) // null vectors must not head asc order
-      val (gLo, gHi) =
-        if (gates.isEmpty) (None, None) else gates(i)
-      val gated = (gLo, gHi) match {
-        case (Some(lo), Some(hi)) => scored.filter(col(s"_s$i").between(lo, hi))
-        case (Some(lo), None)     => scored.filter(col(s"_s$i") >= lo)
-        case (None, Some(hi))     => scored.filter(col(s"_s$i") <= hi)
-        case _                    => scored
-      }
-      gated.orderBy(
-          if (ascending(m)) col(s"_s$i").asc else col(s"_s$i").desc,
-          col(idCol).asc) // deterministic k-boundary on exactly-equal scores
+        .orderBy(dir(col(s"_s$i")), col(idCol).asc) // deterministic k-boundary
         .limit(perFieldK)
     }
     val joined = perField.reduceLeft((a, b) => a.join(b, Seq(idCol), "inner"))
     val combined = fields.indices
       .map(i => col(s"_s$i") * lit(w(i)))
       .reduceLeft(_ + _)
-    val ranked = joined.withColumn("_score", combined)
-    val primary =
-      if (ascending(fields.head._3)) col("_score").asc else col("_score").desc
-    ranked.orderBy(primary, col(idCol).asc).limit(k)
+    joined.withColumn("_score", combined)
+      .orderBy(dir(col("_score")), col(idCol).asc).limit(k)
       .select((col(idCol) +: fields.indices.map(i => col(s"_s$i")) :+ col("_score")): _*)
   }
 }

@@ -612,24 +612,12 @@ object PqIndex {
           .as("_adc"),
         col("_sid"))
       .filter(col("_adc").isNotNull)
-    // the per-qid query the rerank scores against: float vectors for the
-    // metric kernels, or the quantized codes for the integer kernels
-    val (qJoinDf, scoreExpr): (DataFrame, Column) = rerankInt8 match {
-      case Some(qbs) =>
-        val qbDf = qbs.toDF("_qid", "_qq")
-        (qbDf, Knn.scoreInt8(pq.metric, vecCol, col("_qq")))
-      case None =>
-        (queries.toDF("_qid", "_qq")
-          .select(col("_qid"), col("_qq").cast("array<float>").as("_qq")),
-          Knn.score(pq.metric, vecCol, col("_qq")))
-    }
     val short = Knn.topKPerQuery(adc, queries.size, recallNum, asc = true,
         "_sid", "_adc")
       .select(col("_qid"), col("_sid"))
-      .join(broadcast(qJoinDf), Seq("_qid"))
     val rerank0 = corpus.join(broadcast(short), idCol === col("_sid"))
       .select(col("_qid"),
-        scoreExpr.as("_score"),
+        Knn.rerankScore(pq.metric, vecCol, queries, rerankInt8).as("_score"),
         idCol.as("_id"))
       .filter(col("_score").isNotNull)
     // in-scan score gate at the exact-rerank stage (see searchIvfResidual)
@@ -643,28 +631,6 @@ object PqIndex {
     */
   def adcScore(model: Model, q: Seq[Float], codesCol: Column): Column =
     graft.Graft.columnOf(PqAdcScore(graft.Graft.exprOf(codesCol), model.lut(q)))
-
-  /** Full IVFPQ: coarse probe (partition pruning on `list_id`) → ADC
-    * top-recallNum within the probed lists → exact rerank to top-k. This
-    * is the reference's actual IVFPQ search shape
-    * (gamma_index_ivfpq.cc: quantizer probe, ADC over list codes,
-    * recall_num rerank).
-    */
-  def searchIvf(
-      corpus: DataFrame, // carries list_id + pq_code + raw vectors
-      vecCol: Column,
-      ivf: IvfIndex.Model,
-      pq: Model,
-      q: Seq[Float],
-      k: Int,
-      nprobe: Int,
-      recallNum: Int,
-      idCol: Column,
-      roundTo: Option[Int] = None): DataFrame = {
-    val lists = ivf.nearestCentroids(q, nprobe)
-    search(corpus.filter(col("list_id").isin(lists: _*)),
-      vecCol, pq, q, k, recallNum, idCol, roundTo)
-  }
 
   /** Batched IVFPQ (req_num queries in one plan, no driver round-trips):
     * per-query probe lists AND flattened ADC lookup tables travel as DATA

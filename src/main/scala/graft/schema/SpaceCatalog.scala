@@ -301,13 +301,18 @@ final class SpaceCatalog(spark: SparkSession, root: String) {
           touched.foreach(b => replaceBucket(path, tmp, b))
           SidecarIO.delete(tmp)
           // a delete that emptied every bucket must leave a readable
-          // (schema-carrying) table behind, not a bare meta file
+          // (schema-carrying) table behind, not a bare meta file: one
+          // empty bucket goes back in place, so the dir keeps its layout
+          // and its marks (the docid high-water mark must stay above the
+          // ledger's deleted docids, and the bucket count keeps the next
+          // upsert bucket-pruned)
           val anyBucketLeft =
             SidecarIO.listNames(path).exists(_.startsWith("_bucket="))
           if (!anyBucketLeft) {
             base.drop("_bucket").limit(0)
-              .write.mode(SaveMode.Overwrite).parquet(tmp)
-            SidecarIO.swapIn(path, tmp)
+              .write.mode(SaveMode.Overwrite).parquet(s"$tmp/_bucket=0")
+            replaceBucket(path, tmp, 0)
+            SidecarIO.delete(tmp)
           }
         }
       case None =>

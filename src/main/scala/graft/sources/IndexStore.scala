@@ -37,8 +37,10 @@ object IndexStore {
   /** Bump to invalidate cached layouts when build code changes.
     * v3: HnswIndex.Segment grew the `chain` column (incremental append).
     * v4: realtime fixture tails moved to `space.tail` (catalog layout).
+    * v5: the `hnswmvrt` layout row is gone; a v4 cache still holds its
+    * dir, which no row names.
     */
-  private val Version = "v4"
+  private val Version = "v5"
 
   /** Resident serving mode (Bench's untimed warmup sets it, mirroring
     * `SparkEntry.cacheTables`): layout tables are read once and pinned in
@@ -642,18 +644,6 @@ object IndexStore {
       HnswIndex.build(two, "vec_id", "v1", hnswIp).write.mode("overwrite").parquet(s"$dir/v1")
       HnswIndex.build(two, "vec_id", "v2", hnswIp).write.mode("overwrite").parquet(s"$dir/v2")
     },
-    /** [[hnswMultiField]] built over the BASE split (vec_id ≥ 10), plus a
-      * TAIL (vec_id < 10, the query vector among them) carrying both
-      * field slices — multi-field conjunction with a live buffer.
-      */
-    Layout("hnswmvrt", "v1", "v2") { (spark, _, e, dir) =>
-      val two = halves(e)
-      two.filter(col("vec_id") >= 10).write.mode("overwrite").parquet(s"$dir/base")
-      two.filter(col("vec_id") < 10).write.mode("overwrite").parquet(s"$dir/tail")
-      val base = spark.read.parquet(s"$dir/base")
-      HnswIndex.build(base, "vec_id", "v1", hnswIp).write.mode("overwrite").parquet(s"$dir/v1")
-      HnswIndex.build(base, "vec_id", "v2", hnswIp).write.mode("overwrite").parquet(s"$dir/v2")
-    },
     /** The synthesized PNG/WAV/pseudo-video corpus over the embeddings
       * ids, written ONCE: media queries time decode + features + search,
       * not data generation. ~2k payloads per file gives the decode its
@@ -750,13 +740,6 @@ object IndexStore {
       : (Dataset[HnswIndex.Segment], Dataset[HnswIndex.Segment]) = {
     val dir = layoutDir(spark, sfDir, "hnswmv")
     (segments(spark, s"$dir/v1"), segments(spark, s"$dir/v2"))
-  }
-
-  /** (base path, tail path, v1 segments, v2 segments). */
-  def realtimeMultiField(spark: SparkSession, sfDir: String)
-      : (String, String, Dataset[HnswIndex.Segment], Dataset[HnswIndex.Segment]) = {
-    val dir = layoutDir(spark, sfDir, "hnswmvrt")
-    (s"$dir/base", s"$dir/tail", segments(spark, s"$dir/v1"), segments(spark, s"$dir/v2"))
   }
 
   def media(spark: SparkSession, sfDir: String): DataFrame =

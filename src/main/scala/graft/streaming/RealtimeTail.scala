@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -215,7 +215,7 @@ final class RealtimeTail(
     * suffice. A tail row supersedes its base id for EVERY query (the
     * id-level last-write-wins is query-independent), so the anti-join
     * gates on `vec_id` alone; [[graft.operators.Knn.topKPerQuery]] is the
-    * final merge.
+    * final merge. `SearchApi.searchAuto`'s legs are its one caller.
     */
   private[graft] def mergeTail(schema: StructType, k: Int, metric: String,
       nq: Int, deny: Set[Long] = Set.empty)(
@@ -240,109 +240,6 @@ final class RealtimeTail(
         baseSearch(kBase).join(tailIds, Seq("vec_id"), "left_anti")
     }
     Knn.topKPerQuery(baseHits.unionByName(tailHits), nq, k, Knn.ascending(metric))
-  }
-
-  /** One float query `q` through [[mergeTail]]: `base(kBase)` returns the
-    * family's `(vec_id, _score)` hits, the tail scores exactly (with the
-    * same scalar `filter`). Output: (vec_id, _score), best-first.
-    */
-  private def searchOne(schema: StructType, vecCol: String, q: Seq[Float],
-      k: Int, metric: String, deny: Set[Long], filter: Option[Column])(
-      base: Int => DataFrame): DataFrame = {
-    def qid0(hits: DataFrame, id: Column) =
-      hits.select(lit(0L).as("_qid"), id.cast("long").as("vec_id"), col("_score"))
-    mergeTail(schema, k, metric, 1, deny) { t =>
-      qid0(graft.operators.Knn.search(t, col(vecCol), q, k, metric,
-        filter = filter, tieBreak = Some(col(idCol))), col(idCol))
-    } { kBase => qid0(base(kBase), col("vec_id")) }.drop("_qid")
-  }
-
-  /** Realtime graph-ANN search: the READY HNSW generation (built over the
-    * BASE) ∪ the brute-forced TAIL — [[mergeTail]] over the graph walk.
-    * `deny` is the delete ledger since the graph generation (the
-    * reference's deleted-bitmap gate), applied to BOTH legs.
-    */
-  def searchHnsw(
-      segments: org.apache.spark.sql.Dataset[graft.operators.HnswIndex.Segment],
-      schema: StructType,
-      vecCol: String,
-      q: Seq[Float],
-      k: Int,
-      ef: Int,
-      metric: String = "l2",
-      deny: Set[Long] = Set.empty): DataFrame = {
-    searchOne(schema, vecCol, q, k, metric, deny, None) { kBase =>
-      graft.operators.HnswIndex.search(segments, q, kBase,
-        math.max(ef, kBase), metric, deny = deny)
-    }
-  }
-
-  /** Realtime IVF search: the READY `list_id` generation ∪ the brute
-    * tail — the scan family's instance of [[mergeTail]] (the reference's
-    * buffer merge into IVF searches, vector_manager.cc:941-1012).
-    * `table` is the served (already delete-gated) layout; its id column
-    * is `idCol`.
-    */
-  def searchIvf(
-      table: DataFrame,
-      model: graft.operators.IvfIndex.Model,
-      schema: StructType,
-      vecCol: String,
-      q: Seq[Float],
-      k: Int,
-      nprobe: Int,
-      deny: Set[Long] = Set.empty,
-      filter: Option[Column] = None): DataFrame = {
-    searchOne(schema, vecCol, q, k, model.metric, deny, filter) { kBase =>
-      graft.operators.IvfIndex.search(table, col(vecCol), model, q, kBase,
-        nprobe, filter = filter, tieBreak = Some(col(idCol)))
-        .select(col(idCol).as("vec_id"), col("_score"))
-    }
-  }
-
-  /** Realtime IVFPQ search: ADC + rerank over the READY residual-code
-    * generation ∪ the exactly-scored tail ([[mergeTail]]). The tail leg
-    * is exact by construction — the buffer holds raw vectors, the same
-    * asymmetry as the reference's memory-buffer scan.
-    */
-  def searchIvfPq(
-      table: DataFrame,
-      ivf: graft.operators.IvfIndex.Model,
-      pq: graft.operators.PqIndex.Model,
-      schema: StructType,
-      vecCol: String,
-      q: Seq[Float],
-      k: Int,
-      nprobe: Int,
-      recallNum: Int,
-      deny: Set[Long] = Set.empty,
-      filter: Option[Column] = None): DataFrame = {
-    searchOne(schema, vecCol, q, k, pq.metric, deny, filter) { kBase =>
-      graft.operators.PqIndex.searchIvfResidual(table, col(vecCol), ivf, pq,
-        q, kBase, nprobe, math.max(recallNum, kBase), idCol = col(idCol))
-        .select(col(idCol).as("vec_id"), col("_score"))
-    }
-  }
-
-  /** Realtime Vamana (DiskANN-static) search: beam walk over the READY
-    * graph generation ∪ the brute tail ([[mergeTail]]). The reference's
-    * static class has no realtime add of its own — the buffer union is
-    * exactly how its engine keeps serving fresh writes between rebuilds.
-    */
-  def searchVamana(
-      segments: org.apache.spark.sql.Dataset[graft.operators.VamanaIndex.Segment],
-      schema: StructType,
-      vecCol: String,
-      q: Seq[Float],
-      k: Int,
-      l: Int,
-      beamWidth: Int = 4,
-      metric: String = "l2",
-      deny: Set[Long] = Set.empty): DataFrame = {
-    searchOne(schema, vecCol, q, k, metric, deny, None) { kBase =>
-      graft.operators.VamanaIndex.search(segments, q, kBase,
-        math.max(l, kBase), beamWidth, metric, deny = deny)
-    }
   }
 
   /** Fold the tail into the base (the reference's background Indexing

@@ -23,7 +23,7 @@ class FixtureTableSpec extends SparkSpec {
       "ivf16", "neardup16", "ivffix16", "pqfix8_16", "ivfpqr8_8_16",
       "ivfpqrfix8_8_16", "scannfix8_8_16", "pq8_16", "binary", "rbivf16",
       "rbivffix16", "hnswrfix16_16_100", "hnsw16_100_4_l2", "hnswr16_16_100",
-      "vamana32_64_4", "hnswmv", "hnswmvrt", "media3",
+      "vamana32_64_4", "hnswmv", "media3",
       "apihnsw", "apihnswr", "apipq", "apirb", "apiscann2", "apivam",
       "apivamr", "apibivf", "apidel", "apii8ivf", "apii8hnsw", "apii8ivfpq",
       "apii8vamana", "apii8scann", "apii8rb", "apimv", "apimvmixed",

@@ -351,9 +351,9 @@ class IndexLifecycleSpec extends SparkSpec {
     assert(bTable.count() == n)
     val qCode = coded.filter($"_id" === 5).select("embedding")
       .head().getAs[Array[Byte]](0)
-    val gotB = graft.operators.BinaryIndex.searchBinaryIvf(bTable,
-      "embedding", cents, qCode, k = 5, nprobe = 4,
-      tieBreak = Some($"_id"))
+    val gotB = graft.operators.BinaryIndex.searchBatchBinaryIvf(bTable,
+      "embedding", cents, Seq((0L, qCode)), k = 5, nprobe = 4,
+      idCol = $"_id")
       .select($"_id").collect().map(_.getLong(0)).toSeq
     val bruteB = Knn.searchBinary(coded, $"embedding", qCode, 5,
       tieBreak = Some($"_id"))

@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.catalyst.expressions.aggregate.{Complete, Final}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.functions._
 
 import graft.operators.{BinaryIndex, IvfIndex, PqIndex}
@@ -28,6 +30,44 @@ class PlanEvidenceSpec extends SparkSpec {
     try df.queryExecution.executedPlan.collect { case f: FileSourceScanExec => f }
     finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
+
+  private object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  /** The physical plans of every action `body` runs (the listener bus is
+    * async, so wait until it is quiet).
+    */
+  private def actionPlans(body: => Unit): Seq[SparkPlan] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = {
+        seen.add(qe.executedPlan); ()
+      }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      var n = -1
+      (0 until 30).takeWhile { _ =>
+        Thread.sleep(100); val m = seen.size; val moving = m == 0 || m != n
+        n = m; moving }
+    } finally spark.listenerManager.unregister(listener)
+    scala.jdk.CollectionConverters.IterableHasAsScala(seen).asScala.toSeq
+  }
+
+  /** Final (or complete) TopKAgg aggregates across `plans`: the per-qid merges. */
+  private def topKMerges(plans: Seq[SparkPlan]): Int = plans.map(p => Aqe.collect(p) {
+    case a: BaseAggregateExec if a.aggregateExpressions.exists(e =>
+      (e.mode == Final || e.mode == Complete) &&
+        e.aggregateFunction.isInstanceOf[graft.functions.TopKAgg]) => a
+  }.size).sum
+
+  private def takeOrdered(plans: Seq[SparkPlan]): Boolean = plans.exists(p =>
+    Aqe.collect(p) { case t: TakeOrderedAndProjectExec => t }.nonEmpty)
+
+  /** A search request over `embedding`: req_num = `features.size`. */
+  private def request(features: Seq[Seq[Float]], limit: Int): String =
+    s"""{"vectors":[{"field":"embedding","feature":${features.flatten.mkString("[", ",", "]")}}],"limit":$limit}"""
 
   test("PQ stage-1 scan reads (id, pq_code) only — no embedding bytes") {
     val pq = PqIndex.train(emb, "embedding", dim = 64, m = 8, ksub = 16,
@@ -239,9 +279,6 @@ class PlanEvidenceSpec extends SparkSpec {
     // a single query is a batch of one, but its per-query top-k merge
     // must stay Spark's TakeOrderedAndProject (no `_qid` exchange, no
     // aggregate); a batch merges through exactly one bounded TopKAgg
-    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, TakeOrderedAndProjectExec}
-    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-    import org.apache.spark.sql.catalyst.expressions.aggregate.{Complete, Final}
     val root = java.nio.file.Files.createTempDirectory("pe_merge").toString
     val spacePath = s"$root/space"
     emb.select($"vec_id".cast("long").as("_id"), $"label", $"embedding")
@@ -256,42 +293,77 @@ class PlanEvidenceSpec extends SparkSpec {
     lc.rebuildHnsw("_id", "embedding",
       graft.operators.HnswIndex.Params(16, 60, "l2", numShards = 3))
     val qv = q0
-    object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    // the physical plans of every action the routed request runs
-    def plansOf(features: Seq[Seq[Float]]): Seq[SparkPlan] = {
-      val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-        def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = {
-          seen.add(qe.executedPlan); ()
-        }
-        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-      }
-      spark.listenerManager.register(listener)
-      try {
-        graft.api.SearchApi.searchAuto(stored, sp,
-          s"""{"vectors":[{"field":"embedding","feature":${features.flatten.mkString("[", ",", "]")}}],"limit":7}""",
-          lc)
-        var n = -1
-        (0 until 30).takeWhile { _ =>
-          Thread.sleep(100); val m = seen.size; val moving = m == 0 || m != n
-          n = m; moving }
-      } finally spark.listenerManager.unregister(listener)
-      scala.jdk.CollectionConverters.IterableHasAsScala(seen).asScala.toSeq
+    def plansOf(features: Seq[Seq[Float]]): Seq[SparkPlan] = actionPlans {
+      graft.api.SearchApi.searchAuto(stored, sp, request(features, 7), lc)
     }
-    def topKMerges(plans: Seq[SparkPlan]): Int = plans.map(p => Aqe.collect(p) {
-      case a: BaseAggregateExec if a.aggregateExpressions.exists(e =>
-        (e.mode == Final || e.mode == Complete) &&
-          e.aggregateFunction.isInstanceOf[graft.functions.TopKAgg]) => a
-    }.size).sum
     val single = plansOf(Seq(qv))
-    assert(single.exists(p =>
-      Aqe.collect(p) { case t: TakeOrderedAndProjectExec => t }.nonEmpty),
+    assert(takeOrdered(single),
       s"single-query hits must merge with TakeOrderedAndProject:\n${single.mkString("\n")}")
     assert(topKMerges(single) == 0,
       s"single-query hits must not run a TopKAgg aggregate:\n${single.mkString("\n")}")
     val batch = plansOf(Seq(qv, qv.reverse))
     assert(topKMerges(batch) == 1,
       s"req_num=2 hits must merge through exactly one TopKAgg:\n${batch.mkString("\n")}")
+  }
+
+  test("FLAT merge choice: one query merges with TakeOrderedAndProject, req_num=2 with one TopKAgg") {
+    // the FLAT path serves every query count through Knn.searchBatch; the
+    // query count it passes keeps a single query off the `_qid` exchange
+    val stored = emb.select($"vec_id".cast("long").as("_id"), $"label", $"embedding")
+    val sp = graft.schema.Space.fromJson(
+      """{"name":"flat_space","fields":[
+          {"name":"label","type":"integer","index":{"type":"SCALAR"}},
+          {"name":"embedding","type":"vector","dimension":64,
+           "index":{"type":"FLAT"}}]}""")
+    val qv = q0
+    def plansOf(features: Seq[Seq[Float]]): Seq[SparkPlan] = actionPlans {
+      graft.api.SearchApi.search(stored, sp, request(features, 7)).collect()
+      ()
+    }
+    val single = plansOf(Seq(qv))
+    assert(takeOrdered(single),
+      s"a single FLAT query must merge with TakeOrderedAndProject:\n${single.mkString("\n")}")
+    assert(topKMerges(single) == 0,
+      s"a single FLAT query must not run a TopKAgg aggregate:\n${single.mkString("\n")}")
+    // the request's own query vectors ride the plan as a literal: no
+    // broadcast exchange (and so no broadcast job)
+    assert(single.forall(p => Aqe.collect(p) {
+      case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec => b }.isEmpty),
+      s"a FLAT request must not broadcast its query batch:\n${single.mkString("\n")}")
+    val batch = plansOf(Seq(qv, qv.reverse))
+    assert(topKMerges(batch) == 1,
+      s"a req_num=2 FLAT request must merge through exactly one TopKAgg:\n${batch.mkString("\n")}")
+  }
+
+  test("routed IVFFLAT single query: batch operator keeps list_id partition pruning, no TopKAgg") {
+    // a single routed scan-family query runs the batch operator as a batch
+    // of one: the static `list_id IN` probe union still prunes partitions
+    // and its per-query merge stays TakeOrderedAndProject
+    val root = java.nio.file.Files.createTempDirectory("pe_ivf_one").toString
+    val spacePath = s"$root/space"
+    emb.select($"vec_id".cast("long").as("_id"), $"label", $"embedding")
+      .write.parquet(spacePath)
+    val stored = spark.read.parquet(spacePath)
+    val sp = graft.schema.Space.fromJson(
+      """{"name":"ivf_one","fields":[
+          {"name":"label","type":"integer","index":{"type":"SCALAR"}},
+          {"name":"embedding","type":"vector","dimension":64,
+           "index":{"type":"IVFFLAT","params":{"ncentroids":8,"nprobe":2}}}]}""")
+    val lc = new graft.api.IndexLifecycle(spark, spacePath)
+    lc.rebuild("embedding", ncentroids = 8)
+    val qv = q0
+    val plans = actionPlans {
+      graft.api.SearchApi.searchAuto(stored, sp, request(Seq(qv), 5), lc)
+      ()
+    }
+    val pruned = plans.flatMap(p => Aqe.collect(p) {
+      case f: FileSourceScanExec
+          if f.partitionFilters.exists(_.references.exists(_.name == "list_id")) => f
+    })
+    assert(pruned.nonEmpty,
+      s"the probe did not become a list_id PartitionFilter:\n${plans.mkString("\n")}")
+    assert(topKMerges(plans) == 0,
+      s"a single routed IVFFLAT query must not run a TopKAgg aggregate:\n${plans.mkString("\n")}")
   }
 
   test("catalog routed request end to end: warm open, ≤3 jobs, bounded TakeOrderedAndProject fetch") {

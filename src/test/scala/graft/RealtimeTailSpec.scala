@@ -87,37 +87,39 @@ class RealtimeTailSpec extends SparkSpec {
       assert(!got.map(_._1).contains(0L))  // updated doc's stale rank gone
     }
 
-    // IVF: probe over the assigned layout ∪ brute tail (full probe ⇒ exact)
-    val ivf = graft.operators.IvfIndex.train(base, "embedding", 8)
-    val table = graft.operators.IvfIndex.assign(base, "embedding", ivf)
-    check(tail.searchIvf(table, ivf, schema, "embedding", q0, k = 5, nprobe = 8)
-      .select($"vec_id", $"_score").collect()
-      .map(r => (r.getLong(0), r.getDouble(1))).toSeq)
-
-    // IVFPQ: ADC + full-depth rerank over residual codes ∪ brute tail
-    val pq = graft.operators.PqIndex.trainResidual(table, "embedding", dim,
-      m = 8, ivf = ivf, ksub = 16, maxTrainRows = 200000L, maxIter = 8)
-    val coded = graft.operators.PqIndex.encodeResidual(table, "embedding", ivf, pq)
-    check(tail.searchIvfPq(coded, ivf, pq, schema, "embedding", q0, k = 5,
-      nprobe = 8, recallNum = 1 << 20)
-      .select($"vec_id", $"_score").collect()
-      .map(r => (r.getLong(0), r.getDouble(1))).toSeq)
-
-    // Vamana: exhaustive beam walk (l ≥ |shard|) ∪ brute tail
-    val segs = graft.operators.VamanaIndex.build(base, "_id", "embedding",
+    // every family serves through searchAuto: its READY generation ∪ the
+    // brute tail, merged by legFor's one tail merge
+    val lc = new graft.api.IndexLifecycle(spark, basePath)
+    lc.rebuild("embedding", ncentroids = 8)
+    lc.rebuildIvfPq("embedding", ncentroids = 8, m = 8, ksub = 16)
+    lc.rebuildVamana("_id", "embedding",
       graft.operators.VamanaIndex.Params(r = 16, l = 32, alpha = 1.2,
         metric = "l2", numShards = 2))
-    check(tail.searchVamana(segs, schema, "embedding", q0, k = 5, l = 1 << 30)
-      .select($"vec_id", $"_score").collect()
-      .map(r => (r.getLong(0), r.getDouble(1))).toSeq)
+    val req = s"""{"vectors":[{"field":"embedding","feature":${q0.mkString("[", ",", "]")}}],"limit":5}"""
+    def serve(index: String): Seq[(Long, Double)] =
+      graft.api.SearchApi.searchAuto(spark.read.parquet(basePath),
+        graft.schema.Space.fromJson(s"""{"name":"rt_fam","fields":[
+          {"name":"embedding","type":"vector","dimension":$dim,"index":$index}]}"""),
+        req, lc, tail = Some(tail))
+        .select($"_id", $"_score").collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+
+    // IVF: probe over the assigned layout ∪ brute tail (full probe ⇒ exact)
+    val ivfIndex = """{"type":"IVFFLAT","params":{"ncentroids":8,"nprobe":8}}"""
+    check(serve(ivfIndex))
+
+    // IVFPQ: ADC + full-depth rerank over residual codes ∪ brute tail
+    check(serve("""{"type":"IVFPQ","params":{"ncentroids":8,"nsubvector":8,
+      "nprobe":8,"recall_num":1000000}}"""))
+
+    // Vamana: exhaustive beam walk (L ≥ |shard|) ∪ brute tail
+    check(serve("""{"type":"DISKANN_STATIC","params":{"R":16,"L":1000000}}"""))
 
     // delete gate on a non-graph family: denied ids surface from NEITHER
     // leg (base anti-filter + tail gate), top-k refills from live docs
     val deny = Set(900000L, want(1)._1)
-    val gotGated = tail.searchIvf(
-      table.filter(!$"_id".isin(deny.toSeq: _*)), ivf, schema, "embedding",
-      q0, k = 5, nprobe = 8, deny = deny)
-      .select($"vec_id").collect().map(_.getLong(0)).toSeq
+    lc.deleteByIds("_id", deny.toSeq)
+    val gotGated = serve(ivfIndex).map(_._1)
     val wantGated = graft.operators.Knn.search(
       tail.snapshot(schema).filter(!$"_id".isin(deny.toSeq: _*)),
       $"embedding", q0, 5, "l2", tieBreak = Some($"_id"))
@@ -280,10 +282,9 @@ class RealtimeTailSpec extends SparkSpec {
     val q0 = spark.read.parquet(basePath).filter($"_id" === 0)
       .select("embedding").head().getSeq[Float](0)
 
-    val segs = graft.operators.HnswIndex.build(
-      spark.read.parquet(basePath), "_id", "embedding",
-      graft.operators.HnswIndex.Params(8, 60, "l2", numShards = 3)).cache()
-    segs.count()
+    val lc = new graft.api.IndexLifecycle(spark, basePath)
+    lc.rebuildHnsw("_id", "embedding",
+      graft.operators.HnswIndex.Params(8, 60, "l2", numShards = 3))
 
     val tail = new RealtimeTail(spark, basePath, tailPath, ckpt, "_id",
       orderCol = Some("seq"))
@@ -300,9 +301,20 @@ class RealtimeTailSpec extends SparkSpec {
     ingest.processAllAvailable()
     ingest.stop()
 
-    val got = tail.searchHnsw(segs, schema, "embedding", q0, k = 5, ef = 1 << 30)
-      .select($"vec_id", $"_score").collect()
-      .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    // the graph generation ∪ the brute tail through searchAuto (exact
+    // params: efSearch ≥ |shard|)
+    val sp = graft.schema.Space.fromJson(
+      """{"name":"rt_hnsw","fields":[
+          {"name":"embedding","type":"vector","dimension":64,
+           "index":{"type":"HNSW",
+                    "params":{"nlinks":8,"efConstruction":60,"efSearch":1000000}}}]}""")
+    val req = s"""{"vectors":[{"field":"embedding","feature":${q0.mkString("[", ",", "]")}}],"limit":5}"""
+    def serve(): Seq[(Long, Double)] =
+      graft.api.SearchApi.searchAuto(spark.read.parquet(basePath), sp, req, lc,
+        tail = Some(tail))
+        .select($"_id", $"_score").collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val got = serve()
     val want = graft.operators.Knn.search(tail.snapshot(schema),
       $"embedding", q0, 5, "l2", tieBreak = Some($"_id"))
       .select($"_id", $"_score").collect()
@@ -315,9 +327,8 @@ class RealtimeTailSpec extends SparkSpec {
     // graph base (allow-functor) nor from a buffered tail write — and
     // the merged top-k still fills from live docs
     val deny = Set(900000L, got(1)._1)
-    val gated = tail.searchHnsw(segs, schema, "embedding", q0, k = 5,
-      ef = 1 << 30, deny = deny)
-      .select($"vec_id").collect().map(_.getLong(0)).toSeq
+    lc.deleteByIds("_id", deny.toSeq)
+    val gated = serve().map(_._1)
     assert(gated.size == 5)
     assert(gated.forall(!deny.contains(_)))
     val wantGated = graft.operators.Knn.search(

@@ -455,4 +455,49 @@ class SpaceSpec extends SparkSpec {
     cat.deleteByQuery("d", "s", col("_id") === "u-buf", Some(lc))
     assert(cat.query("d", "s", space, fetch).isEmpty)
   }
+
+  test("deleteByQuery that empties every bucket keeps the docid mark: new docs route") {
+    import org.apache.spark.sql.functions._
+    val root = java.nio.file.Files.createTempDirectory("cat_empty").toString
+    val cat = new SpaceCatalog(spark, root)
+    cat.createDb("d")
+    val space = Space.fromJson(
+      """{"name":"s","fields":[
+          {"name":"stars","type":"integer","index":{"type":"SCALAR"}},
+          {"name":"vec","type":"vector","dimension":8,
+           "index":{"type":"HNSW",
+                    "params":{"nlinks":8,"efConstruction":32,"efSearch":4096}}}]}""")
+    cat.createSpace("d", space)
+    def vf(seed: Int): Seq[Float] = (0 until 8).map(i => ((seed * 37 + i * 3) % 11 - 5).toFloat)
+    def docs(prefix: String, n: Int) = (0 until n).map(i => (s"$prefix-$i", i % 3, vf(i)))
+      .toDF("_id", "stars", "vec")
+      .select($"_id", $"stars", $"vec".cast("array<float>").as("vec"))
+    cat.upsert("d", "s", docs("a", 20), partitionNum = 3)
+    val path = s"$root/d/s"
+    val lc = new graft.api.IndexLifecycle(spark, path)
+    lc.rebuildDeclared(space, "vec", idCol = "_docid", numShards = 2)
+
+    // the ledger now holds every docid minted so far, and no bucket keeps a row
+    cat.deleteByQuery("d", "s", lit(true), Some(lc))
+    assert(cat.docCount("d", "s") == 0)
+    assert(graft.sources.SidecarIO.exists(s"$path/_graft_docid_hwm"))
+    assert(graft.sources.SidecarIO.exists(s"$path/_graft_buckets"))
+
+    // fresh docs mint above the high-water mark: no deleted docid reused
+    cat.upsert("d", "s", docs("b", 2), partitionNum = 3)
+    val fresh = spark.read.parquet(path)
+    val freshDocids = fresh.select($"_docid").as[Long].collect().toSet
+    assert(freshDocids.size == 2)
+    assert(freshDocids.intersect(lc.allDeletes()).isEmpty,
+      s"fresh docids $freshDocids reuse deleted ones")
+    lc.appendHnsw(fresh.drop("_bucket"), "_docid", "vec",
+      graft.operators.HnswIndex.Params(8, 32, "l2", numShards = 2))
+
+    // the routed request serves both, exactly as the FLAT scan does
+    def ids(extra: String): Set[String] = cat.search("d", "s", space,
+      s"""{"vectors":[{"field":"vec","feature":${vf(0).mkString("[", ",", "]")}}],"limit":5$extra}""")
+      .select($"_id").collect().map(_.getString(0)).toSet
+    assert(ids(""","is_brute_search":1""") == Set("b-0", "b-1"))
+    assert(ids("") == Set("b-0", "b-1"))
+  }
 }
