@@ -423,43 +423,11 @@ object SearchApi {
     */
   private def perFieldK(req: SearchRequest): Int = math.max(req.limit * 10, 200)
 
-  /** Batch queries table (_qid, _qv) in the condition's value domain,
-    * plus the matching (vector, query) score column — None = the shared
-    * metric kernels of [[Knn.searchBatch]].
-    */
-  private def flatBatchQueries(space: Space, vc: VecCond,
-      spark: org.apache.spark.sql.SparkSession)
-      : (DataFrame, Option[(Column, Column) => Column]) = {
-    import spark.implicits._
-    valueTypeOf(space, vc.field) match {
-      case "int8" =>
-        val m = metricOf(space, vc.field)
-        (vc.queries.zipWithIndex.map { case (q, i) =>
-          (i.toLong, graft.functions.VecKernels.quantizeI8(
-            new org.apache.spark.sql.catalyst.util.GenericArrayData(q.toArray)))
-        }.toDF("_qid", "_qv"),
-          Some((a: Column, b: Column) => Knn.scoreInt8(m, a, b)))
-      case "binary" =>
-        (vc.queries.zipWithIndex.map { case (q, i) =>
-          (i.toLong, graft.functions.VecKernels.signBits(
-            new org.apache.spark.sql.catalyst.util.GenericArrayData(q.toArray))
-            .asInstanceOf[Array[Byte]])
-        }.toDF("_qid", "_qv"),
-          Some((v: Column, qc: Column) =>
-            graft.Graft.F.hamming(v, qc).cast("double")))
-      case _ =>
-        (vc.queries.zipWithIndex
-          .map { case (q, i) => (i.toLong, maybeNormalize(space, vc.field, q)) }
-          .toDF("_qid", "_qv"),
-          None)
-    }
-  }
-
   /** `POST /document/search` → DataFrame: the exact FLAT path. Every
     * request is a batch of its req_num queries (a single query is qid 0),
-    * and every condition scores through [[Knn.searchBatch]] in its
-    * field's value domain ([[flatBatchQueries]]), with its score gate
-    * in-scan (gamma_common_data.h:94-96). The query count known here
+    * and every condition scores through [[Knn.searchBatchLocal]] in its
+    * field's value domain, with its score gate in-scan
+    * (gamma_common_data.h:94-96). The query count known here
     * picks the per-query merge ([[Knn.topKPerQuery]]): one
     * TakeOrderedAndProject for one query, the TopKAgg heap per qid for
     * more. Blocks come in REQUEST order, rows by score then `_id` within
@@ -474,11 +442,30 @@ object SearchApi {
     require(req.vectors.forall(_.queries.size == nq),
       "all vector conditions must carry the same req_num")
     val filtered = filterOf(space, req).map(corpus.filter).getOrElse(corpus)
+    // one condition's per-query top-k in its field's value domain
+    // (index_model.h:19): int8 quantizes each query with the ingest
+    // quantizer and scores with the integer kernels; binary
+    // sign-binarizes and ranks by code Hamming (ascending, so it ranks as
+    // l2); float keeps the metric kernels over the (normalized) floats
     def topK(vc: VecCond, item: Column, k: Int, offset: Int): DataFrame = {
-      val (queries, scoreFn) = flatBatchQueries(space, vc, corpus.sparkSession)
-      Knn.searchBatch(filtered, col(vc.field), item, queries, "_qid", "_qv", k,
-        rankMetric(space, vc.field), minScore = vc.minScore,
-        maxScore = vc.maxScore, offset = offset, scoreFn = scoreFn, nq = nq)
+      def run[Q: scala.reflect.runtime.universe.TypeTag](qs: Seq[Q],
+          scoreFn: Option[(Column, Column) => Column]): DataFrame =
+        Knn.searchBatchLocal(filtered, col(vc.field), item,
+          qs.zipWithIndex.map { case (q, i) => (i.toLong, q) }, k,
+          rankMetric(space, vc.field), minScore = vc.minScore,
+          maxScore = vc.maxScore, offset = offset, scoreFn = scoreFn)
+      def arr(q: Seq[Float]) =
+        new org.apache.spark.sql.catalyst.util.GenericArrayData(q.toArray)
+      valueTypeOf(space, vc.field) match {
+        case "int8" =>
+          val m = metricOf(space, vc.field)
+          run(vc.queries.map(q => graft.functions.VecKernels.quantizeI8(arr(q))),
+            Some((v: Column, qc: Column) => Knn.scoreInt8(m, v, qc)))
+        case "binary" =>
+          run(vc.queries.map(q => graft.functions.VecKernels.signBits(arr(q))),
+            Some((v: Column, qc: Column) => graft.Graft.F.hamming(v, qc).cast("double")))
+        case _ => run(vc.queries.map(maybeNormalize(space, vc.field, _)), None)
+      }
     }
     // (hits, ranking metric, response columns, response column of a hit)
     val (hits, metric, cols, colOf) =
@@ -706,8 +693,11 @@ object SearchApi {
     * `_bucket IN`, the reference's O(k) docid point reads) — and the
     * returned frame is the pruned payload fetch over those local hits.
     * A search request is meant to execute (the reference's handler does
-    * exactly this), so construction-time work IS request work; only the
-    * FLAT fallback stays a fully lazy plan.
+    * exactly this), so construction-time work IS request work. Two shapes
+    * have no payload scan to prune and stay fully lazy plans: the FLAT
+    * fallback, and a routed response of `_id` and `_score` alone on a
+    * space routed by its integral `_id` (every such conjunction, or
+    * `fields: ["_id"]`), which is the ranked hits themselves.
     */
   def searchAuto(corpus0: DataFrame, space: Space, requestJson: String,
       lifecycle: IndexLifecycle,
@@ -807,14 +797,24 @@ object SearchApi {
     // total order, so the rows and their order are the unbounded sort's.
     def finish(hits: DataFrame, metric: String, nq: Int,
         cols: Seq[String]): DataFrame = {
-      val (fetched, n) = joinBack(hits)
       val qid = if (nq > 1) Some(col("_qid")) else None
       val rank = Seq(
         if (Knn.ascending(metric)) col("_score").asc else col("_score").desc,
         col("_id").asc)
       val order = qid.map(_.asc).toSeq ++ rank
-      val projected = fetched.select(
-        cols.filter(c => c != "_qid" || qid.isDefined).map(col): _*)
+      val out = cols.filter(c => c != "_qid" || qid.isDefined).map(col)
+      // a response of `_id` and `_score` alone on a space routed by its
+      // integral `_id` needs no payload, so there are no hit ids to
+      // prune a fetch with: the response is the hits plan itself, put in
+      // response order in one final task (no exchange), and stays lazy
+      // like the FLAT path
+      if (rid.contains("_id") && cols.forall(Set("_qid", "_id", "_score")) &&
+          req.offset == 0 && req.sort.isEmpty)
+        return hits.select(col("vec_id").cast(corpus.schema("_id").dataType).as("_id"),
+            col("_score").cast("double").as("_score"), col("_qid"))
+          .coalesce(1).sortWithinPartitions(order: _*).select(out: _*)
+      val (fetched, n) = joinBack(hits)
+      val projected = fetched.select(out: _*)
       // the offset slice ranks by score, whatever a sort spec orders by;
       // a batch slices per qid with row_number over its tiny hit rows
       val sliced = (qid, req.offset) match {

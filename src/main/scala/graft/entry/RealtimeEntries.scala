@@ -42,14 +42,15 @@ private[graft] object RealtimeEntries {
     //    query vector, so both per-field top-1s are buffered docs; exact
     //    params (efSearch ≥ |shard|) ⇒ the composition oracles against the
     //    same brute intersection as q_knn_multivec over the live view ≡
-    //    full table ──
+    //    full table. Each leg asks for `_id` alone, so it is the lazy
+    //    ranked hits of its walk ∪ tail, with no payload fetch ──
     "q_knn_multivec_realtime" -> ((s, dir) => {
       init(s)
       val q = qvec(s, dir)
       def leg(field: String, qv: Seq[Float], score: String) =
         searchFixture(s, dir, "apimvrt", mvRtSpace,
           s"""{"vectors":[{"field":"$field","feature":${qv.mkString("[", ",", "]")}}],
-            "index_params":{"efSearch":1048576},"limit":100}""")
+            "fields":["_id"],"index_params":{"efSearch":1048576},"limit":100}""")
           .select(col("_id").as("vec_id"), col("_score").as(score))
       leg("v1", q.take(32), "_s0").join(leg("v2", q.drop(32), "_s1"), "vec_id")
         .withColumn("_score", col("_s0") * 0.5 + col("_s1") * 0.5)

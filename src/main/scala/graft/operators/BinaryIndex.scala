@@ -120,19 +120,21 @@ object BinaryIndex {
       qb: Int = 4,
       minScore: Option[Double] = None,
       maxScore: Option[Double] = None,
-      // INT8 batches: per-qid quantized query codes for the integer-
-      // kernel rerank (see [[searchIvfResidual]]'s rerankInt8)
+      // INT8 batches: each query's quantized code, in `queries` order,
+      // for the integer-kernel rerank (see [[searchIvfResidual]]'s rerankInt8)
       rerankInt8: Option[Seq[(Long, Array[Byte])]] = None): DataFrame = {
     require(shortlist >= k, "shortlist must be >= k")
     val spark = corpus.sparkSession
     import spark.implicits._
-    val qlRows = queries.flatMap { case (qid, q) =>
+    // up to the rerank, `_qid` holds the query's POSITION in `queries`,
+    // so the rerank reads its query from a literal array in O(1)
+    val qlRows = queries.zipWithIndex.flatMap { case ((_, q), pos) =>
       ivf.nearestCentroids(q, nprobe).map { l =>
         val c = ivf.centroids(l)
         val r = q.toArray.zipWithIndex.map { case (x, i) =>
           x - (if (i < c.length) c(i) else 0f)
         }
-        (qid, l, quantizeQuery(r.toSeq, qb).toSeq)
+        (pos, l, quantizeQuery(r.toSeq, qb).toSeq)
       }
     }
     val qDf = qlRows.toDF("_qid", "list_id", "_qres")
@@ -151,8 +153,8 @@ object BinaryIndex {
         "_sid", "_est")
       .select(col("_qid"), col("_sid"))
     val rerank0 = corpus.join(broadcast(short), idCol === col("_sid"))
-      .select(col("_qid"),
-        Knn.rerankScore(metric, vecCol, queries, rerankInt8).as("_score"),
+      .select(Knn.atPosition(queries.map(_._1), col("_qid")).as("_qid"),
+        Knn.rerankScore(metric, vecCol, queries, rerankInt8, col("_qid")).as("_score"),
         idCol.as("_id"))
       .filter(col("_score").isNotNull)
     // in-scan score gate at the exact-rerank stage (see searchIvfResidual)
@@ -358,8 +360,8 @@ object BinaryIndex {
       idCol: Column,
       minScore: Option[Double] = None,
       maxScore: Option[Double] = None): DataFrame = {
-    val scored0 = IvfIndex.probed(corpus, queries.map { case (qid, qc) =>
-        (qid, qc, nearestBinaryCentroids(cents, qc, nprobe)) })
+    val scored0 = IvfIndex.probed(corpus, queries,
+        queries.map { case (_, qc) => nearestBinaryCentroids(cents, qc, nprobe) })
       .select(col("_q._1").as("_qid"),
         F.hamming(col(codeCol), col("_q._2")).cast("double").as("_score"),
         idCol.as("_id"))

@@ -115,24 +115,31 @@ object IvfIndex {
 
   /** The probed candidates of a query batch: `corpus` rows in the union
     * of every query's probe lists (a static `list_id IN`, so partition
-    * pruning), each paired with every query `(qid, query, lists)` that
-    * probes its list as the struct column `_q` (fields `_1`, `_2`, `_3`).
-    * The queries ride the plan as one literal array exploded per row —
-    * the pairs of a broadcast `array_contains` join, with no broadcast
-    * job.
+    * pruning), each paired with every query `(qid, query)` whose `lists`
+    * hold its list, as the struct column `_q` (fields `_1`, `_2`). The
+    * batch rides the plan as literals, with no broadcast job: per list id
+    * the positions of the queries probing it, read at `list_id` and
+    * exploded, then each position's query ([[Knn.atPosition]]). A row
+    * meets only its list's queries, as in an equi-join on `list_id`.
     */
   private[graft] def probed[Q: scala.reflect.runtime.universe.TypeTag](
-      corpus: DataFrame, queries: Seq[(Long, Q, Seq[Int])]): DataFrame =
-    corpus.filter(col("list_id").isin(queries.flatMap(_._3).distinct: _*))
-      .withColumn("_q", explode(typedLit(queries)))
-      .filter(array_contains(col("_q._3"), col("list_id")))
+      corpus: DataFrame, queries: Seq[(Long, Q)],
+      lists: Seq[Seq[Int]]): DataFrame = {
+    val union = lists.flatten.distinct
+    val byList = Array.fill(if (union.isEmpty) 0 else union.max + 1)(Seq.empty[Int])
+    lists.zipWithIndex.foreach { case (ls, pos) =>
+      ls.distinct.foreach(l => byList(l) = byList(l) :+ pos) }
+    corpus.filter(col("list_id").isin(union: _*))
+      .withColumn("_p", explode(element_at(typedLit(byList.toSeq),
+        col("list_id").cast("int") + 1)))
+      .withColumn("_q", Knn.atPosition(queries, col("_p")))
+  }
 
   /** Batched IVF search (vearch `req_num` batch over an index; a single
     * query is a batch of one): each query's probe lists are computed
-    * driver-side (tiny quantizer search) and ride the plan as one literal
-    * array of (qid, query, lists), exploded per candidate and kept where
-    * `array_contains(lists, list_id)`, so one pass scores every query's
-    * probed candidates with no query-table broadcast; the per-query
+    * driver-side (tiny quantizer search) and each candidate meets only
+    * the queries probing its list ([[probed]]), so one pass scores every
+    * query's probed candidates with no query-table broadcast; the per-query
     * merge ([[Knn.topKPerQuery]]) keeps the shuffle at |queries|·k rows —
     * independent of corpus size.
     *
@@ -148,10 +155,8 @@ object IvfIndex {
       nprobe: Int,
       minScore: Option[Double] = None,
       maxScore: Option[Double] = None): DataFrame = {
-    val perQueryLists = queries.map { case (qid, q) =>
-      (qid, q, model.nearestCentroids(q, nprobe))
-    }
-    val scored0 = probed(corpus, perQueryLists)
+    val scored0 = probed(corpus, queries,
+        queries.map { case (_, q) => model.nearestCentroids(q, nprobe) })
       .select(col("_q._1").as("_qid"),
         Knn.score(model.metric, vecCol, col("_q._2")).as("_score"),
         payload.as("_item"))
@@ -207,8 +212,8 @@ object IvfIndex {
       nprobe: Int,
       minScore: Option[Double] = None,
       maxScore: Option[Double] = None): DataFrame = {
-    val scored0 = probed(corpus, queries.map { case (qid, qf, qb) =>
-        (qid, qb, model.nearestCentroids(qf, nprobe)) })
+    val scored0 = probed(corpus, queries.map { case (qid, _, qb) => (qid, qb) },
+        queries.map { case (_, qf, _) => model.nearestCentroids(qf, nprobe) })
       .select(col("_q._1").as("_qid"),
         Knn.scoreInt8(model.metric, vecCol, col("_q._2")).as("_score"),
         payload.as("_item"))

@@ -108,18 +108,24 @@ object Knn {
       .getOrElse(selected)
   }
 
-  /** The exact-rerank score of shortlist rows carrying `_qid`: each row's
-    * query looked up by qid from a driver-side literal map (no
-    * query-table join) — the float vectors under the metric kernels, or,
-    * for int8 spaces, the quantized codes under the integer kernels.
+  /** A batch's per-query values as one literal array, read per row at
+    * the query's 0-based position `pos` in the batch: an O(1) array read,
+    * where a literal map keyed by qid is searched linearly per row.
+    */
+  private[graft] def atPosition[T: scala.reflect.runtime.universe.TypeTag](
+      values: Seq[T], pos: Column): Column =
+    element_at(typedLit(values), pos.cast("int") + 1)
+
+  /** The exact-rerank score of shortlist rows whose query sits at
+    * position `pos` of the batch ([[atPosition]], no query-table join):
+    * the float vectors under the metric kernels, or, for int8 spaces, the
+    * quantized codes under the integer kernels.
     */
   private[graft] def rerankScore(metric: String, vecCol: Column,
       queries: Seq[(Long, Seq[Float])],
-      int8: Option[Seq[(Long, Array[Byte])]]): Column = int8 match {
-    case Some(codes) =>
-      scoreInt8(metric, vecCol, element_at(typedLit(codes.toMap), col("_qid")))
-    case None =>
-      score(metric, vecCol, element_at(typedLit(queries.toMap), col("_qid")))
+      int8: Option[Seq[(Long, Array[Byte])]], pos: Column): Column = int8 match {
+    case Some(codes) => scoreInt8(metric, vecCol, atPosition(codes.map(_._2), pos))
+    case None => score(metric, vecCol, atPosition(queries.map(_._2), pos))
   }
 
   /** The score-range gate (doc_query.go:67-78), shared by every value-type
@@ -161,9 +167,8 @@ object Knn {
   }
 
   /** Batched multi-query KNN (vearch `req_num` query vectors per request,
-    * doc_query.go:296-318): the query set is broadcast against the corpus
-    * (or, held on the driver, inlined as a literal), then a bounded-heap
-    * aggregate keeps top-k per query id.
+    * doc_query.go:296-318): the query set is broadcast against the corpus,
+    * then a bounded-heap aggregate keeps top-k per query id.
     *
     * Scale: shuffle volume is |queries| × k rows (partial aggregation
     * reduces each partition to k per qid map-side) — independent of corpus
@@ -187,27 +192,42 @@ object Knn {
       // value_type dispatch (index_model.h:19): non-float corpora plug
       // their own kernel (int8 integer-accumulate, binary Hamming) —
       // `metric` still drives the sort direction
-      scoreFn: Option[(Column, Column) => Column] = None,
-      // the query count when the caller knows it on the driver (one
-      // query merges with TakeOrderedAndProject); a query TABLE by default
-      nq: Int = QueryTable): DataFrame = {
-    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-    import org.apache.spark.sql.types.ArrayType
+      scoreFn: Option[(Column, Column) => Column] = None): DataFrame = {
     val q = queries.select(col(qidCol).as("_qid"), col(qvecCol).as("_qvec"))
+    topKOfPairs(corpus.crossJoin(broadcast(q)), col("_qid"), col("_qvec"),
+      QueryTable, vecCol, payload, k, metric, minScore, maxScore, offset, scoreFn)
+  }
+
+  /** [[searchBatch]] over a batch the driver holds, e.g. a request's own
+    * `(qid, query)` vectors (a single query is a batch of one): the
+    * queries ride the plan as one literal array exploded per row — the
+    * pairs of the broadcast cross join, with no broadcast job — and the
+    * known query count picks the per-query merge ([[topKPerQuery]]).
+    * A query is a float vector, or an int8 / binary code under `scoreFn`.
+    */
+  def searchBatchLocal[Q: scala.reflect.runtime.universe.TypeTag](
+      corpus: DataFrame,
+      vecCol: Column,
+      payload: Column,
+      queries: Seq[(Long, Q)],
+      k: Int,
+      metric: String = "l2",
+      minScore: Option[Double] = None,
+      maxScore: Option[Double] = None,
+      offset: Int = 0,
+      scoreFn: Option[(Column, Column) => Column] = None): DataFrame =
+    topKOfPairs(corpus.withColumn("_q", explode(typedLit(queries))),
+      col("_q._1"), col("_q._2"), queries.size, vecCol, payload, k, metric,
+      minScore, maxScore, offset, scoreFn)
+
+  /** Score every (row, query) pair of `pairs`, gate, and keep each
+    * query's top k (`nq` as in [[topKPerQuery]]).
+    */
+  private def topKOfPairs(pairs: DataFrame, qid: Column, qvec: Column,
+      nq: Int, vecCol: Column, payload: Column, k: Int, metric: String,
+      minScore: Option[Double], maxScore: Option[Double], offset: Int,
+      scoreFn: Option[(Column, Column) => Column]): DataFrame = {
     val scorer = scoreFn.getOrElse((v: Column, qc: Column) => score(metric, v, qc))
-    // a query table the driver holds (a LocalRelation, e.g. a request's own
-    // vectors) rides the plan as one literal array exploded per row: the
-    // same (row, query) pairs as the broadcast cross join, with no
-    // broadcast job
-    val (pairs, qid, qvec) = q.queryExecution.optimizedPlan match {
-      case r: LocalRelation =>
-        (corpus.withColumn("_q", explode(graft.Graft.columnOf(
-          org.apache.spark.sql.catalyst.expressions.Literal(
-            new org.apache.spark.sql.catalyst.util.GenericArrayData(
-              r.data.map(_.copy()).toArray[Any]), ArrayType(r.schema))))),
-          col("_q._qid"), col("_q._qvec"))
-      case _ => (corpus.crossJoin(broadcast(q)), col("_qid"), col("_qvec"))
-    }
     val scored = pairs
       .select(qid.as("_qid"),
         scorer(vecCol, qvec).as("_score"),

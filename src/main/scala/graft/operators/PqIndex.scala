@@ -575,13 +575,15 @@ object PqIndex {
       idCol: Column,
       minScore: Option[Double] = None,
       maxScore: Option[Double] = None,
-      // INT8 batches: per-qid quantized query codes for the integer-
-      // kernel rerank (see [[searchIvfResidual]]'s rerankInt8)
+      // INT8 batches: each query's quantized code, in `queries` order,
+      // for the integer-kernel rerank (see [[searchIvfResidual]]'s rerankInt8)
       rerankInt8: Option[Seq[(Long, Array[Byte])]] = None): DataFrame = {
     require(recallNum >= k, "recall_num must be >= topk (doc_query semantics)")
     val spark = corpus.sparkSession
     import spark.implicits._
-    val qlRows = queries.flatMap { case (qid, q) =>
+    // up to the rerank, `_qid` holds the query's POSITION in `queries`,
+    // so the rerank reads its query from a literal array in O(1)
+    val qlRows = queries.zipWithIndex.flatMap { case ((_, q), pos) =>
       ivf.nearestCentroids(q, nprobe).map { l =>
         val c = ivf.centroids(l)
         // Same identity as [[searchIvfResidual]]: IP LUTs use the original
@@ -589,11 +591,11 @@ object PqIndex {
         if (pq.metric == "ip") {
           val bias =
             -(0 until math.min(q.length, c.length)).map(i => q(i).toDouble * c(i)).sum
-          (qid, l, pq.lut(q).flatten.toSeq, bias)
+          (pos, l, pq.lut(q).flatten.toSeq, bias)
         } else {
           val qr = Array.tabulate(q.length)(i =>
             q(i) - (if (i < c.length) c(i) else 0f)).toSeq
-          (qid, l, pq.lut(qr).flatten.toSeq, 0.0)
+          (pos, l, pq.lut(qr).flatten.toSeq, 0.0)
         }
       }
     }
@@ -616,8 +618,8 @@ object PqIndex {
         "_sid", "_adc")
       .select(col("_qid"), col("_sid"))
     val rerank0 = corpus.join(broadcast(short), idCol === col("_sid"))
-      .select(col("_qid"),
-        Knn.rerankScore(pq.metric, vecCol, queries, rerankInt8).as("_score"),
+      .select(Knn.atPosition(queries.map(_._1), col("_qid")).as("_qid"),
+        Knn.rerankScore(pq.metric, vecCol, queries, rerankInt8, col("_qid")).as("_score"),
         idCol.as("_id"))
       .filter(col("_score").isNotNull)
     // in-scan score gate at the exact-rerank stage (see searchIvfResidual)

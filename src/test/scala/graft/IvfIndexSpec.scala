@@ -73,4 +73,56 @@ class IvfIndexSpec extends SparkSpec {
       tieBreak = Some($"vec_id")).select($"vec_id").as[Long].collect().toSeq
     assert(viaTable == ivfTopK(q, 10, 4))
   }
+
+  test("batched scan operators at partial nprobe: a batch with sparse qids ≡ each query alone") {
+    import graft.operators.{BinaryIndex, PqIndex}
+    import org.apache.spark.sql.{Column, DataFrame}
+    // qids out of order and far apart; 3 of 16 lists probed per query, so
+    // the queries probe different lists and a row must meet only the
+    // queries that probe its own list
+    val qs = queryVecs(4).map(_._2).zip(Seq(900L, 3L, 77L, 12L))
+      .map { case (q, qid) => (qid, q) }
+    def perQid(df: DataFrame, id: Column): Map[Long, Seq[(Long, Double)]] =
+      df.select($"_qid".cast("long"), id.cast("long"), $"_score").collect()
+        .groupBy(_.getLong(0)).map { case (qid, rs) =>
+          qid -> rs.map(r => (r.getLong(1), r.getDouble(2))).toSeq
+            .sortBy { case (i, sc) => (sc, i) } }
+    def check[Q](name: String, queries: Seq[(Long, Q)], id: Column)(
+        run: Seq[(Long, Q)] => DataFrame): Map[Long, Seq[(Long, Double)]] = {
+      val batch = perQid(run(queries), id)
+      val alone = queries.map { case (qid, q) =>
+        qid -> perQid(run(Seq((qid, q))), id).getOrElse(qid, Seq.empty) }.toMap
+      assert(batch.keySet == queries.map(_._1).toSet, name)
+      assert(batch == alone, name)
+      batch
+    }
+    val ivf = check("IVFFLAT", qs, $"_item.vec_id")(b =>
+      IvfIndex.searchBatch(assigned, $"embedding", struct($"vec_id"), b, model,
+        k = 10, nprobe = 3))
+    for ((qid, q) <- qs) assert(ivf(qid).map(_._1) == ivfTopK(q, 10, 3))
+    val i8 = assigned.withColumn("iv", graft.Graft.F.quantizeI8($"embedding"))
+    val qsI8 = qs.map { case (qid, q) => (qid, (q, graft.functions.VecKernels
+      .quantizeI8(new org.apache.spark.sql.catalyst.util.GenericArrayData(q.toArray)))) }
+    check("int8 IVFFLAT", qsI8, $"_item.vec_id")(b =>
+      IvfIndex.searchBatchInt8(i8, $"iv", struct($"vec_id"),
+        b.map { case (qid, (f, c)) => (qid, f, c) }, model, k = 10, nprobe = 3))
+    val pq = PqIndex.trainResidual(assigned, "embedding", dim = 64, m = 8,
+      model, ksub = 16)
+    val pqEnc = PqIndex.encodeResidual(assigned, "embedding", model, pq)
+    check("IVFPQ", qs, $"_id")(b =>
+      PqIndex.searchBatchIvfResidual(pqEnc, $"embedding", model, pq, b, k = 10,
+        nprobe = 3, recallNum = 40, idCol = $"vec_id"))
+    val rbEnc = BinaryIndex.encodeResidual(assigned, "embedding", model)
+    check("IVFRABITQ", qs, $"_id")(b =>
+      BinaryIndex.searchBatchIvfResidual(rbEnc, $"embedding", model, b, k = 10,
+        nprobe = 3, shortlist = 40, idCol = $"vec_id"))
+    val coded = BinaryIndex.encode(emb, "embedding")
+    val cents = BinaryIndex.trainBinary(coded, "vec_id", "bcode", ncentroids = 16)
+    val bTable = BinaryIndex.assignBinary(coded, "bcode", cents)
+    val codes = coded.filter($"vec_id" < 4).select($"vec_id", $"bcode").collect()
+      .map(r => r.getLong(0) -> r.getAs[Array[Byte]](1)).toMap
+    check("BINARYIVF", qs.zipWithIndex.map { case ((qid, _), i) => (qid, codes(i.toLong)) },
+      $"_id")(b => BinaryIndex.searchBatchBinaryIvf(bTable, "bcode", cents, b,
+        k = 10, nprobe = 3, idCol = $"vec_id"))
+  }
 }

@@ -273,6 +273,22 @@ class PlanEvidenceSpec extends SparkSpec {
     assert(ng >= 1, s"gate loop ran $ng jobs — the gated probe must run")
     assert(ng <= 4, s"gate loop ran $ng jobs — in-walk band admission " +
       "should converge on the first probe (one bounded aggregate action)")
+
+    // 4) a response of `_id` and `_score` alone has no payload to fetch:
+    // construction runs no job, the plan scans no payload column, and
+    // the rows are the payload request's, in the same order
+    val idOnly = s"""{"vectors":[{"field":"embedding","feature":${qv.mkString("[", ",", "]")}}],
+      "fields":["_id"],"limit":9}"""
+    var lazyDf: org.apache.spark.sql.DataFrame = null
+    val ni = jobsDuring { lazyDf = graft.api.SearchApi.searchAuto(stored, sp, idOnly, lc) }
+    assert(ni == 0, s"id-only routed construction ran $ni jobs")
+    assert(lazyDf.columns.toSeq == Seq("_id", "_score"))
+    assert(scansOf(lazyDf).forall(!_.output.exists(_.name == "label")),
+      "id-only routed plan still scans the payload")
+    def idScores(df: org.apache.spark.sql.DataFrame) =
+      df.select($"_id", $"_score").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    assert(idScores(lazyDf) ==
+      idScores(graft.api.SearchApi.searchAuto(stored, sp, req(""), lc)))
   }
 
   test("routed HNSW merge choice: one query merges with TakeOrderedAndProject, req_num=2 with one TopKAgg") {
