@@ -63,6 +63,27 @@ object Bench {
       System.err.println(s"[bench] warmup failed: $e")
     }
 
+  /** The fixture an existing `BENCH_LOCAL.json` (its text, if any)
+    * records when that is not `sfDir`: a run on one fixture keeps the
+    * artifact of another (an sf0.001 check must not replace the sf0.1
+    * result). None = this run may write the file: there is none, or it
+    * names no fixture, or the same one (paths compared normalized).
+    */
+  def otherFixture(existing: Option[String], sfDir: String): Option[String] = {
+    val sf = "\"sf\"\\s*:\\s*\"([^\"]*)\"".r
+    def norm(p: String) = java.nio.file.Paths.get(p).normalize()
+    existing.flatMap(sf.findFirstMatchIn).map(_.group(1))
+      .filter(other => norm(other) != norm(sfDir))
+  }
+
+  /** Where a run on `sfDir` writes its JSON when [[otherFixture]] keeps
+    * `BENCH_LOCAL.json`: a file named after the fixture dir, e.g.
+    * `BENCH_LOCAL.sf1.json` for `bench-data/sf1`, so no result is lost.
+    */
+  def fixtureFile(sfDir: String): String =
+    "BENCH_LOCAL." + Option(java.nio.file.Paths.get(sfDir).normalize().getFileName)
+      .map(_.toString).filter(_.nonEmpty).getOrElse("fixture") + ".json"
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // the stated environment is local[32]; only honor an explicit override
@@ -108,10 +129,22 @@ object Bench {
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"error_count":${errors.size},"errors":$errJson,"sf":"$sfDir"}"""
     // emit to a clean file: sbt log noise on stdout made round 1's
     // bench JSON unparseable for the driver (BENCH_r01 "parsed": null)
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("BENCH_LOCAL.json"), json + "\n")
-    catch { case NonFatal(e) =>
-      System.err.println(s"[bench] could not write BENCH_LOCAL.json: $e")
+    try {
+      val local = java.nio.file.Paths.get("BENCH_LOCAL.json")
+      val existing =
+        if (java.nio.file.Files.exists(local)) Some(java.nio.file.Files.readString(local))
+        else None
+      val file = otherFixture(existing, sfDir) match {
+        case Some(other) =>
+          val alt = fixtureFile(sfDir)
+          System.err.println(s"[bench] kept BENCH_LOCAL.json: it records fixture " +
+            s"$other; this run ($sfDir) is written to $alt")
+          java.nio.file.Paths.get(alt)
+        case None => local
+      }
+      java.nio.file.Files.writeString(file, json + "\n")
+    } catch { case NonFatal(e) =>
+      System.err.println(s"[bench] could not write the bench JSON file: $e")
     }
     // the JSON must be the LAST stdout line of the run: round 7's driver
     // capture was a tail window, and Spark-shutdown logs after the print

@@ -1,6 +1,7 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.functions._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -324,6 +325,12 @@ object SearchApi {
   private def sortCols(sort: Seq[(String, Boolean)]): Seq[Column] =
     sort.map { case (f, asc) => if (asc) col(f).asc else col(f).desc }
 
+  /** A sort spec's row order: by query block (`qid`), the spec's keys,
+    * then `_id`.
+    */
+  private def specOrder(sort: Seq[(String, Boolean)], qid: Option[Column]): Seq[Column] =
+    qid.map(_.asc).toSeq ++ sortCols(sort) :+ col("_id").asc
+
   /** Re-order a (projected) search response by the sort spec, failing
     * LOUD when a sort field is not among the result's columns — a
     * multi-field result carries only (_id, _score), and silently ignoring
@@ -335,7 +342,7 @@ object SearchApi {
     require(missing.isEmpty,
       s"sort field(s) ${missing.mkString(", ")} not in result columns " +
         s"[${df.columns.mkString(", ")}]")
-    val sorted = df.orderBy(qid.map(_.asc).toSeq ++ sortCols(sort) :+ col("_id").asc: _*)
+    val sorted = df.orderBy(specOrder(sort, qid): _*)
     bound.fold(sorted)(sorted.limit)
   }
 
@@ -514,18 +521,29 @@ object SearchApi {
     */
   @volatile var maxFilterAllowIds: Int = 1 << 20
 
+  /** The columns of an opened snapshot's resident projection
+    * ([[graft.sources.IndexStore.projection]]): the routing id, `_id` and
+    * every SCALAR-declared non-vector field the frame holds. The
+    * allow-set ([[residentAllow]]) and the routed payload
+    * ([[searchAuto]]'s finisher) read this one projection.
+    */
+  private def residentCols(frame: DataFrame, space: Space, rid: String): Seq[String] =
+    (rid +: "_id" +: scalarFields(space)).distinct.filter(frame.columns.contains)
+
+  private def scalarFields(space: Space): Seq[String] =
+    space.fields.filter(f => f.indexed && f.kind != FieldKind.VectorK).map(_.name)
+
   /** The allow-set of scalar predicate `p` over an opened snapshot, from
-    * the snapshot's resident SCALAR projection: the routing id plus every
-    * SCALAR-declared non-vector field (vearch filters through in-memory
-    * per-field scalar indexes before the ANN walk, engine.cc). It is an
-    * [[graft.sources.IndexStore.residentColumns]] copy: collected once on
-    * the first filtered request, kept on the open-cache entry that holds
-    * `frame` (any rewrite of a data file drops it), and only for a
-    * snapshot whose parquet footers count at most [[maxFilterAllowIds]]
-    * rows, decided before anything is collected. Catalyst's analyzer
-    * resolves `p` over the copy and the bound (interpreted) predicate runs
-    * over its rows on the driver, so every comparison rule (NaN, -0.0,
-    * null, coercion, arrays_overlap) is Catalyst's, and no Spark job runs.
+    * the snapshot's resident projection ([[residentCols]]; vearch filters
+    * through in-memory per-field scalar indexes before the ANN walk,
+    * engine.cc): collected once on the first request that needs it, kept
+    * on the open-cache entry that holds `frame` (any rewrite of a data
+    * file drops it), and only for a snapshot whose parquet footers count
+    * at most [[maxFilterAllowIds]] rows, decided before anything is
+    * collected. Catalyst's analyzer resolves `p` over the copy and the
+    * bound (interpreted) predicate runs over its rows on the driver, so
+    * every comparison rule (NaN, -0.0, null, coercion, arrays_overlap) is
+    * Catalyst's, and no Spark job runs.
     *
     * Exactness: the copy holds every row of the files `frame` reads, and
     * the same predicate runs over it, so the set equals
@@ -540,16 +558,15 @@ object SearchApi {
     import org.apache.spark.sql.catalyst.expressions.{BindReferences, Predicate}
     import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
     import org.apache.spark.sql.types.{IntegerType, LongType}
-    val scalars = space.fields
-      .filter(f => f.indexed && f.kind != FieldKind.VectorK).map(_.name)
-      .filter(frame.columns.contains)
     val refs = org.apache.spark.sql.graft.Bridge.columnNames(p)
-    if (!frame.columns.contains(rid) || !refs.forall(scalars.contains)) None
-    else graft.sources.IndexStore.residentColumns(frame,
-        (rid +: scalars).distinct, maxFilterAllowIds).flatMap { proj =>
+    val scalars = scalarFields(space)
+    if (!frame.columns.contains(rid) || !refs.forall(r => scalars.contains(r) &&
+        frame.columns.contains(r))) None
+    else graft.sources.IndexStore.projection(frame,
+        residentCols(frame, space, rid), maxFilterAllowIds).flatMap { proj =>
       // analysis resolves and coerces `p` over the copy as it would over
       // `frame`; the bound predicate then runs over the copy's rows
-      proj.filter(p).queryExecution.analyzed match {
+      proj.frame.filter(p).queryExecution.analyzed match {
         case Filter(cond, rel: LocalRelation) =>
           val at = rel.output.indexWhere(_.name == rid)
           val id = rel.output(at).dataType match {
@@ -564,6 +581,29 @@ object SearchApi {
           }
         case _ => None
       }
+    }
+  }
+
+  /** The rows of local relation `rel` ordered by sort keys `by`, compared
+    * with Catalyst's own ordering: the analyzer resolves `by` over `rel`
+    * and an [[org.apache.spark.sql.catalyst.expressions.InterpretedOrdering]]
+    * over the bound sort orders sorts the rows on the driver, so NaN,
+    * -0.0, nulls and the UTF-8 byte order of strings compare as in
+    * Spark's own sort, and no Spark job runs.
+    */
+  private def sortedLocally(spark: org.apache.spark.sql.SparkSession,
+      rel: org.apache.spark.sql.catalyst.plans.logical.LocalRelation,
+      by: Seq[Column]): Seq[org.apache.spark.sql.catalyst.InternalRow] = {
+    import org.apache.spark.sql.catalyst.expressions.{BindReferences, InterpretedOrdering}
+    import org.apache.spark.sql.catalyst.plans.logical.Sort
+    org.apache.spark.sql.graft.Bridge.ofRows(spark, rel).orderBy(by: _*)
+        .queryExecution.analyzed match {
+      case Sort(order, _, child, _) if child.output == rel.output =>
+        val rows = rel.data.toArray
+        java.util.Arrays.sort(rows,
+          new InterpretedOrdering(order.map(BindReferences.bindReference(_, rel.output))))
+        rows.toSeq
+      case other => throw new IllegalStateException(s"unexpected local sort plan: $other")
     }
   }
 
@@ -708,7 +748,7 @@ object SearchApi {
     // column (the id-hash layout, `_bucket = pmod(hash(_id), nb)`) keeps
     // it INTERNAL — dropped before any serving logic sees the frame —
     // but the bucketed original stays available so the payload fetch in
-    // [[joinBack]] can PARTITION-PRUNE to the hit ids' buckets, the
+    // [[fetchPayload]] can PARTITION-PRUNE to the hit ids' buckets, the
     // Spark shape of the reference's O(k) docid point reads
     // (engine.cc:902-911). `_graft_buckets` (the layout's bucket count)
     // rides the space dir; without it the id-IN pushdown still prunes
@@ -784,17 +824,15 @@ object SearchApi {
     // [[legFor]]; is_brute_search=1 forces the exact FLAT scan
     // (engine.cc:280-308).
     val pred = filterOf(space, req)
-    // one finisher for every routed shape: the hits' payload rows (see
-    // [[joinBack]]) ordered by score then `_id`; `offset` slices WITHIN
-    // each query's block and the blocks come in REQUEST order. `cols` is
-    // the response projection (it always carries `_id` and `_score`); a
-    // single-query request drops its `_qid` (qid 0). Every sort is
-    // BOUNDED by the fetched row count n, known on the driver: the
-    // routing-id join yields at most one row per hit, so `limit(n)` drops
-    // nothing, and Spark plans the sort as one TakeOrderedAndProject - no
-    // range-partitioning sample job, map stage or result stage to order
-    // <= req_num*(k+offset) rows. The keys (_qid, _score, _id) are a
-    // total order, so the rows and their order are the unbounded sort's.
+    // one finisher for every routed shape: the hits' payload rows
+    // ordered by score then `_id`; `offset` slices WITHIN each query's
+    // block and the blocks come in REQUEST order. `cols` is the response
+    // projection (it always carries `_id` and `_score`); a single-query
+    // request drops its `_qid` (qid 0). ONE bounded action collects the
+    // <= req_num*(k+offset) hits (free for the gate loops - their hits
+    // are already local rows); the payload then comes from the
+    // snapshot's resident projection ([[residentPayload]]) when it
+    // applies, else from the pruned fetch ([[fetchPayload]]).
     def finish(hits: DataFrame, metric: String, nq: Int,
         cols: Seq[String]): DataFrame = {
       val qid = if (nq > 1) Some(col("_qid")) else None
@@ -802,7 +840,7 @@ object SearchApi {
         if (Knn.ascending(metric)) col("_score").asc else col("_score").desc,
         col("_id").asc)
       val order = qid.map(_.asc).toSeq ++ rank
-      val out = cols.filter(c => c != "_qid" || qid.isDefined).map(col)
+      val out = cols.filter(c => c != "_qid" || qid.isDefined)
       // a response of `_id` and `_score` alone on a space routed by its
       // integral `_id` needs no payload, so there are no hit ids to
       // prune a fetch with: the response is the hits plan itself, put in
@@ -812,35 +850,119 @@ object SearchApi {
           req.offset == 0 && req.sort.isEmpty)
         return hits.select(col("vec_id").cast(corpus.schema("_id").dataType).as("_id"),
             col("_score").cast("double").as("_score"), col("_qid"))
-          .coalesce(1).sortWithinPartitions(order: _*).select(out: _*)
-      val (fetched, n) = joinBack(hits)
-      val projected = fetched.select(out: _*)
-      // the offset slice ranks by score, whatever a sort spec orders by;
-      // a batch slices per qid with row_number over its tiny hit rows
-      val sliced = (qid, req.offset) match {
-        case (_, 0) => projected
-        case (None, off) => projected.orderBy(order: _*).limit(n).offset(off)
-        case (Some(q), off) =>
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(q).orderBy(rank: _*)
-          projected.withColumn("_rn", row_number().over(w))
-            .filter(col("_rn") > off).drop("_rn")
+          .coalesce(1).sortWithinPartitions(order: _*).select(out.map(col): _*)
+      // hits carry the routing id as `vec_id`: a LONG for every routed
+      // family, the PK itself (native type) on the rid-free scan serve —
+      // casting to the routing column's type at collect time keeps the
+      // local rows, the id-IN filter and the bucket hash all in the
+      // column's own domain (long→int narrows, string stays string)
+      val sel = hits.select(col("vec_id").cast(corpus.schema(ridName).dataType).as("vec_id"),
+        col("_score").cast("double").as("_score"), col("_qid"))
+      val rows = sel.collect()
+      residentPayload(rows, sel.schema, out, order, specOrder(req.sort, qid)).getOrElse {
+        val projected = fetchPayload(rows, sel.schema).select(out.map(col): _*)
+        // Every sort is BOUNDED by the hit count n, known on the driver:
+        // the routing-id join yields at most one row per hit, so
+        // `limit(n)` drops nothing, and Spark plans the sort as one
+        // TakeOrderedAndProject - no range-partitioning sample job, map
+        // stage or result stage to order <= req_num*(k+offset) rows. The
+        // keys (_qid, _score, _id) are a total order, so the rows and
+        // their order are the unbounded sort's. The offset slice ranks by
+        // score, whatever a sort spec orders by; a batch slices per qid
+        // with row_number over its tiny hit rows.
+        val n = rows.length
+        val sliced = (qid, req.offset) match {
+          case (_, 0) => projected
+          case (None, off) => projected.orderBy(order: _*).limit(n).offset(off)
+          case (Some(q), off) =>
+            val w = org.apache.spark.sql.expressions.Window
+              .partitionBy(q).orderBy(rank: _*)
+            projected.withColumn("_rn", row_number().over(w))
+              .filter(col("_rn") > off).drop("_rn")
+        }
+        if (req.sort.nonEmpty) applySort(sliced, req.sort, qid, Some(n))
+        else if (qid.isEmpty && req.offset > 0) sliced // already in score order
+        else sliced.orderBy(order: _*).limit(n)
       }
-      if (req.sort.nonEmpty) applySort(sliced, req.sort, qid, Some(n))
-      else if (qid.isEmpty && req.offset > 0) sliced // already in score order
-      else sliced.orderBy(order: _*).limit(n)
     }
     // score-gated GRAPH serving: see [[gateLoop]] on the object — the
     // walks thread the band into their RESULT heaps, so the loop's first
     // probe already returns the gated ranking's prefix and convergence is
     // immediate; the loop stays as the exactness backstop for any hitsAt
     // that does NOT gate in-walk.
-    // the legs return (_qid, id, score); scalar payloads come from ONE
-    // broadcast join of the <= req_num*(k+offset) hits back onto a
-    // PRUNED slice of the LIVE view (a tail hit's payload lives in the
-    // buffer, not the base table). The hits are bounded, so ONE tiny
-    // action materializes them (free for the gate loops - their hits are
-    // already local rows) and their ids push INTO the payload scan:
+    // The resident payload - vearch reads a hit's fields by docid from
+    // the partition's own storage (engine.cc:869-911). Without a tail
+    // `live` IS the opened snapshot, and its resident projection
+    // ([[residentCols]]) holds every row of the files the frame reads, so
+    // the inner join of the collected hits to it on the driver (a lookup
+    // of the unique routing id; a hit with no row drops out) returns the
+    // fetch's join rows, and [[sortedLocally]] orders them with the
+    // ordering the fetch's TakeOrderedAndProject uses. The response is a
+    // local relation with the fetch's schema: collecting it runs no Spark
+    // job. None = the fetch serves: a realtime tail, no integral routing
+    // id, a routing id that repeats in the snapshot, a snapshot over
+    // [[maxFilterAllowIds]] rows or no open-cache snapshot, or a response
+    // column or sort key outside the projection. The request-only checks
+    // come first, so a response the projection cannot serve reads no
+    // footer and collects no projection.
+    def residentPayload(hits: Array[Row], hitSchema: StructType, out: Seq[String],
+        order: Seq[Column], sortOrder: Seq[Column]): Option[DataFrame] = {
+      import org.apache.spark.sql.catalyst.InternalRow
+      import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+      val fromHits = Set("_score", "_qid")
+      val cols = residentCols(corpus0, space, ridName)
+      if (tailOn || rid.isEmpty || !out.forall(c => fromHits(c) || cols.contains(c)) ||
+          !req.sort.forall(s => out.contains(s._1))) None
+      else graft.sources.IndexStore.projection(corpus0, cols, maxFilterAllowIds)
+        .flatMap(p => p.rowOf.map(p -> _))
+        .map { case (proj, rowOf) =>
+          val spark = corpus.sparkSession
+          val schema = StructType(out.map(c =>
+            if (fromHits(c)) hitSchema(c) else proj.rel.schema(c)))
+          val value: Seq[(Row, InternalRow) => Any] = out.map { c =>
+            if (fromHits(c)) {
+              val at = hitSchema.fieldIndex(c)
+              (h: Row, _: InternalRow) => h.get(at)
+            } else {
+              val (at, dt) = (proj.cols.indexOf(c), schema(c).dataType)
+              (_: Row, r: InternalRow) => r.get(at, dt)
+            }
+          }
+          val joined = hits.toSeq.flatMap { h =>
+            val at = rowOf(h.get(0).asInstanceOf[Number].longValue)
+            if (at < 0) None
+            else {
+              val r = proj.rel.data(at)
+              Some(InternalRow.fromSeq(value.map(_(h, r))))
+            }
+          }
+          val rel = LocalRelation(
+            org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema), joined)
+          // the offset slice ranks by score, whatever a sort spec orders by.
+          // In rank order each query's block is contiguous, so a row is past
+          // its block's first `offset` rows iff the row `offset` places
+          // before it has the same `_qid`: one linear pass
+          val sliced =
+            if (req.offset == 0) joined
+            else {
+              val ranked = sortedLocally(spark, rel, order)
+              val (qAt, qT) = (out.indexOf("_qid"), hitSchema("_qid").dataType)
+              def qidOf(i: Int): Any = if (qAt < 0) null else ranked(i).get(qAt, qT)
+              ranked.indices.collect {
+                case i if i >= req.offset && qidOf(i - req.offset) == qidOf(i) => ranked(i)
+              }
+            }
+          val ordered =
+            if (req.sort.nonEmpty) sortedLocally(spark, rel.copy(data = sliced), sortOrder)
+            else if (req.offset > 0) sliced // already in rank order
+            else sortedLocally(spark, rel, order)
+          org.apache.spark.sql.graft.Bridge.ofRows(spark, rel.copy(data = ordered))
+        }
+    }
+    // the pruned fetch: scalar payloads come from ONE broadcast join of
+    // the collected hits back onto a PRUNED slice of the LIVE view (a
+    // tail hit's payload lives in the buffer, not the base table). The
+    // hit ids push INTO the payload scan:
     // `rid IN (ids)` always (parquet row-group skipping), plus
     // `_bucket IN (pmod(hash(id), nb))` partition pruning on a
     // catalog-bucketed space - the reference's O(k) docid point reads
@@ -849,20 +971,11 @@ object SearchApi {
     // `_docid` sidecar (bucket derivation needs the PK hash, so those
     // spaces prune by id-IN only), and the joined row carries the string
     // `_id` the projection serves (the reference's docid->PK bridge).
-    def joinBack(hits: DataFrame): (DataFrame, Int) = {
-      val idT = corpus.schema(ridName).dataType
-      // hits carry the routing id as `vec_id`: a LONG for every routed
-      // family, the PK itself (native type) on the rid-free scan serve —
-      // casting to the routing column's type at collect time keeps the
-      // local frame, the id-IN filter and the bucket hash all in the
-      // column's own domain (long→int narrows, string stays string)
-      val sel = hits.select(col("vec_id").cast(idT).as("vec_id"),
-        col("_score").cast("double").as("_score"), col("_qid"))
-      val rows = sel.collect()
-      val spark = corpus.sparkSession
-      val local = spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*), sel.schema)
-      val idVals: Seq[Any] = rows.map(_.get(0)).distinct.toSeq
+    def fetchPayload(hits: Array[Row], hitSchema: StructType): DataFrame = {
+      val idT = hitSchema("vec_id").dataType
+      val local = corpus.sparkSession.createDataFrame(
+        java.util.Arrays.asList(hits: _*), hitSchema)
+      val idVals: Seq[Any] = hits.map(_.get(0)).distinct.toSeq
       val idFilter =
         if (idVals.isEmpty) lit(false) else col(ridName).isin(idVals: _*)
       // exactness of pruning BEFORE the tail upsert: it only applies
@@ -879,9 +992,8 @@ object SearchApi {
           else baseP
         case _ => live.filter(idFilter)
       }
-      (pruned.join(broadcast(local.select(
-        col("vec_id").as(ridName), col("_score"), col("_qid"))), ridName),
-        rows.length)
+      pruned.join(broadcast(local.select(
+        col("vec_id").as(ridName), col("_score"), col("_qid"))), ridName)
     }
     // shared scalar-filter functor for the GRAPH families: ONE bounded
     // take() both probes the selectivity and collects the allow-set (the
@@ -963,7 +1075,7 @@ object SearchApi {
         // `vec_id`; a rid-FREE space (hand-rolled string PK, no `_docid`
         // sidecar) has no long id space, so the SCAN families — whose
         // layouts store full corpus rows, PK included — report the PK
-        // itself and [[joinBack]] bridges in the native type. Graph
+        // itself and [[fetchPayload]] bridges in the native type. Graph
         // layouts store long vec_ids structurally, so a rid-free space
         // CANNOT serve them — and silently degrading to the exact FLAT
         // scan would hide an O(corpus)-per-query cliff behind a declared

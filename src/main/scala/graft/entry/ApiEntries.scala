@@ -439,7 +439,7 @@ private[graft] object ApiEntries {
     //    client.go:1197-1221 — always served brute FLAT). The `_docid`
     //    sidecar (Ingest.assignDocids; the reference maps every string
     //    _id to an int docid at ingest, engine.cc:730-745) routes the
-    //    walk and bridges hits back to the string _id in joinBack.
+    //    walk and bridges hits back to the string _id in the finisher.
     //    HNSW route WITH a scalar filter (allow-set collected in docid
     //    space); efSearch ≥ corpus + full probe ⇒ exact, oracled ──
     "q_api_search_hnsw_string" -> ((s, dir) => {
@@ -901,7 +901,7 @@ private[graft] object ApiEntries {
     "q_api_search_diskann_routed_batch" -> apiBatchExactSql,
     "q_api_search_hnsw_routed_batch" -> apiBatchExactSql,
     // string-PK routed serving (r12 gap closed): the _docid sidecar
-    // routes, joinBack bridges to the string _id the oracle re-derives
+    // routes, the finisher bridges to the string _id the oracle re-derives
     "q_api_search_hnsw_string" ->
       """WITH q AS (SELECT embedding::DOUBLE[] AS v FROM embeddings WHERE vec_id = 0)
          SELECT 'doc-' || CAST(e.vec_id AS VARCHAR) AS _id, e.label,

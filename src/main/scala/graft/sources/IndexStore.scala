@@ -85,25 +85,71 @@ object IndexStore {
     .empty[(SparkSession, String), Opened]
 
   /** One opened snapshot: its leaf signature, the data files it lists,
-    * the frame, and the snapshot's resident column copy
-    * ([[residentColumns]]).
+    * the frame, and the snapshot's resident projection ([[projection]]).
     */
   private final class Opened(val sig: String,
       leaves: Seq[org.apache.hadoop.fs.FileStatus], val df: DataFrame) {
     /** The snapshot's row count, summed from its parquet footers: driver
-      * file reads, no Spark job. None when a footer cannot be read.
+      * file reads, no Spark job, run in parallel on a pool of at most one
+      * thread per file and never more than the session's cores. None
+      * when a footer cannot be read.
       */
-    lazy val rows: Option[Long] =
-      try {
-        val conf = df.sparkSession.sparkContext.hadoopConfiguration
-        Some(leaves.map { st =>
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
-          try r.getRecordCount finally r.close()
-        }.sum)
-      } catch { case NonFatal(_) => None }
-    /** (columns, their resident copy); guarded by `this`. */
-    var resident: Option[(Seq[String], DataFrame)] = None
+    lazy val rows: Option[Long] = {
+      val sc = df.sparkSession.sparkContext
+      def count(st: org.apache.hadoop.fs.FileStatus): Long = {
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
+            st, sc.hadoopConfiguration))
+        try r.getRecordCount finally r.close()
+      }
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.max(1, math.min(leaves.size, sc.defaultParallelism)))
+      try Some(leaves.map(st => pool.submit(
+          new java.util.concurrent.Callable[Long] { def call(): Long = count(st) }))
+        .map(_.get).sum)
+      catch { case NonFatal(_) => None }
+      finally pool.shutdown()
+    }
+    /** Guarded by `this`. */
+    var projection: Option[Projection] = None
+  }
+
+  /** A snapshot's resident projection: the rows of columns `cols` as a
+    * local relation `rel` (the collected UnsafeRows), the routing id
+    * first, and a lookup from routing id to row position.
+    */
+  final class Projection private[sources] (val cols: Seq[String],
+      val rel: org.apache.spark.sql.catalyst.plans.logical.LocalRelation,
+      spark: SparkSession) {
+    /** The projection as a frame, for the analyzer to resolve over. */
+    val frame: DataFrame = org.apache.spark.sql.graft.Bridge.ofRows(spark, rel)
+
+    /** Row position of a routing id, -1 when no row holds it: a binary
+      * search over the ids sorted once, with the row position of each
+      * beside it (primitive arrays, no boxed map). None when the first
+      * column is not integral, or holds a null or a repeated id.
+      */
+    lazy val rowOf: Option[Long => Int] = {
+      import org.apache.spark.sql.types.{IntegerType, LongType}
+      val dt = rel.output.head.dataType
+      val data = rel.data
+      if ((dt != IntegerType && dt != LongType) || data.exists(_.isNullAt(0))) None
+      else {
+        val ids = data.iterator.map(r =>
+          if (dt == IntegerType) r.getInt(0).toLong else r.getLong(0)).toArray
+        val sorted = ids.clone()
+        java.util.Arrays.sort(sorted)
+        if ((1 until sorted.length).exists(i => sorted(i) == sorted(i - 1))) None
+        else {
+          val pos = new Array[Int](ids.length)
+          ids.indices.foreach(i => pos(java.util.Arrays.binarySearch(sorted, ids(i))) = i)
+          Some { (id: Long) =>
+            val at = java.util.Arrays.binarySearch(sorted, id)
+            if (at < 0) -1 else pos(at)
+          }
+        }
+      }
+    }
   }
 
   private def leafFiles(spark: SparkSession, path: String)
@@ -140,30 +186,30 @@ object IndexStore {
     }
   }
 
-  /** A driver-resident copy of columns `cols` of the snapshot that
-    * [[openTable]] returned as `df` (found by identity among the open
-    * entries), as a local relation. One collect builds it on the first
-    * call; it lives on the open-cache entry, so a rewrite that reopens
-    * the path drops it with the old frame and it never outlives the
-    * files it was read from. Residency is decided BEFORE anything is
+  /** The resident projection of the snapshot that [[openTable]]
+    * returned as `df` (found by identity among the open entries): its
+    * columns `cols`, the routing id first. One collect builds it on the
+    * first call; it lives on the open-cache entry, so a rewrite that
+    * reopens the path drops it with the old frame and it never outlives
+    * the files it was read from. Residency is decided BEFORE anything is
     * collected: the snapshot's parquet footers must count at most
     * `maxRows` rows. None when no current entry holds `df` (a raw
     * `spark.read`, a transformed frame, a superseded snapshot), a footer
     * is unreadable, or the snapshot has more than `maxRows` rows.
     */
-  def residentColumns(df: DataFrame, cols: Seq[String],
-      maxRows: Long): Option[DataFrame] =
+  def projection(df: DataFrame, cols: Seq[String],
+      maxRows: Long): Option[Projection] =
     openCache.valuesIterator.find(_.df eq df)
       .filter(_.rows.exists(_ <= maxRows))
       .map { e =>
         e.synchronized {
-          e.resident match {
-            case Some((c, copy)) if c == cols => copy
+          e.projection match {
+            case Some(p) if p.cols == cols => p
             case _ =>
-              val copy = org.apache.spark.sql.graft.Bridge
-                .localCopy(df.select(cols.map(col): _*))
-              e.resident = Some((cols, copy))
-              copy
+              val p = new Projection(cols, org.apache.spark.sql.graft.Bridge
+                .localCopy(df.select(cols.map(col): _*)), df.sparkSession)
+              e.projection = Some(p)
+              p
           }
         }
       }

@@ -4,7 +4,7 @@ import scala.collection.immutable.ArraySeq
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.classic.{Dataset, ExpressionUtils, SparkSession}
 import org.apache.spark.sql.execution.SQLExecution
 
@@ -28,13 +28,16 @@ object Bridge {
     * collected UnsafeRows are kept as they arrive, with no round trip
     * through external `Row`s.
     */
-  def localCopy(df: DataFrame): DataFrame = {
+  def localCopy(df: DataFrame): LocalRelation = {
     val qe = df.queryExecution
     val rows = SQLExecution.withNewExecutionId(qe, Some("collect")) {
       qe.executedPlan.executeCollect()
     }
-    Dataset.ofRows(df.sparkSession.asInstanceOf[SparkSession],
-      LocalRelation(qe.analyzed.output.map(_.newInstance()),
-        ArraySeq.unsafeWrapArray(rows)))
+    LocalRelation(qe.analyzed.output.map(_.newInstance()),
+      ArraySeq.unsafeWrapArray(rows))
   }
+
+  /** The frame of logical plan `plan` in session `spark`. */
+  def ofRows(spark: org.apache.spark.sql.SparkSession, plan: LogicalPlan): DataFrame =
+    Dataset.ofRows(spark.asInstanceOf[SparkSession], plan)
 }

@@ -383,10 +383,14 @@ class PlanEvidenceSpec extends SparkSpec {
   }
 
   test("catalog routed request end to end: warm open, ≤3 jobs, bounded TakeOrderedAndProject fetch") {
-    // SpaceCatalog.search + collect, the whole request: the space open is
-    // a cache hit (no schema-inference job) and the payload fetch orders
-    // its ≤ req_num·k rows with one TakeOrderedAndProject — no
-    // range-partitioned sort (bounds-sampling job + map stage + result)
+    // SpaceCatalog.search + collect, the whole request. The space open is
+    // a cache hit (no schema-inference job). A response whose columns the
+    // snapshot's resident projection holds takes its payload from it: the
+    // request runs only the hits action, scans no payload file, and its
+    // collect runs no job. A response it cannot serve (here a vector
+    // field) fetches, and the fetch orders its ≤ req_num·k rows with one
+    // TakeOrderedAndProject — no range-partitioned sort (bounds-sampling
+    // job + map stage + result) — over an id-IN pruned payload scan.
     import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
     import org.apache.spark.sql.execution.{SparkPlan, TakeOrderedAndProjectExec}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -404,11 +408,31 @@ class PlanEvidenceSpec extends SparkSpec {
     new graft.api.IndexLifecycle(spark, s"$root/d/s")
       .rebuildDeclared(sp, "embedding", idCol = "_docid", numShards = 3)
     val qv = q0
-    def req(qs: Seq[Seq[Float]]) =
-      s"""{"vectors":[{"field":"embedding","feature":${qs.flatten.mkString("[", ",", "]")}}],"limit":9}"""
+    def req(qs: Seq[Seq[Float]], extra: String = "") =
+      s"""{"vectors":[{"field":"embedding","feature":${qs.flatten.mkString("[", ",", "]")}}],"limit":9$extra}"""
     object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    def scans(plan: SparkPlan) = Aqe.collect(plan) { case f: FileSourceScanExec => f }
+
+    // resident: warm (the first request opens the space and builds the
+    // projection), then one request is the hits action alone
+    for (qs <- Seq(Seq(qv), Seq(qv, qv.reverse))) {
+      assert(cat.search("d", "s", sp, req(qs)).collect().length == 9 * qs.size)
+      var df: org.apache.spark.sql.DataFrame = null
+      val n = jobsDuring { df = cat.search("d", "s", sp, req(qs)) }
+      assert(n >= 1 && n <= 2,
+        s"warm resident catalog request (req_num=${qs.size}) ran $n jobs (hits action ≤2)")
+      assert(jobsDuring(assert(df.collect().length == 9 * qs.size)) == 0,
+        "a resident response's collect ran a job")
+      assert(scans(df.queryExecution.executedPlan).isEmpty,
+        s"resident response scans a payload file:\n${df.queryExecution.executedPlan}")
+    }
+    val n = jobsDuring { cat.search("d", "s", sp, req(Seq(qv))).collect() }
+
+    // fallback: the fetch is one bounded TakeOrderedAndProject over an
+    // id-IN pruned payload scan
+    val vectors = ""","fields":["label","embedding"],"vector_value":true"""
     def fetchPlan(qs: Seq[Seq[Float]]): SparkPlan = {
-      val df = cat.search("d", "s", sp, req(qs))
+      val df = cat.search("d", "s", sp, req(qs, vectors))
       assert(df.collect().length == 9 * qs.size)
       df.queryExecution.executedPlan
     }
@@ -418,29 +442,29 @@ class PlanEvidenceSpec extends SparkSpec {
       assert(Aqe.collect(plan) {
         case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
       }.isEmpty, s"$ctx fetch must not range-partition its hits:\n$plan")
+      assert(scans(plan).exists(_.metadata("PushedFilters").contains("In(_docid")),
+        s"$ctx fetch must push the hit ids into its payload scan:\n$plan")
     }
-    // warm: the first request opens the space and lists its layouts
     fetchPlan(Seq(qv))
-    val n = jobsDuring { cat.search("d", "s", sp, req(Seq(qv))).collect() }
-    assert(n >= 1 && n <= 3,
-      s"warm unfiltered catalog request ran $n jobs (hits action ≤2 + fetch 1)")
+    val nv = jobsDuring { cat.search("d", "s", sp, req(Seq(qv), vectors)).collect() }
+    assert(nv >= 1 && nv <= 3,
+      s"warm fetching catalog request ran $nv jobs (hits action ≤2 + fetch 1)")
     assertBounded(fetchPlan(Seq(qv)), "single-query")
     assertBounded(fetchPlan(Seq(qv, qv.reverse)), "req_num=2")
 
-    // a filtered request takes its allow-set from the snapshot's resident
-    // SCALAR projection (built by the first filtered request): warm, the
-    // scalar filter runs no job, so the request runs no more than the
-    // unfiltered one
+    // a filtered request takes its allow-set from the same resident
+    // projection: warm, the scalar filter runs no job, so the request
+    // runs no more than the unfiltered one
     def filtered(cond: String) =
       s"""{"vectors":[{"field":"embedding","feature":${qv.mkString("[", ",", "]")}}],
         "filters":{"operator":"AND","conditions":[$cond]},"limit":9}"""
     val some = filtered("""{"operator":"IN","field":"label","value":[1,3]}""")
     assert(cat.search("d", "s", sp, some).collect().length == 9)
     val nf = jobsDuring { cat.search("d", "s", sp, some).collect() }
-    assert(nf <= n && nf <= 3,
+    assert(nf <= n && nf <= 2,
       s"warm filtered catalog request ran $nf jobs, unfiltered $n")
     // a filter that matches nothing: an empty allow-set short-circuits
-    // the walk and the payload fetch, and the response keeps its schema
+    // the walk and the payload, and the response keeps its schema
     val nothing = filtered("""{"operator":">","field":"label","value":1000}""")
     val n0 = jobsDuring {
       assert(cat.search("d", "s", sp, nothing).collect().isEmpty)

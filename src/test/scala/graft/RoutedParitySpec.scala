@@ -75,6 +75,10 @@ class RoutedParitySpec extends SparkSpec {
       val lc = new IndexLifecycle(spark, spacePath)
       lc.rebuildDeclared(sp, "embedding", numShards = 4)
       val corpus = spark.read.parquet(spacePath)
+      // the same files opened through the open cache: every draw's
+      // response (label, a SCALAR field, and `_id`) comes from the
+      // snapshot's resident projection there
+      val opened = graft.sources.IndexStore.openTable(spark, spacePath)
 
       // fixed draws after the random ones, on their own seeded stream so
       // the random draws stay as they were: a single query with offset > 0
@@ -113,10 +117,17 @@ class RoutedParitySpec extends SparkSpec {
           df.collect().map(_.toString).toSeq
         val routed = rows(SearchApi.searchAuto(corpus, sp, req, lc))
         val brute = rows(SearchApi.search(corpus, sp, req))
+        val residentDf = SearchApi.searchAuto(opened, sp, req, lc)
+        val resident = rows(residentDf)
+        val ctx = s"family=$family draw=$draw k=$k offset=$offset batched=$batched " +
+          s"filter=${filter.nonEmpty} gate=${gate.nonEmpty} sort=${sort.nonEmpty}"
         assert(routed == brute,
-          s"family=$family draw=$draw k=$k offset=$offset batched=$batched " +
-            s"filter=${filter.nonEmpty} gate=${gate.nonEmpty} sort=${sort.nonEmpty}: " +
-            s"routed ${routed.take(3)} vs brute ${brute.take(3)}")
+          s"$ctx: routed ${routed.take(3)} vs brute ${brute.take(3)}")
+        assert(residentDf.queryExecution.analyzed
+          .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+          s"$ctx: the opened snapshot's response did not take the resident payload")
+        assert(resident == brute,
+          s"$ctx: resident ${resident.take(3)} vs brute ${brute.take(3)}")
         if (batched)
           assertBlocksAreSingles(SearchApi.searchAuto(corpus, sp, req, lc),
             qs.map(v => SearchApi.searchAuto(corpus, sp, reqOf(Seq(v)), lc)),
