@@ -53,7 +53,8 @@ final class IndexLifecycle(spark: SparkSession, spacePath: String,
   private[graft] def path: String = spacePath
 
   private def statePath(kind: Kind) = s"$spacePath$sfx.${kind.infix}_state.json"
-  private def layoutPath(kind: Kind, gen: Long) = s"$spacePath$sfx.${kind.infix}.g$gen"
+  private def layoutPrefix(kind: Kind) = s"$spacePath$sfx.${kind.infix}.g"
+  private def layoutPath(kind: Kind, gen: Long) = s"${layoutPrefix(kind)}$gen"
 
   sealed trait State
   case object Missing extends State
@@ -148,7 +149,9 @@ final class IndexLifecycle(spark: SparkSession, spacePath: String,
     * returns the layout parameter and trained-doc count), flip READY
     * last, prune the ledgers. Any failure flips FAILED and rethrows; the
     * previous READY generation is served until the flip either way
-    * (POST /index/rebuild, engine.cc:1013-1083).
+    * (POST /index/rebuild, engine.cc:1013-1083). After the flip the
+    * older generations' open-cache entries are dropped, and with them any
+    * rows they kept resident.
     */
   private def withGeneration(kind: Kind)(build: String => (Int, Long)): Ready = {
     val gen = System.currentTimeMillis()
@@ -157,6 +160,8 @@ final class IndexLifecycle(spark: SparkSession, spacePath: String,
     try {
       val (param, trainedDocs) = build(layoutPath(kind, gen))
       SidecarIO.writeString(sp, s"READY:$gen:$param:$trainedDocs")
+      IndexStore.invalidateOpenWhere(p =>
+        p.startsWith(layoutPrefix(kind)) && p != layoutPath(kind, gen))
       pruneLedgers()
       Ready(gen, param, trainedDocs)
     } catch {

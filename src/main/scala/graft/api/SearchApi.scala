@@ -555,7 +555,7 @@ object SearchApi {
   private[graft] def residentAllow(frame: DataFrame, space: Space,
       rid: String, p: Column): Option[Array[Long]] = {
     import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.{BindReferences, Predicate}
+    import org.apache.spark.sql.catalyst.expressions.BindReferences
     import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
     import org.apache.spark.sql.types.{IntegerType, LongType}
     val refs = org.apache.spark.sql.graft.Bridge.columnNames(p)
@@ -575,9 +575,11 @@ object SearchApi {
             case _           => None
           }
           id.map { id =>
-            val keep = Predicate.createInterpreted(
-              BindReferences.bindReference(cond, rel.output))
-            rel.data.iterator.filter(keep.eval).map(id).toArray
+            // evaluated as InterpretedPredicate does (a null reads false),
+            // without its subexpression cache: that cache is a locked map
+            // cleared and refilled for every row
+            val keep = BindReferences.bindReference(cond, rel.output)
+            rel.data.iterator.filter(keep.eval(_).asInstanceOf[Boolean]).map(id).toArray
           }
         case _ => None
       }
@@ -829,10 +831,11 @@ object SearchApi {
     // block and the blocks come in REQUEST order. `cols` is the response
     // projection (it always carries `_id` and `_score`); a single-query
     // request drops its `_qid` (qid 0). ONE bounded action collects the
-    // <= req_num*(k+offset) hits (free for the gate loops - their hits
-    // are already local rows); the payload then comes from the
-    // snapshot's resident projection ([[residentPayload]]) when it
-    // applies, else from the pruned fetch ([[fetchPayload]]).
+    // <= req_num*(k+offset) hits; hits that are already local rows (the
+    // resident walk, the gate loops) are read with no action at all
+    // ([[org.apache.spark.sql.graft.Bridge.localRows]]). The payload then
+    // comes from the snapshot's resident projection ([[residentPayload]])
+    // when it applies, else from the pruned fetch ([[fetchPayload]]).
     def finish(hits: DataFrame, metric: String, nq: Int,
         cols: Seq[String]): DataFrame = {
       val qid = if (nq > 1) Some(col("_qid")) else None
@@ -858,7 +861,7 @@ object SearchApi {
       // column's own domain (long→int narrows, string stays string)
       val sel = hits.select(col("vec_id").cast(corpus.schema(ridName).dataType).as("vec_id"),
         col("_score").cast("double").as("_score"), col("_qid"))
-      val rows = sel.collect()
+      val rows = org.apache.spark.sql.graft.Bridge.localRows(sel).getOrElse(sel.collect())
       residentPayload(rows, sel.schema, out, order, specOrder(req.sort, qid)).getOrElse {
         val projected = fetchPayload(rows, sel.schema).select(out.map(col): _*)
         // Every sort is BOUNDED by the hit count n, known on the driver:
@@ -1050,8 +1053,9 @@ object SearchApi {
     //    kernels; binary -> sign codes, Hamming ascending.
     //  - scalar filters: scan families evaluate the predicate IN-SCAN
     //    inside their probed lists; graph families take the shared
-    //    [[allowProbe]] allow-set functor, broadcast ONCE per leg -
-    //    never re-shipped across gate-loop retries.
+    //    [[allowProbe]] allow-set functor, broadcast at most ONCE per
+    //    leg and only when the walk runs as a Spark job - never
+    //    re-shipped across gate-loop retries.
     //  - score gates (doc_query.go:67-78): scan families gate IN-SCAN at
     //    heap admission; the beam-limited graph families over-fetch
     //    through the driver-bounded gate loop above.
@@ -1148,51 +1152,64 @@ object SearchApi {
           if (!tailOn) base(d)
           else tail.get.mergeTail(corpus.schema, d, metric, nq, deny)(
             tailScan(d))(base)
-        // graph-family core (HNSW and Vamana differ only in their walk
-        // operators): allow-functor filtering with the broad-filter FLAT
-        // switch, the admission (allow-set minus deny, or deny alone)
-        // broadcast ONCE per leg outside the gate loop's retried closure,
+        // graph-family core (HNSW and Vamana differ only in their segment
+        // encoder and walk): allow-functor filtering with the broad-filter
+        // FLAT switch, the admission (allow-set minus deny, or deny alone)
+        // built ONCE per leg outside the gate loop's retried closure,
         // value-typed tail merge. Score gates ride INTO the walk's result
         // heap (the `band` threaded at the case sites below), so a gated
         // leg's first gate-loop probe already returns the gated ranking's
-        // prefix and the walk runs ONCE — no depth-doubling segment-IO
-        // re-pay.
+        // prefix and the walk runs ONCE — no depth-doubling re-pay.
+        // The walks run over the layout's decoded segments on the driver
+        // when the open-cache entry of `table` keeps them resident (at
+        // most [[maxFilterAllowIds]] nodes and within the driver's byte
+        // budget, both read from its footers before anything is decoded;
+        // [[graft.sources.IndexStore.decoded]]), else as a Spark job over
+        // the segment table; both walk the same routed shard set with the same
+        // admission and merge in the same order ([[HnswIndex.fanOut]]).
         // Zero-result short-circuit (engine.cc:365-372): an empty
-        // allow-set admits no row, base or tail, so the leg is its own plan
-        // under `limit(0)`, which the optimizer folds to an empty local
-        // relation: the leg's schema, no walk, and no payload fetch scan
-        // downstream.
-        def graphLeg(deny: Set[Long])(
-            walk: (Int, Option[org.apache.spark.broadcast.Broadcast[
-              graft.operators.HnswIndex.Admission]]) => DataFrame)
+        // allow-set admits no row, base or tail, so the leg walks no
+        // segment and is its own plan under `limit(0)`, which the optimizer
+        // folds to an empty local relation: the leg's schema, no walk,
+        // and no payload fetch scan downstream.
+        def graphLeg[S <: graft.operators.HnswIndex.Sharded](table: DataFrame,
+            model: Option[IvfIndex.Model], enc: org.apache.spark.sql.Encoder[S],
+            deny: Set[Long])(
+            walk: (S, Array[Float], Int, Long => Boolean) => Array[(Long, Double)])
             : Option[DataFrame] =
           allowProbe.map { allow =>
             val none = allow.exists(_.isEmpty)
             val admit = graft.operators.HnswIndex.admission(
               corpus.sparkSession, allow, deny)
-            gateLoop(corpus.sparkSession, k, metric, vc.minScore,
-              vc.maxScore) { d =>
-              val hits = withTail(deny, d)(kb => walk(kb, admit))
-              if (none) hits.limit(0) else hits
-            }
-          }
-        // clustered generations (SPANN layout): prune to the union of
-        // every query's nprobe route - the shard_id filter is parquet
-        // PARTITION PRUNING over the partitionBy(shard_id) layout, so
-        // the pruned segments' IO never happens. Default nprobe =
-        // ncentroids (exact serving); requests/spaces narrow it via
-        // index_params. Extra shards in a batch's union only add
-        // candidates to the per-qid merge - correctness unchanged.
-        def pruneShards[S](segments0: org.apache.spark.sql.Dataset[S],
-            model: Option[IvfIndex.Model]): org.apache.spark.sql.Dataset[S] =
-          model match {
-            case Some(m) =>
+            // clustered generations (SPANN layout): the union of every
+            // query's nprobe route. On the Spark arm the shard_id filter is
+            // parquet PARTITION PRUNING over the partitionBy(shard_id)
+            // layout, so the pruned segments' IO never happens. Default
+            // nprobe = ncentroids (exact serving); requests/spaces narrow
+            // it via index_params. Extra shards in a batch's union only add
+            // candidates to the per-qid merge - correctness unchanged.
+            val shards = model.map { m =>
               val nprobe = math.min(
                 param("nprobe", fOpts).getOrElse(m.ncentroids), m.ncentroids)
-              val lists = walkQs
-                .flatMap(q => m.nearestCentroids(q._2, nprobe)).distinct
-              segments0.filter(col("shard_id").isin(lists: _*))
-            case None => segments0
+              walkQs.flatMap(q => m.nearestCentroids(q._2, nprobe)).distinct
+            }
+            val resident =
+              if (none) Some(Nil)
+              else graft.sources.IndexStore.decoded(table, enc,
+                  graft.operators.HnswIndex.NodeIds, maxFilterAllowIds)
+                .map(segs => shards.fold(segs) { s =>
+                  val routed = s.toSet; segs.filter(seg => routed(seg.shard_id)) })
+            lazy val segments = {
+              val t = table.as(enc)
+              shards.fold(t)(s => t.filter(col("shard_id").isin(s: _*)))
+            }
+            gateLoop(corpus.sparkSession, k, metric, vc.minScore,
+              vc.maxScore) { d =>
+              val hits = withTail(deny, d)(kb =>
+                graft.operators.HnswIndex.fanOut(corpus.sparkSession, resident,
+                  segments, walkQs, kb, metric, admit)(walk(_, _, kb, _)))
+              if (none) hits.limit(0) else hits
+            }
           }
         // the request's per-condition index_type wins over the declared
         // one (doc_query.go:277-283); parseSearch validated it, so the
@@ -1220,15 +1237,11 @@ object SearchApi {
             }
             kind match {
               case Kind.Hnsw =>
-                val segments = pruneShards(
-                  g.table.as(Encoders.product[graft.operators.HnswIndex.Segment]),
-                  g.routedModel(metric))
                 val ef = math.max(param("efSearch", fOpts).getOrElse(64), k)
-                graphLeg(deny)((kb, admit) =>
-                  graft.operators.HnswIndex.fanOut(segments, walkQs, kb,
-                    metric, admit)((seg, q, a) =>
-                    graft.operators.HnswIndex.searchSegment(seg, q, kb,
-                      math.max(ef, kb), metric, a, band)))
+                graphLeg(g.table, g.routedModel(metric),
+                  graft.operators.HnswIndex.segmentEncoder, deny)(
+                  (seg, q, kb, a) => graft.operators.HnswIndex.searchSegment(
+                    seg, q, kb, math.max(ef, kb), metric, a, band))
               // the reference's DiskANN-static class
               // (gamma_index_diskann_static.cc): `l_search`/`beam_width`
               // resolve over the space's `L`/`beam_width`
@@ -1237,19 +1250,15 @@ object SearchApi {
               // impl/ssg/) - aliases to the Vamana generation the way
               // GPU_* alias to CPU layouts.
               case Kind.Vamana =>
-                val segments = pruneShards(
-                  g.table.as(Encoders.product[graft.operators.VamanaIndex.Segment]),
-                  g.routedModel(metric))
                 val l = math.max(
                   req.indexParams.get("l_search").filter(_ > 0)
                     .orElse(fOpts.indexParams.get("L").filter(_ > 0))
                     .getOrElse(100), k)
                 val bw = param("beam_width", fOpts).getOrElse(4)
-                graphLeg(deny)((kb, admit) =>
-                  graft.operators.HnswIndex.fanOut(segments, walkQs, kb,
-                    metric, admit)((seg, q, a) =>
-                    graft.operators.VamanaIndex.searchSegment(seg, q, kb,
-                      math.max(l, kb), bw, metric, a, band)))
+                graphLeg(g.table, g.routedModel(metric),
+                  graft.operators.VamanaIndex.segmentEncoder, deny)(
+                  (seg, q, kb, a) => graft.operators.VamanaIndex.searchSegment(
+                    seg, q, kb, math.max(l, kb), bw, metric, a, band))
               // GPU_* spaces execute on CUDA in the reference; here they
               // serve from the equivalent CPU layout - same semantics.
               // `nprobe` resolves request index_params -> space params ->

@@ -78,7 +78,22 @@ object HnswIndex {
     * bit-identical to a full rebuild.
     */
   final case class Segment(shard_id: Int, entry: Int, nodes: Array[Node],
-      chain: Array[Int] = Array.empty)
+      chain: Array[Int] = Array.empty) extends Sharded
+
+  /** The segment row encoder, derived once: serving reads every
+    * generation through it, and deriving it reflects over the row classes.
+    */
+  private[graft] lazy val segmentEncoder: org.apache.spark.sql.Encoder[Segment] =
+    org.apache.spark.sql.Encoders.product[Segment]
+
+  /** A graph family's segment row: one whole shard, routed by `shard_id`. */
+  trait Sharded { def shard_id: Int }
+
+  /** The parquet leaf column holding a graph layout's node ids, one value
+    * per node (an empty segment counts one): its footer value count is
+    * the layout's node count, read before anything is decoded.
+    */
+  private[graft] val NodeIds = "nodes.list.element.id"
 
   // ── scalar kernels ─────────────────────────────────────────────────────
   // Same accumulation order as graft.functions.VecKernels (Double
@@ -112,15 +127,76 @@ object HnswIndex {
 
   /** Internal ranking distance: lower = closer, for every metric (ip and
     * cosine negate their similarity). L2 ranks on the SQUARED distance —
-    * order-equivalent to sqrt and cheaper in the inner loop.
+    * order-equivalent to sqrt and cheaper in the inner loop. The metric
+    * is resolved once ([[rankKernel]]): walks and builds call the kernel
+    * per visited pair, and a `(Array[Float], Array[Float]) => Double`
+    * function value would box every distance it returns.
     */
-  private[operators] def rankDist(metric: String)(a: Array[Float], b: Array[Float]): Double =
-    metric match {
-      case "l2" | "l2sq" => l2sq(a, b)
-      case "ip"          => -dot(a, b)
-      case "cosine"      => -cosine(a, b)
-      case other => throw new IllegalArgumentException(s"unknown metric: $other")
+  private[graft] abstract class RankKernel {
+    def apply(a: Array[Float], b: Array[Float]): Double
+  }
+
+  private[graft] def rankKernel(metric: String): RankKernel = metric match {
+    case "l2" | "l2sq" => (a, b) => l2sq(a, b)
+    case "ip"          => (a, b) => -dot(a, b)
+    case "cosine"      => (a, b) => -cosine(a, b)
+    case other => throw new IllegalArgumentException(s"unknown metric: $other")
+  }
+
+  /** A binary heap of (rank distance, node index) pairs held in two
+    * primitive arrays, ordered as `Ordering.Tuple2(Ordering.Double.
+    * TotalOrdering, Ordering.Int)` orders the tuples (`Double.compare`,
+    * then the index), with the greatest pair on top when `max` and the
+    * least otherwise. The serving walk's candidate and result heaps: a
+    * `PriorityQueue[(Double, Int)]` boxes a tuple per entry and a Double
+    * per comparison. Pairs in one heap have distinct indexes, so the
+    * order is total and the walk visits and returns what the tuple heaps
+    * gave.
+    */
+  private final class PairHeap(max: Boolean) {
+    private var ds = new Array[Double](16)
+    private var is = new Array[Int](16)
+    private var n = 0
+    def size: Int = n
+    def nonEmpty: Boolean = n > 0
+    def clear(): Unit = n = 0
+    def topD: Double = { if (n == 0) throw new NoSuchElementException("empty heap"); ds(0) }
+    def topI: Int = { if (n == 0) throw new NoSuchElementException("empty heap"); is(0) }
+    // whether slot a belongs above slot b
+    private def above(a: Int, b: Int): Boolean = {
+      val c = java.lang.Double.compare(ds(a), ds(b))
+      val o = if (c != 0) c else Integer.compare(is(a), is(b))
+      if (max) o > 0 else o < 0
     }
+    private def swap(a: Int, b: Int): Unit = {
+      val d = ds(a); ds(a) = ds(b); ds(b) = d
+      val i = is(a); is(a) = is(b); is(b) = i
+    }
+    def push(d: Double, i: Int): Unit = {
+      if (n == ds.length) {
+        ds = java.util.Arrays.copyOf(ds, 2 * n); is = java.util.Arrays.copyOf(is, 2 * n)
+      }
+      ds(n) = d; is(n) = i
+      var c = n
+      n += 1
+      while (c > 0 && above(c, (c - 1) >>> 1)) { swap(c, (c - 1) >>> 1); c = (c - 1) >>> 1 }
+    }
+    def pop(): Unit = {
+      topD // throws on an empty heap, as PriorityQueue.dequeue does
+      n -= 1
+      ds(0) = ds(n); is(0) = is(n)
+      var c = 0
+      var done = false
+      while (!done) {
+        val l = 2 * c + 1
+        val r = l + 1
+        var m = c
+        if (l < n && above(l, m)) m = l
+        if (r < n && above(r, m)) m = r
+        if (m == c) done = true else { swap(c, m); c = m }
+      }
+    }
+  }
 
   /** Reported score for a rank distance, matching [[Knn.score]]'s
     * conventions (l2 is sqrt'd; ip/cosine are the raw similarity).
@@ -193,7 +269,7 @@ object HnswIndex {
     val base = init.map(_.nodes).getOrElse(Array.empty[Node])
     val n = base.length + adds.length
     val mL = 1.0 / math.log(p.m.toDouble)
-    val dist = rankDist(p.metric) _
+    val dist = rankKernel(p.metric)
     val ids = Array.tabulate(n)(i =>
       if (i < base.length) base(i).id else adds(i - base.length)._1)
     val vecs = Array.tabulate(n)(i =>
@@ -423,7 +499,7 @@ object HnswIndex {
       band: Option[(Double, Double)] = None): Array[(Long, Double)] = {
     val n = seg.nodes.length
     if (n == 0) return Array.empty
-    val dist = rankDist(metric) _
+    val dist = rankKernel(metric)
     // admission gate in the rank-distance domain via the reported score
     // (monotone per metric), evaluated only when a band is set
     val admit: (Long, Double) => Boolean = band match {
@@ -432,12 +508,9 @@ object HnswIndex {
       }
       case None => (id, _) => allow(id)
     }
-    val vecs = seg.nodes.map(_.vec)
-    implicit val ord: Ordering[(Double, Int)] = Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Int)
-
     var ep = seg.entry
     var lc = seg.nodes(seg.entry).level
-    var dEp = dist(q, vecs(ep))
+    var dEp = dist(q, seg.nodes(ep).vec)
     while (lc > 0) {
       // greedy descent: move to the closest neighbor until a local minimum
       var moved = true
@@ -446,7 +519,7 @@ object HnswIndex {
         val nb = seg.nodes(ep).nbrs(lc)
         var i = 0
         while (i < nb.length) {
-          val d = dist(q, vecs(nb(i)))
+          val d = dist(q, seg.nodes(nb(i)).vec)
           if (d < dEp) { dEp = d; ep = nb(i); moved = true }
           i += 1
         }
@@ -469,16 +542,18 @@ object HnswIndex {
     var nVisited = 1
     var capped = false
     val visited = new java.util.BitSet(n)
-    val cand = mutable.PriorityQueue.empty[(Double, Int)](ord.reverse)
-    val res = mutable.PriorityQueue.empty[(Double, Int)](ord)
+    val cand = new PairHeap(max = false)
+    val res = new PairHeap(max = true)
     visited.set(ep)
-    cand.enqueue((dEp, ep))
-    if (admit(seg.nodes(ep).id, dEp)) res.enqueue((dEp, ep))
+    cand.push(dEp, ep)
+    if (admit(seg.nodes(ep).id, dEp)) res.push(dEp, ep)
     while (cand.nonEmpty && !capped) {
       if (nVisited > visitCap) capped = true
       else {
-        val (dc, c) = cand.dequeue()
-        if (res.size >= effEf && dc > res.head._1) cand.clear()
+        val dc = cand.topD
+        val c = cand.topI
+        cand.pop()
+        if (res.size >= effEf && dc > res.topD) cand.clear()
         else {
           val nb = seg.nodes(c).nbrs(0)
           var i = 0
@@ -487,17 +562,17 @@ object HnswIndex {
             if (!visited.get(e)) {
               visited.set(e)
               nVisited += 1
-              val d = dist(q, vecs(e))
+              val d = dist(q, seg.nodes(e).vec)
               // traversal admission: until the ADMITTED result set fills,
               // every unvisited node stays explorable (disallowed and
               // out-of-band nodes carry connectivity); once full, only
               // improving nodes do
-              if (res.size < effEf || d < res.head._1 ||
-                  (d == res.head._1 && e < res.head._2)) {
-                cand.enqueue((d, e))
+              if (res.size < effEf || d < res.topD ||
+                  (d == res.topD && e < res.topI)) {
+                cand.push(d, e)
                 if (admit(seg.nodes(e).id, d)) {
-                  res.enqueue((d, e))
-                  if (res.size > effEf) res.dequeue()
+                  res.push(d, e)
+                  if (res.size > effEf) res.pop()
                 }
               }
             }
@@ -507,8 +582,18 @@ object HnswIndex {
       }
     }
     val top =
-      if (capped) bruteGated(q, vecs, k, dist, i => admit(seg.nodes(i).id, _))
-      else res.toArray.sorted.take(k)
+      if (capped) {
+        implicit val ord: Ordering[(Double, Int)] =
+          Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Int)
+        bruteGated(q, n, seg.nodes(_).vec, k, dist, i => admit(seg.nodes(i).id, _))
+      } else {
+        // popping the max-heap yields the pairs greatest first
+        val m = res.size
+        val sorted = new Array[(Double, Int)](m)
+        var j = m - 1
+        while (j >= 0) { sorted(j) = (res.topD, res.topI); res.pop(); j -= 1 }
+        sorted.take(k)
+      }
     top.map { case (d, idx) => (seg.nodes(idx).id, reportScore(metric, d)) }
   }
 
@@ -516,14 +601,14 @@ object HnswIndex {
     * fallback a cap-fired banded walk switches to. One linear distance
     * pass + a k-bounded heap — the segment's true gated top-k.
     */
-  private[graft] def bruteGated(q: Array[Float], vecs: Array[Array[Float]],
-      k: Int, dist: (Array[Float], Array[Float]) => Double,
+  private[graft] def bruteGated(q: Array[Float], n: Int, vecAt: Int => Array[Float],
+      k: Int, dist: RankKernel,
       admitAt: Int => Double => Boolean)(
       implicit ord: Ordering[(Double, Int)]): Array[(Double, Int)] = {
     val res = mutable.PriorityQueue.empty[(Double, Int)](ord)
     var i = 0
-    while (i < vecs.length) {
-      val d = dist(q, vecs(i))
+    while (i < n) {
+      val d = dist(q, vecAt(i))
       if (admitAt(i)(d)) {
         res.enqueue((d, i))
         if (res.size > k) res.dequeue()
@@ -674,54 +759,92 @@ object HnswIndex {
       k: Int, ef: Int, metric: String, deny: Set[Long] = Set.empty,
       allowIds: Option[Set[Long]] = None,
       band: Option[(Double, Double)] = None): DataFrame =
-    fanOut(segments, queries, k, metric,
+    fanOut(segments.sparkSession, None, segments, queries, k, metric,
       admission(segments.sparkSession, allowIds, deny)) { (seg, q, admit) =>
       searchSegment(seg, q, k, ef, metric, admit, band)
     }
 
-  /** A graph walk's admission gate, shipped to the executors as ONE
-    * broadcast: the allow-set minus the deny set (members admitted), or
-    * the deny set alone (members refused).
+  /** A graph walk's admission gate: the allow-set minus the deny set
+    * (members admitted), or the deny set alone (members refused).
     */
   private[graft] final case class Admission(ids: Set[Long], allowList: Boolean) {
     def admits(id: Long): Boolean = ids.contains(id) == allowList
   }
 
-  /** Broadcast a walk's [[Admission]] — None, and nothing broadcast, when
-    * there is neither an allow-set nor a deny set. Callers that retry a
-    * walk at growing depths build it once, outside the retried closure.
+  /** A walk's [[Admission]] (None when there is neither an allow-set nor
+    * a deny set) and its broadcast, made on first use: only a Spark
+    * fan-out ships the gate to the executors, and callers that retry a
+    * walk at growing depths build this once, outside the retried closure,
+    * so it is broadcast at most once.
     */
-  private[graft] def admission(spark: org.apache.spark.sql.SparkSession,
-      allow: Option[Set[Long]], deny: Set[Long])
-      : Option[org.apache.spark.broadcast.Broadcast[Admission]] =
-    allow.map(a => Admission(a -- deny, allowList = true))
-      .orElse(if (deny.isEmpty) None else Some(Admission(deny, allowList = false)))
-      .map(spark.sparkContext.broadcast(_))
+  private[graft] final class Admit(spark: org.apache.spark.sql.SparkSession,
+      val gate: Option[Admission]) {
+    lazy val broadcast: Option[org.apache.spark.broadcast.Broadcast[Admission]] =
+      gate.map(spark.sparkContext.broadcast(_))
+  }
 
-  /** The fan-out every graph family searches through: each segment row's
-    * task walks every query with the family's `walk(segment, query,
-    * admit)`, emitting per-segment top lists (no shuffle of the corpus),
-    * and [[Knn.topKPerQuery]] merges them per query — the distributed
-    * analog of the reference's router k-way merge over partitions
-    * (client.go:1497-1576). Output: (_qid, vec_id, _score).
+  private[graft] def admission(spark: org.apache.spark.sql.SparkSession,
+      allow: Option[Set[Long]], deny: Set[Long]): Admit =
+    new Admit(spark, allow.map(a => Admission(a -- deny, allowList = true))
+      .orElse(if (deny.isEmpty) None else Some(Admission(deny, allowList = false))))
+
+  /** The fan-out every graph family searches through: every query walks
+    * every segment with the family's `walk(segment, query, admit)`, and
+    * each query keeps its top `k` — the analog of the reference's router
+    * k-way merge over partitions (client.go:1497-1576). Output: (_qid,
+    * vec_id, _score).
+    *
+    * Two arms, one result. With the layout's decoded segments `resident`
+    * on the driver, the walks run on the calling thread and each query's
+    * hits are ranked in [[Knn.topKPerQuery]]'s order (score, then
+    * `vec_id` ascending; one query compares scores as Spark's sort does,
+    * a batch as TopKAgg does), returned as a local relation: no Spark
+    * job, no broadcast. Otherwise each `segments` row's task walks every
+    * query (no shuffle of the corpus) and [[Knn.topKPerQuery]] merges the
+    * per-segment lists; only this arm broadcasts the admission.
     */
-  private[graft] def fanOut[S](segments: Dataset[S],
-      queries: Seq[(Long, Seq[Float])], k: Int, metric: String,
-      admit: Option[org.apache.spark.broadcast.Broadcast[Admission]])(
+  private[graft] def fanOut[S](spark: org.apache.spark.sql.SparkSession,
+      resident: Option[Seq[S]], segments: => Dataset[S],
+      queries: Seq[(Long, Seq[Float])], k: Int, metric: String, admit: Admit)(
       walk: (S, Array[Float], Long => Boolean) => Array[(Long, Double)])
       : DataFrame = {
-    val spark = segments.sparkSession
-    import spark.implicits._
     val qs = queries.map { case (qid, v) => (qid, v.toArray) }.toArray
-    val hits = segments.flatMap { seg =>
-      val allow: Long => Boolean = admit match {
-        case Some(bc) => val a = bc.value; a.admits
-        case None => _ => true
-      }
-      qs.iterator.flatMap { case (qid, qa) =>
-        walk(seg, qa, allow).iterator.map { case (id, s) => (qid, id, s) }
-      }
-    }.toDF("_qid", "vec_id", "_score")
-    Knn.topKPerQuery(hits, qs.length, k, ascending(metric))
+    resident match {
+      case Some(segs) =>
+        import org.apache.spark.sql.catalyst.InternalRow
+        import org.apache.spark.sql.types._
+        val allow: Long => Boolean = admit.gate.fold((_: Long) => true)(_.admits)
+        val score: (Double, Double) => Int =
+          if (qs.length <= 1) org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
+          else java.lang.Double.compare
+        val sign = if (ascending(metric)) 1 else -1
+        val rank: Ordering[(Long, Double)] = (a, b) => {
+          val c = sign * score(a._2, b._2)
+          if (c != 0) c else java.lang.Long.compare(a._1, b._1)
+        }
+        val rows = qs.toSeq.flatMap { case (qid, qa) =>
+          segs.flatMap(walk(_, qa, allow)).sorted(rank).take(k)
+            .map { case (id, s) => InternalRow(qid, id, s) }
+        }
+        val schema = StructType(Seq(StructField("_qid", LongType, nullable = false),
+          StructField("vec_id", LongType, nullable = false),
+          StructField("_score", DoubleType, nullable = false)))
+        org.apache.spark.sql.graft.Bridge.ofRows(spark,
+          org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+            org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema), rows))
+      case None =>
+        import spark.implicits._
+        val bc = admit.broadcast
+        val hits = segments.flatMap { seg =>
+          val allow: Long => Boolean = bc match {
+            case Some(b) => val a = b.value; a.admits
+            case None => _ => true
+          }
+          qs.iterator.flatMap { case (qid, qa) =>
+            walk(seg, qa, allow).iterator.map { case (id, s) => (qid, id, s) }
+          }
+        }.toDF("_qid", "vec_id", "_score")
+        Knn.topKPerQuery(hits, qs.length, k, ascending(metric))
+    }
   }
 }

@@ -63,6 +63,11 @@ object VamanaIndex {
     * local index of the entry node.
     */
   final case class Segment(shard_id: Int, medoid: Int, nodes: Array[VNode])
+      extends HnswIndex.Sharded
+
+  /** The segment row encoder, derived once (see [[HnswIndex.segmentEncoder]]). */
+  private[graft] lazy val segmentEncoder: org.apache.spark.sql.Encoder[Segment] =
+    org.apache.spark.sql.Encoders.product[Segment]
 
   def ascending(metric: String): Boolean = HnswIndex.ascending(metric)
 
@@ -72,10 +77,10 @@ object VamanaIndex {
   private[graft] def buildSegment(
       shardId: Int, sorted: Array[(Long, Array[Float])], p: Params): Segment = {
     val n = sorted.length
-    val dist = HnswIndex.rankDist(p.metric) _
     val vecs = Array.tabulate(n)(i => sorted(i)._2)
     val adj = Array.fill(n)(mutable.ArrayBuffer.empty[Int])
     if (n == 0) return Segment(shardId, 0, Array.empty)
+    val dist = HnswIndex.rankKernel(p.metric)
 
     // initial graph: the consecutive-id chain — connected from the first
     // moment, so pass-1 greedy searches can reach every node
@@ -290,7 +295,7 @@ object VamanaIndex {
       band: Option[(Double, Double)] = None): Array[(Long, Double)] = {
     val n = seg.nodes.length
     if (n == 0) return Array.empty
-    val dist = HnswIndex.rankDist(metric) _
+    val dist = HnswIndex.rankKernel(metric)
     // score-gate admission into the RESULT list only (see
     // [[HnswIndex.searchSegment]]'s band contract): out-of-band nodes
     // keep carrying connectivity, the beam extends past the gate
@@ -300,7 +305,6 @@ object VamanaIndex {
       }
       case None => (id, _) => allow(id)
     }
-    val vecs = seg.nodes.map(_.vec)
     implicit val ord: Ordering[(Double, Int)] =
       Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Int)
     val effL = math.max(l, k)
@@ -315,7 +319,7 @@ object VamanaIndex {
     val visited = new java.util.BitSet(n)
     val cand = mutable.PriorityQueue.empty[(Double, Int)](ord.reverse)
     val res = mutable.PriorityQueue.empty[(Double, Int)](ord)
-    val d0 = dist(q, vecs(seg.medoid))
+    val d0 = dist(q, seg.nodes(seg.medoid).vec)
     visited.set(seg.medoid)
     cand.enqueue((d0, seg.medoid))
     if (admit(seg.nodes(seg.medoid).id, d0)) res.enqueue((d0, seg.medoid))
@@ -343,7 +347,7 @@ object VamanaIndex {
           if (!visited.get(e)) {
             visited.set(e)
             nVisited += 1
-            val d = dist(q, vecs(e))
+            val d = dist(q, seg.nodes(e).vec)
             if (res.size < effL || d < res.head._1 ||
                 (d == res.head._1 && e < res.head._2)) {
               cand.enqueue((d, e))
@@ -361,7 +365,7 @@ object VamanaIndex {
     }
     val top =
       if (capped)
-        HnswIndex.bruteGated(q, vecs, k, dist, i => admit(seg.nodes(i).id, _))
+        HnswIndex.bruteGated(q, n, seg.nodes(_).vec, k, dist, i => admit(seg.nodes(i).id, _))
       else res.toArray.sorted.take(k)
     top.map { case (d, idx) => (seg.nodes(idx).id, HnswIndex.reportScore(metric, d)) }
   }
@@ -394,7 +398,7 @@ object VamanaIndex {
       deny: Set[Long] = Set.empty,
       allowIds: Option[Set[Long]] = None,
       band: Option[(Double, Double)] = None): DataFrame =
-    HnswIndex.fanOut(segments, queries, k, metric,
+    HnswIndex.fanOut(segments.sparkSession, None, segments, queries, k, metric,
       HnswIndex.admission(segments.sparkSession, allowIds, deny)) {
       (seg, q, admit) => searchSegment(seg, q, k, l, beamWidth, metric, admit, band)
     }

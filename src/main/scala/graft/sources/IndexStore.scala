@@ -2,6 +2,7 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
@@ -85,34 +86,50 @@ object IndexStore {
     .empty[(SparkSession, String), Opened]
 
   /** One opened snapshot: its leaf signature, the data files it lists,
-    * the frame, and the snapshot's resident projection ([[projection]]).
+    * the frame, and what it keeps resident: the snapshot's projection
+    * ([[projection]]) or a layout's decoded rows ([[decoded]]).
     */
   private final class Opened(val sig: String,
       leaves: Seq[org.apache.hadoop.fs.FileStatus], val df: DataFrame) {
-    /** The snapshot's row count, summed from its parquet footers: driver
-      * file reads, no Spark job, run in parallel on a pool of at most one
-      * thread per file and never more than the session's cores. None
-      * when a footer cannot be read.
+    /** What the snapshot's parquet footers count, read once: driver file
+      * reads, no Spark job, run in parallel on a pool of at most one
+      * thread per file and never more than the session's cores; the
+      * footers themselves are not kept. None when a footer cannot be read.
       */
-    lazy val rows: Option[Long] = {
+    lazy val footprint: Option[Footprint] = {
       val sc = df.sparkSession.sparkContext
-      def count(st: org.apache.hadoop.fs.FileStatus): Long = {
+      def footer(st: org.apache.hadoop.fs.FileStatus) = {
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(
           org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
             st, sc.hadoopConfiguration))
-        try r.getRecordCount finally r.close()
+        try r.getFooter finally r.close()
       }
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         math.max(1, math.min(leaves.size, sc.defaultParallelism)))
-      try Some(leaves.map(st => pool.submit(
-          new java.util.concurrent.Callable[Long] { def call(): Long = count(st) }))
-        .map(_.get).sum)
-      catch { case NonFatal(_) => None }
+      try {
+        val blocks = leaves.map(st => pool.submit(new java.util.concurrent.Callable[
+            org.apache.parquet.hadoop.metadata.ParquetMetadata] { def call() = footer(st) }))
+          .flatMap(_.get.getBlocks.asScala)
+        val counts = blocks.map(_.getColumns.asScala
+          .map(c => c.getPath.toDotString -> c.getValueCount).toMap)
+        val everywhere = counts.map(_.keySet).reduceOption(_ intersect _).getOrElse(Set.empty)
+        Some(Footprint(blocks.map(_.getRowCount).sum, blocks.map(_.getTotalByteSize).sum,
+          everywhere.map(leaf => leaf -> counts.map(_(leaf)).sum).toMap))
+      } catch { case NonFatal(_) => None }
       finally pool.shutdown()
     }
     /** Guarded by `this`. */
     var projection: Option[Projection] = None
+    /** Guarded by `this`: the decoded rows, and whether decoding them failed. */
+    var decoded: Option[Seq[Any]] = None
+    var undecodable = false
   }
+
+  /** A snapshot's footer counts: its rows, its uncompressed bytes (every
+    * column chunk of every row group), and the values of each parquet
+    * leaf column (a dotted path) that every row group holds.
+    */
+  private final case class Footprint(rows: Long, bytes: Long, values: Map[String, Long])
 
   /** A snapshot's resident projection: the rows of columns `cols` as a
     * local relation `rel` (the collected UnsafeRows), the routing id
@@ -200,7 +217,7 @@ object IndexStore {
   def projection(df: DataFrame, cols: Seq[String],
       maxRows: Long): Option[Projection] =
     openCache.valuesIterator.find(_.df eq df)
-      .filter(_.rows.exists(_ <= maxRows))
+      .filter(_.footprint.exists(_.rows <= maxRows))
       .map { e =>
         e.synchronized {
           e.projection match {
@@ -214,11 +231,65 @@ object IndexStore {
         }
       }
 
+  /** The rows of the layout that [[openTable]] returned as `df` (found
+    * by identity among the open entries), decoded with `enc`. One
+    * collect decodes them on the first call; they live on the open-cache
+    * entry, so a rewrite that reopens the path (a new or appended
+    * generation) drops them with the old frame. Residency is decided
+    * BEFORE anything is collected, from the layout's parquet footers:
+    * they must count at most `maxValues` values of leaf column `leaf`,
+    * and the layout's uncompressed bytes must fit [[residentBudget]].
+    * A decode that fails (an over-size result, a vanished file) is
+    * remembered on the entry and never retried. None when no current
+    * entry holds `df`, a footer is unreadable or lacks the column, the
+    * layout is over either bound, or its decode failed.
+    */
+  def decoded[T](df: DataFrame, enc: org.apache.spark.sql.Encoder[T], leaf: String,
+      maxValues: Long): Option[Seq[T]] =
+    openCache.valuesIterator.find(_.df eq df)
+      .filter(_.footprint.exists(_.values.get(leaf).exists(_ <= maxValues)))
+      .flatMap { e =>
+        e.synchronized(e.decoded).orElse(decodeLock.synchronized(e.synchronized {
+          if (e.decoded.isEmpty && !e.undecodable &&
+              e.footprint.exists(fp => residentBudget(df.sparkSession, e, fp.bytes)))
+            try e.decoded = Some(scala.collection.immutable.ArraySeq.unsafeWrapArray(
+              df.as(enc).collect()))
+            catch { case NonFatal(_) => e.undecodable = true }
+          e.decoded
+        }))
+      }.map(_.asInstanceOf[Seq[T]])
+
+  /** Held, in this order before an entry's own lock, by every decode:
+    * one collect at a time, so [[residentBudget]] sees what every other
+    * entry holds and the driver carries one layout's collect at once.
+    */
+  private val decodeLock = new Object
+
+  /** Whether a layout of `bytes` uncompressed parquet bytes may be
+    * decoded beside the layouts the other open entries keep. One collect
+    * brings it in, so it must be at most half of
+    * `spark.driver.maxResultSize` (0 = unlimited); and every decoded
+    * layout together must stay within an eighth of the driver heap
+    * (decoded rows take about 1.6× their uncompressed bytes at d=32).
+    */
+  private def residentBudget(spark: SparkSession, e: Opened, bytes: Long): Boolean = {
+    val maxResult = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      spark.conf.get("spark.driver.maxResultSize", "1g"))
+    val held = openCache.valuesIterator.filter(_ ne e)
+      .filter(o => o.synchronized(o.decoded.isDefined))
+      .flatMap(_.footprint).map(_.bytes).sum
+    (maxResult == 0 || bytes <= maxResult / 2) &&
+      held + bytes <= Runtime.getRuntime.maxMemory / 8
+  }
+
   /** Drop a path's cached open plan (belt-and-braces for in-place
     * appends — the signature check alone already invalidates them).
     */
-  def invalidateOpen(path: String): Unit =
-    openCache.keys.filter(_._2 == path).foreach(openCache.remove)
+  def invalidateOpen(path: String): Unit = invalidateOpenWhere(_ == path)
+
+  /** Drop the cached open plans of every path `drop` selects. */
+  def invalidateOpenWhere(drop: String => Boolean): Unit =
+    openCache.keys.filter(k => drop(k._2)).foreach(openCache.remove)
 
   /** Content fingerprint of the fixture's embeddings table: canonical
     * path + total byte size + newest mtime. Two fixtures sharing a

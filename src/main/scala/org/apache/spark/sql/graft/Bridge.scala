@@ -37,6 +37,34 @@ object Bridge {
       ArraySeq.unsafeWrapArray(rows))
   }
 
+  /** `df`'s rows, read on the calling thread with no Spark action, when
+    * its analyzed plan is a chain of deterministic projections over a
+    * local relation: each projection's analyzed expressions are
+    * evaluated interpreted over the rows below it, and the result is
+    * converted to external rows as `collect` converts them. None for any
+    * other plan (the caller collects).
+    */
+  def localRows(df: DataFrame): Option[Array[org.apache.spark.sql.Row]] = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.InterpretedProjection
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    def rows(plan: LogicalPlan): Option[Seq[InternalRow]] = plan match {
+      case r: LocalRelation => Some(r.data)
+      case Project(list, child) if list.forall(_.deterministic) =>
+        rows(child).map { in =>
+          val p = new InterpretedProjection(list, child.output)
+          p.initialize(0)
+          in.map(p)
+        }
+      case _ => None
+    }
+    rows(df.queryExecution.analyzed).map { in =>
+      val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+        .createToScalaConverter(df.schema)
+      in.iterator.map(r => toRow(r).asInstanceOf[org.apache.spark.sql.Row]).toArray
+    }
+  }
+
   /** The frame of logical plan `plan` in session `spark`. */
   def ofRows(spark: org.apache.spark.sql.SparkSession, plan: LogicalPlan): DataFrame =
     Dataset.ofRows(spark.asInstanceOf[SparkSession], plan)

@@ -73,6 +73,100 @@ class HnswIndexSpec extends SparkSpec {
     }
   }
 
+  test("the serving walk returns what the walk over tuple priority queues returned") {
+    // the walk as it was written before its heaps moved to primitive
+    // arrays: tuple heaps ordered by (Double.compare, node index)
+    import scala.collection.mutable
+    def l2sq(a: Array[Float], b: Array[Float]): Double = {
+      var s = 0.0; var i = 0
+      while (i < math.min(a.length, b.length)) {
+        val d = a(i).toDouble - b(i).toDouble; s += d * d; i += 1
+      }
+      s
+    }
+    def tupleWalk(seg: HnswIndex.Segment, q: Array[Float], k: Int, ef: Int,
+        allow: Long => Boolean, band: Option[(Double, Double)]): Seq[(Long, Double)] = {
+      val n = seg.nodes.length
+      val admit: (Long, Double) => Boolean = band match {
+        case Some((lo, hi)) => (id, d) => { val s = math.sqrt(d); allow(id) && s >= lo && s <= hi }
+        case None => (id, _) => allow(id)
+      }
+      implicit val ord: Ordering[(Double, Int)] =
+        Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Int)
+      var ep = seg.entry
+      var lc = seg.nodes(seg.entry).level
+      var dEp = l2sq(q, seg.nodes(ep).vec)
+      while (lc > 0) {
+        var moved = true
+        while (moved) {
+          moved = false
+          seg.nodes(ep).nbrs(lc).foreach { e =>
+            val d = l2sq(q, seg.nodes(e).vec)
+            if (d < dEp) { dEp = d; ep = e; moved = true }
+          }
+        }
+        lc -= 1
+      }
+      val effEf = math.max(ef, k)
+      val visitCap = if (band.isDefined) math.max(64, 8 * effEf) else Int.MaxValue
+      var nVisited = 1
+      var capped = false
+      val visited = new java.util.BitSet(n)
+      val cand = mutable.PriorityQueue.empty[(Double, Int)](ord.reverse)
+      val res = mutable.PriorityQueue.empty[(Double, Int)](ord)
+      visited.set(ep)
+      cand.enqueue((dEp, ep))
+      if (admit(seg.nodes(ep).id, dEp)) res.enqueue((dEp, ep))
+      while (cand.nonEmpty && !capped) {
+        if (nVisited > visitCap) capped = true
+        else {
+          val (dc, c) = cand.dequeue()
+          if (res.size >= effEf && dc > res.head._1) cand.clear()
+          else seg.nodes(c).nbrs(0).foreach { e =>
+            if (!visited.get(e)) {
+              visited.set(e)
+              nVisited += 1
+              val d = l2sq(q, seg.nodes(e).vec)
+              if (res.size < effEf || d < res.head._1 ||
+                  (d == res.head._1 && e < res.head._2)) {
+                cand.enqueue((d, e))
+                if (admit(seg.nodes(e).id, d)) {
+                  res.enqueue((d, e))
+                  if (res.size > effEf) res.dequeue()
+                }
+              }
+            }
+          }
+        }
+      }
+      val top =
+        if (capped) HnswIndex.bruteGated(q, n, seg.nodes(_).vec, k, (a, b) => l2sq(a, b),
+          i => admit(seg.nodes(i).id, _))
+        else res.toArray.sorted.take(k)
+      top.map { case (d, i) => (seg.nodes(i).id, math.sqrt(d)) }.toSeq
+    }
+    // the fixture's segments, and one whose 90 nodes share 6 vectors, so
+    // equal distances are everywhere and the node index breaks the ties
+    val rnd = new scala.util.Random(7)
+    val points = Array.fill(6)(Array.fill(8)(rnd.nextFloat()))
+    val tiedSeg = HnswIndex.buildSegment(0,
+      Array.tabulate(90)(i => (i.toLong, points(i % 6))), params)
+    val queries = emb.select("embedding").limit(12).collect()
+      .map(_.getSeq[Float](0).toArray)
+    val cases = segs.collect().map(s => (s, queries)) :+
+      ((tiedSeg, points ++ Array.fill(4)(Array.fill(8)(rnd.nextFloat()))))
+    var compared = 0
+    for ((seg, qs) <- cases; q <- qs; k <- Seq(1, 5, 10); ef <- Seq(1, 4, 16);
+         allow <- Seq((_: Long) => true, (id: Long) => id % 3 != 0);
+         band <- Seq(None, Some((0.0, 1e9)), Some((1e9, 2e9)))) {
+      val want = tupleWalk(seg, q, k, ef, allow, band)
+      val got = HnswIndex.searchSegment(seg, q, k, ef, "l2", allow, band).toSeq
+      assert(got == want, s"shard ${seg.shard_id} k=$k ef=$ef band=$band")
+      compared += 1
+    }
+    assert(compared > 1000)
+  }
+
   test("layer 0 of every segment is connected (the exactness-twin guarantee)") {
     segs.collect().foreach { s =>
       val n = s.nodes.length

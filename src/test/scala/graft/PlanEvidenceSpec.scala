@@ -65,6 +65,48 @@ class PlanEvidenceSpec extends SparkSpec {
   private def takeOrdered(plans: Seq[SparkPlan]): Boolean = plans.exists(p =>
     Aqe.collect(p) { case t: TakeOrderedAndProjectExec => t }.nonEmpty)
 
+  /** Broadcasts `body` creates, task binaries included: broadcast ids
+    * are sequential, so two probe broadcasts bracket it.
+    */
+  private def broadcastsDuring(body: => Unit): Long = {
+    val sc = spark.sparkContext
+    val before = sc.broadcast(0)
+    body
+    val after = sc.broadcast(0)
+    before.destroy(); after.destroy()
+    after.id - before.id - 1
+  }
+
+  /** SQL actions (executions) `body` runs, counted by a query execution
+    * listener. The listener bus is async: events already queued drain
+    * before the count starts, and the count waits until it is quiet.
+    */
+  private def actionsDuring(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        n.incrementAndGet()
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        n.incrementAndGet()
+    }
+    def settle(): Unit = {
+      var prev = -1; var tries = 0
+      while (n.get != prev && tries < 50) { prev = n.get; Thread.sleep(200); tries += 1 }
+    }
+    spark.listenerManager.register(l)
+    try { settle(); n.set(0); body; settle(); n.get }
+    finally spark.listenerManager.unregister(l)
+  }
+
+  /** `body` with the resident-graph cap one node under a layout of
+    * `nodes` nodes, so a routed graph request walks as a Spark job.
+    */
+  private def overCap[T](nodes: Long)(body: => T): T = {
+    val saved = graft.api.SearchApi.maxFilterAllowIds
+    graft.api.SearchApi.maxFilterAllowIds = (nodes - 1).toInt
+    try body finally graft.api.SearchApi.maxFilterAllowIds = saved
+  }
+
   /** A search request over `embedding`: req_num = `features.size`. */
   private def request(features: Seq[Seq[Float]], limit: Int): String =
     s"""{"vectors":[{"field":"embedding","feature":${features.flatten.mkString("[", ",", "]")}}],"limit":$limit}"""
@@ -232,63 +274,67 @@ class PlanEvidenceSpec extends SparkSpec {
     val qv = q0 // materialize OUTSIDE the measured blocks (q0 is a def → a head() job)
     def req(extra: String) =
       s"""{"vectors":[{"field":"embedding","feature":${qv.mkString("[", ",", "]")}$extra}],"limit":9}"""
-    // warm the one-time costs (parquet file-index listing, ledger reads)
-    // so the measurements below see steady-state serving, not cold IO
-    graft.api.SearchApi.searchAuto(stored, sp, req(""), lc).collect()
+    // the pins hold for the walk as a Spark job: the layout one node over
+    // the resident-graph cap (ResidentGraphSpec pins the resident walk)
+    overCap(stored.count()) {
+      // warm the one-time costs (parquet file-index listing, ledger reads)
+      // so the measurements below see steady-state serving, not cold IO
+      graft.api.SearchApi.searchAuto(stored, sp, req(""), lc).collect()
 
-    // 1) plain routed single: ONE bounded action — the ≤ k hits
-    // materialization that feeds the O(k) payload prune (id-IN/_bucket-IN
-    // pushed into the payload scan instead of a full corpus join-back).
-    // One collect runs ≤3 scheduler jobs (AQE stage materializations of
-    // the walk's partial/final merge); a second per-request action or a
-    // corpus-sized collect would exceed it.
-    val nb0 = jobsDuring {
-      graft.api.SearchApi.searchAuto(stored, sp, req(""), lc)
+      // 1) plain routed single: ONE bounded action — the ≤ k hits
+      // materialization that feeds the O(k) payload prune (id-IN/_bucket-IN
+      // pushed into the payload scan instead of a full corpus join-back).
+      // One collect runs ≤3 scheduler jobs (AQE stage materializations of
+      // the walk's partial/final merge); a second per-request action or a
+      // corpus-sized collect would exceed it.
+      val nb0 = jobsDuring {
+        graft.api.SearchApi.searchAuto(stored, sp, req(""), lc)
+      }
+      assert(nb0 >= 1 && nb0 <= 3,
+        s"plain routed construction ran $nb0 jobs (one bounded hits action = 1–3)")
+
+      // 2) scalar-filtered: ONE bounded take() — the combined selectivity
+      // probe + allow-set collect (≤2 scheduler jobs: 1-partition probe,
+      // then the scale-up pass) — plus the bounded hits action (≤3); a
+      // count + re-collect or a per-arm second probe would exceed 5.
+      val nf = jobsDuring {
+        graft.api.SearchApi.searchAuto(stored, sp,
+          s"""{"vectors":[{"field":"embedding","feature":${qv.mkString("[", ",", "]")}}],
+            "filters":{"operator":"AND","conditions":[
+              {"operator":"IN","field":"label","value":[1,3]}]},"limit":9}""", lc)
+      }
+      assert(nf <= 5, s"filtered routed plan construction ran $nf jobs (take ≤2 + hits ≤3)")
+
+      // 3) SELECTIVE gate (min_score ≈ median): the walk threads the band
+      // into its result heap, so hitsAt(depth) returns the GATED ranking's
+      // prefix and the loop converges on its FIRST probe — one bounded
+      // aggregate action (≤2 scheduler jobs) + the payload prune's local
+      // hits scan (≤1). The r17 shape re-paid the walk per depth doubling
+      // (4 probes on this fixture); ≥5 jobs would mean the doubling is
+      // back.
+      val ng = jobsDuring {
+        graft.api.SearchApi.searchAuto(stored, sp, req(""","min_score":1.41"""), lc)
+      }
+      assert(ng >= 1, s"gate loop ran $ng jobs — the gated probe must run")
+      assert(ng <= 4, s"gate loop ran $ng jobs — in-walk band admission " +
+        "should converge on the first probe (one bounded aggregate action)")
+
+      // 4) a response of `_id` and `_score` alone has no payload to fetch:
+      // construction runs no job, the plan scans no payload column, and
+      // the rows are the payload request's, in the same order
+      val idOnly = s"""{"vectors":[{"field":"embedding","feature":${qv.mkString("[", ",", "]")}}],
+        "fields":["_id"],"limit":9}"""
+      var lazyDf: org.apache.spark.sql.DataFrame = null
+      val ni = jobsDuring { lazyDf = graft.api.SearchApi.searchAuto(stored, sp, idOnly, lc) }
+      assert(ni == 0, s"id-only routed construction ran $ni jobs")
+      assert(lazyDf.columns.toSeq == Seq("_id", "_score"))
+      assert(scansOf(lazyDf).forall(!_.output.exists(_.name == "label")),
+        "id-only routed plan still scans the payload")
+      def idScores(df: org.apache.spark.sql.DataFrame) =
+        df.select($"_id", $"_score").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      assert(idScores(lazyDf) ==
+        idScores(graft.api.SearchApi.searchAuto(stored, sp, req(""), lc)))
     }
-    assert(nb0 >= 1 && nb0 <= 3,
-      s"plain routed construction ran $nb0 jobs (one bounded hits action = 1–3)")
-
-    // 2) scalar-filtered: ONE bounded take() — the combined selectivity
-    // probe + allow-set collect (≤2 scheduler jobs: 1-partition probe,
-    // then the scale-up pass) — plus the bounded hits action (≤3); a
-    // count + re-collect or a per-arm second probe would exceed 5.
-    val nf = jobsDuring {
-      graft.api.SearchApi.searchAuto(stored, sp,
-        s"""{"vectors":[{"field":"embedding","feature":${qv.mkString("[", ",", "]")}}],
-          "filters":{"operator":"AND","conditions":[
-            {"operator":"IN","field":"label","value":[1,3]}]},"limit":9}""", lc)
-    }
-    assert(nf <= 5, s"filtered routed plan construction ran $nf jobs (take ≤2 + hits ≤3)")
-
-    // 3) SELECTIVE gate (min_score ≈ median): the walk threads the band
-    // into its result heap, so hitsAt(depth) returns the GATED ranking's
-    // prefix and the loop converges on its FIRST probe — one bounded
-    // aggregate action (≤2 scheduler jobs) + the payload prune's local
-    // hits scan (≤1). The r17 shape re-paid the walk per depth doubling
-    // (4 probes on this fixture); ≥5 jobs would mean the doubling is
-    // back.
-    val ng = jobsDuring {
-      graft.api.SearchApi.searchAuto(stored, sp, req(""","min_score":1.41"""), lc)
-    }
-    assert(ng >= 1, s"gate loop ran $ng jobs — the gated probe must run")
-    assert(ng <= 4, s"gate loop ran $ng jobs — in-walk band admission " +
-      "should converge on the first probe (one bounded aggregate action)")
-
-    // 4) a response of `_id` and `_score` alone has no payload to fetch:
-    // construction runs no job, the plan scans no payload column, and
-    // the rows are the payload request's, in the same order
-    val idOnly = s"""{"vectors":[{"field":"embedding","feature":${qv.mkString("[", ",", "]")}}],
-      "fields":["_id"],"limit":9}"""
-    var lazyDf: org.apache.spark.sql.DataFrame = null
-    val ni = jobsDuring { lazyDf = graft.api.SearchApi.searchAuto(stored, sp, idOnly, lc) }
-    assert(ni == 0, s"id-only routed construction ran $ni jobs")
-    assert(lazyDf.columns.toSeq == Seq("_id", "_score"))
-    assert(scansOf(lazyDf).forall(!_.output.exists(_.name == "label")),
-      "id-only routed plan still scans the payload")
-    def idScores(df: org.apache.spark.sql.DataFrame) =
-      df.select($"_id", $"_score").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(idScores(lazyDf) ==
-      idScores(graft.api.SearchApi.searchAuto(stored, sp, req(""), lc)))
   }
 
   test("routed HNSW merge choice: one query merges with TakeOrderedAndProject, req_num=2 with one TopKAgg") {
@@ -309,9 +355,12 @@ class PlanEvidenceSpec extends SparkSpec {
     lc.rebuildHnsw("_id", "embedding",
       graft.operators.HnswIndex.Params(16, 60, "l2", numShards = 3))
     val qv = q0
-    def plansOf(features: Seq[Seq[Float]]): Seq[SparkPlan] = actionPlans {
+    // the merge runs in a Spark plan only when the walk does: the layout
+    // one node over the resident-graph cap
+    val nodes = stored.count()
+    def plansOf(features: Seq[Seq[Float]]): Seq[SparkPlan] = overCap(nodes)(actionPlans {
       graft.api.SearchApi.searchAuto(stored, sp, request(features, 7), lc)
-    }
+    })
     val single = plansOf(Seq(qv))
     assert(takeOrdered(single),
       s"single-query hits must merge with TakeOrderedAndProject:\n${single.mkString("\n")}")
@@ -384,13 +433,16 @@ class PlanEvidenceSpec extends SparkSpec {
 
   test("catalog routed request end to end: warm open, ≤3 jobs, bounded TakeOrderedAndProject fetch") {
     // SpaceCatalog.search + collect, the whole request. The space open is
-    // a cache hit (no schema-inference job). A response whose columns the
-    // snapshot's resident projection holds takes its payload from it: the
-    // request runs only the hits action, scans no payload file, and its
-    // collect runs no job. A response it cannot serve (here a vector
-    // field) fetches, and the fetch orders its ≤ req_num·k rows with one
-    // TakeOrderedAndProject — no range-partitioned sort (bounds-sampling
-    // job + map stage + result) — over an id-IN pruned payload scan.
+    // a cache hit (no schema-inference job). The graph generation's
+    // decoded segments are resident, so the walk runs on the driver; a
+    // response whose columns the snapshot's resident projection holds
+    // takes its payload from it, and a filter its allow-set. Such a
+    // request runs no Spark job from construction through collect,
+    // creates no broadcast and scans no file. A response the projection
+    // cannot serve (here a vector field) fetches, and the fetch orders its
+    // ≤ req_num·k rows with one TakeOrderedAndProject — no
+    // range-partitioned sort (bounds-sampling job + map stage + result) —
+    // over an id-IN pruned payload scan.
     import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
     import org.apache.spark.sql.execution.{SparkPlan, TakeOrderedAndProjectExec}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -413,20 +465,28 @@ class PlanEvidenceSpec extends SparkSpec {
     object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     def scans(plan: SparkPlan) = Aqe.collect(plan) { case f: FileSourceScanExec => f }
 
-    // resident: warm (the first request opens the space and builds the
-    // projection), then one request is the hits action alone
-    for (qs <- Seq(Seq(qv), Seq(qv, qv.reverse))) {
-      assert(cat.search("d", "s", sp, req(qs)).collect().length == 9 * qs.size)
+    // resident: warm (the first request opens the space, builds the
+    // projection and decodes the graph layout), then a request runs no
+    // job, creates no broadcast, and runs no SQL action before the
+    // caller's collect
+    def resident(request: String, rows: Int, ctx: String): Unit = {
+      assert(cat.search("d", "s", sp, request).collect().length == rows)
       var df: org.apache.spark.sql.DataFrame = null
-      val n = jobsDuring { df = cat.search("d", "s", sp, req(qs)) }
-      assert(n >= 1 && n <= 2,
-        s"warm resident catalog request (req_num=${qs.size}) ran $n jobs (hits action ≤2)")
-      assert(jobsDuring(assert(df.collect().length == 9 * qs.size)) == 0,
-        "a resident response's collect ran a job")
+      val b = broadcastsDuring {
+        val n = jobsDuring {
+          // the hits are local rows, read without a collect of their own
+          val a = actionsDuring { df = cat.search("d", "s", sp, request) }
+          assert(a == 0, s"warm resident catalog request ($ctx) ran $a SQL actions before its collect")
+          assert(df.collect().length == rows)
+        }
+        assert(n == 0, s"warm resident catalog request ($ctx) ran $n jobs")
+      }
+      assert(b == 0, s"warm resident catalog request ($ctx) created $b broadcasts")
       assert(scans(df.queryExecution.executedPlan).isEmpty,
-        s"resident response scans a payload file:\n${df.queryExecution.executedPlan}")
+        s"resident response scans a file:\n${df.queryExecution.executedPlan}")
     }
-    val n = jobsDuring { cat.search("d", "s", sp, req(Seq(qv))).collect() }
+    resident(req(Seq(qv)), 9, "one query")
+    resident(req(Seq(qv, qv.reverse)), 18, "req_num=2")
 
     // fallback: the fetch is one bounded TakeOrderedAndProject over an
     // id-IN pruned payload scan
@@ -448,21 +508,17 @@ class PlanEvidenceSpec extends SparkSpec {
     fetchPlan(Seq(qv))
     val nv = jobsDuring { cat.search("d", "s", sp, req(Seq(qv), vectors)).collect() }
     assert(nv >= 1 && nv <= 3,
-      s"warm fetching catalog request ran $nv jobs (hits action ≤2 + fetch 1)")
+      s"warm fetching catalog request ran $nv jobs (the fetch)")
     assertBounded(fetchPlan(Seq(qv)), "single-query")
     assertBounded(fetchPlan(Seq(qv, qv.reverse)), "req_num=2")
 
     // a filtered request takes its allow-set from the same resident
-    // projection: warm, the scalar filter runs no job, so the request
-    // runs no more than the unfiltered one
+    // projection: warm, it runs no job either
     def filtered(cond: String) =
       s"""{"vectors":[{"field":"embedding","feature":${qv.mkString("[", ",", "]")}}],
         "filters":{"operator":"AND","conditions":[$cond]},"limit":9}"""
     val some = filtered("""{"operator":"IN","field":"label","value":[1,3]}""")
-    assert(cat.search("d", "s", sp, some).collect().length == 9)
-    val nf = jobsDuring { cat.search("d", "s", sp, some).collect() }
-    assert(nf <= n && nf <= 2,
-      s"warm filtered catalog request ran $nf jobs, unfiltered $n")
+    resident(some, 9, "filtered")
     // a filter that matches nothing: an empty allow-set short-circuits
     // the walk and the payload, and the response keeps its schema
     val nothing = filtered("""{"operator":">","field":"label","value":1000}""")
@@ -536,36 +592,40 @@ class PlanEvidenceSpec extends SparkSpec {
     lc.rebuildIvfPq("iv", ncentroids = 8, m = 8)
     val qv = q0
     def req = s"""{"vectors":[{"field":"iv","feature":${qv.mkString("[", ",", "]")}}],"limit":9}"""
-    // warm one-time costs (layout open, ledger reads)
-    graft.api.SearchApi.searchAuto(stored, hnswSp, req, lc).collect()
-    graft.api.SearchApi.searchAuto(stored, pqSp, req, lc).collect()
-    // query quantization, LUT building and centroid routing stay
-    // driver-side arithmetic — the only action is the bounded hits
-    // materialization feeding the O(k) payload prune
-    val nH = jobsDuring {
-      graft.api.SearchApi.searchAuto(stored, hnswSp, req, lc)
-    }
-    assert(nH >= 1 && nH <= 3,
-      s"int8 HNSW construction ran $nH jobs (one bounded hits action = 1–3)")
-    val nP = jobsDuring {
-      graft.api.SearchApi.searchAuto(stored, pqSp, req, lc)
-    }
-    assert(nP >= 1 && nP <= 3,
-      s"int8 IVFPQ construction ran $nP jobs (one bounded hits action = 1–3)")
+    // the HNSW walk runs as a Spark job (and shows its layout scan) with
+    // the layout one node over the resident-graph cap
+    overCap(stored.count()) {
+      // warm one-time costs (layout open, ledger reads)
+      graft.api.SearchApi.searchAuto(stored, hnswSp, req, lc).collect()
+      graft.api.SearchApi.searchAuto(stored, pqSp, req, lc).collect()
+      // query quantization, LUT building and centroid routing stay
+      // driver-side arithmetic — the only action is the bounded hits
+      // materialization feeding the O(k) payload prune
+      val nH = jobsDuring {
+        graft.api.SearchApi.searchAuto(stored, hnswSp, req, lc)
+      }
+      assert(nH >= 1 && nH <= 3,
+        s"int8 HNSW construction ran $nH jobs (one bounded hits action = 1–3)")
+      val nP = jobsDuring {
+        graft.api.SearchApi.searchAuto(stored, pqSp, req, lc)
+      }
+      assert(nP >= 1 && nP <= 3,
+        s"int8 IVFPQ construction ran $nP jobs (one bounded hits action = 1–3)")
 
-    // ROUTE DISCRIMINATION: the serving must read the GENERATION layout,
-    // not just the space parquet — a regressed arm guard that silently
-    // fell back to FLAT would pass every brute-parity test, so pin the
-    // scanned location itself. The walk runs as the construction-time
-    // hits action, so the route shows in the captured action plans.
-    val (_, hnswPlans) = plansDuring(
-      graft.api.SearchApi.searchAuto(stored, hnswSp, req, lc))
-    assert(hnswPlans.contains(".hnsw.g"),
-      "int8 HNSW request must serve from the graph generation layout")
-    val (_, pqPlans) = plansDuring(
-      graft.api.SearchApi.searchAuto(stored, pqSp, req, lc))
-    assert(pqPlans.contains(".pq.g"),
-      "int8 IVFPQ request must serve from the code generation layout")
+      // ROUTE DISCRIMINATION: the serving must read the GENERATION layout,
+      // not just the space parquet — a regressed arm guard that silently
+      // fell back to FLAT would pass every brute-parity test, so pin the
+      // scanned location itself. The walk runs as the construction-time
+      // hits action, so the route shows in the captured action plans.
+      val (_, hnswPlans) = plansDuring(
+        graft.api.SearchApi.searchAuto(stored, hnswSp, req, lc))
+      assert(hnswPlans.contains(".hnsw.g"),
+        "int8 HNSW request must serve from the graph generation layout")
+      val (_, pqPlans) = plansDuring(
+        graft.api.SearchApi.searchAuto(stored, pqSp, req, lc))
+      assert(pqPlans.contains(".pq.g"),
+        "int8 IVFPQ request must serve from the code generation layout")
+    }
   }
 
   test("docid-lookup prune reaches partition pruning (_bucket IN touched buckets)") {

@@ -1736,8 +1736,16 @@ class SearchApiSpec extends SparkSpec {
     assert(got.nonEmpty && got.head._1 == 0L)
     // the plan prunes partitions: only the routed shard's files scan —
     // the walk runs as the construction-time hits action, so the pruning
-    // shows in the captured action plans
-    val (_, planTxt) = plansDuring(SearchApi.searchAuto(stored, hspace, pruned, lc))
+    // shows in the captured action plans. The walk is a Spark job with the
+    // layout one node over the resident-graph cap (ResidentGraphSpec pins
+    // the resident walk's routing)
+    val nodes = stored.count().toInt
+    val saved = SearchApi.maxFilterAllowIds
+    val (_, planTxt) =
+      try {
+        SearchApi.maxFilterAllowIds = nodes - 1
+        plansDuring(SearchApi.searchAuto(stored, hspace, pruned, lc))
+      } finally SearchApi.maxFilterAllowIds = saved
     assert(planTxt.contains("shard_id"), "expected a shard_id partition filter in the plan")
     // batched request routes through the union of per-query lists
     val q7 = stored.filter($"_id" === 7L).select("embedding").head().getSeq[Float](0)
